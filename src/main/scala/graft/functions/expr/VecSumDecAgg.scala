@@ -81,7 +81,7 @@ case class VecSumDecAgg(
     StructField("counts", ArrayType(LongType, containsNull = false),
       nullable = false)))
 
-  private def elemIsFloat: Boolean = child.dataType match {
+  private lazy val elemIsFloat: Boolean = child.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
   }

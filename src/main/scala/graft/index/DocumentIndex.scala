@@ -1,7 +1,11 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 import graft.embed.{Embedder, HashingEmbedder}
 import graft.filters.MetaFilter
@@ -48,11 +52,12 @@ final class DocumentIndex private (
 
   /** Bulk upsert of (uri, text, ...metadata) rows: latest wins per
     * uri (reference: local_document_index.py:127-219 upsert_document,
-    * minus the per-document driver loop). Split + embed happen inside
-    * flatMap — narrow; the only shuffles are the two left_anti joins
-    * that retire previous versions, plus a guarded fan-out repartition
-    * that only fires when the input scan has fewer splits than cores
-    * (see Tables.fanOut).
+    * minus the per-document driver loop); within one batch the last
+    * row of a repeated uri wins. Split + embed happen inside flatMap —
+    * narrow; the only shuffles are the hash exchange by uri that
+    * deduplicates the batch (and spreads it over at least as many
+    * partitions as cores) and the two left_anti joins that retire
+    * previous versions.
     *
     * Every column beyond (uri, text) is per-document metadata. The
     * reference merges the metadata dict into each chunk item and
@@ -60,17 +65,36 @@ final class DocumentIndex private (
     * (local_document_index.py:190-205, local_document.py:26-53); here
     * the metadata rides as typed columns on BOTH the chunk rows (so
     * MetaFilter predicates apply pre-similarity at query time, pushed
-    * to the parquet scan) and the catalog (so results are decorated
-    * without touching chunk payloads). Columnar pruning makes unused
-    * metadata free — the side-file split falls out of the format.
+    * to the parquet scan, and query results are decorated from the
+    * scored chunks themselves) and the catalog. Columnar pruning makes
+    * unused metadata free — the side-file split falls out of the
+    * format.
     */
   def upsertDocuments(docs: DataFrame): DocumentIndex = {
     import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.types._
     val sp = splitter
     val em = embedder
     val metaCols: Seq[String] =
       docs.columns.toSeq.filterNot(c => c == "uri" || c == "text")
+    val input = docs.select((Seq(col("uri").cast("string"), col("text").cast("string"))
+      ++ metaCols.map(col)): _*)
+    // One version per uri, read by BOTH the catalog and the chunk path
+    // so the two halves always agree on a document: a uri repeated
+    // within the batch keeps its last row in input order (the same
+    // latest-wins rule as across batches). The hash exchange that
+    // co-locates a uri's rows has at least as many partitions as cores
+    // — split+embed is the compute-bound stage of ingestion, and a
+    // single-split local corpus would otherwise chunk on one core (the
+    // Tables.fanOut floor).
+    val spread = math.max(input.rdd.getNumPartitions,
+      input.sparkSession.sparkContext.defaultParallelism)
+    val latest = input
+      .withColumn("_seq", monotonically_increasing_id())
+      .repartition(spread, col("uri"))
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col("uri")).orderBy(desc("_seq"))))
+      .filter(col("_rn") === 1)
+      .drop("_seq", "_rn")
     val chunkSchema = StructType(Seq(
       StructField("chunk_id", StringType, nullable = false),
       StructField("document_id", StringType, nullable = false),
@@ -90,13 +114,8 @@ final class DocumentIndex private (
     // column wins, else the uri extension; separator tables are cached
     // per type per partition.
     val dtIdx = metaCols.indexOf("doc_type")
-    // fanOut: split+embed is the compute-bound stage of ingestion; a
-    // single-split local corpus would otherwise chunk on one core
-    // (no-op when the scan already has >= cores splits)
     val newChunks: DataFrame =
-      graft.Tables.fanOut(
-        docs.select((Seq(col("uri").cast("string"), col("text").cast("string"))
-          ++ metaCols.map(col)): _*))
+      latest
         .mapPartitions { it =>
           val spByType = scala.collection.mutable.Map.empty[String, graft.text.TextSplitter]
           def splitterFor(uri: String, explicit: String): graft.text.TextSplitter = {
@@ -146,15 +165,15 @@ final class DocumentIndex private (
     // rendering) — the analogue of the reference's per-document
     // `{id}.txt` files (reference: local_document_index.py:207-208) —
     // plus the metadata columns (the `{id}.json` analogue).
-    val newCatalog = docs
-      .select((Seq(col("uri").cast("string"), col("text").cast("string"))
-        ++ metaCols.map(col)): _*)
-      .dropDuplicates("uri")
+    val newCatalog = latest
       .withColumn("document_id", md5(col("uri")))
       .select((Seq(col("document_id"), col("uri"), col("text"))
         ++ metaCols.map(col)): _*)
-    val keptCatalog = catalog.join(newCatalog.select("uri"), Seq("uri"), "left_anti")
-    val keptChunks = chunks.items.join(newCatalog.select("document_id"), Seq("document_id"), "left_anti")
+    // retiring previous versions needs only the batch's uris, not the
+    // deduplicated rows
+    val keptCatalog = catalog.join(input.select("uri"), Seq("uri"), "left_anti")
+    val keptChunks = chunks.items.join(
+      input.select(md5(col("uri")).as("document_id")), Seq("document_id"), "left_anti")
     val chunkDf = newChunks.withColumn("norm", normD(col("vector")))
     // allowMissingColumns: re-ingesting with new metadata keys
     // null-fills the old rows, same as a reference side file that
@@ -176,65 +195,94 @@ final class DocumentIndex private (
       splitter, embedder)
   }
 
+  /** The top `maxChunks` chunk rows of a query, filter applied, as
+    * (document_id, score, cols...) in (score desc, chunk_id asc) order:
+    * ONE job — per-partition heaps of the TakeOrderedAndProject merged
+    * on the driver (see VectorIndex.queryItems).
+    */
+  private def topChunks(queryText: String, maxChunks: Int, filter: Option[MetaFilter],
+      cols: Seq[String]): Array[Row] = {
+    val qv = embedder.embed(splitter.tokenizer.encode(queryText.replace('\n', ' ')))
+    chunks.queryItems(qv.map(_.toDouble).toIndexedSeq, maxChunks, filter)
+      .select((Seq("document_id", "score") ++ cols).map(col): _*)
+      .collect()
+  }
+
+  /** Per-document mean score and chunk count over the top chunk rows,
+    * best `maxDocuments` first by (score desc, document_id asc), each
+    * with its chunk rows in top-k order. Sums accumulate in row order
+    * from 0.0 — how Spark's `avg` folds the single-partition top-k
+    * output — so scores are bit-identical to the SQL aggregate.
+    */
+  private def rankDocuments(top: Array[Row],
+      maxDocuments: Int): Seq[(String, Double, Long, Seq[Row])] = {
+    // Spark's double ordering: -0.0 == 0.0, NaN largest
+    def cmp(a: Double, b: Double): Int = if (a == b) 0 else java.lang.Double.compare(a, b)
+    top.toSeq.groupBy(_.getString(0)).toSeq
+      .map { case (id, rs) =>
+        (id, rs.foldLeft(0.0)(_ + _.getDouble(1)) / rs.size, rs.size.toLong, rs)
+      }
+      .sortWith { (a, b) =>
+        val c = cmp(b._2, a._2)
+        c < 0 || (c == 0 && a._1 < b._1)
+      }
+      .take(maxDocuments)
+  }
+
   /** Top-documents query (reference:
     * local_document_index.py:221-254 query_documents): top `maxChunks`
     * chunks by cosine → group by document → mean chunk score → top
-    * `maxDocuments`. The chunk top-k is a TakeOrderedAndProject (no
-    * global sort); the per-document aggregation then touches at most
-    * `maxChunks` rows.
+    * `maxDocuments`. Runs its one Spark job WHEN CALLED — the chunk
+    * top-k, collected — then groups and ranks the ≤ `maxChunks` rows
+    * on the driver; no catalog scan or join, because every chunk row
+    * already carries its document's uri and metadata. Returns a local
+    * DataFrame (document_id, uri, score, n_chunks, ...metadata in
+    * catalog column order).
     */
   def queryDocuments(queryText: String, maxDocuments: Int = 10, maxChunks: Int = 50,
       filter: Option[MetaFilter] = None): DataFrame = {
-    val qv = embedder.embed(splitter.tokenizer.encode(queryText.replace('\n', ' ')))
+    val metaCols = catalog.columns.toSeq
+      .filterNot(Set("document_id", "uri", "text"))
     // the metadata filter applies to CHUNK rows pre-similarity
     // (reference: query_items(embedding, max_chunks, options.filter) —
     // chunk items carry the merged document metadata)
-    val topChunks = chunks.queryItems(qv.map(_.toDouble).toIndexedSeq, maxChunks, filter)
-    val metaCols = catalog.columns.toSeq
-      .filterNot(Set("document_id", "uri", "text"))
-    // ≤ maxChunks aggregated rows is the broadcast side; the catalog
-    // grows with the corpus and must stream
-    val scores = topChunks
-      .groupBy(col("document_id"))
-      .agg(avg(col("score")).as("score"), count(lit(1)).as("n_chunks"))
-    catalog.drop("text")
-      .join(broadcast(scores), Seq("document_id"))
-      .orderBy(desc("score"), col("document_id"))
-      .limit(maxDocuments)
-      .select((Seq(col("document_id"), col("uri"), col("score"), col("n_chunks"))
-        ++ metaCols.map(col)): _*)
+    val docs = rankDocuments(topChunks(queryText, maxChunks, filter, "uri" +: metaCols),
+      maxDocuments)
+    val schema = chunks.items.schema
+    val outSchema = StructType(Seq(schema("document_id"), schema("uri"),
+        StructField("score", DoubleType), StructField("n_chunks", LongType, nullable = false))
+      ++ metaCols.map(schema(_)))
+    val rows = docs.map { case (id, score, n, rs) =>
+      Row.fromSeq(Seq(id, rs.head.get(2), score, n) ++ rs.head.toSeq.drop(3))
+    }
+    catalog.sparkSession.createDataFrame(rows.asJava, outSchema)
   }
 
   /** Render token-budgeted sections for the top documents of a query
     * (reference: local_document_result.py:26-183 render_sections, as
-    * invoked by vectra-cli.py's `query --format sections`). The group
-    * work (one document's ≤ maxChunks chunks + its text) runs per-key
-    * in `flatMapGroups` on executors — no driver loop.
+    * invoked by vectra-cli.py's `query --format sections`). The chunk
+    * top-k runs once, when called, and picks the top documents exactly
+    * as [[queryDocuments]] does; the returned frame is a lazy `flatMap`
+    * over those documents' catalog rows, with their ≤ `maxChunks`
+    * scored chunks in the closure — document text never reaches the
+    * driver, rendering runs on executors, and nothing shuffles.
     */
   def renderSections(queryText: String, maxTokens: Int = 2000, maxSections: Int = 1,
       maxDocuments: Int = 10, maxChunks: Int = 50): DataFrame = {
     val spark = catalog.sparkSession
     import spark.implicits._
-    val qv = embedder.embed(splitter.tokenizer.encode(queryText.replace('\n', ' ')))
-    val topChunks = chunks.queryItems(qv.map(_.toDouble).toIndexedSeq, maxChunks)
-      .select(col("document_id"), col("start_pos"), col("end_pos"), col("score"))
+    val top = topChunks(queryText, maxChunks, None, Seq("start_pos", "end_pos"))
+    val scored: Map[String, Seq[graft.text.ScoredChunk]] =
+      rankDocuments(top, maxDocuments).map { case (id, _, _, rs) =>
+        id -> rs.sortBy(r => (-r.getDouble(1), r.getInt(2)))
+          .map(r => graft.text.ScoredChunk(r.getInt(2), r.getInt(3), r.getDouble(1)))
+      }.toMap
     val tok = splitter.tokenizer
-    val topDocs = queryDocuments(queryText, maxDocuments, maxChunks)
-      .select(col("document_id"))
-    topChunks
-      .join(broadcast(topDocs), "document_id")
-      .join(catalog.select(col("document_id"), col("uri"), col("text")), "document_id")
-      .select(col("document_id"), col("uri"), col("text"),
-        col("start_pos"), col("end_pos"), col("score"))
-      .as[(String, String, String, Int, Int, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (docId, rows) =>
-        val rs = rows.toVector.sortBy(r => (-r._6, r._4))
-        val uri = rs.head._2
-        val text = rs.head._3
-        graft.text.SectionRenderer.render(
-            text, rs.map(r => graft.text.ScoredChunk(r._4, r._5, r._6)),
-            maxTokens, maxSections, tok)
+    catalog.filter(col("document_id").isin(scored.keys.toSeq: _*))
+      .select(col("document_id"), col("uri"), col("text"))
+      .as[(String, String, String)]
+      .flatMap { case (docId, uri, text) =>
+        graft.text.SectionRenderer.render(text, scored(docId), maxTokens, maxSections, tok)
           .zipWithIndex.map { case (sec, i) =>
             (docId, uri, i, sec.text, sec.tokenCount, sec.score)
           }

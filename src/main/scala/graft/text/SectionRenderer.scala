@@ -24,8 +24,9 @@ final case class TextSection(text: String, tokenCount: Int, score: Double)
   *    which raises TypeError on the += at line 134 whenever a section
   *    has >1 chunk).
   *
-  * Runs per document inside `Dataset.mapGroups` — each group is one
-  * document's ≤ maxChunks scored chunks, so the per-group work is
+  * Runs per document inside DocumentIndex.renderSections' `flatMap`
+  * over the top documents' catalog rows — each call gets one
+  * document's ≤ maxChunks scored chunks, so the per-document work is
   * O(maxChunks + |text|) regardless of corpus size.
   */
 object SectionRenderer {

@@ -43,6 +43,32 @@ class DocumentIndexSpec extends SparkSpecBase {
     assert(aChunks.count() == 1) // tiny text → one chunk
   }
 
+  test("a uri repeated within one batch keeps one version in catalog and chunks") {
+    import spark.implicits._
+    val docs = Seq(
+      ("a.txt", "spark shuffles data", "en"),
+      ("b.txt", "vectors live in embedding space", "en"),
+      ("a.txt", "minhash finds near duplicates", "de"))
+      .toDF("uri", "text", "lang")
+    val idx = DocumentIndex.create(
+      spark, SplitterConfig(keepSeparators = true, chunkSize = 64, chunkOverlap = 0))
+      .upsertDocuments(docs)
+    val ids = idx.chunks.items.select("chunk_id").as[String].collect().toSeq
+    assert(ids.distinct.size == ids.size, s"duplicate chunk ids: $ids")
+    val aId = DocumentIndex.docIdFor("a.txt")
+    val cat = idx.catalog.filter(s"document_id = '$aId'")
+      .select("text", "lang").as[(String, String)].collect().toSeq
+    // the last row in input order wins, the same rule as across batches
+    assert(cat == Seq(("minhash finds near duplicates", "de")))
+    val aChunks = idx.chunks.items.filter(s"document_id = '$aId'")
+      .select("lang").as[String].collect().toSeq
+    assert(aChunks == Seq("de"))
+    val top = idx.queryDocuments("minhash duplicates", maxDocuments = 1).collect().head
+    assert(top.getAs[String]("uri") == "a.txt")
+    assert(top.getAs[Long]("n_chunks") == 1L)
+    assert(top.getAs[String]("lang") == "de")
+  }
+
   test("deleteDocument removes catalog entry and chunks") {
     val idx = mkIndex.deleteDocument("b.txt")
     assert(idx.catalog.count() == 2)
