@@ -50,7 +50,8 @@ object AnnTuner {
       _ => stats(vecs, vecCol, blockCol))
 
   /** One-pass planning stats: corpus size, vector dim, largest block
-    * (blockCol = None → the whole corpus is one block).
+    * (blockCol = None → the whole corpus is one block). An empty
+    * corpus is `CorpusStats(0, 0, 0)`.
     */
   def stats(vecs: DataFrame, vecCol: String, blockCol: Option[String]): CorpusStats = {
     val grouped = blockCol match {
@@ -58,9 +59,13 @@ object AnnTuner {
         .agg(sum(col("_n")).as("n"), max(col("_n")).as("maxBlock"))
       case None => vecs.agg(count(lit(1)).as("n"), count(lit(1)).as("maxBlock"))
     }
-    val dim = vecs.select(size(col(vecCol)).as("d")).head.getInt(0)
-    val r = grouped.head
-    CorpusStats(r.getLong(0), dim, r.getLong(1))
+    // no first row, no corpus: the per-block sum would be null
+    vecs.select(size(col(vecCol)).as("d")).head(1).headOption match {
+      case None => CorpusStats(0, 0, 0)
+      case Some(d) =>
+        val r = grouped.head()
+        CorpusStats(r.getLong(0), d.getInt(0), r.getLong(1))
+    }
   }
 
   /** Smallest nPlanes with |block|·(nPlanes+1)/2^nPlanes ≤ target

@@ -54,10 +54,9 @@ final class DocumentIndex private (
     * uri (reference: local_document_index.py:127-219 upsert_document,
     * minus the per-document driver loop); within one batch the last
     * row of a repeated uri wins. Split + embed happen inside flatMap —
-    * narrow; the only shuffles are the hash exchange by uri that
-    * deduplicates the batch (and spreads it over at least as many
-    * partitions as cores) and the two left_anti joins that retire
-    * previous versions.
+    * narrow; the only shuffles are the dedup window's hash exchange by
+    * uri, which adaptive execution sizes to the batch, and the two
+    * left_anti joins that retire previous versions.
     *
     * Every column beyond (uri, text) is per-document metadata. The
     * reference merges the metadata dict into each chunk item and
@@ -81,16 +80,13 @@ final class DocumentIndex private (
     // One version per uri, read by BOTH the catalog and the chunk path
     // so the two halves always agree on a document: a uri repeated
     // within the batch keeps its last row in input order (the same
-    // latest-wins rule as across batches). The hash exchange that
-    // co-locates a uri's rows has at least as many partitions as cores
-    // — split+embed is the compute-bound stage of ingestion, and a
-    // single-split local corpus would otherwise chunk on one core (the
-    // Tables.fanOut floor).
-    val spread = math.max(input.rdd.getNumPartitions,
-      input.sparkSession.sparkContext.defaultParallelism)
+    // latest-wins rule as across batches). The window's hash exchange
+    // by uri is one adaptive execution coalesces: a small batch lands
+    // in one partition (one task, one file per saved component), while
+    // a batch of more than ~cores MB keeps at least cores partitions
+    // for the compute-bound split+embed (the Tables.fanOut floor).
     val latest = input
       .withColumn("_seq", monotonically_increasing_id())
-      .repartition(spread, col("uri"))
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col("uri")).orderBy(desc("_seq"))))
       .filter(col("_rn") === 1)
@@ -349,11 +345,16 @@ object DocumentIndex {
       new TextSplitter(config), embedder)
   }
 
+  /** Open an index saved by [[DocumentIndex.save]]. Both components'
+    * schemas come from their saved parquet footers, read on the driver,
+    * so loading runs no Spark job; a path without a saved component
+    * raises [[IndexNotFoundException]].
+    */
   def load(spark: SparkSession, path: String,
       config: SplitterConfig = SplitterConfig(keepSeparators = true, chunkSize = 512, chunkOverlap = 0),
       embedder: Embedder = new HashingEmbedder(64)): DocumentIndex =
     new DocumentIndex(
-      spark.read.parquet(s"$path/catalog"),
+      VectorIndex.readSaved(spark, s"$path/catalog"),
       VectorIndex.load(spark, s"$path/chunks", "chunk_id", "vector"),
       new TextSplitter(config), embedder)
 }

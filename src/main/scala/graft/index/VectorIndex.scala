@@ -155,6 +155,37 @@ object VectorIndex {
       throw new java.io.IOException(s"rename $tmpPath -> $destPath failed")
   }
 
+  /** Read a directory written by [[writeSwap]] without a Spark job: the
+    * schema comes from one part file's footer, read on the driver and
+    * converted as Spark's own inference converts it (which, without
+    * mergeSchema, also reads a single footer — but in a one-task job).
+    * A missing directory, or one without a part file, raises
+    * [[IndexNotFoundException]] naming the path.
+    */
+  private[index] def readSaved(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val path = new Path(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = path.getFileSystem(conf)
+    if (!fs.exists(path)) throw new IndexNotFoundException(dir, "no such directory")
+    // a part file the scan will read: Spark skips hidden and underscore files
+    val part = fs.listStatus(path).find { f =>
+      val name = f.getPath.getName
+      f.isFile && name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
+    }.getOrElse(throw new IndexNotFoundException(dir, "no .parquet file in it"))
+    val footer = new Footer(part.getPath,
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(part, conf), SKIP_ROW_GROUPS))
+    val schema = ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(dir)
+  }
+
   private def withNorm(df: DataFrame, vecCol: String): DataFrame =
     if (df.columns.contains(NORM)) df
     else df.withColumn(NORM, normD(col(vecCol)))
@@ -166,9 +197,10 @@ object VectorIndex {
   def build(df: DataFrame, idCol: String, vecCol: String): VectorIndex =
     new VectorIndex(withNorm(df, vecCol), idCol, vecCol)
 
+  /** Load a saved index; runs no Spark job (see [[readSaved]]). */
   def load(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, vecCol: String): VectorIndex =
-    build(spark.read.parquet(path), idCol, vecCol)
+    build(readSaved(spark, path), idCol, vecCol)
 
   /** reference: local_index.py:114-115 is_index_created. */
   def isIndexCreated(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
@@ -184,3 +216,9 @@ object VectorIndex {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
   }
 }
+
+/** A load path that holds no saved index: the directory is missing or
+  * has no parquet part file.
+  */
+final class IndexNotFoundException(val path: String, reason: String)
+    extends java.io.IOException(s"no saved index at $path: $reason")

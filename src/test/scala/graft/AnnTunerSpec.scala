@@ -142,6 +142,13 @@ class AnnTunerSpec extends SparkSpecBase {
     assert(whole.n == 3L && whole.maxBlock == 3L)
   }
 
+  test("stats on an empty corpus is all zeros, with or without a block column") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, String, Array[Float])].toDF("vec_id", "label", "embedding")
+    assert(AnnTuner.stats(empty, "embedding", Some("label")) == AnnTuner.CorpusStats(0L, 0, 0L))
+    assert(AnnTuner.stats(empty, "embedding", None) == AnnTuner.CorpusStats(0L, 0, 0L))
+  }
+
   test("statsCached computes once per (key, vecCol, blockCol) per JVM") {
     import spark.implicits._
     def df = Seq((1L, "a", Array(1f, 2f)), (2L, "b", Array(3f, 4f)))

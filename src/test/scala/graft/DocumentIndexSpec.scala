@@ -1,8 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import graft.index.DocumentIndex
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+
+import graft.index.{DocumentIndex, IndexNotFoundException, VectorIndex}
 import graft.text.SplitterConfig
 
 class DocumentIndexSpec extends SparkSpecBase {
@@ -166,5 +170,77 @@ class DocumentIndexSpec extends SparkSpecBase {
     val top = loaded.queryDocuments("embedding space vectors", maxDocuments = 1)
       .select("uri").as[String].collect().toSeq
     assert(top == Seq("b.txt"))
+  }
+
+  // -- index storage: batch-sized writes, job-free loads --
+
+  private def parquetFiles(dir: String): Int =
+    Files.list(Paths.get(dir)).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))
+
+  /** A loaded component matches what `spark.read.parquet` infers for
+    * the same directory: the same schema (names, order, types,
+    * nullability) and the same rows.
+    */
+  private def assertLoadsAsInferred(loaded: DataFrame, dir: String): Unit = {
+    val inferred = spark.read.parquet(dir)
+    assert(loaded.schema == inferred.schema, dir)
+    def rows(df: DataFrame) = df.collect().toSeq.map(_.toSeq.map {
+      case a: Seq[_] => a.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted
+    assert(rows(loaded) == rows(inferred), dir)
+  }
+
+  test("a small batch saves one file per component and load runs no job") {
+    import spark.implicits._
+    val batch = (0 until 40).map(i => (s"doc$i.txt", s"document $i talks about topic ${i % 7}. " * 5))
+      .toDF("uri", "text")
+    val dir = Files.createTempDirectory("didxw").toString
+    DocumentIndex.create(spark).upsertDocuments(batch).save(dir)
+    assert(parquetFiles(s"$dir/catalog") == 1)
+    assert(parquetFiles(s"$dir/chunks") == 1)
+    DocumentIndex.load(spark, dir) // warm-up
+    assert(jobsIn(DocumentIndex.load(spark, dir)) == 0)
+    assert(DocumentIndex.load(spark, dir).catalog.count() == 40)
+  }
+
+  test("load gives the schema and rows spark.read.parquet infers") {
+    import spark.implicits._
+    val cfg = SplitterConfig(keepSeparators = true, chunkSize = 64, chunkOverlap = 0)
+    val newKeys = Seq(("d.txt", "fresh doc with metadata", "fr", 1L))
+      .toDF("uri", "text", "lang", "priority")
+    Seq(
+      mkMetaIndex,
+      // metadata keys the saved rows lack: the null-fill path
+      mkIndex.upsertDocuments(newKeys),
+      DocumentIndex.create(spark)
+    ).foreach { idx =>
+      val dir = Files.createTempDirectory("didxl").toString
+      idx.save(dir)
+      val loaded = DocumentIndex.load(spark, dir, cfg)
+      assertLoadsAsInferred(loaded.catalog, s"$dir/catalog")
+      assertLoadsAsInferred(loaded.chunks.items, s"$dir/chunks")
+    }
+    val vdir = Files.createTempDirectory("vidxl").toString
+    VectorIndex.build(Seq((1L, Array(1f, 0f), "en"), (2L, Array(0f, 1f), null))
+      .toDF("id", "vec", "lang"), "id", "vec").save(vdir)
+    assertLoadsAsInferred(VectorIndex.load(spark, vdir, "id", "vec").items, vdir)
+  }
+
+  test("loading a path without a saved index names the path") {
+    val root = Files.createTempDirectory("didxe").toString
+    val missing = s"$root/absent"
+    val e1 = intercept[IndexNotFoundException](DocumentIndex.load(spark, missing))
+    assert(e1.path == s"$missing/catalog" && e1.getMessage.contains(e1.path))
+    val e2 = intercept[IndexNotFoundException](VectorIndex.load(spark, missing, "id", "vec"))
+    assert(e2.path == missing && e2.getMessage.contains(missing))
+    // a directory holding no part file
+    val bare = Files.createDirectories(Paths.get(root, "bare", "catalog")).getParent.toString
+    Files.write(Paths.get(bare, "catalog", "_SUCCESS"), Array.emptyByteArray)
+    val e3 = intercept[IndexNotFoundException](DocumentIndex.load(spark, bare))
+    assert(e3.path == s"$bare/catalog" && e3.getMessage.contains(e3.path))
+    val e4 = intercept[IndexNotFoundException](VectorIndex.load(spark, root, "id", "vec"))
+    assert(e4.path == root && e4.getMessage.contains(root))
   }
 }

@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Random
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -117,22 +114,6 @@ class DocumentQuerySpec extends SparkSpecBase {
 
   private def sections(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(r => (r.getString(0), r.getInt(2)))
-
-  /** Spark jobs started while `f` runs, counted after the bus drains. */
-  private def jobsIn(f: => Any): Int = {
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      ListenerBusDrain(sc)
-      n.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   // -- specs --
 

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,5 +24,21 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.sparkContext.setLogLevel("ERROR")
+  }
+
+  /** Spark jobs started while `f` runs, counted after the bus drains. */
+  protected def jobsIn(f: => Any): Int = {
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      ListenerBusDrain(sc)
+      n.get
+    } finally sc.removeSparkListener(listener)
   }
 }
