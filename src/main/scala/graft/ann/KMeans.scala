@@ -25,10 +25,14 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each iteration is one narrow assignment pass (the
   * centroid matrix is a plan constant, ≤ 65536 cells) plus one
-  * map-side-combined aggregation of n×dim (cell, dim, x) rows. That is
-  * the classic distributed Lloyd step; iterations are few and fixed.
-  * Clusters that lose all members drop out (both engines compute the
-  * same surviving set).
+  * map-side-combined VecSumDecAgg pass over the n vector rows as
+  * stored (float arrays widen inside the aggregate, no per-row cast
+  * copy) — one exchange of (cells × dim) partials. Per element the
+  * decimal conversion and the sum run on primitive longs; a BigDecimal
+  * is built only for the rare elements whose exactness the fast path
+  * cannot prove. That is the classic distributed Lloyd step;
+  * iterations are few and fixed. Clusters that lose all members drop
+  * out (both engines compute the same surviving set).
   */
 object KMeans {
 
@@ -75,7 +79,7 @@ object KMeans {
     import org.apache.spark.sql.graftshim.ColumnBridge
     val vecSum = ColumnBridge.column(
       graft.functions.expr.VecSumDecAgg(
-        ColumnBridge.expression(col(vecCol).cast("array<double>")))
+        ColumnBridge.expression(col(vecCol)))
         .toAggregateExpression())
     assigned
       .groupBy(col("cell"))

@@ -59,12 +59,18 @@ object Pq {
     * codebooks are driver-materialized local relations (≤ nSub×K tiny
     * rows): downstream encode/ADC collects are free, and no Barrier
     * checkpoint is needed.
+    *
+    * Rows whose vector is null or shorter than `dim` take no part in
+    * the fit — neither as seeds nor in the Lloyd updates — so the
+    * codebooks are those of the remaining corpus (elements past `dim`
+    * are ignored).
     */
   def fit(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, nSub: Int, seedMod: Long, iters: Int): Seq[DataFrame] = {
     require(dim % nSub == 0, s"dim $dim must split evenly into $nSub subspaces")
     val subDim = dim / nSub
-    val seedRows = corpus.filter(pmod(col(idCol), lit(seedMod)) === 0)
+    val vecs = corpus.filter(col(vecCol).isNotNull && size(col(vecCol)) >= dim)
+    val seedRows = vecs.filter(pmod(col(idCol), lit(seedMod)) === 0)
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -80,7 +86,7 @@ object Pq {
       }
     }
     for (_ <- 1 to iters)
-      books = lloydStepAll(corpus, vecCol, books, dim)
+      books = lloydStepAll(vecs, vecCol, books, dim)
     val spark = corpus.sparkSession
     import spark.implicits._
     books.map(_.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv"))
@@ -109,8 +115,8 @@ object Pq {
     val sub = enc
       .select(explode(array((0 until nSub).map(s =>
         struct(lit(s).as("s"), col(s"code$s").as("cell"),
-          slice(col(vecCol).cast("array<double>"),
-            s * subDim + 1, subDim).as("sv"))): _*)).as("_r"))
+          slice(col(vecCol), s * subDim + 1, subDim).as("sv"))): _*))
+        .as("_r"))
       .select(col("_r.s").as("s"), col("_r.cell").as("cell"),
         col("_r.sv").as("sv"))
     val vecSum = ColumnBridge.column(

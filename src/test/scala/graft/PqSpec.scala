@@ -38,6 +38,22 @@ class PqSpec extends SparkSpecBase {
     assert(centroids(1) == centroids(13))
   }
 
+  test("null and short vectors take no part in the fit") {
+    import spark.implicits._
+    def books(corpus: org.apache.spark.sql.DataFrame) =
+      Pq.fit(corpus, "vec_id", "embedding",
+          dim = Dim, nSub = NSub, seedMod = 25, iters = 2)
+        .map(_.orderBy("cid").collect()
+          .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq)
+    // 200 and 225 fall on the seed rule (id ≡ 0 mod 25), 201 and 226
+    // do not: the null/short vector shows up as a seed and as a member
+    val degenerate = Seq[(Long, Array[Double])](
+      (200L, null), (201L, null),
+      (225L, Array(0.5, 0.5, 0.5)), (226L, Array(0.9, 0.1, 0.0)))
+      .toDF("vec_id", "embedding")
+    assert(books(clustered.union(degenerate)) == books(clustered))
+  }
+
   test("codes are dense, byte-packable, and cover every row") {
     val books = Pq.fit(clustered, "vec_id", "embedding",
       dim = Dim, nSub = NSub, seedMod = 25, iters = 1)
