@@ -114,26 +114,26 @@ object KnnDimProbe {
       idx.selfProbeTable(np, keepCols = Seq("label"))
         .write.mode("overwrite").parquet(exactProbe)
       val pqProbe = s"$dir/p-pq-$np"
-      graft.ann.CodedKnnJoin.buildPqProbeTable(idx, books, dim, np, Seq("label"))
+      graft.ann.CodedKnnJoin.buildProbeTable(idx, books, np, Seq("label"))
         .write.mode("overwrite").parquet(pqProbe)
       val sqProbe = s"$dir/p-sq-$np"
-      graft.ann.CodedKnnJoin.buildSqProbeTable(idx, grid, np, Seq("label"))
+      graft.ann.CodedKnnJoin.buildProbeTable(idx, grid, np, Seq("label"))
         .write.mode("overwrite").parquet(sqProbe)
       val rungs = Seq(
         measure("exact", () =>
           idx.knnJoinSelf(spark.read.parquet(exactProbe), Seq("label"), k = 3)),
         measure("coded-sq", () =>
-          graft.ann.CodedKnnJoin.knnJoinSelfSq(idx, spark.read.parquet(sqProbe),
+          graft.ann.CodedKnnJoin.knnJoinSelf(idx, spark.read.parquet(sqProbe),
             grid, Seq("label"), k = 3, candidates = cSq)),
         // prefix-SDC: fold only the first dim/4 dimensions in the
         // candidate scorer (candidates widened 2× to absorb the
         // subsampled-distance selection noise)
         measure("coded-sq4", () =>
-          graft.ann.CodedKnnJoin.knnJoinSelfSq(idx, spark.read.parquet(sqProbe),
-            grid, Seq("label"), k = 3, candidates = cSq * 2,
-            sdcDims = math.max(1, dim / 4))),
+          graft.ann.CodedKnnJoin.knnJoinSelf(idx, spark.read.parquet(sqProbe),
+            grid.copy(sdcDims = math.max(1, dim / 4)), Seq("label"), k = 3,
+            candidates = cSq * 2)),
         measure("coded-pq", () =>
-          graft.ann.CodedKnnJoin.knnJoinSelfPq(idx, spark.read.parquet(pqProbe),
+          graft.ann.CodedKnnJoin.knnJoinSelf(idx, spark.read.parquet(pqProbe),
             books, Seq("label"), k = 3, candidates = cPq)))
       s"""{"np":$np,"rungs":{${rungs.mkString(",")}}}"""
     }

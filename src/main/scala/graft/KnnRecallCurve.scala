@@ -170,25 +170,25 @@ object KnnRecallCurve {
       // SDC-candidate depth
       val np = nps.head
       val dimLen = emb.select(size(col("embedding"))).head().getInt(0)
-      // Pq.fit returns driver-materialized local relations — reuse free
+      // Pq.fit returns driver-local codebooks — reuse free
       val books = graft.ann.Pq.fit(emb, "vec_id", "embedding",
         dim = dimLen, nSub = 8, seedMod = math.max(1L, n / 32), iters = 1)
       val grid = graft.ann.Sq.fit(emb, "embedding", dimLen)
       val probePath = s"$dir/codedprobe-np$np"
-      graft.ann.CodedKnnJoin.buildPqProbeTable(idx, books, dimLen,
+      graft.ann.CodedKnnJoin.buildProbeTable(idx, books,
           np = np, blockCols = Seq("label"))
         .write.mode("overwrite").parquet(probePath)
       val sqProbePath = s"$dir/sqprobe-np$np"
-      graft.ann.CodedKnnJoin.buildSqProbeTable(idx, grid,
+      graft.ann.CodedKnnJoin.buildProbeTable(idx, grid,
           np = np, blockCols = Seq("label"))
         .write.mode("overwrite").parquet(sqProbePath)
       val probes = spark.read.parquet(probePath)
       val sqProbes = spark.read.parquet(sqProbePath)
       cs.foreach { c =>
-        report(f"codedpq np=$np C=$c", () => graft.ann.CodedKnnJoin.knnJoinSelfPq(
+        report(f"codedpq np=$np C=$c", () => graft.ann.CodedKnnJoin.knnJoinSelf(
             idx, probes, books, Seq("label"), k = 3, candidates = c)
           .select(col("qid"), col("vec_id").as("nbr_id")))
-        report(f"codedsq np=$np C=$c", () => graft.ann.CodedKnnJoin.knnJoinSelfSq(
+        report(f"codedsq np=$np C=$c", () => graft.ann.CodedKnnJoin.knnJoinSelf(
             idx, sqProbes, grid, Seq("label"), k = 3, candidates = c)
           .select(col("qid"), col("vec_id").as("nbr_id")))
       }

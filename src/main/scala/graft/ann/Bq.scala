@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** 1-bit binary quantization — the bottom rung of the compression
@@ -8,23 +8,25 @@ import org.apache.spark.sql.functions._
   * IVF×PQ (cell pruning on top): 64 dims → 8 bytes, no training.
   *
   *   - FIT: per-dimension midpoint mid_d = (lo_d + hi_d) · 0.5 from
-  *     corpus min/max — ONE partial-agg pass, order-free (a float
-  *     MEAN would be order-dependent across engines and could flip
-  *     the bit of any value near the threshold);
+  *     corpus min/max — ONE partial-agg pass (Quantizer.minMax),
+  *     order-free (a float MEAN would be order-dependent across
+  *     engines and could flip the bit of any value near the
+  *     threshold);
   *   - ENCODE: bit_d = x_d > mid_d, packed LSB-first into a single
   *     binary column of ceil(dim/8) bytes (BqEncode kernel);
   *   - SEARCH: Hamming distance to the driver-encoded query codes
   *     (BqHamming: XOR + popcount — integer, so candidate ordering
   *     has NO float-determinism surface at all), candidates by
   *     (hamming, id), then exact-cosine rerank of the bounded set
-  *     (the same FAISS refine shape as Pq.adcTopK / Sq.adcTopK).
+  *     (Quantizer.candidateTopK, the refine shape every rung shares).
   *
   * At 100 TB the candidate pass reads dim/8 bytes per row — 32× less
   * I/O than the float vectors and 4-8× less than SQ8/PQ codes —
   * which is why binary sketches are the standard first-pass filter
   * in front of a finer index. The recall trade is quantified by
   * ann_bq_recall exactly as ann_sq_recall / ann_pq_recall do for the
-  * finer rungs.
+  * finer rungs. No coded self-join rung uses 1-bit codes, so the
+  * thresholds implement the query-side contract only.
   *
   * Determinism (SURVEY §5): fit is min/max (order-free); the encode
   * comparison and bit packing are fixed per-dimension op sequences
@@ -37,62 +39,45 @@ object Bq {
   import org.apache.spark.sql.graftshim.{ColumnBridge => EU}
   import graft.functions.expr.{BqEncode, BqHamming, BqKernel}
 
-  final case class Thresholds(mid: Array[Double])
+  final case class Thresholds(mid: Array[Double]) extends Quantizer {
 
-  /** Per-dimension midpoint thresholds — one aggregation, driver
-    * payload 2×dim doubles (never corpus-sized).
-    */
-  def fit(corpus: DataFrame, vecCol: String, dim: Int): Thresholds = {
-    val v = col(vecCol).cast("array<double>")
-    val aggs = (0 until dim).map(d => min(element_at(v, d + 1)).as(s"_lo$d")) ++
-      (0 until dim).map(d => max(element_at(v, d + 1)).as(s"_hi$d"))
-    val r = corpus.agg(aggs.head, aggs.tail: _*).head()
-    Thresholds(Array.tabulate(dim) { d =>
-      require(!r.isNullAt(d) && !r.isNullAt(dim + d),
-        s"Bq.fit: no values in dimension $d — empty corpus, or null " +
-          s"vectors/components throughout; cannot derive thresholds " +
-          s"(the '$vecCol' table must hold at least one non-null $dim-dim vector)")
-      (r.getDouble(d) + r.getDouble(dim + d)) * 0.5
-    })
+    def dim: Int = mid.length
+
+    def codeCols: Seq[String] = Seq("bcodes")
+
+    /** Append the packed sign-bit column — one narrow codegen'd
+      * projection (no shuffle).
+      */
+    def encode(corpus: DataFrame, vecCol: String): DataFrame =
+      corpus.withColumn("bcodes", EU.column(BqEncode(
+        EU.expression(col(vecCol).cast("array<double>")), EU.expression(lit(mid)))))
+
+    def save(spark: SparkSession, dir: String): Unit = {
+      import spark.implicits._
+      Seq(mid.toSeq).toDF("mid")
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
+    }
+
+    def queryDistance(queryVec: Array[Double]): Column =
+      EU.column(BqHamming(EU.expression(col("bcodes")),
+        EU.expression(lit(BqKernel.encodeLocal(queryVec, mid)))))
+
+    override def distanceOut(raw: Column): Column = raw.as("hamming")
   }
 
-  def encodeCol(vec: Column, th: Thresholds): Column =
-    EU.column(BqEncode(EU.expression(vec.cast("array<double>")),
-      EU.expression(lit(th.mid))))
+  object Thresholds {
 
-  /** Append the packed sign-bit column — one narrow codegen'd
-    * projection (no shuffle).
-    */
-  def encode(corpus: DataFrame, vecCol: String, th: Thresholds,
-      codeCol: String = "bcodes"): DataFrame =
-    corpus.withColumn(codeCol, encodeCol(col(vecCol), th))
+    /** The persisted midpoint thresholds, driver-loaded (dim doubles). */
+    def load(spark: SparkSession, dir: String): Thresholds = {
+      val r = spark.read.parquet(dir).collect()
+      require(r.length == 1, s"Bq.Thresholds: malformed thresholds at $dir")
+      Thresholds(r(0).getSeq[Double](0).toArray)
+    }
+  }
 
-  /** Hamming candidate generation + exact rerank for one query
-    * vector — the two-phase serving shape shared with Pq.adcTopK /
-    * Sq.adcTopK: the candidate pass projects ONLY (id, codes); the
-    * `candidates` winners' float vectors come back via a broadcast
-    * id-lookup for the exact-cosine final k.
-    */
-  def hammingTopK(encoded: DataFrame, idCol: String, vecCol: String,
-      th: Thresholds, queryVec: Array[Double], k: Int, candidates: Int = 0,
-      codeCol: String = "bcodes"): DataFrame = {
-    val nCand = if (candidates <= 0) k else candidates
-    require(nCand >= k, s"candidates $nCand must be >= k $k")
-    val qCodes = BqKernel.encodeLocal(queryVec, th.mid)
-    val cands = encoded
-      .select(col(idCol), col(codeCol))
-      .withColumn("_ham",
-        EU.column(BqHamming(EU.expression(col(codeCol)), EU.expression(lit(qCodes)))))
-      .orderBy(col("_ham"), col(idCol))
-      .limit(nCand)
-    import graft.functions.VectorFunctions.cosine
-    encoded.select(col(idCol), col(vecCol))
-      .join(broadcast(cands), Seq(idCol))
-      .withColumn("_exact", cosine(col(vecCol).cast("array<double>"), lit(queryVec)))
-      .orderBy(desc("_exact"), col(idCol))
-      .limit(k)
-      .select(col(idCol),
-        col("_ham").as("hamming"),
-        round(col("_exact"), 6).as("exact_score"))
+  /** Per-dimension midpoint thresholds from the corpus min/max. */
+  def fit(corpus: DataFrame, vecCol: String, dim: Int): Thresholds = {
+    val (lo, hi) = Quantizer.minMax(corpus, vecCol, dim, "Bq.fit")
+    Thresholds(Array.tabulate(dim)(d => (lo(d) + hi(d)) * 0.5))
   }
 }

@@ -14,16 +14,17 @@ import graft.functions.VectorFunctions._
   * list, and only then pays exact cosines over n × candidates pairs
   * (the FAISS refine shape graft's point queries already use).
   *
-  * Two rungs of the measured compression ladder, both implemented —
-  * the same trade the point-query family documents (ann_pq vs
-  * ann_sq), replayed at join scale:
+  * One join ([[knnJoinSelf]]) over any [[PairQuantizer]]; two rungs
+  * of the measured compression ladder implement it — the same trade
+  * the point-query family documents (ann_pq vs ann_sq), replayed at
+  * join scale:
   *
-  *   - PQ-SDC ([[knnJoinSelfPq]], kernel PqSdc): 8 BYTES per side
+  *   - PQ-SDC (Pq.Books, kernel PqSdc): 8 BYTES per side
   *     (codes packed into one long), per pair 8 table lookups — the
   *     cheapest possible candidate stage, but two codebook
   *     quantizations of noise mean the cut needs ~32 candidates to
   *     hold the coarse ceiling on the bench sphere;
-  *   - SQ8-SDC ([[knnJoinSelfSq]], kernel SqSdc): dim bytes per side
+  *   - SQ8-SDC (Sq.Grid, kernel SqSdc): dim bytes per side
   *     (64 B at Dim 64 — still 4× under float), per pair the
   *     dequantized-gap fold; 256 levels/dim track exact ordering so
   *     closely that candidates = 6 already reproduces the coarse
@@ -51,13 +52,13 @@ import graft.functions.VectorFunctions._
   * shared IVF layout, the shared code model (the ann_pq codebooks /
   * the ann_sq grid — one fit serving point queries AND the corpus
   * join), and ONE coded probe table per rung from
-  * [[buildPqProbeTable]] / [[buildSqProbeTable]] — (qid, q_<block>…,
-  * prank, cell, <codes>) where prank ranks the query's np nearest
-  * cells. Its prank = 1 rows ARE the members side (NearestCentroids'
-  * rank-1 pick is the NearestCentroid assignment by construction —
-  * the np = 1 special case), so the per-run join reads one narrow
-  * artifact twice; this mirrors the oracle's `rn = 1 members /
-  * rn <= np probes` CTE pair literally.
+  * [[buildProbeTable]] — (qid, q_<block>…, prank, cell, qcode) where
+  * prank ranks the query's np nearest cells. Its prank = 1 rows ARE
+  * the members side (NearestCentroids' rank-1 pick is the
+  * NearestCentroid assignment by construction — the np = 1 special
+  * case), so the per-run join reads one narrow artifact twice; this
+  * mirrors the oracle's `rn = 1 members / rn <= np probes` CTE pair
+  * literally.
   *
   * Determinism (SURVEY §5): SDC scores replay in SQL from the
   * replayed fits; candidate cut orders by (sdc asc, id asc) — the
@@ -66,23 +67,16 @@ import graft.functions.VectorFunctions._
   */
 object CodedKnnJoin {
 
-  /** The PQ-coded self-probe artifact: every layout row's np nearest
-    * cells (prank 1..np, rank 1 = the member cell) + its flat-PQ
-    * codes PACKED into one long (code s at bit 8s) + the block
-    * columns — ~(8 + 8 + 4 + 8 + 8·|block|) bytes per row × n×np rows.
+  /** The coded self-probe artifact: every layout row's np nearest
+    * cells (prank 1..np, rank 1 = the member cell) + its pair code
+    * (PQ: the flat codes packed into one long; SQ8: the dim-byte codes
+    * packed into ceil(dim/8) longs) + the block columns.
     */
-  def buildPqProbeTable(ivf: IvfIndex, books: Seq[DataFrame], dim: Int,
-      np: Int, blockCols: Seq[String] = Nil): DataFrame =
-    pqProbeRows(ivf, ivf.cells, books, dim, np, blockCols)
+  def buildProbeTable(ivf: IvfIndex, q: PairQuantizer, np: Int,
+      blockCols: Seq[String] = Nil): DataFrame =
+    probeRows(ivf, ivf.cells, q, np, blockCols)
 
-  /** The SQ8-coded self-probe artifact: same shape with the dim-byte
-    * SQ8 code column (qsq, binary) instead of the packed PQ long.
-    */
-  def buildSqProbeTable(ivf: IvfIndex, grid: Sq.Grid,
-      np: Int, blockCols: Seq[String] = Nil): DataFrame =
-    sqProbeRows(ivf, ivf.cells, grid, np, blockCols)
-
-  /** INCREMENTAL maintenance of the coded probe artifacts — the
+  /** INCREMENTAL maintenance of the coded probe artifact — the
     * IvfIndex.appendSelfProbe discipline applied to the coded rungs:
     * a batch tick encodes the new rows against the FROZEN code model
     * (the corpus-version codebooks/grid — the same freeze contract as
@@ -92,67 +86,15 @@ object CodedKnnJoin {
     * (CodedProbeMaintenanceSpec property-checks it). A model REFIT is
     * a re-index (new artifact path), never an append.
     */
-  def appendPqProbe(ivf: IvfIndex, batch: DataFrame, probePath: String,
-      books: Seq[DataFrame], dim: Int, np: Int,
-      blockCols: Seq[String] = Nil): Unit =
-    pqProbeRows(ivf, batch, books, dim, np, blockCols)
+  def appendProbe(ivf: IvfIndex, batch: DataFrame, probePath: String,
+      q: PairQuantizer, np: Int, blockCols: Seq[String] = Nil): Unit =
+    probeRows(ivf, batch, q, np, blockCols)
       .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(probePath)
 
-  def appendSqProbe(ivf: IvfIndex, batch: DataFrame, probePath: String,
-      grid: Sq.Grid, np: Int, blockCols: Seq[String] = Nil): Unit =
-    sqProbeRows(ivf, batch, grid, np, blockCols)
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(probePath)
-
-  private def pqProbeRows(ivf: IvfIndex, src: DataFrame,
-      books: Seq[DataFrame], dim: Int, np: Int,
-      blockCols: Seq[String]): DataFrame = {
-    require(books.size <= 8, s"PQ packing needs nSub <= 8, got ${books.size}")
-    // fail at ARTIFACT-BUILD time, not query time: the 8-bit packing
-    // below silently corrupts codes (bleed into neighboring bytes) if
-    // a codebook exceeds 256 codewords or ids aren't the dense
-    // relabel — sdcLut enforces this at join time, but by then the
-    // corrupt artifact is already on disk (round-14 advice #1).
-    // Cost: one ≤ 256×nSub-row collect per build/append.
-    collectBooks(books)
-    val packed = books.indices
-      .map(s => shiftleft(col(s"code$s"), 8 * s))
-      .reduce(_.bitwiseOR(_))
-    probeTable(ivf, np, blockCols,
-      Pq.encode(src, ivf.idCol, ivf.vecCol, books, dim),
-      packed.as("qpq"))
-  }
-
-  /** Schema-metadata key carrying the ENCODE-TIME dim on the packed
-    * SQ code column: the packed-long layout can only word-count-check
-    * dim drift (ceil(dim/8) granularity), so the exact dim rides in
-    * the parquet footer's schema metadata — zero extra rows or jobs —
-    * and [[knnJoinSelfSq]] requires it to equal the current grid's
-    * (round-16 advice: drift WITHIN one 8-code word, e.g. a probe
-    * encoded at 63 dims against a 64-dim grid, otherwise folds pad
-    * bytes as code 0 — plausible-but-wrong partial distances).
-    */
-  private[graft] val SqEncDimKey = "graft.sq.encDim"
-
-  private def sqProbeRows(ivf: IvfIndex, src: DataFrame, grid: Sq.Grid,
+  private def probeRows(ivf: IvfIndex, src: DataFrame, q: PairQuantizer,
       np: Int, blockCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnBridge
-    // codes packed into ceil(dim/8) longs (SqPack): the SDC join reads
-    // them zero-copy per pair, where the binary column's per-access
-    // copy dominated the candidate stage at join pair counts
-    val packed = ColumnBridge.column(graft.functions.expr.SqPack(
-      ColumnBridge.expression(col("_sqc"))))
-    val encDimMeta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong(SqEncDimKey, grid.step.length.toLong).build()
-    val coded = Sq.encode(src, ivf.vecCol, grid, codeCol = "_sqc")
-    probeTable(ivf, np, blockCols,
-      coded.select(coded.columns.filter(_ != "_sqc").map(col) :+
-        packed.as("_sqp", encDimMeta): _*),
-      col("_sqp").as("qsq"))
-  }
-
-  private def probeTable(ivf: IvfIndex, np: Int, blockCols: Seq[String],
-      coded: DataFrame, codeCol: Column): DataFrame = {
-    import org.apache.spark.sql.graftshim.ColumnBridge
+    val (coded, codeCol) = q.pairCode(src, ivf.vecCol)
     val rows = ivf.centroids
       .select(col("cell").cast("long"), col("cv").cast("array<double>"))
       .collect()
@@ -172,59 +114,17 @@ object CodedKnnJoin {
         col("qcode"): _*)
   }
 
-  /** PQ-SDC rung: candidate scores from the packed-long codes via the
-    * PqSdc lookup kernel. `probes` is a persisted
-    * [[buildPqProbeTable]] frame.
+  /** The coded corpus kNN join: candidate scores are the quantizer's
+    * SDC over the two pair codes (PQ: the PqSdc lookup kernel; SQ8:
+    * the SqSdc dequantized-gap kernel, optionally folded over a
+    * dimension prefix — Sq.Grid.sdcDims). `probes` is a persisted
+    * [[buildProbeTable]] frame built with the same model.
     */
-  def knnJoinSelfPq(ivf: IvfIndex, probes: DataFrame, books: Seq[DataFrame],
+  def knnJoinSelf(ivf: IvfIndex, probes: DataFrame, q: PairQuantizer,
       blockCols: Seq[String], k: Int, candidates: Int,
       queryPred: Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.graftshim.ColumnBridge
-    val (lut, kk) = sdcLut(books)
-    val sdc = ColumnBridge.column(graft.functions.expr.PqSdc(
-      ColumnBridge.expression(col("_mcode")),
-      ColumnBridge.expression(col("qcode")), lut, kk))
-    joinCore(ivf, probes, blockCols, k, candidates, queryPred, sdc)
-  }
-
-  /** SQ8-SDC rung: candidate scores from the dim-byte codes via the
-    * SqSdc dequantized-gap kernel. `probes` is a persisted
-    * [[buildSqProbeTable]] frame. Geometry-gated: the byte advantage
-    * appears at production dims/wide probes (object scaladoc,
-    * [[chooseJoinRung]]); the exact np=16 join ships at dim 64.
-    */
-  /** `sdcDims` (0 = all) truncates the SDC fold to the FIRST D′
-    * dimensions — the polysemous-style prefix filter for
-    * high-dimension corpora where the full per-pair fold costs as
-    * much as the exact dot it replaces (SqSdc folds to
-    * min(codes, step2.length), so the truncated step² array IS the
-    * mechanism): a dimension prefix of an isotropic embedding is an
-    * unbiased distance subsample, `candidates` absorbs the added
-    * selection noise, and the exact rerank restores output scores.
-    */
-  def knnJoinSelfSq(ivf: IvfIndex, probes: DataFrame, grid: Sq.Grid,
-      blockCols: Seq[String], k: Int, candidates: Int,
-      queryPred: Column = lit(true), sdcDims: Int = 0): DataFrame = {
-    import org.apache.spark.sql.graftshim.ColumnBridge
-    // exact dim-drift gate (round-16 advice): the encode-time dim the
-    // probe artifact carries in its schema metadata must equal the
-    // current grid's — the SqSdc word-count check alone cannot see
-    // drift within one 8-code word. Schema-only: no job, no collect.
-    val qmeta = probes.schema("qcode").metadata
-    if (qmeta.contains(SqEncDimKey))
-      require(qmeta.getLong(SqEncDimKey) == grid.step.length.toLong,
-        s"knnJoinSelfSq: probe artifact encoded at dim " +
-          s"${qmeta.getLong(SqEncDimKey)} but the grid has " +
-          s"${grid.step.length} dims — rebuild the probe table " +
-          "against the current grid (grid/corpus drift)")
-    // step² precomputed once driver-side (one rounding per dim — the
-    // oracle mirrors it as step*step inside its fold)
-    val step2 = grid.step.map(s => s * s)
-    val sdc = ColumnBridge.column(graft.functions.expr.SqSdc(
-      ColumnBridge.expression(col("_mcode")),
-      ColumnBridge.expression(col("qcode")),
-      if (sdcDims > 0) step2.take(sdcDims) else step2,
-      grid.step.length))
+    val sdc = q.pairDistance(col("_mcode"), col("qcode"),
+      probes.schema("qcode").metadata)
     joinCore(ivf, probes, blockCols, k, candidates, queryPred, sdc)
   }
 
@@ -277,56 +177,6 @@ object CodedKnnJoin {
       .select(col("qid"), col("_t.id").as(ivf.idCol),
         round(col("_t.score"), 6).as("score"),
         (col("_pos") + 1).cast("long").as("rk"))
-  }
-
-  /** The nSub × (K×K) SDC tables from the fitted codebooks — the same
-    * left-to-right d² fold as NearestCentroid / the oracle's
-    * list_reduce, indexed lut(s)(codeA·K + codeB).
-    */
-  private def sdcLut(books: Seq[DataFrame]): (Array[Array[Double]], Int) = {
-    val local = collectBooks(books)
-    val k = local.head.length
-    val lut = local.map { book =>
-      val t = new Array[Double](k * k)
-      var a = 0
-      while (a < k) {
-        val va = book(a)._2
-        var c = 0
-        while (c < k) {
-          val vc = book(c)._2
-          var d = 0.0
-          var j = 0
-          while (j < va.length) { val x = va(j) - vc(j); d += x * x; j += 1 }
-          t(a * k + c) = d
-          c += 1
-        }
-        a += 1
-      }
-      t
-    }.toArray
-    (lut, k)
-  }
-
-  /** Collect + validate the fitted codebooks — the single place the
-    * byte-packing preconditions live (codeword count ≤ 256, ids the
-    * dense 0..K-1 relabel, equal K across subspaces), shared by the
-    * artifact BUILD path (pqProbeRows — so a bad fit fails before a
-    * corrupt packed-code table persists) and the join-time LUT.
-    */
-  private def collectBooks(books: Seq[DataFrame]): Seq[Array[(Long, Array[Double])]] = {
-    val local = books.map { b =>
-      val rows = b.select(col("cid").cast("long"), col("cv").cast("array<double>"))
-        .collect()
-      require(rows.nonEmpty && rows.length <= 256,
-        s"CodedKnnJoin: codebook has ${rows.length} codewords (byte packing caps K at 256)")
-      rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    }
-    val k = local.head.length
-    require(local.forall(_.length == k),
-      "CodedKnnJoin: all codebooks must have the same codeword count")
-    require(local.forall(b => b.indices.forall(i => b(i)._1 == i.toLong)),
-      "CodedKnnJoin: codebook ids must be the dense 0..K-1 relabel")
-    local
   }
 
   /** Rung selection by geometry, encoding the measured crossover

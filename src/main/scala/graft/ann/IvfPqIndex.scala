@@ -9,23 +9,23 @@ import org.apache.spark.sql.functions._
   *
   * `build` pays the whole cost once at ingest: IVF cell assignment
   * (Ann.ivfAssign), per-subspace PQ encoding of the RESIDUAL
-  * x − centroid(cell) (Ann.residuals + Pq.encode — the FAISS IVFPQ
-  * shape: within-cell residuals are small, so the code budget's
+  * x − centroid(cell) (Ann.residuals + Pq.Books.encode — the FAISS
+  * IVFPQ shape: within-cell residuals are small, so the code budget's
   * precision lands where the data is), then ONE parquet write
-  * `partitionBy(cell)` carrying (id, vector, code0..code{nSub-1}). Centroids and the nSub codebooks are tiny
-  * side parquets (bounded by the 65536-codeword require in
-  * Pq.adcTopK when read back).
+  * `partitionBy(cell)` carrying (id, vector, code0..code{nSub-1}).
+  * Centroids and the nSub codebooks are tiny side parquets (bounded
+  * by the 65536-codeword require in Pq.Books when read back).
   *
   * A query then touches nprobe/nlist of the data at code width:
   * `probeCells` ranks the (bounded, driver-collected) centroid frame
   * by the same left-to-right d² fold the oracle orders by;
   * `searchCells` filters on the driver-known cell list — STATIC
-  * partition pruning, asserted by IvfPqIndexSpec — and runs Pq's ADC
-  * candidate scan over the code columns only, with the exact rerank
-  * fetching just the candidates' float vectors. At 100 TB: the probe
-  * reads nprobe directories of the layout, and the ADC pass inside
-  * them reads nSub bytes per row, not the vector column (columnar
-  * projection on the parquet scan).
+  * partition pruning, asserted by IvfPqIndexSpec — and runs the
+  * shared candidate plan (Quantizer.candidateTopK) over the code
+  * columns only, with the exact rerank fetching just the candidates'
+  * float vectors. At 100 TB: the probe reads nprobe directories of
+  * the layout, and the ADC pass inside them reads nSub bytes per row,
+  * not the vector column (columnar projection on the parquet scan).
   */
 final class IvfPqIndex private (
     val spark: SparkSession,
@@ -38,12 +38,11 @@ final class IvfPqIndex private (
 
   def cells: DataFrame = spark.read.parquet(s"$path/cells")
 
-  /** Driver-local codebooks, loaded in ONE job (Pq.loadBooksLocal) and
-    * cached on the instance — downstream ADC-table collects are
-    * jobless. The layout is immutable (IvfPqIndex has no maintenance
-    * mutators), so the cache cannot go stale.
+  /** Driver-local codebooks, loaded in ONE job (Pq.Books.load) and
+    * cached on the instance. The layout is immutable (IvfPqIndex has
+    * no maintenance mutators), so the cache cannot go stale.
     */
-  lazy val books: Seq[DataFrame] = Pq.loadBooksLocal(spark, path, nSub)
+  lazy val books: Pq.Books = Pq.Books.load(nSub)(spark, s"$path/model")
 
   /** The bounded centroid frame, collected ONCE per instance —
     * [[probeCells]] and [[searchCells]] both need it, and the previous
@@ -62,7 +61,7 @@ final class IvfPqIndex private (
     * left-to-right squared-L2 fold with a (d², cell) tiebreak —
     * identical to the oracle's probe CTE. Driver-side over the
     * bounded centroid frame (same planning-time materialization
-    * class as Pq's ADC tables).
+    * class as the ADC tables).
     */
   def probeCells(queryVec: Array[Double], nprobe: Int): Seq[Long] = {
     centroidsLocal.map { case (c, cv) =>
@@ -79,7 +78,7 @@ final class IvfPqIndex private (
 
   /** ADC top-k inside the driver-known probed cells: the cell filter
     * compiles to PartitionFilters on the layout scan, then the
-    * RESIDUAL per-cell ADC (Pq.adcTopKPerCell — codes approximate
+    * RESIDUAL per-cell ADC (Pq.PerCell — codes approximate
     * x − centroid(cell), so each probed cell gets its own query
     * table) runs over the surviving files' code columns only, with
     * the exact rerank fetching just the candidates' float vectors.
@@ -89,10 +88,9 @@ final class IvfPqIndex private (
   def searchCells(cellIds: Seq[Long], queryVec: Array[Double],
       k: Int, candidates: Int = 0): DataFrame = {
     val probedCents = centroidsLocal.filter { case (c, _) => cellIds.contains(c) }
-    Pq.adcTopKPerCell(
-      cells.filter(col("cell").isin(cellIds: _*)),
-      idCol, vecCol, "cell", books, queryVec, probedCents,
-      k = k, candidates = candidates)
+    Quantizer.candidateTopK(cells.filter(col("cell").isin(cellIds: _*)),
+      idCol, vecCol, books.perCell("cell", probedCents), queryVec,
+      k = k, candidates = candidates, carryCols = Seq("cell"))
   }
 }
 
@@ -101,7 +99,7 @@ object IvfPqIndex {
   /** The per-row residual frame (assign → `x − centroid(cell)`) both
     * the PQ fit and the encode consume — FAISS IVFPQ quantizes
     * residuals, not raw vectors (Jégou et al. 2011 §IV.A). Cell is
-    * staged under `_ivf_cell` (Pq.encode's subspace assigns each
+    * staged under `_ivf_cell` (the PQ encode's subspace assigns each
     * reuse the "cell" slot — the ann_ivf_pq lesson), the residual
     * under `_res`.
     */
@@ -117,13 +115,11 @@ object IvfPqIndex {
 
   /** Assign cells, residual-encode codes, write the partitioned
     * layout. `centroids` must have (cid, cv); `books` must be
-    * Pq.fit's output over the RESIDUAL column of [[residualFrame]]
-    * (Barrier them if the caller reuses them — build reads each
-    * twice: encode + save).
+    * Pq.fit's output over the RESIDUAL column of [[residualFrame]].
     */
   def build(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, cidCol: String, cvecCol: String,
-      books: Seq[DataFrame], dim: Int, path: String,
+      books: Pq.Books, path: String,
       filesPerCell: Int = 0,
       targetRowsPerFile: Long = IvfIndex.DefaultTargetRowsPerFile): IvfPqIndex = {
     val spark = corpus.sparkSession
@@ -134,7 +130,7 @@ object IvfPqIndex {
     // being capped at one (see IvfIndex.build)
     val fpc = IvfIndex.resolveFilesPerCell(corpus,
       centroids.select(col(cidCol).as("cell")), filesPerCell, targetRowsPerFile)
-    Pq.encode(withRes, idCol, "_res", books, dim)
+    books.encode(withRes, "_res")
       .drop("_res")
       .withColumnRenamed("_ivf_cell", "cell")
       .withColumn("slot", pmod(hash(col(idCol)), lit(fpc)))
@@ -147,14 +143,12 @@ object IvfPqIndex {
     // the build-side partitioning
     centroids.select(col(cidCol).as("cell"), col(cvecCol).as("cv"))
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    books.zipWithIndex.foreach { case (b, s) =>
-      b.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/book$s")
-    }
+    books.save(spark, s"$path/model")
     // same layout-geometry meta as IvfIndex.build — uniform across
     // the index family, ready for a future PQ append path
     spark.range(1).select(lit(fpc).as("files_per_cell"))
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
-    new IvfPqIndex(spark, path, idCol, vecCol, books.size)
+    new IvfPqIndex(spark, path, idCol, vecCol, books.nSub)
   }
 
   def load(spark: SparkSession, path: String, idCol: String, vecCol: String,

@@ -1,7 +1,8 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.Metadata
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search") — the memory-compression ANN scale path
@@ -27,8 +28,10 @@ import org.apache.spark.sql.functions._
   *     approximates ||q - x||² as the sum of per-subspace table
   *     lookups, and TakeOrderedAndProject keeps the top `candidates`
   *     rows; those (and only those) get an exact-cosine rerank to the
-  *     final k. Per-corpus-row cost: nSub map lookups + an add chain
-  *     — no vector arithmetic at all.
+  *     final k (Quantizer.candidateTopK). Per-corpus-row cost: nSub
+  *     map lookups + an add chain — no vector arithmetic at all;
+  *   - PAIRS: the nSub byte codes packed into one long, scored by the
+  *     PqSdc codeword-table lookup in the coded self-join.
   *
   * Determinism contract (SURVEY §5): subspace slicing is positional;
   * seed relabeling is ordered by id; every d² is the same
@@ -56,8 +59,8 @@ object Pq {
     * chain (same kernel, same decimal-exact means, same grouping —
     * decimal addition is exact, so the merged grouping cannot drift),
     * which is what keeps the replayed-fit oracles green. Returned
-    * codebooks are driver-materialized local relations (≤ nSub×K tiny
-    * rows): downstream encode/ADC collects are free, and no Barrier
+    * codebooks are driver-local arrays (≤ nSub×K tiny rows):
+    * downstream encode and ADC tables need no job, and no Barrier
     * checkpoint is needed.
     *
     * Rows whose vector is null or shorter than `dim` take no part in
@@ -66,7 +69,7 @@ object Pq {
     * are ignored).
     */
   def fit(corpus: DataFrame, idCol: String, vecCol: String,
-      dim: Int, nSub: Int, seedMod: Long, iters: Int): Seq[DataFrame] = {
+      dim: Int, nSub: Int, seedMod: Long, iters: Int): Books = {
     require(dim % nSub == 0, s"dim $dim must split evenly into $nSub subspaces")
     val subDim = dim / nSub
     val vecs = corpus.filter(col(vecCol).isNotNull && size(col(vecCol)) >= dim)
@@ -87,9 +90,7 @@ object Pq {
     }
     for (_ <- 1 to iters)
       books = lloydStepAll(vecs, vecCol, books, dim)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    books.map(_.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv"))
+    Books(books)
   }
 
   /** One merged Lloyd update for every subspace: assign (all kernels
@@ -149,59 +150,6 @@ object Pq {
     }
   }
 
-  /** Append code columns `code0..code{nSub-1}` — every subspace's
-    * NearestCentroid kernel in ONE narrow WholeStageCodegen projection
-    * over the corpus.
-    */
-  def encode(corpus: DataFrame, idCol: String, vecCol: String,
-      books: Seq[DataFrame], dim: Int): DataFrame =
-    encodeLocal(corpus, vecCol, books.map(collectBook), dim)
-
-  private def collectBook(book: DataFrame): Array[(Long, Array[Double])] = {
-    val rows = book.select(col("cid").cast("long"), col("cv").cast("array<double>"))
-      .collect()
-    require(rows.nonEmpty && rows.length <= 65536,
-      s"Pq: codebook has ${rows.length} codewords (bounds: [1, 65536])")
-    rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-  }
-
-  /** Load every `book0..book{nSub-1}` dir of a persisted layout in ONE
-    * scan job and rebuild each codebook as a driver-LOCAL relation —
-    * the same "downstream collects are free" property [[fit]]'s output
-    * has. The previous shape (one `spark.read.parquet` + collect per
-    * book) cost nSub separate driver jobs per query against a loaded
-    * index; at sf0.1 those fixed job floors dominated the PQ entries'
-    * wall clock. Bounded by the same 65536-codeword rule as
-    * [[collectBook]] (≤ nSub × 65536 tiny rows on the driver).
-    */
-  def loadBooksLocal(spark: org.apache.spark.sql.SparkSession,
-      path: String, nSub: Int): Seq[DataFrame] = {
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    // subspace tag anchored to the file's IMMEDIATE parent dir: an
-    // unanchored "book([0-9]+)/" matches the FIRST occurrence anywhere
-    // in the path, so an index rooted under e.g. .../notebook1/... got
-    // every row tagged subspace 1 (round-16 advice)
-    val rows = spark.read.parquet((0 until nSub).map(s => s"$path/book$s"): _*)
-      .select(regexp_extract(input_file_name(), "/book([0-9]+)/[^/]*$", 1)
-          .cast("int").as("_s"),
-        col("cid").cast("long"), col("cv").cast("array<double>"))
-      .collect()
-    require(rows.length <= nSub * 65536,
-      s"loadBooksLocal: ${rows.length} codewords across $nSub books (bounds)")
-    val schema = StructType(Seq(StructField("cid", LongType),
-      StructField("cv", ArrayType(DoubleType))))
-    val bySub = rows.groupBy(_.getInt(0))
-    (0 until nSub).map { s =>
-      val rs = bySub.getOrElse(s, Array.empty[org.apache.spark.sql.Row])
-      require(rs.nonEmpty, s"loadBooksLocal: book$s at $path is empty")
-      spark.createDataFrame(
-        rs.sortBy(_.getLong(1))
-          .map(r => org.apache.spark.sql.Row(r.getLong(1), r.getSeq[Double](2)))
-          .toSeq.asJava, schema)
-    }
-  }
-
   private def encodeLocal(corpus: DataFrame, vecCol: String,
       books: Seq[Array[(Long, Array[Double])]], dim: Int): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnBridge
@@ -219,139 +167,204 @@ object Pq {
     graft.Tables.fanOut(corpus).select(col("*") +: codeCols: _*)
   }
 
-  /** ADC candidate generation + exact rerank (FAISS's refine shape)
-    * for one query vector: distance tables from the (collected,
-    * ≤ nSub×K-row) codebooks become map literals; the candidate scan
-    * touches only the code columns and keeps the `candidates` best by
-    * ADC; the winners' float vectors are fetched by id and the final
-    * k are ranked by EXACT cosine. Quantization noise costs recall
-    * only when a true neighbor misses the candidate set — `candidates`
-    * is the recall dial (measured by ann_pq_recall), and the exact
-    * fetch is a bounded candidate-set lookup, never a corpus scan.
-    * `candidates <= 0` means rerank exactly the top k.
+  /** The fitted codebooks — one (cid 0..K-1, codeword) array per
+    * subspace, sorted by cid — as a [[PairQuantizer]]: the flat-PQ
+    * model of ann_pq and of the coded self-join, and, through
+    * [[perCell]], the residual model of IVF×PQ.
     */
-  def adcTopK(encoded: DataFrame, idCol: String, vecCol: String,
-      books: Seq[DataFrame], queryVec: Array[Double], k: Int,
-      candidates: Int = 0, carryCols: Seq[String] = Seq.empty): DataFrame = {
-    val nCand = if (candidates <= 0) k else candidates
-    require(nCand >= k, s"candidates $nCand must be >= k $k")
-    val subDim = queryVec.length / books.size
-    val tables: Seq[Map[Long, Double]] = books.zipWithIndex.map { case (book, s) =>
-      val rows = book.select(col("cid").cast("long"), col("cv").cast("array<double>"))
-        .collect()
-      require(rows.nonEmpty && rows.length <= 65536,
-        s"adcTopK: codebook $s has ${rows.length} codewords")
-      rows.map { r =>
-        val cv = r.getSeq[Double](1)
-        // same left-to-right squared-L2 fold as NearestCentroid/DuckDB
+  final case class Books(codebooks: Seq[Array[(Long, Array[Double])]])
+      extends PairQuantizer {
+    require(codebooks.nonEmpty && codebooks.forall(b => b.nonEmpty && b.length <= 65536),
+      s"Pq.Books: codebooks hold ${codebooks.map(_.length).mkString(", ")} " +
+        "codewords (bounds: [1, 65536] each)")
+
+    def nSub: Int = codebooks.size
+
+    def dim: Int = nSub * codebooks.head.head._2.length
+
+    def codeCols: Seq[String] = codebooks.indices.map(s => s"code$s")
+
+    override def resultCols: Seq[String] = codeCols
+
+    /** Append code columns `code0..code{nSub-1}` — every subspace's
+      * NearestCentroid kernel in ONE narrow WholeStageCodegen
+      * projection over the corpus.
+      */
+    def encode(corpus: DataFrame, vecCol: String): DataFrame =
+      encodeLocal(corpus, vecCol, codebooks, dim)
+
+    /** One tiny parquet per book (`book<s>/`), one file each, so the
+      * load-side combined scan costs one task per book.
+      */
+    def save(spark: SparkSession, dir: String): Unit = {
+      import spark.implicits._
+      codebooks.zipWithIndex.foreach { case (b, s) =>
+        b.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/book$s")
+      }
+    }
+
+    /** ADC: the query's squared distance to every codeword of every
+      * subspace is a tiny driver-side table (nSub × K doubles)
+      * embedded as a map literal; a row's distance sums its nSub
+      * lookups in subspace order (the oracle's add chain).
+      */
+    def queryDistance(queryVec: Array[Double]): Column =
+      codebooks.indices.map { s =>
+        element_at(map(table(s, queryVec): _*), col(s"code$s"))
+      }.reduce(_ + _)
+
+    /** Subspace `s`'s (cid, d²) map entries for query (or query
+      * residual) `q` — the same left-to-right squared-L2 fold as
+      * NearestCentroid and the oracle's list_reduce.
+      */
+    private[Pq] def table(s: Int, q: Array[Double]): Seq[Column] = {
+      val subDim = dim / nSub
+      codebooks(s).toSeq.flatMap { case (cid, cw) =>
         var d = 0.0
         var j = 0
         while (j < subDim) {
-          val diff = queryVec(s * subDim + j) - cv(j)
+          val diff = q(s * subDim + j) - cw(j)
           d += diff * diff
           j += 1
         }
-        r.getLong(0) -> d
-      }.toMap
-    }
-    val adcRaw = tables.zipWithIndex.map { case (tab, s) =>
-      val entries = tab.toSeq.sortBy(_._1)
-        .flatMap { case (cid, d) => Seq(lit(cid), lit(d)) }
-      element_at(map(entries: _*), col(s"code$s"))
-    }.reduce(_ + _) // subspace order — matches the oracle's add chain
-    val qv = lit(queryVec)
-    import graft.functions.VectorFunctions.cosine
-    // two-phase serving shape: the candidate pass projects ONLY
-    // (id, codes) — on a persisted code table the scan never touches
-    // the float vectors — then the candidates' exact scores come from
-    // a broadcast id-lookup against the corpus (a bounded fetch, the
-    // point-lookup any serving store does after candidate selection)
-    val cands = encoded
-      .select(Seq(col(idCol)) ++ carryCols.map(col) ++
-        books.indices.map(s => col(s"code$s")): _*)
-      .withColumn("_adc", adcRaw)
-      .orderBy(col("_adc"), col(idCol))
-      .limit(nCand)
-    val exactRaw = cosine(col(vecCol).cast("array<double>"), qv)
-    encoded.select(col(idCol), col(vecCol))
-      .join(broadcast(cands), Seq(idCol))
-      .withColumn("_exact", exactRaw)
-      .orderBy(desc("_exact"), col(idCol))
-      .limit(k)
-      .select(Seq(col(idCol)) ++ carryCols.map(col) ++
-        books.indices.map(s => col(s"code$s")) ++
-        Seq(round(col("_adc"), 6).as("adc"),
-          round(col("_exact"), 6).as("exact_score")): _*)
-  }
-
-  /** ADC + exact rerank over RESIDUAL codes (FAISS IVFPQ, Jégou et
-    * al. 2011 §IV.A): the codes approximate `x − centroid(cell)`, so
-    * the query-side distance table depends on the row's cell — the
-    * query residual `q − centroid(cell)` differs per probed cell.
-    * With nprobe cells the tables are still a planning-time constant
-    * (nprobe × nSub × K doubles): each subspace's lookup becomes a
-    * two-level map literal `cell → (code → d²)` and the scan cost per
-    * row stays nSub map lookups + an add chain over code columns
-    * only. The rerank is unchanged: the candidates' RAW vectors
-    * (`vecCol`) are fetched by id and ranked by exact cosine against
-    * the raw query. `cellCentroids` must cover every cell present in
-    * `encoded` (i.e. the probed cells — callers filter first).
-    */
-  def adcTopKPerCell(encoded: DataFrame, idCol: String, vecCol: String,
-      cellCol: String, books: Seq[DataFrame], queryVec: Array[Double],
-      cellCentroids: Seq[(Long, Array[Double])], k: Int,
-      candidates: Int = 0, carryCols: Seq[String] = Seq.empty): DataFrame = {
-    val nCand = if (candidates <= 0) k else candidates
-    require(nCand >= k, s"candidates $nCand must be >= k $k")
-    require(cellCentroids.nonEmpty && cellCentroids.size <= 65536,
-      s"adcTopKPerCell: ${cellCentroids.size} probed centroids")
-    val localBooks = books.map(collectBook)
-    val subDim = queryVec.length / books.size
-    // per-cell query residual, then per-(cell, subspace) tables with
-    // the same left-to-right d² fold as adcTopK / the oracle
-    val qres: Seq[(Long, Array[Double])] = cellCentroids.map { case (cell, cv) =>
-      require(cv.length == queryVec.length,
-        s"adcTopKPerCell: centroid dim ${cv.length} != query dim ${queryVec.length}")
-      val r = new Array[Double](queryVec.length)
-      var j = 0
-      while (j < r.length) { r(j) = queryVec(j) - cv(j); j += 1 }
-      (cell, r)
-    }
-    val adcRaw = localBooks.zipWithIndex.map { case (book, s) =>
-      val cellMaps = qres.sortBy(_._1).flatMap { case (cell, qr) =>
-        val entries = book.flatMap { case (cid, cw) =>
-          var d = 0.0
-          var j = 0
-          while (j < subDim) {
-            val diff = qr(s * subDim + j) - cw(j)
-            d += diff * diff
-            j += 1
-          }
-          Seq(lit(cid), lit(d))
-        }
-        Seq(lit(cell), map(entries: _*))
+        Seq(lit(cid), lit(d))
       }
-      element_at(element_at(map(cellMaps: _*), col(cellCol).cast("long")),
-        col(s"code$s"))
-    }.reduce(_ + _) // subspace order — matches the oracle's add chain
-    val carry = (cellCol +: carryCols).distinct.filterNot(_ == idCol)
-    val cands = encoded
-      .select(Seq(col(idCol)) ++ carry.map(col) ++
-        books.indices.map(s => col(s"code$s")): _*)
-      .withColumn("_adc", adcRaw)
-      .orderBy(col("_adc"), col(idCol))
-      .limit(nCand)
-    import graft.functions.VectorFunctions.cosine
-    val exactRaw = cosine(col(vecCol).cast("array<double>"), lit(queryVec))
-    encoded.select(col(idCol), col(vecCol))
-      .join(broadcast(cands), Seq(idCol))
-      .withColumn("_exact", exactRaw)
-      .orderBy(desc("_exact"), col(idCol))
-      .limit(k)
-      .select(Seq(col(idCol)) ++ carry.map(col) ++
-        books.indices.map(s => col(s"code$s")) ++
-        Seq(round(col("_adc"), 6).as("adc"),
-          round(col("_exact"), 6).as("exact_score")): _*)
+    }
+
+    /** The residual view for an IVF×PQ query over the probed cells. */
+    def perCell(cellCol: String, cells: Seq[(Long, Array[Double])]): PerCell =
+      PerCell(this, cellCol, cells)
+
+    /** The codes packed into one long (code s at bit 8s). */
+    def pairCode(src: DataFrame, vecCol: String): (DataFrame, Column) = {
+      require(nSub <= 8, s"PQ packing needs nSub <= 8, got $nSub")
+      // fail at ARTIFACT-BUILD time, not query time: the 8-bit packing
+      // below silently corrupts codes (bleed into neighboring bytes) if
+      // a codebook exceeds 256 codewords or ids aren't the dense
+      // relabel — the join-time LUT checks this too, but by then a
+      // corrupt artifact would already be on disk
+      bytePackedK()
+      val packed = codebooks.indices
+        .map(s => shiftleft(col(s"code$s"), 8 * s))
+        .reduce(_.bitwiseOR(_))
+      (encode(src, vecCol), packed.as("qpq"))
+    }
+
+    /** PqSdc over the nSub × (K×K) SDC tables — the same left-to-right
+      * d² fold as NearestCentroid / the oracle's list_reduce, indexed
+      * lut(s)(codeA·K + codeB).
+      */
+    def pairDistance(member: Column, query: Column, codeMeta: Metadata): Column = {
+      import org.apache.spark.sql.graftshim.{ColumnBridge => EU}
+      val k = bytePackedK()
+      val lut = codebooks.map { book =>
+        val t = new Array[Double](k * k)
+        var a = 0
+        while (a < k) {
+          val va = book(a)._2
+          var c = 0
+          while (c < k) {
+            val vc = book(c)._2
+            var d = 0.0
+            var j = 0
+            while (j < va.length) { val x = va(j) - vc(j); d += x * x; j += 1 }
+            t(a * k + c) = d
+            c += 1
+          }
+          a += 1
+        }
+        t
+      }.toArray
+      EU.column(graft.functions.expr.PqSdc(EU.expression(member),
+        EU.expression(query), lut, k))
+    }
+
+    /** The byte-packing preconditions (codeword count ≤ 256, equal K
+      * across subspaces, ids the dense 0..K-1 relabel), shared by the
+      * artifact BUILD path and the join-time LUT. Returns K.
+      */
+    private def bytePackedK(): Int = {
+      codebooks.foreach(b => require(b.length <= 256,
+        s"Pq.Books: codebook has ${b.length} codewords (byte packing caps K at 256)"))
+      val k = codebooks.head.length
+      require(codebooks.forall(_.length == k),
+        "Pq.Books: all codebooks must have the same codeword count")
+      require(codebooks.forall(b => b.indices.forall(i => b(i)._1 == i.toLong)),
+        "Pq.Books: codebook ids must be the dense 0..K-1 relabel")
+      k
+    }
   }
 
+  object Books {
+
+    /** Load every `book0..book{nSub-1}` dir of a persisted model in ONE
+      * scan job into driver-local codebooks. One read + collect per
+      * book cost nSub separate driver jobs per index load; at sf0.1
+      * those fixed job floors dominated the PQ entries' wall clock.
+      * Bounded by the 65536-codeword rule (≤ nSub × 65536 tiny rows).
+      */
+    def load(nSub: Int)(spark: SparkSession, dir: String): Books = {
+      // subspace tag anchored to the file's IMMEDIATE parent dir: an
+      // unanchored "book([0-9]+)/" matches the FIRST occurrence anywhere
+      // in the path, so an index rooted under e.g. .../notebook1/... got
+      // every row tagged subspace 1
+      val rows = spark.read.parquet((0 until nSub).map(s => s"$dir/book$s"): _*)
+        .select(regexp_extract(input_file_name(), "/book([0-9]+)/[^/]*$", 1)
+            .cast("int").as("_s"),
+          col("cid").cast("long"), col("cv").cast("array<double>"))
+        .collect()
+      require(rows.length <= nSub * 65536,
+        s"Pq.Books.load: ${rows.length} codewords across $nSub books (bounds)")
+      val bySub = rows.groupBy(_.getInt(0))
+      Books((0 until nSub).map { s =>
+        val rs = bySub.getOrElse(s, Array.empty[Row])
+        require(rs.nonEmpty, s"Pq.Books.load: book$s at $dir is empty")
+        rs.map(r => (r.getLong(1), r.getSeq[Double](2).toArray)).sortBy(_._1)
+      })
+    }
+  }
+
+  /** Residual codebooks for IVF×PQ (FAISS IVFPQ, Jégou et al. 2011
+    * §IV.A): the codes approximate `x − centroid(cell)`, so the
+    * query-side table depends on the row's cell — the query residual
+    * `q − centroid(cell)` differs per probed cell. With nprobe cells
+    * the tables are still a planning-time constant (nprobe × nSub × K
+    * doubles): each subspace's lookup becomes a two-level map literal
+    * `cell → (code → d²)`, and the scan cost per row stays nSub map
+    * lookups + an add chain over code columns only. `cells` must cover
+    * every cell of the scanned rows (the probed cells — callers filter
+    * first). Encode and save are the flat books' (applied to the
+    * residual column).
+    */
+  final case class PerCell(books: Books, cellCol: String,
+      cells: Seq[(Long, Array[Double])]) extends Quantizer {
+    require(cells.nonEmpty && cells.size <= 65536,
+      s"Pq.PerCell: ${cells.size} probed centroids")
+
+    def dim: Int = books.dim
+
+    def codeCols: Seq[String] = books.codeCols
+
+    override def resultCols: Seq[String] = books.resultCols
+
+    def encode(corpus: DataFrame, vecCol: String): DataFrame = books.encode(corpus, vecCol)
+
+    def save(spark: SparkSession, dir: String): Unit = books.save(spark, dir)
+
+    def queryDistance(queryVec: Array[Double]): Column = {
+      val qres = cells.map { case (cell, cv) =>
+        require(cv.length == queryVec.length,
+          s"Pq.PerCell: centroid dim ${cv.length} != query dim ${queryVec.length}")
+        (cell, Array.tabulate(queryVec.length)(j => queryVec(j) - cv(j)))
+      }.sortBy(_._1)
+      books.codebooks.indices.map { s =>
+        val cellMaps = qres.flatMap { case (cell, qr) =>
+          Seq(lit(cell), map(books.table(s, qr): _*))
+        }
+        element_at(element_at(map(cellMaps: _*), col(cellCol).cast("long")),
+          col(s"code$s"))
+      }.reduce(_ + _)
+    }
+  }
 }

@@ -252,18 +252,7 @@ object AnnQueries {
     // (the self-hit is excluded on both sides) — the quality dial for
     // (nSub, K, iters), same role ann_recall plays for the LSH index.
     // Oracle nests the ann_pq oracle verbatim plus its own brute CTE.
-    "ann_pq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") === 0L)
-      val brute = Ann.bruteForceTopK(emb, "vec_id", "embedding",
-          qs, "vec_id", "embedding", k = 9)
-        .select(col("vec_id"))
-      val pq = pqPersistedTopK(s, dir)
-        .filter(col("vec_id") =!= 0L).select(col("vec_id"))
-      brute.join(broadcast(pq), Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(col("n_hits"), round(col("n_hits") / 9.0, 6).as("recall"))
-    }),
+    "ann_pq_recall" -> ((s, dir) => recallAt9(s, dir, pqPersistedTopK(s, dir))),
 
     // IVF×PQ — the production composition (FAISS's IVFPQ shape): the
     // IVF coarse layer prunes the scan to nprobe cells (on a
@@ -285,18 +274,7 @@ object AnnQueries {
     // index; the shared oracle pins it row-identical to the chain).
     // Oracle nests the ann_ivf_pq oracle verbatim plus its own brute
     // CTE.
-    "ann_ivf_pq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") === 0L)
-      val brute = Ann.bruteForceTopK(emb, "vec_id", "embedding",
-          qs, "vec_id", "embedding", k = 9)
-        .select(col("vec_id"))
-      val ivfpq = ivfPqPersistedTopK(s, dir)
-        .filter(col("vec_id") =!= 0L).select(col("vec_id"))
-      brute.join(broadcast(ivfpq), Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(col("n_hits"), round(col("n_hits") / 9.0, 6).as("recall"))
-    }),
+    "ann_ivf_pq_recall" -> ((s, dir) => recallAt9(s, dir, ivfPqPersistedTopK(s, dir))),
 
     // Recall DECOMPOSITION for the composed index — the evidence dial
     // residual encoding makes readable: coarse_hits = how many of the
@@ -318,9 +296,7 @@ object AnnQueries {
       // row-identical), so the decomposition reads (vec_id, cell) off
       // the layout instead of re-running fit + assign + encode
       val idx = ivfPqPersistedIndex(s, dir)
-      val qvArr = t(s, dir, "embeddings").filter(col("vec_id") === 0L)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val qvArr = queryVec0(s, dir)
       val probed = idx.probeCells(qvArr, nprobe = IvfPqProbe)
       val emb = t(s, dir, "embeddings")
       val qs = emb.filter(col("vec_id") === 0L)
@@ -380,20 +356,9 @@ object AnnQueries {
     // 8-bit grid; with 256 levels per dimension the quantization error
     // is tiny, so SQ8's recall ceiling sits above PQ's at 4× (vs 32×)
     // compression — exactly the trade the ladder documents.
-    "ann_sq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") === 0L)
-      val brute = Ann.bruteForceTopK(emb, "vec_id", "embedding",
-          qs, "vec_id", "embedding", k = 9)
-        .select(col("vec_id"))
-      val sq = sqPersistedTopK(s, dir)
-        .filter(col("vec_id") =!= 0L).select(col("vec_id"))
-      brute.join(broadcast(sq), Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(col("n_hits"), round(col("n_hits") / 9.0, 6).as("recall"))
-    }),
+    "ann_sq_recall" -> ((s, dir) => recallAt9(s, dir, sqPersistedTopK(s, dir))),
 
-    // The PERSISTED SQ8 path (graft.ann.SqIndex): fit + encode paid
+    // The PERSISTED SQ8 path (graft.ann.CodedIndex): fit + encode paid
     // once at ingest, layout = (id, vector, codes[binary]) parquet +
     // a 2-row grid parquet; the query's candidate pass reads ONLY the
     // (id, codes) columns — dim bytes/row, asserted by SqIndexSpec —
@@ -417,20 +382,9 @@ object AnnQueries {
     // excluded both sides) — quantifies what 1 bit/dim loses vs SQ8
     // (ann_sq_recall) and PQ (ann_pq_recall) at the SAME candidate
     // budget: the quality dial for the ladder's cheapest rung.
-    "ann_bq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val qs = emb.filter(col("vec_id") === 0L)
-      val brute = Ann.bruteForceTopK(emb, "vec_id", "embedding",
-          qs, "vec_id", "embedding", k = 9)
-        .select(col("vec_id"))
-      val bq = bqPersistedTopK(s, dir)
-        .filter(col("vec_id") =!= 0L).select(col("vec_id"))
-      brute.join(broadcast(bq), Seq("vec_id"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(col("n_hits"), round(col("n_hits") / 9.0, 6).as("recall"))
-    }),
+    "ann_bq_recall" -> ((s, dir) => recallAt9(s, dir, bqPersistedTopK(s, dir))),
 
-    // The PERSISTED 1-bit path (graft.ann.BqIndex): fit + encode paid
+    // The PERSISTED 1-bit path (graft.ann.CodedIndex): fit + encode paid
     // once at ingest, layout = (id, vector, bcodes[binary]) parquet +
     // a 1-row thresholds parquet; the query's candidate pass reads
     // ONLY the (id, bcodes) columns — ceil(dim/8) bytes/row, asserted
@@ -540,17 +494,7 @@ object AnnQueries {
     // fit replay + flattened per-subspace SDC tables + the candidate
     // cut + exact rerank, tie orders bit-pinned at every stage.
     "knn_join_ivfpq" -> ((s, dir) => {
-      val idx = graft.ann.IvfIndex.load(s, ivfLayoutPath(s, dir),
-        "vec_id", "embedding")
-      val books = cachedIndex(s, "pqidx", dir)(graft.ann.PqIndex.load(
-        s, pqIndexPath(s, dir), "vec_id", "embedding", PqSub)).books
-      val probes = persistedTable(s, "pqknnprobe", dir) { p =>
-        graft.ann.CodedKnnJoin.buildPqProbeTable(idx, books, Dim,
-            np = KnnJoinProbe, blockCols = Seq("label"))
-          .write.mode("overwrite").parquet(p)
-      }
-      graft.ann.CodedKnnJoin.knnJoinSelfPq(idx, probes, books,
-          Seq("label"), k = 3, candidates = KnnJoinRerankPq)
+      codedKnnJoin(s, dir, "pqknnprobe", pqIndex(s, dir).model, KnnJoinRerankPq)
         .select(col("qid").as("vec_id"), col("vec_id").as("nbr_id"),
           col("score"), col("rk"))
         .orderBy(col("vec_id"), col("rk"))
@@ -564,17 +508,7 @@ object AnnQueries {
     // outside the KnnJoinRerankPq cut). Oracle nests the
     // knn_join_ivfpq chain restricted to qid < 8 plus the exact CTE.
     "knn_join_ivfpq_recall" -> ((s, dir) => {
-      val idx = graft.ann.IvfIndex.load(s, ivfLayoutPath(s, dir),
-        "vec_id", "embedding")
-      val books = cachedIndex(s, "pqidx", dir)(graft.ann.PqIndex.load(
-        s, pqIndexPath(s, dir), "vec_id", "embedding", PqSub)).books
-      val probes = persistedTable(s, "pqknnprobe", dir) { p =>
-        graft.ann.CodedKnnJoin.buildPqProbeTable(idx, books, Dim,
-            np = KnnJoinProbe, blockCols = Seq("label"))
-          .write.mode("overwrite").parquet(p)
-      }
-      val got = graft.ann.CodedKnnJoin.knnJoinSelfPq(idx, probes, books,
-          Seq("label"), k = 3, candidates = KnnJoinRerankPq,
+      val got = codedKnnJoin(s, dir, "pqknnprobe", pqIndex(s, dir).model, KnnJoinRerankPq,
           queryPred = col("qid") < 8)
         .select(col("qid"), col("vec_id").as("nbr_id"))
       knnRecallVsTruth(s, dir, got)
@@ -593,17 +527,7 @@ object AnnQueries {
     // Own oracle: IVF chain + the ann_sq grid/encode replay + the
     // per-pair d-ordered SDC fold + cut + exact rerank.
     "knn_join_ivfsq" -> ((s, dir) => {
-      val idx = graft.ann.IvfIndex.load(s, ivfLayoutPath(s, dir),
-        "vec_id", "embedding")
-      val grid = cachedIndex(s, "sqidx", dir)(graft.ann.SqIndex.load(
-        s, sqIndexPath(s, dir), "vec_id", "embedding")).grid
-      val probes = persistedTable(s, "sqknnprobe", dir) { p =>
-        graft.ann.CodedKnnJoin.buildSqProbeTable(idx, grid,
-            np = KnnJoinProbe, blockCols = Seq("label"))
-          .write.mode("overwrite").parquet(p)
-      }
-      graft.ann.CodedKnnJoin.knnJoinSelfSq(idx, probes, grid,
-          Seq("label"), k = 3, candidates = KnnJoinRerankSq)
+      codedKnnJoin(s, dir, "sqknnprobe", sqIndex(s, dir).model, KnnJoinRerankSq)
         .select(col("qid").as("vec_id"), col("vec_id").as("nbr_id"),
           col("score"), col("rk"))
         .orderBy(col("vec_id"), col("rk"))
@@ -615,21 +539,57 @@ object AnnQueries {
     // Oracle nests the knn_join_ivfsq chain restricted to qid < 8
     // plus the exact CTE.
     "knn_join_ivfsq_recall" -> ((s, dir) => {
-      val idx = graft.ann.IvfIndex.load(s, ivfLayoutPath(s, dir),
-        "vec_id", "embedding")
-      val grid = cachedIndex(s, "sqidx", dir)(graft.ann.SqIndex.load(
-        s, sqIndexPath(s, dir), "vec_id", "embedding")).grid
-      val probes = persistedTable(s, "sqknnprobe", dir) { p =>
-        graft.ann.CodedKnnJoin.buildSqProbeTable(idx, grid,
-            np = KnnJoinProbe, blockCols = Seq("label"))
-          .write.mode("overwrite").parquet(p)
-      }
-      val got = graft.ann.CodedKnnJoin.knnJoinSelfSq(idx, probes, grid,
-          Seq("label"), k = 3, candidates = KnnJoinRerankSq,
+      val got = codedKnnJoin(s, dir, "sqknnprobe", sqIndex(s, dir).model, KnnJoinRerankSq,
           queryPred = col("qid") < 8)
         .select(col("qid"), col("vec_id").as("nbr_id"))
       knnRecallVsTruth(s, dir, got)
     }))
+
+  /** The coded corpus kNN join (k = 3, label-blocked) over the shared
+    * IVF layout: the coded self-probe artifact `kind` is built once per
+    * JVM per corpus with `q`'s pair code, then joined per run.
+    */
+  private def codedKnnJoin(s: org.apache.spark.sql.SparkSession, dir: String,
+      kind: String, q: graft.ann.PairQuantizer, candidates: Int,
+      queryPred: org.apache.spark.sql.Column = lit(true))
+      : org.apache.spark.sql.DataFrame = {
+    val idx = graft.ann.IvfIndex.load(s, ivfLayoutPath(s, dir),
+      "vec_id", "embedding")
+    val probes = persistedTable(s, kind, dir) { p =>
+      graft.ann.CodedKnnJoin.buildProbeTable(idx, q,
+          np = KnnJoinProbe, blockCols = Seq("label"))
+        .write.mode("overwrite").parquet(p)
+    }
+    graft.ann.CodedKnnJoin.knnJoinSelf(idx, probes, q, Seq("label"),
+      k = 3, candidates = candidates, queryPred = queryPred)
+  }
+
+  /** The vec_id 0 query vector every point-query ANN entry searches
+    * with (one driver collect).
+    */
+  private def queryVec0(s: org.apache.spark.sql.SparkSession,
+      dir: String): Array[Double] =
+    t(s, dir, "embeddings").filter(col("vec_id") === 0L)
+      .select(col("embedding").cast("array<double>"))
+      .head().getSeq[Double](0).toArray
+
+  /** recall@9 of a vec_id 0 top-k against exact brute-force ground
+    * truth, the self-hit excluded on both sides — shared by the
+    * ann_pq / ann_ivf_pq / ann_sq / ann_bq recall entries, which differ
+    * only in the persisted top-k they score.
+    */
+  private def recallAt9(s: org.apache.spark.sql.SparkSession, dir: String,
+      got: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    val qs = emb.filter(col("vec_id") === 0L)
+    val brute = Ann.bruteForceTopK(emb, "vec_id", "embedding",
+        qs, "vec_id", "embedding", k = 9)
+      .select(col("vec_id"))
+    val hits = got.filter(col("vec_id") =!= 0L).select(col("vec_id"))
+    brute.join(broadcast(hits), Seq("vec_id"), "left_semi")
+      .agg(count(lit(1)).as("n_hits"))
+      .select(col("n_hits"), round(col("n_hits") / 9.0, 6).as("recall"))
+  }
 
   /** recall@3 vs the exact label-blocked truth for the fixed 8-query
     * subset — shared by the three knn-join recall entries (the truth
@@ -778,9 +738,7 @@ object AnnQueries {
     val mIvf = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
     val cent = emb.filter(pmod(col("vec_id"), lit(mIvf)) === 0)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-    val qv = emb.filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0).toArray
+    val qv = queryVec0(s, dir)
     val centRows = cent
       .select(col("cid").cast("long"), col("cv").cast("array<double>"))
       .collect()
@@ -824,14 +782,14 @@ object AnnQueries {
         emb, "vec_id", "embedding", cent, "cid", "cv"))
     val books = graft.ann.Pq.fit(withRes, "vec_id", "_res",
         dim = Dim, nSub = PqSub, seedMod = math.max(1L, n / PqK), iters = 1)
-    val enc = graft.ann.Pq.encode(withRes, "vec_id", "_res", books, Dim)
+    val enc = books.encode(withRes, "_res")
       .withColumnRenamed("_ivf_cell", "ivf_cell")
     val probedCents = centRows
       .filter { case (c, _) => probed.contains(c) }.toSeq
-    val topk = graft.ann.Pq.adcTopKPerCell(
-        enc.filter(col("ivf_cell").isin(probed: _*)),
-        "vec_id", "embedding", "ivf_cell", books, qv, probedCents,
-        k = 10, candidates = PqRerank)
+    val topk = graft.ann.Quantizer.candidateTopK(
+        enc.filter(col("ivf_cell").isin(probed: _*)), "vec_id", "embedding",
+        books.perCell("ivf_cell", probedCents), qv,
+        k = 10, candidates = PqRerank, carryCols = Seq("ivf_cell"))
       .withColumnRenamed("ivf_cell", "cell")
     (topk, withRes, probed)
   }
@@ -855,12 +813,8 @@ object AnnQueries {
       emb, "embedding", None).n
     val books = graft.ann.Pq.fit(emb, "vec_id", "embedding",
         dim = Dim, nSub = PqSub, seedMod = math.max(1L, n / PqK), iters = 1)
-    val enc = graft.ann.Pq.encode(emb, "vec_id", "embedding", books, Dim)
-    val qv = emb.filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0).toArray
-    graft.ann.Pq.adcTopK(enc, "vec_id", "embedding", books, qv,
-      k = 10, candidates = PqRerank)
+    graft.ann.Quantizer.candidateTopK(books.encode(emb, "embedding"),
+      "vec_id", "embedding", books, queryVec0(s, dir), k = 10, candidates = PqRerank)
   }
 
   /** SQ8 rerank depth — same candidate budget as PQ so the recall
@@ -876,12 +830,8 @@ object AnnQueries {
   private def sqTopK(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val emb = t(s, dir, "embeddings")
     val grid = graft.ann.Sq.fit(emb, "embedding", Dim)
-    val enc = graft.ann.Sq.encode(emb, "embedding", grid)
-    val qv = emb.filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0).toArray
-    graft.ann.Sq.adcTopK(enc, "vec_id", "embedding", grid, qv,
-      k = 10, candidates = SqRerank)
+    graft.ann.Quantizer.candidateTopK(grid.encode(emb, "embedding"),
+      "vec_id", "embedding", grid, queryVec0(s, dir), k = 10, candidates = SqRerank)
   }
 
   /** 1-bit rerank depth — same candidate budget as PQ/SQ8 so the
@@ -898,12 +848,8 @@ object AnnQueries {
   private def bqTopK(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val emb = t(s, dir, "embeddings")
     val th = graft.ann.Bq.fit(emb, "embedding", Dim)
-    val enc = graft.ann.Bq.encode(emb, "embedding", th)
-    val qv = emb.filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0).toArray
-    graft.ann.Bq.hammingTopK(enc, "vec_id", "embedding", th, qv,
-      k = 10, candidates = BqRerank)
+    graft.ann.Quantizer.candidateTopK(th.encode(emb, "embedding"),
+      "vec_id", "embedding", th, queryVec0(s, dir), k = 10, candidates = BqRerank)
   }
 
   /** PERSISTED-layout searches — the candidate sides of the recall
@@ -914,71 +860,54 @@ object AnnQueries {
     * recall entries probe the layouts and skip the per-run fit +
     * encode cost entirely. The in-query parents (ann_pq / ann_sq /
     * ann_bq / ann_ivf_pq) remain the transparency documentation of
-    * the chains themselves.
+    * the chains themselves. Each flat layout (CodedIndex: codes +
+    * model) is built once per JVM per corpus from `fit` and loaded
+    * once per session.
     */
-  /** The shared flat-PQ layout (ann_pq geometry): built once per JVM
-    * per corpus, probed by ann_pq_persisted / ann_pq_recall AND — its
-    * codebooks — by knn_join_ivfpq's SDC tables: one fit serving both
-    * the point-query and the corpus-join workload.
-    */
-  private def pqIndexPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    persistedArtifact("pq", dir) { p =>
+  private def codedIndex[Q <: graft.ann.Quantizer](
+      s: org.apache.spark.sql.SparkSession, dir: String, kind: String,
+      readModel: (org.apache.spark.sql.SparkSession, String) => Q)(
+      fit: org.apache.spark.sql.DataFrame => Q): graft.ann.CodedIndex[Q] = {
+    val path = persistedArtifact(kind, dir) { p =>
       val emb = t(s, dir, "embeddings")
+      graft.ann.CodedIndex.build(emb, "embedding", fit(emb), p)
+    }
+    cachedIndex(s, s"${kind}idx", dir)(
+      graft.ann.CodedIndex.load(s, path, "vec_id", "embedding", readModel))
+  }
+
+  /** The shared flat-PQ layout (ann_pq geometry): probed by
+    * ann_pq_persisted / ann_pq_recall AND — its codebooks — by
+    * knn_join_ivfpq's SDC tables: one fit serving both the point-query
+    * and the corpus-join workload.
+    */
+  private def pqIndex(s: org.apache.spark.sql.SparkSession, dir: String) =
+    codedIndex(s, dir, "pq", graft.ann.Pq.Books.load(PqSub)) { emb =>
       val n = graft.ann.AnnTuner.statsCached(s"$dir|embeddings",
         emb, "embedding", None).n
-      val books = graft.ann.Pq.fit(emb, "vec_id", "embedding",
-          dim = Dim, nSub = PqSub, seedMod = math.max(1L, n / PqK), iters = 1)
-      graft.ann.PqIndex.build(emb, "vec_id", "embedding", books, Dim, p)
-      ()
+      graft.ann.Pq.fit(emb, "vec_id", "embedding",
+        dim = Dim, nSub = PqSub, seedMod = math.max(1L, n / PqK), iters = 1)
     }
 
-  private def pqPersistedTopK(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val idxPath = pqIndexPath(s, dir)
-    val qv = t(s, dir, "embeddings").filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0).toArray
-    cachedIndex(s, "pqidx", dir)(
-        graft.ann.PqIndex.load(s, idxPath, "vec_id", "embedding", PqSub))
-      .search(qv, k = 10, candidates = PqRerank)
-  }
+  private def pqPersistedTopK(s: org.apache.spark.sql.SparkSession, dir: String) =
+    pqIndex(s, dir).search(queryVec0(s, dir), k = 10, candidates = PqRerank)
 
-  /** The shared SQ8 layout (ann_sq geometry): built once per JVM per
-    * corpus, probed by ann_sq_persisted / ann_sq_recall AND — its
-    * grid — by knn_join_ivfsq's SDC scoring: one fit serving both the
+  /** The shared SQ8 layout (ann_sq geometry): probed by
+    * ann_sq_persisted / ann_sq_recall AND — its grid — by
+    * knn_join_ivfsq's SDC scoring: one fit serving both the
     * point-query and the corpus-join workload.
     */
-  private def sqIndexPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    persistedArtifact("sq8", dir) { p =>
-      graft.ann.SqIndex.build(t(s, dir, "embeddings"),
-        "vec_id", "embedding", Dim, p)
-      ()
-    }
+  private def sqIndex(s: org.apache.spark.sql.SparkSession, dir: String) =
+    codedIndex(s, dir, "sq8", graft.ann.Sq.Grid.load)(
+      graft.ann.Sq.fit(_, "embedding", Dim))
 
-  private def sqPersistedTopK(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val idxPath = sqIndexPath(s, dir)
-    val qv = t(s, dir, "embeddings").filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0).toArray
-    cachedIndex(s, "sqidx", dir)(
-        graft.ann.SqIndex.load(s, idxPath, "vec_id", "embedding"))
-      .search(qv, k = 10, candidates = SqRerank)
-  }
+  private def sqPersistedTopK(s: org.apache.spark.sql.SparkSession, dir: String) =
+    sqIndex(s, dir).search(queryVec0(s, dir), k = 10, candidates = SqRerank)
 
-  private def bqPersistedTopK(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val idxPath = persistedArtifact("bq1", dir) { p =>
-      graft.ann.BqIndex.build(t(s, dir, "embeddings"),
-        "vec_id", "embedding", Dim, p)
-      ()
-    }
-    val qv = t(s, dir, "embeddings").filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0).toArray
-    cachedIndex(s, "bqidx", dir)(
-        graft.ann.BqIndex.load(s, idxPath, "vec_id", "embedding"))
-      .search(qv, k = 10, candidates = BqRerank)
-  }
+  private def bqPersistedTopK(s: org.apache.spark.sql.SparkSession, dir: String) =
+    codedIndex(s, dir, "bq1", graft.ann.Bq.Thresholds.load)(
+        graft.ann.Bq.fit(_, "embedding", Dim))
+      .search(queryVec0(s, dir), k = 10, candidates = BqRerank)
 
   private def ivfPqPersistedIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): graft.ann.IvfPqIndex = {
@@ -994,7 +923,7 @@ object AnnQueries {
       val books = graft.ann.Pq.fit(withRes, "vec_id", "_res",
           dim = Dim, nSub = PqSub, seedMod = math.max(1L, n / PqK), iters = 1)
       graft.ann.IvfPqIndex.build(emb, "vec_id", "embedding",
-        cent, "cid", "cv", books, Dim, p)
+        cent, "cid", "cv", books, p)
       ()
     }
     cachedIndex(s, "ivfpqidx", dir)(
@@ -1003,9 +932,7 @@ object AnnQueries {
 
   private def ivfPqPersistedTopK(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val idx = ivfPqPersistedIndex(s, dir)
-    val qv = t(s, dir, "embeddings").filter(col("vec_id") === 0L)
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0).toArray
+    val qv = queryVec0(s, dir)
     val probed = idx.probeCells(qv, nprobe = IvfPqProbe)
     idx.searchCells(probed, qv, k = 10, candidates = PqRerank)
       // partition-column type inference reads cell back as int

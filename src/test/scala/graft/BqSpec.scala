@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.ann.{Bq, BqIndex}
+import graft.ann.{Bq, CodedIndex, Quantizer}
 import graft.functions.expr.BqKernel
 
 /** The ann_bq / ann_bq_persisted oracles pin result identity to the
@@ -26,8 +26,10 @@ class BqSpec extends SparkSpecBase {
 
   private lazy val th: Bq.Thresholds = Bq.fit(emb, "embedding", Dim)
 
-  private lazy val idx: BqIndex =
-    BqIndex.build(emb, "vec_id", "embedding", Dim, dir)
+  private lazy val idx: CodedIndex[Bq.Thresholds] = {
+    CodedIndex.build(emb, "embedding", th, dir)
+    CodedIndex.load(spark, dir, "vec_id", "embedding", Bq.Thresholds.load)
+  }
 
   private lazy val q0: Array[Double] =
     emb.filter(col("vec_id") === 0L)
@@ -36,7 +38,7 @@ class BqSpec extends SparkSpecBase {
 
   test("thresholds are corpus midpoints and persist exactly") {
     assert(th.mid.length == Dim)
-    assert(idx.thresholds.mid.toSeq == th.mid.toSeq)
+    assert(idx.model.mid.toSeq == th.mid.toSeq)
   }
 
   test("fit refuses an empty corpus with a clear message (no opaque NPE)") {
@@ -50,7 +52,7 @@ class BqSpec extends SparkSpecBase {
   }
 
   test("kernel encode matches driver-side encodeLocal on every row") {
-    val rows = Bq.encode(emb, "embedding", th)
+    val rows = th.encode(emb, "embedding")
       .select(col("embedding").cast("array<double>"), col("bcodes"))
       .collect()
     assert(rows.nonEmpty)
@@ -63,7 +65,7 @@ class BqSpec extends SparkSpecBase {
   }
 
   test("packed-byte hamming equals unpacked bit-difference count") {
-    val rows = Bq.encode(emb, "embedding", th)
+    val rows = th.encode(emb, "embedding")
       .limit(50)
       .select(col("embedding").cast("array<double>"), col("bcodes"))
       .collect()
@@ -79,8 +81,8 @@ class BqSpec extends SparkSpecBase {
   }
 
   test("search through the persisted layout equals the in-memory path") {
-    val enc = Bq.encode(emb, "embedding", th)
-    val inMem = Bq.hammingTopK(enc, "vec_id", "embedding", th, q0,
+    val enc = th.encode(emb, "embedding")
+    val inMem = Quantizer.candidateTopK(enc, "vec_id", "embedding", th, q0,
         k = 5, candidates = 20)
       .collect().map(_.toString).toSeq
     val fromDisk = idx.search(q0, k = 5, candidates = 20)
@@ -107,7 +109,7 @@ class BqSpec extends SparkSpecBase {
 
   test("BqEncode/BqHamming generate compilable code (no interpreted fallback)") {
     import org.apache.spark.sql.execution.debug._
-    val df = Bq.encode(emb, "embedding", th)
+    val df = th.encode(emb, "embedding")
       .select(col("vec_id"), col("bcodes"))
     val cg = df.queryExecution.debug.codegenToSeq()
     assert(cg.nonEmpty)
@@ -126,5 +128,15 @@ class BqSpec extends SparkSpecBase {
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     assert(got.contains(0L))
     assert(got.size == 10)
+  }
+
+  test("a query vector of another dim is a named error, not a prefix score") {
+    Seq(q0.take(Dim - 1), q0 :+ 0.5).foreach { qv =>
+      val e = intercept[IllegalArgumentException] {
+        idx.search(qv, k = 3, candidates = 10).collect()
+      }
+      assert(e.getMessage.contains(s"fitted at $Dim"),
+        s"unexpected message: ${e.getMessage}")
+    }
   }
 }

@@ -42,16 +42,16 @@ class CodedKnnJoinSpec extends SparkSpecBase {
     val books = Pq.fit(emb, "vec_id", "embedding",
       dim = Dim, nSub = 8, seedMod = math.max(1L, n / 32L), iters = 1)
     val pqProbe = s"$dir/pq"
-    CodedKnnJoin.buildPqProbeTable(idx, books, Dim, np = 3, Seq("label"))
+    CodedKnnJoin.buildProbeTable(idx, books, np = 3, Seq("label"))
       .write.mode("overwrite").parquet(pqProbe)
-    val viaPq = rows(CodedKnnJoin.knnJoinSelfPq(idx,
+    val viaPq = rows(CodedKnnJoin.knnJoinSelf(idx,
       spark.read.parquet(pqProbe), books, Seq("label"), k = 3, candidates = n))
     assert(viaPq == exact)
     val grid = Sq.fit(emb, "embedding", Dim)
     val sqProbe = s"$dir/sq"
-    CodedKnnJoin.buildSqProbeTable(idx, grid, np = 3, Seq("label"))
+    CodedKnnJoin.buildProbeTable(idx, grid, np = 3, Seq("label"))
       .write.mode("overwrite").parquet(sqProbe)
-    val viaSq = rows(CodedKnnJoin.knnJoinSelfSq(idx,
+    val viaSq = rows(CodedKnnJoin.knnJoinSelf(idx,
       spark.read.parquet(sqProbe), grid, Seq("label"), k = 3, candidates = n))
     assert(viaSq == exact)
     assert(exact.nonEmpty)
@@ -61,7 +61,7 @@ class CodedKnnJoinSpec extends SparkSpecBase {
       "assignment (members side == the layout)") {
     val (emb, dir, idx) = fixture()
     val grid = Sq.fit(emb, "embedding", Dim)
-    val fromProbe = CodedKnnJoin.buildSqProbeTable(idx, grid, np = 3, Seq("label"))
+    val fromProbe = CodedKnnJoin.buildProbeTable(idx, grid, np = 3, Seq("label"))
       .filter(col("prank") === 1)
       .select(col("qid"), col("cell"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -76,15 +76,31 @@ class CodedKnnJoinSpec extends SparkSpecBase {
     val (emb, dir, idx) = fixture()
     val grid = Sq.fit(emb, "embedding", Dim)
     val sqProbe = s"$dir/sq"
-    CodedKnnJoin.buildSqProbeTable(idx, grid, np = 3, Seq("label"))
+    CodedKnnJoin.buildProbeTable(idx, grid, np = 3, Seq("label"))
       .write.mode("overwrite").parquet(sqProbe)
     val probes = spark.read.parquet(sqProbe)
-    val full = rows(CodedKnnJoin.knnJoinSelfSq(idx, probes, grid,
+    val full = rows(CodedKnnJoin.knnJoinSelf(idx, probes, grid,
       Seq("label"), k = 3, candidates = 6))
-    val subset = rows(CodedKnnJoin.knnJoinSelfSq(idx, probes, grid,
+    val subset = rows(CodedKnnJoin.knnJoinSelf(idx, probes, grid,
       Seq("label"), k = 3, candidates = 6, queryPred = col("qid") < 8))
     assert(subset == full.filter(_._1 < 8))
     assert(subset.nonEmpty)
+  }
+
+  test("the SQ8 join refuses a probe artifact encoded at another dim " +
+      "(schema-metadata gate, no job)") {
+    val (emb, dir, idx) = fixture()
+    val grid = Sq.fit(emb, "embedding", Dim)
+    val sqProbe = s"$dir/sq"
+    CodedKnnJoin.buildProbeTable(idx, grid, np = 3, Seq("label"))
+      .write.mode("overwrite").parquet(sqProbe)
+    val drifted = Sq.Grid(grid.lo.take(Dim - 1), grid.step.take(Dim - 1))
+    val e = intercept[IllegalArgumentException] {
+      CodedKnnJoin.knnJoinSelf(idx, spark.read.parquet(sqProbe), drifted,
+        Seq("label"), k = 3, candidates = 6)
+    }
+    assert(e.getMessage.contains(s"encoded at dim $Dim"),
+      s"unexpected message: ${e.getMessage}")
   }
 
   test("SqSdc compute over packed codes matches the brute " +
@@ -146,16 +162,17 @@ class CodedKnnJoinSpec extends SparkSpecBase {
     }
   }
 
-  test("buildPqProbeTable validates codebooks at artifact-build time " +
+  test("PQ buildProbeTable validates codebooks at artifact-build time " +
       "(a non-dense fit must fail BEFORE persisting corrupt packed codes)") {
     val (emb, _, idx) = fixture()
     val n = emb.count().toInt
     val goodBooks = Pq.fit(emb, "vec_id", "embedding",
       dim = Dim, nSub = 8, seedMod = math.max(1L, n / 32L), iters = 1)
     // non-dense codeword ids: shift every cid up by 1
-    val badBooks = goodBooks.map(_.withColumn("cid", col("cid") + 1))
+    val badBooks = Pq.Books(
+      goodBooks.codebooks.map(_.map { case (cid, cv) => (cid + 1, cv) }))
     val e = intercept[IllegalArgumentException] {
-      CodedKnnJoin.buildPqProbeTable(idx, badBooks, Dim, np = 2).count()
+      CodedKnnJoin.buildProbeTable(idx, badBooks, np = 2).count()
     }
     assert(e.getMessage.contains("dense 0..K-1"))
   }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.ann.{CodedKnnJoin, IvfIndex, Pq, Sq}
 
 /** Incremental maintenance of the CODED probe artifacts
-  * (CodedKnnJoin.appendPqProbe / appendSqProbe): a batch tick's rows,
+  * (CodedKnnJoin.appendProbe, PQ and SQ8 rungs): a batch tick's rows,
   * encoded against the FROZEN code model and appended, must be
   * row-identical to a full rebuild that uses the same frozen model —
   * probe placement depends only on the layout's frozen centroids and
@@ -51,13 +51,13 @@ class CodedProbeMaintenanceSpec extends SparkSpecBase {
     val books = Pq.fit(base, "vec_id", "embedding",
       dim = Dim, nSub = 8, seedMod = 25L, iters = 1)
     val path = s"$dir/pqprobe"
-    CodedKnnJoin.buildPqProbeTable(idx, books, Dim, np = 3, Seq("label"))
+    CodedKnnJoin.buildProbeTable(idx, books, np = 3, Seq("label"))
       .write.mode("overwrite").parquet(path)
     idx.append(batch)
-    CodedKnnJoin.appendPqProbe(idx, batch, path, books, Dim, np = 3, Seq("label"))
+    CodedKnnJoin.appendProbe(idx, batch, path, books, np = 3, Seq("label"))
     val maintained = pqRows(spark.read.parquet(path))
     val rebuilt = pqRows(
-      CodedKnnJoin.buildPqProbeTable(idx, books, Dim, np = 3, Seq("label")))
+      CodedKnnJoin.buildProbeTable(idx, books, np = 3, Seq("label")))
     assert(maintained == rebuilt)
     assert(maintained.nonEmpty)
   }
@@ -67,23 +67,23 @@ class CodedProbeMaintenanceSpec extends SparkSpecBase {
     val (emb, base, batch, dir, idx) = fixture(10, 3)
     val grid = Sq.fit(base, "embedding", Dim)
     val path = s"$dir/sqprobe"
-    CodedKnnJoin.buildSqProbeTable(idx, grid, np = 3, Seq("label"))
+    CodedKnnJoin.buildProbeTable(idx, grid, np = 3, Seq("label"))
       .write.mode("overwrite").parquet(path)
     idx.append(batch)
-    CodedKnnJoin.appendSqProbe(idx, batch, path, grid, np = 3, Seq("label"))
+    CodedKnnJoin.appendProbe(idx, batch, path, grid, np = 3, Seq("label"))
     val maintained = sqRows(spark.read.parquet(path))
     val rebuilt = sqRows(
-      CodedKnnJoin.buildSqProbeTable(idx, grid, np = 3, Seq("label")))
+      CodedKnnJoin.buildProbeTable(idx, grid, np = 3, Seq("label")))
     assert(maintained == rebuilt)
     assert(maintained.nonEmpty)
     def joined(probes: DataFrame) =
-      CodedKnnJoin.knnJoinSelfSq(idx, probes, grid, Seq("label"),
+      CodedKnnJoin.knnJoinSelf(idx, probes, grid, Seq("label"),
           k = 3, candidates = 6)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getLong(3))).toSet
     val viaMaintained = joined(spark.read.parquet(path))
     val viaRebuilt = joined(
-      CodedKnnJoin.buildSqProbeTable(idx, grid, np = 3, Seq("label")))
+      CodedKnnJoin.buildProbeTable(idx, grid, np = 3, Seq("label")))
     assert(viaMaintained == viaRebuilt)
     assert(viaMaintained.nonEmpty)
   }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.ann.{Ann, IvfPqIndex, Pq}
+import graft.ann.{IvfPqIndex, Pq, Quantizer}
 
 /** The ann_ivf_pq_persisted oracle pins result identity to the
   * in-query ann_ivf_pq plan; these check the index mechanics: the
@@ -30,9 +30,8 @@ class IvfPqIndexSpec extends SparkSpecBase {
       cents, "cid", "cv")
     val books = Pq.fit(withRes, "vec_id", "_res",
         dim = Dim, nSub = NSub, seedMod = 25L, iters = 1)
-      .map(Barrier.checkpoint(_))
     IvfPqIndex.build(emb, "vec_id", "embedding", cents, "cid", "cv",
-      books, Dim, dir)
+      books, dir)
   }
 
   private lazy val q0: Array[Double] =
@@ -60,8 +59,7 @@ class IvfPqIndexSpec extends SparkSpecBase {
       cents, "cid", "cv")
     val books = Pq.fit(withRes, "vec_id", "_res",
         dim = Dim, nSub = NSub, seedMod = 25L, iters = 1)
-      .map(Barrier.checkpoint(_))
-    val enc = Pq.encode(withRes, "vec_id", "_res", books, Dim)
+    val enc = books.encode(withRes, "_res")
       .withColumnRenamed("_ivf_cell", "ivf_cell")
     val probed = idx.probeCells(q0, nprobe = 2)
     val probedCents = cents
@@ -69,10 +67,10 @@ class IvfPqIndexSpec extends SparkSpecBase {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .filter { case (c, _) => probed.contains(c) }.toSeq
-    val inMem = Pq.adcTopKPerCell(
-        enc.filter(col("ivf_cell").isin(probed: _*)),
-        "vec_id", "embedding", "ivf_cell", books, q0, probedCents,
-        k = 5, candidates = 20)
+    val inMem = Quantizer.candidateTopK(
+        enc.filter(col("ivf_cell").isin(probed: _*)), "vec_id", "embedding",
+        books.perCell("ivf_cell", probedCents), q0,
+        k = 5, candidates = 20, carryCols = Seq("ivf_cell"))
       .withColumnRenamed("ivf_cell", "cell")
       .collect().map(_.toString).toSeq
     val fromDisk = idx.searchCells(probed, q0, k = 5, candidates = 20)

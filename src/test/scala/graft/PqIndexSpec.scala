@@ -2,10 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-
 import org.apache.spark.sql.functions._
 
-import graft.ann.{Pq, PqIndex}
+import graft.ann.{CodedIndex, Pq, Quantizer}
 
 /** The ann_pq_persisted oracle pins result identity to the in-query
   * ann_pq plan; these check the index mechanics: the layout carries
@@ -25,12 +24,12 @@ class PqIndexSpec extends SparkSpecBase {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     Pq.fit(emb, "vec_id", "embedding",
         dim = Dim, nSub = NSub, seedMod = 25L, iters = 1)
-      .map(Barrier.checkpoint(_))
   }
 
-  private lazy val idx: PqIndex = {
+  private lazy val idx: CodedIndex[Pq.Books] = {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    PqIndex.build(emb, "vec_id", "embedding", books, Dim, dir)
+    CodedIndex.build(emb, "embedding", books, dir)
+    CodedIndex.load(spark, dir, "vec_id", "embedding", Pq.Books.load(NSub))
   }
 
   private lazy val q0: Array[Double] =
@@ -52,8 +51,8 @@ class PqIndexSpec extends SparkSpecBase {
 
   test("search through the persisted layout equals the in-memory PQ path") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val enc = Pq.encode(emb, "vec_id", "embedding", books, Dim)
-    val inMem = Pq.adcTopK(enc, "vec_id", "embedding", books, q0,
+    val enc = books.encode(emb, "embedding")
+    val inMem = Quantizer.candidateTopK(enc, "vec_id", "embedding", books, q0,
         k = 5, candidates = 20)
       .collect().map(_.toString).toSeq
     val fromDisk = idx.search(q0, k = 5, candidates = 20)
@@ -73,5 +72,15 @@ class PqIndexSpec extends SparkSpecBase {
     assert(scans.exists(l => l.contains("code0") && !l.contains("embedding")),
       s"no code-only scan found:\n${scans.mkString("\n")}")
     assert(df.collect().length == 3)
+  }
+
+  test("a query vector of another dim is a named error, not a misaligned ADC") {
+    Seq(q0.take(Dim - 1), q0 :+ 0.5).foreach { qv =>
+      val e = intercept[IllegalArgumentException] {
+        idx.search(qv, k = 3, candidates = 10).collect()
+      }
+      assert(e.getMessage.contains(s"fitted at $Dim"),
+        s"unexpected message: ${e.getMessage}")
+    }
   }
 }

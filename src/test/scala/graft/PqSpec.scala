@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ann.Pq
+import graft.ann.{Pq, Quantizer}
 
 /** The ann_pq DuckDB oracle checks engine parity on the driver
   * corpus; these check the quantizer itself: partition-invariant
@@ -33,8 +33,7 @@ class PqSpec extends SparkSpecBase {
     def centroids(parts: Int): Seq[Seq[(Long, Seq[Double])]] =
       Pq.fit(clustered.repartition(parts), "vec_id", "embedding",
           dim = Dim, nSub = NSub, seedMod = 25, iters = 2)
-        .map(_.orderBy("cid").collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq)
+        .codebooks.map(_.map { case (cid, cv) => (cid, cv.toSeq) }.toSeq)
     assert(centroids(1) == centroids(13))
   }
 
@@ -43,8 +42,7 @@ class PqSpec extends SparkSpecBase {
     def books(corpus: org.apache.spark.sql.DataFrame) =
       Pq.fit(corpus, "vec_id", "embedding",
           dim = Dim, nSub = NSub, seedMod = 25, iters = 2)
-        .map(_.orderBy("cid").collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq)
+        .codebooks.map(_.map { case (cid, cv) => (cid, cv.toSeq) }.toSeq)
     // 200 and 225 fall on the seed rule (id ≡ 0 mod 25), 201 and 226
     // do not: the null/short vector shows up as a seed and as a member
     val degenerate = Seq[(Long, Array[Double])](
@@ -57,7 +55,7 @@ class PqSpec extends SparkSpecBase {
   test("codes are dense, byte-packable, and cover every row") {
     val books = Pq.fit(clustered, "vec_id", "embedding",
       dim = Dim, nSub = NSub, seedMod = 25, iters = 1)
-    val enc = Pq.encode(clustered, "vec_id", "embedding", books, Dim)
+    val enc = books.encode(clustered, "embedding")
     assert(enc.count() == 100)
     for (s <- 0 until NSub) {
       val stats = enc.agg(
@@ -72,10 +70,10 @@ class PqSpec extends SparkSpecBase {
     import spark.implicits._
     val books = Pq.fit(clustered, "vec_id", "embedding",
       dim = Dim, nSub = NSub, seedMod = 25, iters = 2)
-    val enc = Pq.encode(clustered, "vec_id", "embedding", books, Dim)
+    val enc = books.encode(clustered, "embedding")
     val qv = clustered.filter($"vec_id" === 0L)
       .select($"embedding").head().getSeq[Double](0).toArray
-    val top = Pq.adcTopK(enc, "vec_id", "embedding", books, qv, k = 10)
+    val top = Quantizer.candidateTopK(enc, "vec_id", "embedding", books, qv, k = 10)
       .select($"vec_id").as[Long].collect()
     assert(top.length == 10)
     // every retrieved id must come from the query's cluster (< 50)
@@ -84,16 +82,16 @@ class PqSpec extends SparkSpecBase {
     assert(top.head == 0L)
   }
 
-  test("adcTopK carries extra columns through the code-only scan (IVF×PQ shape)") {
+  test("candidateTopK carries extra columns through the code-only scan (IVF×PQ shape)") {
     import spark.implicits._
     val books = Pq.fit(clustered, "vec_id", "embedding",
       dim = Dim, nSub = NSub, seedMod = 25, iters = 1)
-    val enc = Pq.encode(
+    val enc = books.encode(
       clustered.withColumn("part_cell", (col("vec_id") / 50).cast("long")),
-      "vec_id", "embedding", books, Dim)
+      "embedding")
     val qv = clustered.filter($"vec_id" === 0L)
       .select($"embedding").head().getSeq[Double](0).toArray
-    val out = Pq.adcTopK(enc.filter($"part_cell" === 0L),
+    val out = Quantizer.candidateTopK(enc.filter($"part_cell" === 0L),
       "vec_id", "embedding", books, qv, k = 5, carryCols = Seq("part_cell"))
     val rows = out.select($"vec_id", $"part_cell").as[(Long, Long)].collect()
     assert(rows.length == 5)

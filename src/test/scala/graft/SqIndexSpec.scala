@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.ann.{Sq, SqIndex}
+import graft.ann.{CodedIndex, Quantizer, Sq}
 
 /** The ann_sq_persisted oracle pins result identity to the in-query
   * ann_sq plan; these check the SQ8 mechanics: the grid brackets the
@@ -23,8 +23,10 @@ class SqIndexSpec extends SparkSpecBase {
 
   private lazy val grid: Sq.Grid = Sq.fit(emb, "embedding", Dim)
 
-  private lazy val idx: SqIndex =
-    SqIndex.build(emb, "vec_id", "embedding", Dim, dir)
+  private lazy val idx: CodedIndex[Sq.Grid] = {
+    CodedIndex.build(emb, "embedding", grid, dir)
+    CodedIndex.load(spark, dir, "vec_id", "embedding", Sq.Grid.load)
+  }
 
   private lazy val q0: Array[Double] =
     emb.filter(col("vec_id") === 0L)
@@ -34,12 +36,12 @@ class SqIndexSpec extends SparkSpecBase {
   test("grid brackets the corpus and persists exactly") {
     assert(grid.lo.length == Dim && grid.step.length == Dim)
     assert(grid.step.forall(_ >= 0.0))
-    assert(idx.grid.lo.toSeq == grid.lo.toSeq)
-    assert(idx.grid.step.toSeq == grid.step.toSeq)
+    assert(idx.model.lo.toSeq == grid.lo.toSeq)
+    assert(idx.model.step.toSeq == grid.step.toSeq)
   }
 
   test("every vector dequantizes within half a step per dimension") {
-    val rows = Sq.encode(emb, "embedding", grid)
+    val rows = grid.encode(emb, "embedding")
       .select(col("embedding").cast("array<double>"), col("codes"))
       .collect()
     assert(rows.nonEmpty)
@@ -59,8 +61,8 @@ class SqIndexSpec extends SparkSpecBase {
   }
 
   test("search through the persisted layout equals the in-memory SQ path") {
-    val enc = Sq.encode(emb, "embedding", grid)
-    val inMem = Sq.adcTopK(enc, "vec_id", "embedding", grid, q0,
+    val enc = grid.encode(emb, "embedding")
+    val inMem = Quantizer.candidateTopK(enc, "vec_id", "embedding", grid, q0,
         k = 5, candidates = 20)
       .collect().map(_.toString).toSeq
     val fromDisk = idx.search(q0, k = 5, candidates = 20)
@@ -90,7 +92,7 @@ class SqIndexSpec extends SparkSpecBase {
     // whose doGenCode emits broken Java shows up as an exception here
     // (silent fallback would keep results right but lose the tight
     // loop the kernels exist for)
-    val df = Sq.encode(emb, "embedding", grid)
+    val df = grid.encode(emb, "embedding")
       .select(col("vec_id"), col("codes"))
     val cg = df.queryExecution.debug.codegenToSeq()
     assert(cg.nonEmpty)
@@ -106,18 +108,42 @@ class SqIndexSpec extends SparkSpecBase {
 
   test("encoding below the grid floor clamps to code 0 (stale-grid contract)") {
     import spark.implicits._
-    // SqIndex's load-then-query contract invites encoding NEW rows
+    // the load-then-query contract invites encoding NEW rows
     // against a persisted stale grid; a value below lo must clamp to
     // 0, not floor negative and wrap through the byte cast to 255
     val grid2 = Sq.Grid(Array(10.0, 10.0), Array(1.0, 1.0))
     val rows = Seq((1L, Array(-500.0f, 9.99f)), (2L, Array(10.0f, 300.0f)))
       .toDF("vec_id", "embedding")
-    val got = Sq.encode(rows, "embedding", grid2)
+    val got = grid2.encode(rows, "embedding")
       .select(col("vec_id"), col("codes")).collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
     assert(got(1L).toSeq == Seq(0.toByte, 0.toByte),
       s"below-lo must clamp to 0, got ${got(1L).toSeq}")
     assert(got(2L).toSeq == Seq(0.toByte, 255.toByte),
       s"expected (0, 255), got ${got(2L).toSeq}")
+  }
+
+  test("fit refuses an empty or all-null corpus with a named error") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    val allNull = Seq[(Long, Array[Float])]((1L, null), (2L, null))
+      .toDF("vec_id", "embedding")
+    Seq(empty, allNull).foreach { corpus =>
+      val e = intercept[IllegalArgumentException] {
+        Sq.fit(corpus, "embedding", Dim)
+      }
+      assert(e.getMessage.contains("empty corpus"),
+        s"unexpected message: ${e.getMessage}")
+    }
+  }
+
+  test("a query vector of another dim is a named error, not a prefix score") {
+    Seq(q0.take(Dim - 1), q0 :+ 0.5).foreach { qv =>
+      val e = intercept[IllegalArgumentException] {
+        idx.search(qv, k = 3, candidates = 10).collect()
+      }
+      assert(e.getMessage.contains(s"fitted at $Dim"),
+        s"unexpected message: ${e.getMessage}")
+    }
   }
 }
