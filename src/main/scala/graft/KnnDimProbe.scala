@@ -58,9 +58,7 @@ object KnnDimProbe {
     val emb = spark.read.parquet(path)
     val n = emb.count()
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val m = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
-    val cent = emb.filter(pmod(col("vec_id"), lit(m)) === 0)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+    val cent = graft.queries.QueryUtil.seedCentroids(emb, n)
     val dir = Files.createTempDirectory("knndim").toString
     val idx = graft.ann.IvfIndex.build(emb, "vec_id", "embedding",
       cent, "cid", "cv", dir)

@@ -78,9 +78,7 @@ object KnnRecallCurve {
 
     val emb = Tables.load(spark, sfDir, "embeddings")
     val n = emb.count()
-    val m = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
-    val cent = emb.filter(pmod(col("vec_id"), lit(m)) === 0)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+    val cent = graft.queries.QueryUtil.seedCentroids(emb, n)
     val dir = Files.createTempDirectory("knncurve").toString
     val idx = graft.ann.IvfIndex.build(emb, "vec_id", "embedding",
       cent, "cid", "cv", dir)

@@ -45,29 +45,19 @@ object Ann {
 
   /** IVF cell assignment: nearest centroid by L2 distance (ties →
     * lowest centroid id). The centroid set is materialized at PLANNING
-    * time (it is bounded by the nlist rule — ≤ 65536 rows — the same
-    * class of deliberate one-off driver materialization as
-    * AnnTuner.stats) and the per-row argmin is a single codegen'd
-    * kernel (NearestCentroid): the plan is a narrow map over the
-    * corpus — no n×nlist row explosion, no argmin aggregate, no
-    * shuffle. The earlier crossJoin+argmin formulation pushed 89M
-    * scored rows through an aggregate at the 100× sweep (~2 min); this
-    * shape is O(corpus) rows at any nlist. At write time
-    * `partitionBy("cell")` turns probing into partition pruning.
+    * time (Centroids.collect — bounded by the nlist rule) and the
+    * per-row argmin is a single codegen'd kernel (NearestCentroid):
+    * the plan is a narrow map over the corpus — no n×nlist row
+    * explosion, no argmin aggregate, no shuffle. The earlier
+    * crossJoin+argmin formulation pushed 89M scored rows through an
+    * aggregate at the 100× sweep (~2 min); this shape is O(corpus)
+    * rows at any nlist. At write time `partitionBy("cell")` turns
+    * probing into partition pruning.
     */
   def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, cidCol: String, cvecCol: String): DataFrame = {
-    import org.apache.spark.sql.graftshim.ColumnBridge
-    val rows = centroids
-      .select(col(cidCol).cast("long"), col(cvecCol).cast("array<double>"))
-      .collect()
-    require(rows.nonEmpty && rows.length <= 65536,
-      s"ivfAssign: ${rows.length} centroids (nlist rule bounds this to [1, 65536])")
-    val sorted = rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val kernel = ColumnBridge.column(graft.functions.expr.NearestCentroid(
-      ColumnBridge.expression(col(vecCol)), sorted.map(_._1), sorted.map(_._2)))
-    graft.Tables.fanOut(corpus).withColumn("cell", kernel)
-  }
+      centroids: DataFrame, cidCol: String, cvecCol: String): DataFrame =
+    graft.Tables.fanOut(corpus).withColumn("cell",
+      Centroids.collect(centroids, cidCol, cvecCol).assign(col(vecCol)))
 
   /** Per-row IVF residual `x − centroid(cell)` — the encode input of
     * FAISS's IVFPQ (Jégou et al. 2011 §IV.A: quantize the residual,
@@ -94,11 +84,14 @@ object Ann {
   /** IVF probe: rank cells by centroid distance to the query vector,
     * search only the top `nprobe` cells, exact top-k inside them.
     * The query arrives as a one-row DataFrame (col `qv`) so the whole
-    * search is one declarative plan — no driver-side collect.
+    * search is one declarative plan — no driver-side collect. `pred`
+    * filters the candidates before the probe join, never the probed
+    * cells (IvfIndex.searchWhere). Output: (id, cell, keepCols…, score).
     */
   def ivfSearch(assigned: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, cidCol: String, cvecCol: String,
-      query: DataFrame, qvecCol: String, nprobe: Int, k: Int): DataFrame = {
+      query: DataFrame, qvecCol: String, nprobe: Int, k: Int,
+      pred: Option[Column] = None, keepCols: Seq[String] = Nil): DataFrame = {
     val q = broadcast(query.select(col(qvecCol).as("qv")))
     val probeCells = centroids
       .crossJoin(q)
@@ -106,13 +99,14 @@ object Ann {
       .orderBy(col("_qd"), col("cell"))
       .limit(nprobe)
       .select(col("cell"))
-    assigned
+    pred.fold(assigned)(assigned.filter)
       .join(broadcast(probeCells), "cell")
       .crossJoin(q)
       .withColumn("score_raw", cosine(col(vecCol), col("qv")))
       .orderBy(desc("score_raw"), col(idCol))
       .limit(k)
-      .select(col(idCol), col("cell"), round(col("score_raw"), 6).as("score"))
+      .select(col(idCol) +: col("cell") +: keepCols.map(col) :+
+        round(col("score_raw"), 6).as("score"): _*)
   }
 
   /** The j-th component of md5-derived hyperplane p: a deterministic

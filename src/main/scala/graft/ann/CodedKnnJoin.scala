@@ -93,16 +93,8 @@ object CodedKnnJoin {
 
   private def probeRows(ivf: IvfIndex, src: DataFrame, q: PairQuantizer,
       np: Int, blockCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.graftshim.ColumnBridge
     val (coded, codeCol) = q.pairCode(src, ivf.vecCol)
-    val rows = ivf.centroids
-      .select(col("cell").cast("long"), col("cv").cast("array<double>"))
-      .collect()
-    require(rows.nonEmpty && rows.length <= 65536,
-      s"CodedKnnJoin: ${rows.length} centroids (nlist rule bounds this)")
-    val sorted = rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val kernel = ColumnBridge.column(graft.functions.expr.NearestCentroids(
-      ColumnBridge.expression(col(ivf.vecCol)), sorted.map(_._1), sorted.map(_._2), np))
+    val kernel = Centroids.collect(ivf.centroids, "cell", "cv").probes(col(ivf.vecCol), np)
     coded
       .select(col(ivf.idCol).as("qid") +:
         blockCols.map(c => col(c).as(s"q_$c")) :+

@@ -46,24 +46,12 @@ final class IvfIndex private (
 
   /** Exact top-k within the `nprobe` cells nearest to the query —
     * query arrives as a one-row DataFrame (col qv), everything stays
-    * declarative.
+    * declarative (Ann.ivfSearch's plan over the persisted layout: the
+    * broadcast probe-cell join prunes partitions).
     */
-  def search(query: DataFrame, qvecCol: String, nprobe: Int, k: Int): DataFrame = {
-    val q = broadcast(query.select(col(qvecCol).as("qv")))
-    val probeCells = centroids
-      .crossJoin(q)
-      .select(col("cell"), l2SqD(col("cv"), col("qv")).as("_qd"))
-      .orderBy(col("_qd"), col("cell"))
-      .limit(nprobe)
-      .select(col("cell"))
-    cells
-      .join(broadcast(probeCells), "cell") // partition pruning via DPP/broadcast
-      .crossJoin(q)
-      .withColumn("score_raw", cosine(col(vecCol), col("qv")))
-      .orderBy(desc("score_raw"), col(idCol))
-      .limit(k)
-      .select(col(idCol), col("cell"), round(col("score_raw"), 6).as("score"))
-  }
+  def search(query: DataFrame, qvecCol: String, nprobe: Int, k: Int): DataFrame =
+    Ann.ivfSearch(cells, idCol, vecCol, centroids, "cell", "cv",
+      query, qvecCol, nprobe, k)
 
   /** BATCHED probe: top-k for N query vectors in one plan — the
     * amortization that justifies running ANN in a batch engine. The
@@ -122,24 +110,9 @@ final class IvfIndex private (
     */
   def searchWhere(query: DataFrame, qvecCol: String, nprobe: Int, k: Int,
       pred: org.apache.spark.sql.Column,
-      keepCols: Seq[String] = Nil): DataFrame = {
-    val q = broadcast(query.select(col(qvecCol).as("qv")))
-    val probeCells = centroids
-      .crossJoin(q)
-      .select(col("cell"), l2SqD(col("cv"), col("qv")).as("_qd"))
-      .orderBy(col("_qd"), col("cell"))
-      .limit(nprobe)
-      .select(col("cell"))
-    cells
-      .filter(pred)
-      .join(broadcast(probeCells), "cell")
-      .crossJoin(q)
-      .withColumn("score_raw", cosine(col(vecCol), col("qv")))
-      .orderBy(desc("score_raw"), col(idCol))
-      .limit(k)
-      .select(col(idCol) +: col("cell") +: keepCols.map(col) :+
-        round(col("score_raw"), 6).as("score"): _*)
-  }
+      keepCols: Seq[String] = Nil): DataFrame =
+    Ann.ivfSearch(cells, idCol, vecCol, centroids, "cell", "cv",
+      query, qvecCol, nprobe, k, Some(pred), keepCols)
 
   /** INCREMENTAL maintenance: assign a new batch to the EXISTING
     * centroids and append its rows into the cell layout — the ANN
@@ -167,13 +140,8 @@ final class IvfIndex private (
     // deliberately re-shard a hot batch
     val fpc = if (filesPerCell > 0) filesPerCell else this.filesPerCell
     require(fpc > 0, "filesPerCell must be positive")
-    Ann.ivfAssign(batch, idCol, vecCol,
-        centroids.select(col("cell"), col("cv")), "cell", "cv")
-      .withColumn("slot", pmod(hash(col(idCol)), lit(fpc)))
-      .repartition(col("cell"), col("slot"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("cell", "slot")
-      .parquet(s"$path/cells")
+    IvfIndex.writeCells(Ann.ivfAssign(batch, idCol, vecCol, centroids, "cell", "cv"),
+      idCol, fpc, SaveMode.Append, s"$path/cells")
   }
 
   /** COMPACTION (the Delta OPTIMIZE discipline named as a standing
@@ -209,14 +177,9 @@ final class IvfIndex private (
     // partitionOverwriteMode flip (which raced with concurrent
     // writers in the same session).
     val tmp = s"$path/.compact-tmp-cell-$cellId"
-    cells.filter(col("cell") === cellId)
-      .drop("cell", "slot")
-      .withColumn("cell", lit(cellId))
-      .withColumn("slot", pmod(hash(col(idCol)), lit(fpc)))
-      .repartition(col("cell"), col("slot"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell", "slot")
-      .parquet(tmp)
+    IvfIndex.writeCells(cells.filter(col("cell") === cellId)
+        .drop("cell", "slot").withColumn("cell", lit(cellId)),
+      idCol, fpc, SaveMode.Overwrite, tmp)
     import org.apache.hadoop.fs.Path
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new Path(s"$path/cells/cell=$cellId")
@@ -330,15 +293,7 @@ final class IvfIndex private (
 
   private def probeRows(src: DataFrame, np: Int,
       keepCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.graftshim.ColumnBridge
-    val rows = centroids
-      .select(col("cell").cast("long"), col("cv").cast("array<double>"))
-      .collect()
-    require(rows.nonEmpty && rows.length <= 65536,
-      s"selfProbeTable: ${rows.length} centroids (nlist rule bounds this at 65536)")
-    val sorted = rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val kernel = ColumnBridge.column(graft.functions.expr.NearestCentroids(
-      ColumnBridge.expression(col(vecCol)), sorted.map(_._1), sorted.map(_._2), np))
+    val kernel = Centroids.collect(centroids, "cell", "cv").probes(col(vecCol), np)
     // qn is the L2 norm, persisted so the per-run join scores with
     // cosinePreNorm — plain cosine recomputes BOTH self-dots per
     // candidate pair, 3× the pair flops (the v_topk_prenorm lesson;
@@ -450,23 +405,35 @@ object IvfIndex {
       centroids: DataFrame, cidCol: String, cvecCol: String, path: String,
       filesPerCell: Int = 0,
       targetRowsPerFile: Long = DefaultTargetRowsPerFile): IvfIndex = {
-    val spark = corpus.sparkSession
     val cents = centroids.select(col(cidCol).as("cell"), col(cvecCol).as("cv"))
     val fpc = resolveFilesPerCell(corpus, cents, filesPerCell, targetRowsPerFile)
-    Ann.ivfAssign(corpus, idCol, vecCol, cents, "cell", "cv")
-      .withColumn("slot", pmod(hash(col(idCol)), lit(fpc)))
+    writeLayout(Ann.ivfAssign(corpus, idCol, vecCol, cents, "cell", "cv"),
+      idCol, cents, fpc, path)
+    new IvfIndex(corpus.sparkSession, path, idCol, vecCol)
+  }
+
+  /** The (cell, slot = pmod(hash(id), fpc)) partitioned write shared
+    * by every layout writer (build, append, compact, IvfPqIndex.build),
+    * clustered on the partition key first (see [[build]]).
+    */
+  private[ann] def writeCells(rows: DataFrame, idCol: String, fpc: Int,
+      mode: SaveMode, dest: String): Unit =
+    rows.withColumn("slot", pmod(hash(col(idCol)), lit(fpc)))
       .repartition(col("cell"), col("slot"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell", "slot")
-      .parquet(s"$path/cells")
-    // tiny frame (≤ 65536 rows): one file, so every later centroid
-    // read/collect is a single-task job
+      .write.mode(mode).partitionBy("cell", "slot").parquet(dest)
+
+  /** A built layout: the assigned rows, then the (cell, cv) centroids
+    * and the resolved slot count as one-file side frames — every later
+    * centroid collect or meta read is a single-task job, and
+    * append/compact reuse the build's slot count instead of a
+    * caller-remembered constant.
+    */
+  private[ann] def writeLayout(assigned: DataFrame, idCol: String,
+      cents: DataFrame, fpc: Int, path: String): Unit = {
+    writeCells(assigned, idCol, fpc, SaveMode.Overwrite, s"$path/cells")
     cents.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    // persist the resolved slot count so append/compact reuse the
-    // build's layout geometry instead of a caller-remembered constant
-    spark.range(1).select(lit(fpc).as("files_per_cell"))
+    cents.sparkSession.range(1).select(lit(fpc).as("files_per_cell"))
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
-    new IvfIndex(spark, path, idCol, vecCol)
   }
 
   /** Slot count from the mean cell population: max(1, ⌈(n/nlist) /

@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persistent IVF×PQ index — FAISS's IVFPQ as a storage layout
@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * by the 65536-codeword require in Pq.Books when read back).
   *
   * A query then touches nprobe/nlist of the data at code width:
-  * `probeCells` ranks the (bounded, driver-collected) centroid frame
-  * by the same left-to-right d² fold the oracle orders by;
+  * `probeCells` ranks the driver-local coarse quantizer (Centroids,
+  * collected once per instance) by the same left-to-right d² fold the
+  * oracle orders by;
   * `searchCells` filters on the driver-known cell list — STATIC
   * partition pruning, asserted by IvfPqIndexSpec — and runs the
   * shared candidate plan (Quantizer.candidateTopK) over the code
@@ -44,37 +45,19 @@ final class IvfPqIndex private (
     */
   lazy val books: Pq.Books = Pq.Books.load(nSub)(spark, s"$path/model")
 
-  /** The bounded centroid frame, collected ONCE per instance —
+  /** The coarse quantizer, collected ONCE per instance —
     * [[probeCells]] and [[searchCells]] both need it, and the previous
     * per-call collect paid two scan jobs per query.
     */
-  private lazy val centroidsLocal: Seq[(Long, Array[Double])] = {
-    val rows = centroids
-      .select(col("cell").cast("long"), col("cv").cast("array<double>"))
-      .collect()
-    require(rows.nonEmpty && rows.length <= 65536,
-      s"IvfPqIndex: ${rows.length} centroids (nlist rule bounds this)")
-    rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-  }
+  private lazy val coarse: Centroids = Centroids.collect(centroids, "cell", "cv")
 
-  /** The nprobe cells nearest to the query, ranked by the raw
-    * left-to-right squared-L2 fold with a (d², cell) tiebreak —
-    * identical to the oracle's probe CTE. Driver-side over the
-    * bounded centroid frame (same planning-time materialization
-    * class as the ADC tables).
+  /** The nprobe cells nearest to the query (Centroids.nearest: the
+    * probe kernel's left-to-right squared-L2 fold with a (d², cell)
+    * tiebreak — identical to the oracle's probe CTE). The query must
+    * have the centroids' dim; a non-finite query probes no cell.
     */
-  def probeCells(queryVec: Array[Double], nprobe: Int): Seq[Long] = {
-    centroidsLocal.map { case (c, cv) =>
-      var d = 0.0
-      var j = 0
-      while (j < queryVec.length) {
-        val diff = queryVec(j) - cv(j)
-        d += diff * diff
-        j += 1
-      }
-      (c, d)
-    }.sortBy { case (c, d) => (d, c) }.take(nprobe).map(_._1)
-  }
+  def probeCells(queryVec: Array[Double], nprobe: Int): Seq[Long] =
+    coarse.nearest(queryVec, nprobe)
 
   /** ADC top-k inside the driver-known probed cells: the cell filter
     * compiles to PartitionFilters on the layout scan, then the
@@ -86,12 +69,10 @@ final class IvfPqIndex private (
     * exact_score).
     */
   def searchCells(cellIds: Seq[Long], queryVec: Array[Double],
-      k: Int, candidates: Int = 0): DataFrame = {
-    val probedCents = centroidsLocal.filter { case (c, _) => cellIds.contains(c) }
+      k: Int, candidates: Int = 0): DataFrame =
     Quantizer.candidateTopK(cells.filter(col("cell").isin(cellIds: _*)),
-      idCol, vecCol, books.perCell("cell", probedCents), queryVec,
+      idCol, vecCol, books.perCell("cell", coarse.only(cellIds)), queryVec,
       k = k, candidates = candidates, carryCols = Seq("cell"))
-  }
 }
 
 object IvfPqIndex {
@@ -105,9 +86,7 @@ object IvfPqIndex {
     */
   def residualFrame(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, cidCol: String, cvecCol: String): DataFrame = {
-    val assigned = Ann.ivfAssign(corpus, idCol, vecCol,
-        centroids.select(col(cidCol).as("cell"), col(cvecCol).as("cv")),
-        "cell", "cv")
+    val assigned = Ann.ivfAssign(corpus, idCol, vecCol, centroids, cidCol, cvecCol)
       .withColumnRenamed("cell", "_ivf_cell")
     Ann.residuals(assigned, vecCol, "_ivf_cell",
       centroids, cidCol, cvecCol, "_res")
@@ -124,30 +103,13 @@ object IvfPqIndex {
       targetRowsPerFile: Long = IvfIndex.DefaultTargetRowsPerFile): IvfPqIndex = {
     val spark = corpus.sparkSession
     val withRes = residualFrame(corpus, idCol, vecCol, centroids, cidCol, cvecCol)
-    // cluster on the composed (cell, slot) key before the partitioned
-    // write: fragment-free like the one-file-per-cell layout, but a
-    // hot cell spreads over filesPerCell write tasks/files instead of
-    // being capped at one (see IvfIndex.build)
-    val fpc = IvfIndex.resolveFilesPerCell(corpus,
-      centroids.select(col(cidCol).as("cell")), filesPerCell, targetRowsPerFile)
-    books.encode(withRes, "_res")
-      .drop("_res")
-      .withColumnRenamed("_ivf_cell", "cell")
-      .withColumn("slot", pmod(hash(col(idCol)), lit(fpc)))
-      .repartition(col("cell"), col("slot"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell", "slot")
-      .parquet(s"$path/cells")
-    // tiny side frames (≤ 65536 rows each): one file apiece so loads
-    // and collects are single-task instead of one task per slice of
-    // the build-side partitioning
-    centroids.select(col(cidCol).as("cell"), col(cvecCol).as("cv"))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
+    // the IvfIndex layout (same (cell, slot) partitioning, centroid and
+    // slot-count side frames) with the codes beside the vectors
+    val cents = centroids.select(col(cidCol).as("cell"), col(cvecCol).as("cv"))
+    val fpc = IvfIndex.resolveFilesPerCell(corpus, cents, filesPerCell, targetRowsPerFile)
+    IvfIndex.writeLayout(books.encode(withRes, "_res").drop("_res")
+      .withColumnRenamed("_ivf_cell", "cell"), idCol, cents, fpc, path)
     books.save(spark, s"$path/model")
-    // same layout-geometry meta as IvfIndex.build — uniform across
-    // the index family, ready for a future PQ append path
-    spark.range(1).select(lit(fpc).as("files_per_cell"))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
     new IvfPqIndex(spark, path, idCol, vecCol, books.nSub)
   }
 

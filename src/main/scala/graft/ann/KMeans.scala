@@ -39,7 +39,7 @@ object KMeans {
   /** `iters` Lloyd updates from `seeds` (cid, cv); returns the final
     * centroid frame (cid, cv: array<double>). Each update materializes
     * the (small) centroid frame on the driver for the next assignment
-    * kernel — planning-time, bounded by ivfAssign's 65536-cell rule.
+    * kernel — planning-time, bounded by Centroids' [1, 65536]-cell rule.
     */
   def lloyd(vecs: DataFrame, idCol: String, vecCol: String,
       seeds: DataFrame, iters: Int): DataFrame = {

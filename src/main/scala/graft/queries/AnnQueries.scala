@@ -59,11 +59,8 @@ object AnnQueries {
       dir: String): String =
     persistedArtifact("ivf", dir) { p =>
       val emb = t(s, dir, "embeddings")
-      val m = math.max(1L, math.floor(math.sqrt(
-        graft.ann.AnnTuner.statsCached(s"$dir|embeddings",
-          emb, "embedding", None).n.toDouble)).toLong)
-      val cent = emb.filter(pmod(col("vec_id"), lit(m)) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+      val cent = seedCentroids(emb, graft.ann.AnnTuner.statsCached(
+        s"$dir|embeddings", emb, "embedding", None).n)
       graft.ann.IvfIndex.build(emb, "vec_id", "embedding", cent, "cid", "cv", p)
       ()
     }
@@ -79,20 +76,16 @@ object AnnQueries {
 
     "ann_ivf" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      // √n centroid sizing (AnnTuner's IVF rule): a fixed modulus makes
-      // centroid count grow linearly with the corpus and the assign
-      // crossJoin O(n²/M) — the 100× sweep caught exactly that (a
-      // %50 literal meant 4000 centroids × 200k vectors). Selecting ids
-      // ≡ 0 (mod ⌊√n⌋) keeps ~√n centroids so assignment stays n·√n.
-      // The modulus comes from the per-corpus-per-JVM stats cache
+      // √n centroid sizing (AnnTuner's IVF rule, seedCentroids): a
+      // fixed modulus makes centroid count grow linearly with the
+      // corpus and the assign crossJoin O(n²/M) — the 100× sweep
+      // caught exactly that (a %50 literal meant 4000 centroids × 200k
+      // vectors). n comes from the per-corpus-per-JVM stats cache
       // (AnnTuner.statsCached) — one planning count job per corpus,
       // not one per query build; an in-plan scalar subquery would cost
       // two broadcast-agg subplans and ~6s of fixed AQE latency.
-      val m = math.max(1L, math.floor(math.sqrt(
-        graft.ann.AnnTuner.statsCached(s"$dir|embeddings",
-          t(s, dir, "embeddings"), "embedding", None).n.toDouble)).toLong)
-      val cent = emb.filter(pmod(col("vec_id"), lit(m)) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+      val cent = seedCentroids(emb, graft.ann.AnnTuner.statsCached(
+        s"$dir|embeddings", t(s, dir, "embeddings"), "embedding", None).n)
       val assigned = Ann.ivfAssign(emb, "vec_id", "embedding", cent, "cid", "cv")
       Ann.ivfSearch(assigned, "vec_id", "embedding", cent, "cid", "cv",
           emb.filter(col("vec_id") === 0L).select(col("embedding").as("qv")), "qv",
@@ -142,11 +135,8 @@ object AnnQueries {
     "ann_ivf_append" -> ((s, dir) => {
       val idxPath = persistedArtifact("ivfapp", dir) { p =>
         val emb = t(s, dir, "embeddings")
-        val m = math.max(1L, math.floor(math.sqrt(
-          graft.ann.AnnTuner.statsCached(s"$dir|embeddings",
-            emb, "embedding", None).n.toDouble)).toLong)
-        val cent = emb.filter(pmod(col("vec_id"), lit(m)) === 0)
-          .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+        val cent = seedCentroids(emb, graft.ann.AnnTuner.statsCached(
+          s"$dir|embeddings", emb, "embedding", None).n)
         val idx = graft.ann.IvfIndex.build(
           emb.filter(pmod(col("vec_id"), lit(10)) =!= 7),
           "vec_id", "embedding", cent, "cid", "cv", p)
@@ -170,16 +160,7 @@ object AnnQueries {
     // justifies ANN in a batch engine: scan cost is |distinct probed
     // cells|, not nq × nprobe.
     "ann_ivf_batch" -> ((s, dir) => {
-      val idxPath = persistedArtifact("ivf", dir) { p =>
-        val emb = t(s, dir, "embeddings")
-        val m = math.max(1L, math.floor(math.sqrt(
-          graft.ann.AnnTuner.statsCached(s"$dir|embeddings",
-            emb, "embedding", None).n.toDouble)).toLong)
-        val cent = emb.filter(pmod(col("vec_id"), lit(m)) === 0)
-          .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-        graft.ann.IvfIndex.build(emb, "vec_id", "embedding", cent, "cid", "cv", p)
-      }
-      graft.ann.IvfIndex.load(s, idxPath, "vec_id", "embedding")
+      graft.ann.IvfIndex.load(s, ivfLayoutPath(s, dir), "vec_id", "embedding")
         .searchBatch(
           t(s, dir, "embeddings").filter(col("vec_id") < 8),
           "vec_id", "embedding", nprobe = 3, k = 10)
@@ -195,16 +176,7 @@ object AnnQueries {
     // filtered probe set; probe geometry (nprobe cells nearest the
     // query) is unchanged by the filter.
     "ann_ivf_filtered" -> ((s, dir) => {
-      val idxPath = persistedArtifact("ivf", dir) { p =>
-        val emb = t(s, dir, "embeddings")
-        val m = math.max(1L, math.floor(math.sqrt(
-          graft.ann.AnnTuner.statsCached(s"$dir|embeddings",
-            emb, "embedding", None).n.toDouble)).toLong)
-        val cent = emb.filter(pmod(col("vec_id"), lit(m)) === 0)
-          .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-        graft.ann.IvfIndex.build(emb, "vec_id", "embedding", cent, "cid", "cv", p)
-      }
-      graft.ann.IvfIndex.load(s, idxPath, "vec_id", "embedding")
+      graft.ann.IvfIndex.load(s, ivfLayoutPath(s, dir), "vec_id", "embedding")
         .searchWhere(
           t(s, dir, "embeddings").filter(col("vec_id") === 0L)
             .select(col("embedding").as("qv")),
@@ -724,36 +696,6 @@ object AnnQueries {
   private val KnnJoinRerankPq = 32
   private val KnnJoinRerankSq = 6
 
-  /** The shared IVF×PQ geometry: √n seed-row centroids, query = vec
-    * 0, nprobe=[[IvfPqProbe]] driver-side probe with the oracle's
-    * raw-d² fold and (d², cell) tiebreak. Returns
-    * (emb, cent, qv, centRows, probed).
-    */
-  private def ivfPqGeometry(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         Array[Double], Array[(Long, Array[Double])], Seq[Long]) = {
-    val emb = t(s, dir, "embeddings")
-    val n = graft.ann.AnnTuner.statsCached(s"$dir|embeddings",
-      emb, "embedding", None).n
-    val mIvf = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
-    val cent = emb.filter(pmod(col("vec_id"), lit(mIvf)) === 0)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-    val qv = queryVec0(s, dir)
-    val centRows = cent
-      .select(col("cid").cast("long"), col("cv").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    require(centRows.nonEmpty && centRows.length <= 65536,
-      s"ann_ivf_pq: ${centRows.length} centroids (nlist rule bounds this)")
-    val probed = centRows.map { case (c, cv) =>
-      var d = 0.0
-      var j = 0
-      while (j < qv.length) { val diff = qv(j) - cv(j); d += diff * diff; j += 1 }
-      (c, d)
-    }.sortBy { case (c, d) => (d, c) }.take(IvfPqProbe).map(_._1).toSeq
-    (emb, cent, qv, centRows, probed)
-  }
-
   /** [[ivfPqTopK]] plus the barriered residual frame it scored and
     * the probed cells — shared so evidence entries
     * (ann_ivf_pq_coarse) count coarse hits off the SAME materialized
@@ -764,9 +706,16 @@ object AnnQueries {
   private def ivfPqChain(s: org.apache.spark.sql.SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
          Seq[Long]) = {
-    val (emb, cent, qv, centRows, probed) = ivfPqGeometry(s, dir)
+    // the IVF×PQ geometry: √n seed-row centroids, query = vec 0,
+    // nprobe = IvfPqProbe driver-side probe with the oracle's raw-d²
+    // fold and (d², cell) tiebreak
+    val emb = t(s, dir, "embeddings")
     val n = graft.ann.AnnTuner.statsCached(s"$dir|embeddings",
       emb, "embedding", None).n
+    val cent = seedCentroids(emb, n)
+    val qv = queryVec0(s, dir)
+    val coarse = graft.ann.Centroids.collect(cent, "cid", "cv")
+    val probed = coarse.nearest(qv, IvfPqProbe)
     // RESIDUAL encode (FAISS IVFPQ): fit + codes over x − centroid(cell).
     // BARRIER the residual frame: its lineage (crossJoin cell assignment
     // + zip_with residuals over the corpus) is otherwise RECOMPUTED by
@@ -784,11 +733,9 @@ object AnnQueries {
         dim = Dim, nSub = PqSub, seedMod = math.max(1L, n / PqK), iters = 1)
     val enc = books.encode(withRes, "_res")
       .withColumnRenamed("_ivf_cell", "ivf_cell")
-    val probedCents = centRows
-      .filter { case (c, _) => probed.contains(c) }.toSeq
     val topk = graft.ann.Quantizer.candidateTopK(
         enc.filter(col("ivf_cell").isin(probed: _*)), "vec_id", "embedding",
-        books.perCell("ivf_cell", probedCents), qv,
+        books.perCell("ivf_cell", coarse.only(probed)), qv,
         k = 10, candidates = PqRerank, carryCols = Seq("ivf_cell"))
       .withColumnRenamed("ivf_cell", "cell")
     (topk, withRes, probed)
@@ -915,9 +862,7 @@ object AnnQueries {
       val emb = t(s, dir, "embeddings")
       val n = graft.ann.AnnTuner.statsCached(s"$dir|embeddings",
         emb, "embedding", None).n
-      val mIvf = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
-      val cent = emb.filter(pmod(col("vec_id"), lit(mIvf)) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+      val cent = seedCentroids(emb, n)
       val withRes = graft.ann.IvfPqIndex.residualFrame(
         emb, "vec_id", "embedding", cent, "cid", "cv")
       val books = graft.ann.Pq.fit(withRes, "vec_id", "_res",

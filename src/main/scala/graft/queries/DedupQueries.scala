@@ -344,9 +344,7 @@ object DedupQueries {
       // key the ann_* family uses) instead of a per-build count() job
       val n = graft.ann.AnnTuner.statsCached(s"$dir|embeddings",
         emb, "embedding", None).n
-      val m = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
-      val seeds = emb.filter(pmod(col("vec_id"), lit(m)) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+      val seeds = seedCentroids(emb, n)
       Dedup.semanticPairs(emb, "vec_id", "embedding", seeds,
           iters = SemDedupIters, threshold = SemDedupThreshold, maxBlockSize = 4096)
         .orderBy(col("ida"), col("idb"))
@@ -367,9 +365,7 @@ object DedupQueries {
         val emb = t(s, dir, "embeddings")
         val n = graft.ann.AnnTuner.statsCached(s"$dir|embeddings",
           emb, "embedding", None).n
-        val m = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
-        val seeds = emb.filter(pmod(col("vec_id"), lit(m)) === 0)
-          .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+        val seeds = seedCentroids(emb, n)
         val base = graft.Tables.fanOut(emb)
           .select(col("vec_id"), col("embedding"))
           .transform(graft.Barrier.checkpoint)

@@ -24,6 +24,18 @@ object QueryUtil {
 
   def r6(c: Column): Column = round(c, 6)
 
+  /** The √n seed-row centroid frame (cid, cv) over an `embeddings`
+    * table of `n` rows: the rows with vec_id ≡ 0 (mod ⌊√n⌋). Cell
+    * count grows as √n with the corpus, so assignment stays n·√n (a
+    * fixed modulus made it O(n²/M) at the 100× sweep), and the rule
+    * replays in SQL as `vec_id % m = 0`.
+    */
+  def seedCentroids(emb: DataFrame, n: Long): DataFrame = {
+    val m = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
+    emb.filter(pmod(col("vec_id"), lit(m)) === 0)
+      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+  }
+
   private val builtArtifacts =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 

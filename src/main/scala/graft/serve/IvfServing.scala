@@ -3,7 +3,7 @@ package graft.serve
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ann.IvfIndex
+import graft.ann.{Centroids, IvfIndex}
 
 /** Warm batch-serving handle over a persisted [[IvfIndex]]: the
   * streaming / request-loop counterpart of `IvfIndex.searchBatch`.
@@ -12,19 +12,21 @@ import graft.ann.IvfIndex
   * SERVING loop pays its probe-selection stages (centroid crossJoin →
   * bounded-heap agg → re-attach join, each an exchange or broadcast
   * job) again on every micro-batch — ~0.7 s/batch of pure fixed cost
-  * measured at sf0.1. A warm server holds the centroid table LOCAL
-  * instead (bounded by the nlist rule, ≤ 65536 rows — the same
-  * deliberate driver materialization class as IvfPqIndex.probeCells)
-  * and computes each query's probe cells in-process, so a batch
-  * submits exactly ONE distributed plan: statically-pruned cell scan →
-  * broadcast probe join → bounded-heap top-k.
+  * measured at sf0.1. A warm server holds the centroid set LOCAL
+  * instead (graft.ann.Centroids, bounded by the nlist rule — the same
+  * driver-local coarse quantizer IvfPqIndex probes with) and computes
+  * each query's probe cells in-process, so a batch submits exactly
+  * ONE distributed plan: statically-pruned cell scan → broadcast
+  * probe join → bounded-heap top-k.
   *
   * Probe selection replays searchBatch bit for bit: the same
   * left-to-right squared-L2 fold over double-cast centroids, ties to
   * the lowest cell id (StreamingSpec pins row identity between the
-  * two paths). Queries arrive as driver-local rows — the serving
-  * contract: a request batch is in the server's memory by definition,
-  * and its size is the micro-batch size, never the corpus.
+  * two paths). A query whose dim differs from the centroids' is a
+  * named error; a non-finite query probes no cell and gets no rows.
+  * Queries arrive as driver-local rows — the serving contract: a
+  * request batch is in the server's memory by definition, and its
+  * size is the micro-batch size, never the corpus.
   */
 final class IvfServing(val idx: IvfIndex, val nprobe: Int,
     cacheCells: Boolean = true) {
@@ -40,7 +42,7 @@ final class IvfServing(val idx: IvfIndex, val nprobe: Int,
     * removes the I/O floor. Pass cacheCells=false for a cold,
     * disk-resident server (then partition pruning is what bounds I/O).
     */
-  /** Cells frame + the centroid array it was probed against, as ONE
+  /** Cells frame + the centroid set it was probed against, as ONE
     * immutable snapshot behind a single volatile: a refresh after a
     * path-swap recluster changes BOTH, and two separate volatile
     * writes let a concurrent searchBatch read the new cells with the
@@ -49,17 +51,12 @@ final class IvfServing(val idx: IvfIndex, val nprobe: Int,
     * consistent pair; after append/compact (centroids unchanged) the
     * bundle is equivalent to the old two-field form.
     */
-  private case class Snapshot(cellsFrame: DataFrame,
-      cents: Array[(Long, Array[Double])])
+  private case class Snapshot(cellsFrame: DataFrame, cents: Centroids)
 
   private def loadSnapshot(): Snapshot = {
-    val rows = idx.centroids
-      .select(col("cell").cast("long"), col("cv").cast("array<double>"))
-      .collect()
-    require(rows.nonEmpty && rows.length <= 65536,
-      s"IvfServing: ${rows.length} centroids (the nlist rule bounds this at 65536)")
+    val cents = Centroids.collect(idx.centroids, "cell", "cv")
     val frame = if (cacheCells) idx.cells.cache() else idx.cells
-    Snapshot(frame, rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)))
+    Snapshot(frame, cents)
   }
 
   @volatile private var snap: Snapshot = loadSnapshot()
@@ -81,26 +78,13 @@ final class IvfServing(val idx: IvfIndex, val nprobe: Int,
   }
 
   /** nlist of the pinned index. */
-  def nCells: Int = snap.cents.length
+  def nCells: Int = snap.cents.cells.length
 
   /** The query's nprobe nearest cells — same fold, same (d², cell)
     * tie order as searchBatch's probe agg.
     */
   def probeCellsFor(qv: Array[Float]): Seq[Long] =
-    probeCellsIn(snap.cents, qv)
-
-  private def probeCellsIn(cents: Array[(Long, Array[Double])],
-      qv: Array[Float]): Seq[Long] =
-    cents.map { case (cell, cv) =>
-      var d = 0.0
-      var j = 0
-      while (j < cv.length) {
-        val diff = qv(j) - cv(j)
-        d += diff * diff
-        j += 1
-      }
-      (cell, d)
-    }.sortBy { case (c, d) => (d, c) }.take(nprobe).map(_._1).toSeq
+    snap.cents.nearest(qv.map(_.toDouble), nprobe)
 
   /** Top-k for a driver-local query batch in ONE distributed plan.
     * Output mirrors searchBatch: (qid, idCol, score, rk). A cell
@@ -115,7 +99,7 @@ final class IvfServing(val idx: IvfIndex, val nprobe: Int,
     import graft.functions.VectorFunctions.{cosine, topK}
     val snapshot = snap // one volatile read: cells + cents stay paired
     val probe = queries.flatMap { case (qid, qv) =>
-      probeCellsIn(snapshot.cents, qv).map(c => (qid, c, qv))
+      snapshot.cents.nearest(qv.map(_.toDouble), nprobe).map(c => (qid, c, qv))
     }
     val probeDf = probe.toDF("qid", "cell", "qv")
     val allCells = probe.map(_._2).distinct

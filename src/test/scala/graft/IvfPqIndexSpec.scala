@@ -80,6 +80,20 @@ class IvfPqIndexSpec extends SparkSpecBase {
     assert(fromDisk.nonEmpty)
   }
 
+  test("probeCells: a query of another dim is a named error; a non-finite " +
+      "query probes no cell and searchCells refuses the empty probe set") {
+    for (q <- Seq(q0.take(Dim - 1), q0 :+ 0.0)) {
+      val e = intercept[IllegalArgumentException](idx.probeCells(q, nprobe = 2))
+      assert(e.getMessage.contains("query dim"), e.getMessage)
+    }
+    val nanQ = q0.updated(3, Double.NaN)
+    val probed = idx.probeCells(nanQ, nprobe = 2)
+    assert(probed.isEmpty)
+    val e = intercept[IllegalArgumentException](
+      idx.searchCells(probed, nanQ, k = 3, candidates = 10))
+    assert(e.getMessage.contains("Pq.PerCell"), e.getMessage)
+  }
+
   test("static cell probe compiles to partition pruning") {
     val probed = idx.probeCells(q0, nprobe = 2)
     val df = idx.searchCells(probed, q0, k = 3, candidates = 10)

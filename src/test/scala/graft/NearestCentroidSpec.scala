@@ -100,9 +100,15 @@ class NearestCentroidSpec extends SparkSpecBase {
   test("oversized centroid sets are refused by the nlist bound") {
     import spark.implicits._
     val corpus = Seq((0L, Array(1.0f))).toDF("vec_id", "embedding")
-    val cents = spark.range(70000)
+    def cents(n: Long) = spark.range(n)
       .select(col("id").as("cid"), array(col("id").cast("double")).as("cv"))
-    assertThrows[IllegalArgumentException](
-      Ann.ivfAssign(corpus, "vec_id", "embedding", cents, "cid", "cv"))
+    // the bound is [1, 65536]: an empty set and every set past 65536
+    // cells are the same named error
+    for (n <- Seq(0L, 65537L, 70000L)) {
+      val e = intercept[IllegalArgumentException](
+        Ann.ivfAssign(corpus, "vec_id", "embedding", cents(n), "cid", "cv"))
+      assert(e.getMessage.contains("[1, 65536]"), e.getMessage)
+    }
+    Ann.ivfAssign(corpus, "vec_id", "embedding", cents(65536L), "cid", "cv")
   }
 }

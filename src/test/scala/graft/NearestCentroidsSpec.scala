@@ -4,22 +4,18 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.ann.IvfIndex
+import graft.ann.{Centroids, IvfIndex}
 
 /** graft.functions.expr.NearestCentroids (the top-np probe-list
-  * kernel) and IvfIndex.selfProbeTable / knnJoinSelf — the knn_join
+  * kernel), the driver-side Centroids.nearest that shares its code,
+  * and IvfIndex.selfProbeTable / knnJoinSelf — the knn_join
   * production path.
   */
 class NearestCentroidsSpec extends SparkSpecBase {
 
-  import org.apache.spark.sql.graftshim.ColumnBridge
-
   private def probeCol(vec: org.apache.spark.sql.Column,
-      cents: Seq[(Long, Array[Double])], np: Int): org.apache.spark.sql.Column = {
-    val sorted = cents.sortBy(_._1).toArray
-    ColumnBridge.column(graft.functions.expr.NearestCentroids(
-      ColumnBridge.expression(vec), sorted.map(_._1), sorted.map(_._2), np))
-  }
+      cents: Seq[(Long, Array[Double])], np: Int): org.apache.spark.sql.Column =
+    Centroids(cents).probes(vec, np)
 
   test("kernel top-np matches the declarative (dist, cell) window ranking") {
     import spark.implicits._
@@ -30,22 +26,36 @@ class NearestCentroidsSpec extends SparkSpecBase {
     val cents = Seq.tabulate(40) { c =>
       (c.toLong * 3, Array.fill(64)(rnd.nextDouble() * 2 - 1))
     }
-    val kernel = corpus
-      .select(col("vec_id"), probeCol(col("embedding"), cents, 5).as("p"))
-      .as[(Long, Seq[Long])].collect().toMap
+    val dblCorpus = Seq.tabulate(250) { i =>
+      (i.toLong, Array.fill(64)(rnd.nextDouble() * 2 - 1))
+    }.toDF("vec_id", "embedding")
+    val coarse = Centroids(cents)
 
-    val centsDf = cents.toDF("cell", "cv")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("_d"), col("cell"))
-    val expected = corpus
-      .crossJoin(centsDf)
-      .withColumn("_d", graft.functions.VectorFunctions.l2SqD(col("embedding"), col("cv")))
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= 5)
-      .orderBy(col("vec_id"), col("_rn"))
-      .select("vec_id", "cell").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+    // the float and the double input column
+    for (vecs <- Seq(corpus, dblCorpus)) {
+      val kernel = vecs
+        .select(col("vec_id"), probeCol(col("embedding"), cents, 5).as("p"))
+        .as[(Long, Seq[Long])].collect().toMap
 
-    assert(kernel == expected)
+      val centsDf = cents.toDF("cell", "cv")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("vec_id")).orderBy(col("_d"), col("cell"))
+      val expected = vecs
+        .crossJoin(centsDf)
+        .withColumn("_d", graft.functions.VectorFunctions.l2SqD(col("embedding"), col("cv")))
+        .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= 5)
+        .orderBy(col("vec_id"), col("_rn"))
+        .select("vec_id", "cell").as[(Long, Long)].collect()
+        .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+
+      assert(kernel == expected)
+
+      // the driver-side pick for the same vector is the same list
+      val driver = vecs.select(col("vec_id"), col("embedding").cast("array<double>"))
+        .as[(Long, Array[Double])].collect()
+        .map { case (id, v) => id -> coarse.nearest(v, 5) }.toMap
+      assert(driver == kernel)
+    }
   }
 
   test("ties resolve toward the lowest cell id, in order") {
@@ -59,6 +69,7 @@ class NearestCentroidsSpec extends SparkSpecBase {
     val got = corpus.select(probeCol(col("embedding"), cents, 3).as("p"))
       .as[Seq[Long]].head()
     assert(got == Seq(2L, 4L, 6L))
+    assert(Centroids(cents).nearest(Array(1.0, 1.0), 3) == Seq(2L, 4L, 6L))
   }
 
   test("np larger than the centroid count clamps to all cells") {

@@ -187,6 +187,31 @@ class StreamingSpec extends SparkSpecBase {
     assert(warm.nonEmpty)
   }
 
+  test("IvfServing: a query of another dim is a named error; a non-finite " +
+      "query probes no cell and gets no rows") {
+    import spark.implicits._
+    val corpus = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val dir = java.nio.file.Files.createTempDirectory("srvivf3").toString
+    val idx = graft.ann.IvfIndex.buildAuto(corpus, "vec_id", "embedding", dir)
+    val serving = new graft.serve.IvfServing(idx, nprobe = 3)
+    val (qid, qv) = corpus.filter(col("vec_id") === 1L)
+      .select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].head()
+    for (q <- Seq(qv.init, qv :+ 0.0f)) {
+      val e = intercept[IllegalArgumentException](serving.probeCellsFor(q))
+      assert(e.getMessage.contains("query dim"), e.getMessage)
+    }
+    val nanQ = qv.updated(0, Float.NaN)
+    assert(serving.probeCellsFor(nanQ).isEmpty)
+    def rows(reqs: Seq[(Long, Array[Float])]) = serving.searchBatch(reqs, k = 4)
+      .select("qid", "vec_id", "score", "rk")
+      .as[(Long, Long, Double, Long)].collect().toSet
+    assert(rows(Seq((99L, nanQ))).isEmpty)
+    val alone = rows(Seq((qid, qv)))
+    assert(alone.nonEmpty)
+    assert(rows(Seq((99L, nanQ), (qid, qv))) == alone)
+  }
+
   test("streaming near-dup gate: fingerprint anti-join drops indexed near-copies") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
