@@ -193,15 +193,15 @@ final class DocumentIndex private (
 
   /** The top `maxChunks` chunk rows of a query, filter applied, as
     * (document_id, score, cols...) in (score desc, chunk_id asc) order:
-    * ONE job — per-partition heaps of the TakeOrderedAndProject merged
-    * on the driver (see VectorIndex.queryItems).
+    * ONE job over the chunk index's prepared scan, no per-query plan
+    * (see VectorIndex.topItems).
     */
   private def topChunks(queryText: String, maxChunks: Int, filter: Option[MetaFilter],
       cols: Seq[String]): Array[Row] = {
     val qv = embedder.embed(splitter.tokenizer.encode(queryText.replace('\n', ' ')))
-    chunks.queryItems(qv.map(_.toDouble).toIndexedSeq, maxChunks, filter)
-      .select((Seq("document_id", "score") ++ cols).map(col): _*)
-      .collect()
+    val names = Seq("document_id", "score") ++ cols
+    chunks.topItems(qv.map(_.toDouble).toIndexedSeq, maxChunks, filter)
+      .map(r => Row.fromSeq(names.map(n => r.get(r.fieldIndex(n)))))
   }
 
   /** Per-document mean score and chunk count over the top chunk rows,
@@ -229,9 +229,13 @@ final class DocumentIndex private (
     * local_document_index.py:221-254 query_documents): top `maxChunks`
     * chunks by cosine → group by document → mean chunk score → top
     * `maxDocuments`. Runs its one Spark job WHEN CALLED — the chunk
-    * top-k, collected — then groups and ranks the ≤ `maxChunks` rows
-    * on the driver; no catalog scan or join, because every chunk row
-    * already carries its document's uri and metadata. Returns a local
+    * top-k over the chunk index's scan, which is planned once per
+    * index instance, so a query pays no analysis, optimisation,
+    * planning or codegen of its own — then groups and ranks the
+    * ≤ `maxChunks` rows on the driver; no catalog scan or join,
+    * because every chunk row already carries its document's uri and
+    * metadata. The metadata filter is evaluated per chunk row inside
+    * that job, not pushed into the parquet reader. Returns a local
     * DataFrame (document_id, uri, score, n_chunks, ...metadata in
     * catalog column order).
     */
@@ -257,7 +261,8 @@ final class DocumentIndex private (
   /** Render token-budgeted sections for the top documents of a query
     * (reference: local_document_result.py:26-183 render_sections, as
     * invoked by vectra-cli.py's `query --format sections`). The chunk
-    * top-k runs once, when called, and picks the top documents exactly
+    * top-k runs once, when called — one job over the prepared chunk
+    * scan, no per-query plan — and picks the top documents exactly
     * as [[queryDocuments]] does; the returned frame is a lazy `flatMap`
     * over those documents' catalog rows, with their ≤ `maxChunks`
     * scored chunks in the closure — document text never reaches the

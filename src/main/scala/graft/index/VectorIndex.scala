@@ -1,8 +1,19 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, QueryPlanningTracker}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute,
+  AttributeReference, BindReferences, BoundReference, Descending, EmptyRow, Expression,
+  InterpretedMutableProjection, InterpretedOrdering, InterpretedPredicate, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 
 import graft.filters.MetaFilter
 import graft.functions.VectorFunctions._
@@ -28,11 +39,14 @@ final class VectorIndex private (
   import VectorIndex.NORM
 
   /** Top-k cosine query (reference: local_index.py:126-151
-    * query_items): optional metadata filter first, then score, then
-    * top-k. The plan is Filter(pushed) → Project(score) →
+    * query_items) as a lazy DataFrame, for callers that compose it
+    * into a larger plan: optional metadata filter first, then score,
+    * then top-k. The plan is Filter(pushed) → Project(score) →
     * TakeOrderedAndProject: per-partition heaps of size k, no global
     * sort, no shuffle of the table — the 100 TB-safe shape.
-    * Ties broken by id for determinism.
+    * Ties broken by id for determinism. Every call is a new plan that
+    * Spark analyses, optimises, plans and compiles when it runs; a
+    * caller that only collects the rows wants [[topItems]].
     */
   def queryItems(query: Seq[Double], k: Int,
       filter: Option[MetaFilter] = None): DataFrame = {
@@ -43,6 +57,25 @@ final class VectorIndex private (
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }
+
+  /** The rows of `queryItems(query, k, filter).collect()` — same
+    * columns, same order, bit-identical scores — computed eagerly
+    * with no per-query plan. The index's scan is planned once per
+    * index instance (its `items.queryExecution.toRdd`); each call runs
+    * ONE job over it, in which every partition keeps its k best rows
+    * in a bounded heap under Spark's own ordering (score desc nulls
+    * last, id asc) and the driver merges the heaps. Score and filter
+    * are the expressions `queryItems` plans, evaluated interpreted, so
+    * no class is compiled per query. The filter is evaluated per row
+    * rather than pushed into the parquet reader, so a filtered call
+    * reads every row group. A negative `k` or an empty query is an
+    * `IllegalArgumentException`.
+    */
+  def topItems(query: Seq[Double], k: Int,
+      filter: Option[MetaFilter] = None): Array[Row] =
+    prepared.top(query, k, filter)
+
+  private lazy val prepared = new VectorIndex.PreparedScan(items, idCol, vecCol)
 
   /** Many query vectors in one plan: broadcast the query set, score
     * once, bounded-heap top-k per query (Ann.bruteForceTopK) — the
@@ -184,6 +217,89 @@ object VectorIndex {
     val schema = ParquetFileFormat.readSchemaFromFooter(footer,
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     spark.read.schema(schema).parquet(dir)
+  }
+
+  /** An index's scan planned once, with the score expression of
+    * [[VectorIndex.queryItems]] resolved against it; the query vector
+    * is the expression's one free input, bound per call.
+    */
+  private final class PreparedScan(items: DataFrame, idCol: String, vecCol: String) {
+    private val spark = items.sparkSession
+    private val rows = items.queryExecution.toRdd
+    private val input: Seq[Attribute] = items.queryExecution.executedPlan.output
+    private val query =
+      AttributeReference("query", ArrayType(DoubleType, containsNull = false), nullable = false)()
+
+    /** `c` resolved (functions, type coercion) against the scan's
+      * columns plus `extra`, and bound to their ordinals.
+      */
+    private def resolve(c: Column, extra: Seq[Attribute] = Nil): Expression = {
+      val attrs = input ++ extra
+      val plan = Project(Seq(Alias(ColumnBridge.expression(spark, c), "_e")()), LocalRelation(attrs))
+      val analyzed = SQLConf.withExistingConf(spark.sessionState.conf) {
+        spark.sessionState.analyzer.executeAndCheck(plan, new QueryPlanningTracker)
+      }
+      val e = analyzed.asInstanceOf[Project].projectList.head.asInstanceOf[Alias].child
+      BindReferences.bindReference(e, attrs)
+    }
+
+    private val score = {
+      val qv = ColumnBridge.column(query)
+      resolve(cosinePreNorm(col(vecCol), col(NORM), qv, normD(qv)), Seq(query))
+    }
+    // withColumn("score", …): replaces a column of that name, else appends
+    private val (scoreAt, replaced) =
+      input.indexWhere(a => spark.sessionState.conf.resolver(a.name, "score")) match {
+        case -1 => (input.length, 0)
+        case i  => (i, 1)
+      }
+    private val schema = StructType(DataTypeUtils.fromAttributes(input)
+      .patch(scoreAt, Seq(StructField("score", DoubleType, score.nullable)), replaced))
+    private val ordering = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(scoreAt, DoubleType, nullable = true), Descending),
+      SortOrder(resolve(col(idCol)), Ascending)))
+
+    def top(q: Seq[Double], k: Int, filter: Option[MetaFilter]): Array[Row] = {
+      require(k >= 0, s"topItems: k must be >= 0, got $k")
+      require(q.nonEmpty, "topItems: empty query vector")
+      val pred = filter.map(f => resolve(f.toColumn))
+      // the query as a literal, and its norm folded once as the optimizer folds it
+      val qLit = Literal(new GenericArrayData(q.toArray), query.dataType)
+      val scored = score.transform {
+        case b: BoundReference if b.ordinal == input.length => qLit
+      }.transformDown {
+        case e if e.foldable => Literal.create(e.eval(EmptyRow), e.dataType)
+      }
+      val out = input.indices.map(i => BoundReference(i, input(i).dataType, input(i).nullable): Expression)
+        .patch(scoreAt, Seq(scored), replaced)
+      if (k == 0) return Array.empty
+      val ord = ordering
+      val kept = spark.sparkContext.runJob(rows,
+        (it: Iterator[InternalRow]) => VectorIndex.keepTop(it, pred, out, ord, k))
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      kept.flatten.sorted(ord).take(k).map(r => toRow(r).asInstanceOf[Row])
+    }
+  }
+
+  /** The k best rows of one partition under `ord`, projected by `out`
+    * after `pred`: a bounded heap whose root is the weakest kept row,
+    * so a row that cannot enter is one comparison and no copy.
+    */
+  private def keepTop(rows: Iterator[InternalRow], pred: Option[Expression],
+      out: Seq[Expression], ord: Ordering[InternalRow], k: Int): Array[InternalRow] = {
+    val part = TaskContext.getPartitionId()
+    val keep = pred.map { p => val ip = InterpretedPredicate(p); ip.initialize(part); ip }
+    val project = new InterpretedMutableProjection(out)
+    project.initialize(part)
+    val heap = new java.util.PriorityQueue[InternalRow](ord.reverse)
+    rows.foreach { r =>
+      if (keep.forall(_.eval(r))) {
+        val c = project(r)
+        if (heap.size < k) heap.add(c.copy())
+        else if (ord.compare(c, heap.peek()) < 0) { heap.poll(); heap.add(c.copy()) }
+      }
+    }
+    heap.toArray(new Array[InternalRow](0))
   }
 
   private def withNorm(df: DataFrame, vecCol: String): DataFrame =

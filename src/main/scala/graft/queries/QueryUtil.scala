@@ -39,13 +39,17 @@ object QueryUtil {
   private val builtArtifacts =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  // the artifacts are this JVM's own (pid-keyed): none outlives it
+  sys.addShutdownHook(builtArtifacts.values.forEach(p =>
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)): Unit))
+
   /** Once-per-JVM persisted query artifact (an on-disk index a
     * production deployment would maintain between queries). `build`
     * writes the artifact to the returned path; later calls with the
     * same key reuse it. The path is keyed by corpus dir AND process id
     * so concurrent JVMs (driver Verify vs a local bench) never share a
     * half-written index, and a fresh JVM always rebuilds from current
-    * code.
+    * code. Every built path is deleted when the JVM exits.
     */
   def persistedArtifact(kind: String, corpusDir: String)(build: String => Unit): String =
     builtArtifacts.computeIfAbsent(s"$kind|$corpusDir", { _ =>

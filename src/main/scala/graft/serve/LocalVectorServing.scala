@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 import graft.filters.MetaFilter
+import graft.functions.expr.TopKBuffer
 import graft.index.VectorIndex
 
 /** Driver-side snapshot serving: the serving-TIER counterpart of the
@@ -53,12 +54,10 @@ final class LocalVectorServing private (
     var qi = 0
     while (qi < q.length) { qn += q(qi) * q(qi); qi += 1 }
     qn = math.sqrt(qn)
-    // min-heap of (score, pos) keeping the k best; pos ascending = id
-    // ascending (rows are id-sorted), so evict on (score asc, pos desc)
-    val ord = Ordering.by[(Double, Int), (Double, Int)] {
-      case (s, p) => (-s, p)
-    }
-    val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Int)](ord)
+    if (k <= 0) return Nil
+    // the k best (score, pos); pos ascending = id ascending (rows are
+    // id-sorted), so the buffer's id tie-break is the id order
+    val heap = new TopKBuffer(k)
     var p = 0
     while (p < rows.length) {
       if (filter.forall(MetaFilter.matches(_, getter(rows(p))))) {
@@ -68,17 +67,11 @@ final class LocalVectorServing private (
         var i = 0
         while (i < n) { dot += v(i) * q(i); i += 1 }
         val denom = norms(p) * qn
-        val s = if (denom == 0.0) 0.0 else dot / denom
-        if (heap.size < k) heap.enqueue((s, p))
-        else if (heap.nonEmpty &&
-            (s > heap.head._1 || (s == heap.head._1 && p < heap.head._2))) {
-          heap.dequeue(); heap.enqueue((s, p))
-        }
+        heap.insert(if (denom == 0.0) 0.0 else dot / denom, p)
       }
       p += 1
     }
-    val drained: List[(Double, Int)] = List.fill(heap.size)(heap.dequeue())
-    drained.reverse.map(sp => (rows(sp._2), sp._1))
+    heap.sorted.map { case (s, pos) => (rows(pos.toInt), s) }
   }
 
   /** All rows matching the filter, id ascending. */

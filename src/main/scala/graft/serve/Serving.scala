@@ -24,15 +24,23 @@ import graft.index.VectorIndex
   *     warm-up action), coalesced to a serving partition count (small
   *     corpus → 1 partition → 1 task per query, no task-launch fan-out;
   *     at scale leave the natural partitioning so queries parallelize);
-  *   - each distinct query shape is analyzed/optimized/codegen'd ONCE:
-  *     repeated calls re-execute the SAME DataFrame, and Spark reuses
-  *     its QueryExecution (with AQE, even the finalized adaptive plan).
+  *   - top-k queries run over the pinned copy's scan, planned once
+  *     per session (VectorIndex.topItems): each call is one job with
+  *     no analysis, optimisation, planning or codegen of its own, and
+  *     nothing is kept per distinct query vector;
+  *   - listings and point lookups are analyzed/optimized/codegen'd
+  *     ONCE per distinct filter or id: repeated calls re-execute the
+  *     SAME DataFrame, and Spark reuses its QueryExecution (with AQE,
+  *     even the finalized adaptive plan).
   *
   * What remains per call is the irreducible local-mode job floor (a
-  * few ms). The plan shapes are unchanged from the cold path — a
-  * k-bounded TakeOrderedAndProject or a pushed-down filter scan — so
-  * the same session serves unchanged on a real cluster, where the
-  * cache pins hot partitions executor-side.
+  * few ms). The listing plans are unchanged from the cold path — a
+  * pushed-down filter scan — and the top-k keeps the cold
+  * TakeOrderedAndProject's shape, a k-bounded heap per partition
+  * merged on the driver, so the same session serves unchanged on a
+  * real cluster, where the cache pins hot partitions executor-side.
+  * A top-k filter is evaluated per row of the pinned copy, not pushed
+  * into a parquet reader.
   */
 final class VectorServing(index: VectorIndex, servePartitions: Int = 1) {
 
@@ -51,14 +59,13 @@ final class VectorServing(index: VectorIndex, servePartitions: Int = 1) {
   /** Materialize the cache so the first query doesn't pay the load. */
   def warm(): this.type = { items.count(): Unit; this }
 
-  /** Top-k cosine on the warm index — same plan as
-    * VectorIndex.queryItems, analyzed once per (query, k, filter).
+  /** Top-k cosine on the warm index: the rows of
+    * VectorIndex.queryItems, one job over the pinned scan
+    * (VectorIndex.topItems).
     */
   def queryItems(query: Seq[Double], k: Int,
       filter: Option[MetaFilter] = None): Array[Row] =
-    plan(s"topk|$k|${filter.map(_.toString).getOrElse("")}|${query.hashCode}") {
-      idx.queryItems(query, k, filter)
-    }.collect()
+    idx.topItems(query, k, filter)
 
   /** Metadata-only listing on the warm index (deterministic id order). */
   def listItemsByMetadata(filter: MetaFilter): Array[Row] =

@@ -14,4 +14,11 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object ColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `c` fully converted to the (unresolved) expression a Dataset of
+    * `session` plans — wrapped native expressions included — ready for
+    * the session's analyzer.
+    */
+  def expression(session: SparkSession, c: Column): Expression =
+    session.asInstanceOf[classic.SparkSession].expression(c)
 }

@@ -130,6 +130,37 @@ class DocumentQuerySpec extends SparkSpecBase {
     assert(jobsIn(index.renderSections(queries(4), 120, 2, 50, 50).collect()) <= 2)
   }
 
+  test("a warm queryDocuments or renderSections starts no SQL execution before the caller collects") {
+    val q = queries.head
+    val filter = Some(Filters.head)
+    index.queryDocuments(q).collect()
+    index.queryDocuments(q, filter = filter).collect()
+    index.renderSections(q).collect()
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = n.incrementAndGet(): Unit
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = n.incrementAndGet(): Unit
+    }
+    def executionsIn(f: => Any): Int = {
+      org.apache.spark.ListenerBusDrain(sc)
+      n.set(0)
+      f
+      org.apache.spark.ListenerBusDrain(sc)
+      n.get
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(executionsIn(index.queryDocuments(queries(5))) == 0)
+      assert(executionsIn(index.queryDocuments(queries(6), filter = filter)) == 0)
+      assert(executionsIn(index.renderSections(queries(7))) == 0)
+      // the collect is the caller's one execution
+      assert(executionsIn(index.queryDocuments(queries(8)).collect()) == 1)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("queryDocuments returns the join-based plan's rows, filtered or not, ties included") {
     val cases = queries.zipWithIndex.flatMap { case (q, i) =>
       val filter = if (i % 3 == 0) Some(Filters((i / 3) % Filters.size)) else None

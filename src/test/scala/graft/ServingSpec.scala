@@ -41,6 +41,36 @@ class ServingSpec extends SparkSpecBase {
     } finally vs.close()
   }
 
+  test("warm queryItems answers each of two query vectors with equal hash codes with its own rows") {
+    import spark.implicits._
+    // a seeded birthday search for two distinct 2-d queries whose Seq
+    // hash codes collide
+    val rnd = new java.util.Random(7)
+    val seen = scala.collection.mutable.HashMap.empty[Int, Seq[Double]]
+    var pair: (Seq[Double], Seq[Double]) = null
+    while (pair == null) {
+      val v = scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        Array(rnd.nextGaussian(), rnd.nextGaussian()))
+      seen.get(v.hashCode) match {
+        case Some(u) if u != v => pair = (u, v)
+        case _ => seen(v.hashCode) = v
+      }
+    }
+    val (a, b) = pair
+    assert(a.hashCode == b.hashCode && a != b)
+    val angles = (0 until 60).map(i => (i.toLong, 2 * math.Pi * i / 60))
+    val idx = VectorIndex.build(angles.map { case (i, t) =>
+      (i, Array(math.cos(t).toFloat, math.sin(t).toFloat)) }.toDF("id", "vec"), "id", "vec")
+    val vs = new VectorServing(idx).warm()
+    try {
+      def ids(rows: Array[org.apache.spark.sql.Row]) = rows.map(_.getAs[Long]("id")).toSeq
+      val (wantA, wantB) = (idx.queryItems(a, 5).collect(), idx.queryItems(b, 5).collect())
+      assert(ids(wantA) != ids(wantB))
+      assert(vs.queryItems(a, 5).toSeq == wantA.toSeq)
+      assert(vs.queryItems(b, 5).toSeq == wantB.toSeq)
+    } finally vs.close()
+  }
+
   test("warm filtered queryItems and listItemsByMetadata match cold entries") {
     assume(haveData)
     val vs = new VectorServing(VectorIndex.build(

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import scala.util.Random
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.filters.MetaFilter
 import graft.index.VectorIndex
@@ -86,5 +90,151 @@ class VectorIndexSpec extends SparkSpecBase {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), s"plan was:\n$plan")
     assert(!plan.contains("rangepartitioning"), "top-k must not global-sort")
+  }
+
+  // -- topItems: the eager top-k returns queryItems(...).collect() --
+
+  private val Dim = 8
+
+  /** Seeded rows over `Dim`-d float vectors with the shapes the top-k
+    * must rank: exact duplicates (score ties), zero vectors (score
+    * 0.0), a null vector and an explicitly null norm (null scores), a
+    * NaN element (NaN score), and nullable metadata.
+    */
+  private def edgeRows(n: Int): Seq[(Array[Float], java.lang.Double, String,
+      java.lang.Integer, java.lang.Double)] = {
+    val rnd = new Random(17)
+    val tags = Seq("a", "b", "c", null)
+    def vec = Array.fill(Dim)(rnd.nextGaussian().toFloat)
+    val shared = vec
+    (0 until n).map { i =>
+      val v: Array[Float] = i % 23 match {
+        case 0 | 1 | 2 => shared.clone()                 // exact ties
+        case 3 => new Array[Float](Dim)                   // zero norm
+        case 4 => null                                    // null vector
+        case 5 => val x = vec; x(3) = Float.NaN; x        // NaN element
+        case _ => vec
+      }
+      val norm: java.lang.Double =
+        if (v == null || i % 23 == 6) null
+        else math.sqrt(v.map(x => x.toDouble * x).sum)
+      val label: java.lang.Integer = if (i % 11 == 0) null else Int.box(i % 7)
+      (v, norm, tags(i % tags.size), label, Double.box(rnd.nextDouble()))
+    }
+  }
+
+  /** Indexes over `edgeRows` keyed by long and by string ids, in 4
+    * partitions: saved and loaded (one parquet file per partition) and
+    * unsaved (a repartitioned in-memory frame).
+    */
+  private lazy val edgeFrames: Map[String, DataFrame] = {
+    import spark.implicits._
+    val rows = edgeRows(300)
+    val longs = rows.zipWithIndex.map { case ((v, nm, t, l, w), i) => (i.toLong, v, nm, t, l, w) }
+      .toDF("id", "vec", "norm", "tag", "label", "weight")
+    val strings = rows.zipWithIndex.map { case ((v, nm, t, l, w), i) => (f"s$i%04d", v, nm, t, l, w) }
+      .toDF("sid", "vec", "norm", "tag", "label", "weight")
+    def saved(df: DataFrame): DataFrame = {
+      val dir = Files.createTempDirectory("vidx_top").toString + "/idx"
+      df.repartition(4).write.parquet(dir)
+      spark.read.parquet(dir)
+    }
+    Map("long saved" -> saved(longs), "string saved" -> saved(strings),
+      "long unsaved" -> longs.repartition(4))
+  }
+
+  private def edgeIndex(name: String): VectorIndex =
+    VectorIndex.build(edgeFrames(name), if (name.startsWith("long")) "id" else "sid", "vec")
+
+  /** `topItems` against `queryItems(...).collect()`: same columns, same
+    * rows in the same order, scores equal bit for bit.
+    */
+  private def assertSameTop(idx: VectorIndex, q: Seq[Double], k: Int,
+      filter: Option[MetaFilter] = None): Unit = {
+    val want = idx.queryItems(q, k, filter)
+    val got = idx.topItems(q, k, filter)
+    val wantRows = want.collect()
+    val clue = s"k=$k filter=$filter"
+    assert(got.length == wantRows.length, clue)
+    // floating-point values by their bits: NaN equals NaN, -0.0 is not 0.0
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case f: Float  => java.lang.Float.floatToIntBits(f)
+      case s: scala.collection.Seq[_] => s.map(bits).toList
+      case other     => other
+    }
+    got.zip(wantRows).foreach { case (g, w) =>
+      assert(g.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)), clue)
+      assert(g.toSeq.map(bits) == w.toSeq.map(bits), clue)
+    }
+  }
+
+  private def seededQueries(n: Int): Seq[Seq[Double]] = {
+    val rnd = new Random(29)
+    Seq.fill(n)(Seq.fill(Dim)(rnd.nextGaussian()))
+  }
+
+  test("topItems equals queryItems over ties, zero, null and NaN scores, every k") {
+    val tied = edgeRows(1).head._1.map(_.toDouble).toSeq // the shared vector
+    Seq("long saved", "string saved", "long unsaved").foreach { name =>
+      val idx = edgeIndex(name)
+      assert(idx.items.rdd.getNumPartitions > 1)
+      (tied +: seededQueries(4)).foreach { q =>
+        Seq(0, 1, 5, 26, 299, 300, 1000).foreach(k => assertSameTop(idx, q, k))
+      }
+      // a top-k that is nothing but exact ties, zero scores and nulls
+      assertSameTop(idx, tied, 40)
+      val top = idx.topItems(tied, 300)
+      assert(java.lang.Double.isNaN(top.head.getAs[Double]("score")))
+      assert(top.last.isNullAt(top.last.fieldIndex("score")))
+      assert(top.count(_.getAs[Any]("score") == 0.0) >= 13)
+    }
+  }
+
+  test("topItems equals queryItems under every MetaFilter operator, null metadata included") {
+    import MetaFilter._
+    val filters = Seq(
+      Eq("tag", "a"), Ne("tag", "a"), Gt("label", 3), Gte("label", 3), Lt("weight", 0.5),
+      Lte("label", 2), In("tag", Seq("a", "c")), In("label", Nil), Nin("tag", Seq("b")),
+      Nin("label", Nil), Eq("label", 4L), Gte("tag", "b"),
+      And(Seq(Gte("label", 1), Ne("tag", "c"))), Or(Seq(Eq("tag", "b"), Lt("label", 2))),
+      Or(Seq(And(Seq(In("label", Seq(1, 2, 3)), Gt("weight", 0.2))), Eq("tag", "zz"))))
+    val qs = seededQueries(2)
+    Seq("long saved", "string saved", "long unsaved").foreach { name =>
+      val idx = edgeIndex(name)
+      for (f <- filters; (q, k) <- Seq(qs(0) -> 3, qs(1) -> 500)) assertSameTop(idx, q, k, Some(f))
+    }
+  }
+
+  test("topItems on an empty index, an unsaved upsert and a delete") {
+    import spark.implicits._
+    val q = seededQueries(1).head
+    val empty = VectorIndex.build(
+      Seq.empty[(Long, Array[Float], String)].toDF("id", "vec", "tag"), "id", "vec")
+    assert(empty.topItems(q, 5).isEmpty)
+    assertSameTop(empty, q, 5, Some(MetaFilter.Eq("tag", "a")))
+    val idx = VectorIndex.build(edgeFrames("long saved"), "id", "vec")
+    val rnd = new Random(31)
+    val updates = (0 until 40).map(i => (i.toLong * 7, Array.fill(Dim)(rnd.nextGaussian().toFloat),
+      "u", Int.box(i % 5), Double.box(0.5)))
+      .toDF("id", "vec", "tag", "label", "weight")
+    val up = idx.upsertItems(updates)
+    val del = up.deleteItems(Seq(Tuple1(14L), Tuple1(21L), Tuple1(1L)).toDF("id"))
+    Seq(up, del).foreach { lazyIdx =>
+      (q +: seededQueries(3)).foreach { qq =>
+        assertSameTop(lazyIdx, qq, 10)
+        assertSameTop(lazyIdx, qq, 10, Some(MetaFilter.Eq("tag", "u")))
+      }
+    }
+  }
+
+  test("topItems refuses a negative k and an empty query; k = 0 runs no job") {
+    val idx = mkIndex
+    intercept[IllegalArgumentException](idx.topItems(Seq(1.0, 0.0, 0.0), -1))
+    intercept[IllegalArgumentException](idx.topItems(Nil, 3))
+    assert(jobsIn(assert(idx.topItems(Seq(1.0, 0.0, 0.0), 0).isEmpty)) == 0)
+    // a warm call is one job
+    idx.topItems(Seq(1.0, 0.0, 0.0), 2)
+    assert(jobsIn(idx.topItems(Seq(0.0, 1.0, 0.0), 2)) == 1)
   }
 }
