@@ -68,6 +68,10 @@ final class DocumentIndex private (
     * scored chunks themselves) and the catalog. Columnar pruning makes
     * unused metadata free — the side-file split falls out of the
     * format.
+    *
+    * A null `uri` or `text` is an `IllegalArgumentException` naming
+    * this method and the column, raised by the first action that reads
+    * the rows (save, a query, a collect of the chunks or catalog).
     */
   def upsertDocuments(docs: DataFrame): DocumentIndex = {
     import org.apache.spark.sql.Encoders
@@ -121,8 +125,8 @@ final class DocumentIndex private (
             else spByType.getOrElseUpdate(dt, sp.forDocType(dt))
           }
           val pending = it.flatMap { row =>
-            val uri = row.getString(0)
-            val text = row.getString(1)
+            val uri = DocumentIndex.required(row.getString(0), "uri")
+            val text = DocumentIndex.required(row.getString(1), "text")
             val meta = Seq.tabulate(row.length - 2)(j => row.get(j + 2))
             val explicitType =
               if (dtIdx >= 0) Option(row.get(2 + dtIdx)).map(_.toString).orNull
@@ -162,7 +166,7 @@ final class DocumentIndex private (
     // `{id}.txt` files (reference: local_document_index.py:207-208) —
     // plus the metadata columns (the `{id}.json` analogue).
     val newCatalog = latest
-      .withColumn("document_id", md5(col("uri")))
+      .withColumn("document_id", DocumentIndex.documentIdOf(col("uri")))
       .select((Seq(col("document_id"), col("uri"), col("text"))
         ++ metaCols.map(col)): _*)
     // retiring previous versions needs only the batch's uris, not the
@@ -303,14 +307,19 @@ final class DocumentIndex private (
       .crossJoin(chunks.items.agg(count(lit(1)).as("chunks")))
       .withColumn("version", lit(1L))
 
-  /** Temp-write + swap per component (see VectorIndex.writeSwap): an
-    * index re-saved over the path it was loaded from must not clobber
-    * its own lazily-read inputs.
+  /** Persist both components as parquet under `path` (`catalog/`,
+    * `chunks/`). The two are written at once, each into a temp dir —
+    * the catalog on a second thread that carries the caller's job group
+    * and local properties — and swapped in only when both writes
+    * succeeded (see VectorIndex.writeSwapAll). So an index re-saved over
+    * the path it was loaded from never clobbers its own lazily-read
+    * inputs, and a save that fails (a throwing embedder, a null uri)
+    * leaves the saved index unchanged: failure-atomic. It is not
+    * crash-atomic: a crash between the two swaps can leave a new
+    * catalog over old chunks.
     */
-  def save(path: String): Unit = {
-    VectorIndex.writeSwap(catalog, s"$path/catalog")
-    chunks.save(s"$path/chunks")
-  }
+  def save(path: String): Unit =
+    VectorIndex.writeSwapAll(Seq(catalog -> s"$path/catalog", chunks.items -> s"$path/chunks"))
 }
 
 object DocumentIndex {
@@ -330,11 +339,22 @@ object DocumentIndex {
     }
   }
 
-  def docIdFor(uri: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(uri.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    d.map(b => f"${b & 0xff}%02x").mkString
+  /** The md5 hex of a uri — Spark's `md5(uri)`. */
+  def docIdFor(uri: String): String =
+    java.util.HexFormat.of().formatHex(java.security.MessageDigest.getInstance("MD5")
+      .digest(uri.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+
+  /** A document row's `column` value, or the named error for a null. */
+  private def required(value: String, column: String): String = {
+    if (value == null) throw new IllegalArgumentException(
+      s"upsertDocuments: null $column in a document row; every document needs a uri and a text")
+    value
   }
+
+  /** The catalog's document_id of a uri column: [[docIdFor]], with a
+    * null uri the named error rather than a null id.
+    */
+  private val documentIdOf = udf((uri: String) => docIdFor(required(uri, "uri")))
 
   /** Empty index (reference: create_index + catalog bootstrap,
     * local_document_index.py:84-86/277-305).

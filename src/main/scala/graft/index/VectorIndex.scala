@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute,
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.ColumnBridge
@@ -162,33 +163,99 @@ final class VectorIndex private (
       max(size(col(vecCol))).cast("long").as("max_dim"))
 
   /** Persist as parquet — the scale-out analogue of index.json.
-    * Writes to a temp dir and swaps, so saving an index back over the
-    * path it was lazily loaded from cannot delete files mid-scan.
+    * Writes to a temp dir and swaps only after the write succeeded
+    * (see [[VectorIndex.writeSwapAll]]), so saving an index back over
+    * the path it was lazily loaded from cannot delete files mid-scan,
+    * and a failed save leaves the saved index as it was.
     */
-  def save(path: String): Unit = VectorIndex.writeSwap(items, path)
+  def save(path: String): Unit = VectorIndex.writeSwapAll(Seq(items -> path))
 }
 
 object VectorIndex {
   private[index] val NORM = "norm"
 
-  /** Overwrite `dest` with `df` safely even when `df` reads from
-    * `dest` itself (lazy plans + Overwrite would otherwise delete the
-    * input mid-scan): write to a sibling temp dir, then swap via the
-    * Hadoop FileSystem so it also works on HDFS/object stores.
+  /** Overwrite each part's `dest` with its frame, all or nothing, safely
+    * even when a frame reads from a `dest` itself (lazy plans +
+    * Overwrite would otherwise delete the input mid-scan).
+    *
+    * Every part is written at once into a sibling `<dest>__tmp`: each
+    * part but the last on its own thread, which carries the caller's
+    * local properties (job group, scheduler pool) and active session,
+    * the last on the caller's thread — so the parts' planning, pre-jobs
+    * and commits overlap instead of queueing. Only when every write has
+    * succeeded is each `dest` replaced by its temp dir, through the
+    * Hadoop FileSystem so it also works on HDFS/object stores. If any
+    * write fails, the writes' straggling tasks are awaited, the temp
+    * dirs deleted, no `dest` changes, and the first failure in part
+    * order is rethrown with the others suppressed. Failure-atomic, not
+    * crash-atomic: the swap is a delete and a rename per part, and a
+    * crash between them leaves a part missing or partly swapped.
     */
-  private[index] def writeSwap(df: DataFrame, dest: String): Unit = {
+  private[index] def writeSwapAll(parts: Seq[(DataFrame, String)]): Unit = {
     import org.apache.hadoop.fs.Path
-    val spark = df.sparkSession
-    val destPath = new Path(dest)
-    val tmpPath = new Path(dest + "__tmp")
-    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    df.write.mode(SaveMode.Overwrite).parquet(tmpPath.toString)
-    fs.delete(destPath, true)
-    if (!fs.rename(tmpPath, destPath))
-      throw new java.io.IOException(s"rename $tmpPath -> $destPath failed")
+    require(parts.nonEmpty, "writeSwapAll: no parts")
+    val spark = parts.head._1.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val sc = spark.sparkContext
+    val tag = s"graft-write-${java.util.UUID.randomUUID}"
+    def write(part: (DataFrame, String)): Unit = {
+      sc.addJobTag(tag)
+      try part._1.write.mode(SaveMode.Overwrite).parquet(part._2 + "__tmp")
+      finally sc.removeJobTag(tag)
+    }
+    def failureOf(body: => Any): Option[Throwable] =
+      try { body; None } catch {
+        case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+        case t: Throwable => Some(t)
+      }
+    val extra = parts.init.map { part =>
+      SQLExecution.withThreadLocalCaptured(spark, writers)(write(part))
+    }
+    val lastFailure = failureOf(write(parts.last))
+    val failures = (extra.map(f => failureOf(f.get())) :+ lastFailure).flatten
+    val moves = parts.map { case (_, dest) =>
+      val to = new Path(dest)
+      (new Path(dest + "__tmp"), to, to.getFileSystem(sc.hadoopConfiguration))
+    }
+    if (failures.nonEmpty) {
+      awaitTasks(sc, tag)
+      moves.foreach { case (tmp, _, fs) => fs.delete(tmp, true) }
+      failures.tail.foreach(failures.head.addSuppressed)
+      throw failures.head
+    }
+    moves.foreach { case (tmp, dest, fs) =>
+      fs.delete(dest, true)
+      if (!fs.rename(tmp, dest))
+        throw new java.io.IOException(s"rename $tmp -> $dest failed")
+    }
   }
 
-  /** Read a directory written by [[writeSwap]] without a Spark job: the
+  /** Block until no task of a job tagged `tag` runs, as the status
+    * store sees it (at most a minute). The other tasks of a failed job
+    * are killed asynchronously; one still starting up would create its
+    * output file in a temp dir after [[writeSwapAll]] deleted it.
+    */
+  private def awaitTasks(sc: org.apache.spark.SparkContext, tag: String): Unit = {
+    sc.cancelJobsWithTag(tag)
+    val status = sc.statusTracker
+    def busy = status.getJobIdsForTag(tag).iterator.flatMap(status.getJobInfo).exists { j =>
+      j.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+        j.stageIds.iterator.flatMap(status.getStageInfo).exists(_.numActiveTasks > 0)
+    }
+    val deadline = System.nanoTime + 60000000000L
+    while (busy && System.nanoTime < deadline) Thread.sleep(10)
+  }
+
+  /** Threads for [[writeSwapAll]]'s extra parts: one per concurrent
+    * write, idle threads retire after a minute, daemon so they never
+    * hold the JVM open.
+    */
+  private lazy val writers = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-index-writer")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Read a directory written by [[writeSwapAll]] without a Spark job: the
     * schema comes from one part file's footer, read on the driver and
     * converted as Spark's own inference converts it (which, without
     * mergeSchema, also reads a single footer — but in a one-task job).

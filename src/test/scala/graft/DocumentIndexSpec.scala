@@ -4,8 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
+import graft.embed.{Embedder, HashingEmbedder}
 import graft.index.{DocumentIndex, IndexNotFoundException, VectorIndex}
 import graft.text.SplitterConfig
 
@@ -185,12 +188,14 @@ class DocumentIndexSpec extends SparkSpecBase {
   private def assertLoadsAsInferred(loaded: DataFrame, dir: String): Unit = {
     val inferred = spark.read.parquet(dir)
     assert(loaded.schema == inferred.schema, dir)
-    def rows(df: DataFrame) = df.collect().toSeq.map(_.toSeq.map {
-      case a: Seq[_] => a.mkString("[", ",", "]")
-      case v => String.valueOf(v)
-    }.mkString("|")).sorted
     assert(rows(loaded) == rows(inferred), dir)
   }
+
+  /** Every row of `df` as a string, sorted: equal iff the rows are. */
+  private def rows(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toSeq.map {
+    case a: Seq[_] => a.mkString("[", ",", "]")
+    case v => String.valueOf(v)
+  }.mkString("|")).sorted
 
   test("a small batch saves one file per component and load runs no job") {
     import spark.implicits._
@@ -242,5 +247,124 @@ class DocumentIndexSpec extends SparkSpecBase {
     assert(e3.path == s"$bare/catalog" && e3.getMessage.contains(e3.path))
     val e4 = intercept[IndexNotFoundException](VectorIndex.load(spark, root, "id", "vec"))
     assert(e4.path == root && e4.getMessage.contains(root))
+  }
+
+  // -- all-or-nothing save --
+
+  private val cfg64 = SplitterConfig(keepSeparators = true, chunkSize = 64, chunkOverlap = 0)
+
+  /** The saved catalog and chunk rows under `dir`. */
+  private def savedRows(dir: String): (Seq[String], Seq[String]) = {
+    val idx = DocumentIndex.load(spark, dir, cfg64)
+    (rows(idx.catalog), rows(idx.chunks.items))
+  }
+
+  private def assertNoTempDirs(dir: String): Unit =
+    Seq("catalog__tmp", "chunks__tmp").foreach { t =>
+      assert(!Files.exists(Paths.get(dir, t)), s"$t left behind")
+    }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  /** `e` is, or is caused by, upsertDocuments' error for a null `column`. */
+  private def namesNull(e: Throwable, column: String): Boolean = causes(e).exists {
+    case iae: IllegalArgumentException =>
+      iae.getMessage.contains("upsertDocuments") && iae.getMessage.contains(s"null $column")
+    case _ => false
+  }
+
+  test("a save whose chunk write fails leaves the saved index unchanged") {
+    import spark.implicits._
+    val em = new MarkerFailingEmbedder("zzpoison")
+    val dir = Files.createTempDirectory("didxa").toString
+    DocumentIndex.create(spark, cfg64, em).upsertDocuments(corpus).save(dir)
+    val before = savedRows(dir)
+    // a new version of a.txt and a new d.txt; only the chunk write embeds
+    val batch = Seq(("a.txt", "replacement text carrying zzpoison here"), ("d.txt", "a fresh document"))
+      .toDF("uri", "text")
+    val e = intercept[Exception] {
+      DocumentIndex.load(spark, dir, cfg64, em).upsertDocuments(batch).save(dir)
+    }
+    assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("refused zzpoison")), e)
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert(savedRows(dir) == before)
+    assertNoTempDirs(dir)
+  }
+
+  test("save runs every job of both components under the caller's job group and local properties") {
+    val dir = Files.createTempDirectory("didxp").toString
+    val idx = mkIndex
+    // a first save leaves an idle writer thread, created without the
+    // group below; the second save must not run on its stale properties
+    idx.save(dir)
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e.properties): Unit
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup("didx-save-group", "save under a job group")
+    sc.setLocalProperty("graft.spec.tag", "save-tag")
+    try {
+      idx.save(dir)
+      ListenerBusDrain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(listener)
+    }
+    val props = seen.asScala.toSeq
+    assert(props.nonEmpty)
+    props.foreach { p =>
+      assert(p.getProperty("spark.jobGroup.id") == "didx-save-group", p)
+      assert(p.getProperty("graft.spec.tag") == "save-tag", p)
+    }
+    // jobs of both writes: the catalog's and the chunks' SQL executions
+    val executions = props.flatMap(p => Option(p.getProperty("spark.sql.execution.root.id"))).distinct
+    assert(executions.size >= 2, executions)
+    assert(DocumentIndex.load(spark, dir).catalog.count() == 3)
+  }
+
+  test("a null uri or text in upsertDocuments is a named IllegalArgumentException and saves nothing") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("didxn").toString
+    DocumentIndex.create(spark, cfg64).upsertDocuments(corpus).save(dir)
+    val before = savedRows(dir)
+    Seq(
+      "uri" -> Seq[(String, String)]((null, "a document without a uri"), ("d.txt", "fine")),
+      "text" -> Seq[(String, String)](("d.txt", null), ("a.txt", "fine"))
+    ).foreach { case (column, docs) =>
+      def named(e: Throwable): Boolean = namesNull(e, column)
+      // lazy: the upsert itself runs nothing; the first action raises
+      val idx = DocumentIndex.load(spark, dir, cfg64).upsertDocuments(docs.toDF("uri", "text"))
+      val onSave = intercept[Exception](idx.save(dir))
+      assert(named(onSave), onSave)
+      val onRead = intercept[Exception](idx.chunks.items.collect())
+      assert(named(onRead), onRead)
+      assert(named(intercept[Exception](idx.queryDocuments("fine").collect())))
+      assert(savedRows(dir) == before)
+      assertNoTempDirs(dir)
+    }
+    // a null uri never becomes a catalog row with a null document_id
+    val nullUri = DocumentIndex.create(spark, cfg64)
+      .upsertDocuments(Seq[(String, String)]((null, "text")).toDF("uri", "text"))
+    assert(namesNull(intercept[Exception](nullUri.catalog.collect()), "uri"))
+  }
+}
+
+/** A HashingEmbedder that throws on any chunk containing `marker`, so a
+  * save whose batch carries the marker fails in the chunk write only.
+  */
+final class MarkerFailingEmbedder(marker: String) extends Embedder {
+  private val inner = new HashingEmbedder(64)
+  def dim: Int = inner.dim
+  def embed(tokens: Seq[String]): Array[Float] = {
+    if (tokens.mkString.contains(marker))
+      throw new IllegalStateException(s"embedder refused $marker")
+    inner.embed(tokens)
   }
 }
