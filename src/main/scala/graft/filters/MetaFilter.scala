@@ -1,6 +1,6 @@
 package graft.filters
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Mongo-style metadata filters compiled to Catalyst predicates.
@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * Null semantics match the reference: a missing/null field never
   * matches any comparison (SQL three-valued logic drops null rows at
-  * the Filter, same outcome as the reference's `return False`).
+  * the Filter, same outcome as the reference's `return False`). A
+  * field the frame has no column for compiles to `false` at its leaf,
+  * so a filter on it matches nothing instead of failing analysis.
   *
   * Deliberate divergence: the reference's `$in`/`$nin` guard on
   * `isinstance(value, bool)` (reference: item_selector.py:119-124),
@@ -25,22 +27,37 @@ import org.apache.spark.sql.functions._
   * with the intended membership semantics for any comparable value.
   */
 sealed trait MetaFilter {
-  def toColumn: Column = MetaFilter.compile(this)
+
+  /** This filter as a predicate over `df`'s columns. A leaf whose field
+    * does not resolve against `df` (the session's resolver, so its case
+    * sensitivity) is `false`, as a missing field is in [[MetaFilter.matches]].
+    */
+  def toColumn(df: DataFrame): Column = {
+    val plan = df.queryExecution.analyzed
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    MetaFilter.compile(this, k => plan.resolveQuoted(k, resolver).isDefined)
+  }
 }
 
 object MetaFilter {
-  case class Eq(field: String, value: Any) extends MetaFilter
-  case class Ne(field: String, value: Any) extends MetaFilter
-  case class Gt(field: String, value: Any) extends MetaFilter
-  case class Gte(field: String, value: Any) extends MetaFilter
-  case class Lt(field: String, value: Any) extends MetaFilter
-  case class Lte(field: String, value: Any) extends MetaFilter
-  case class In(field: String, values: Seq[Any]) extends MetaFilter
-  case class Nin(field: String, values: Seq[Any]) extends MetaFilter
+  /** A comparison on one field. */
+  sealed trait Leaf extends MetaFilter { def field: String }
+  case class Eq(field: String, value: Any) extends Leaf
+  case class Ne(field: String, value: Any) extends Leaf
+  case class Gt(field: String, value: Any) extends Leaf
+  case class Gte(field: String, value: Any) extends Leaf
+  case class Lt(field: String, value: Any) extends Leaf
+  case class Lte(field: String, value: Any) extends Leaf
+  case class In(field: String, values: Seq[Any]) extends Leaf
+  case class Nin(field: String, values: Seq[Any]) extends Leaf
   case class And(filters: Seq[MetaFilter]) extends MetaFilter
   case class Or(filters: Seq[MetaFilter]) extends MetaFilter
 
-  def compile(f: MetaFilter): Column = f match {
+  /** `f` as a `Column`; a leaf on a field for which `present` is false
+    * compiles to `lit(false)`.
+    */
+  def compile(f: MetaFilter, present: String => Boolean): Column = f match {
+    case l: Leaf if !present(l.field) => lit(false)
     case Eq(k, v)   => col(k) === lit(v)
     case Ne(k, v)   => col(k) =!= lit(v)
     case Gt(k, v)   => col(k) > lit(v)
@@ -54,8 +71,8 @@ object MetaFilter {
     // other leaf keeps via three-valued logic (MetaFilterFuzzSpec
     // caught exactly this against the reference twin)
     case Nin(k, vs) => col(k).isNotNull && !col(k).isin(vs: _*)
-    case And(fs)    => fs.map(compile).reduce(_ && _)
-    case Or(fs)     => fs.map(compile).reduce(_ || _)
+    case And(fs)    => fs.map(compile(_, present)).reduce(_ && _)
+    case Or(fs)     => fs.map(compile(_, present)).reduce(_ || _)
   }
 
   /** Row-level evaluator for the driver-side serving tier

@@ -197,7 +197,7 @@ final class DocumentIndex private (
 
   /** The top `maxChunks` chunk rows of a query, filter applied, as
     * (document_id, score, cols...) in (score desc, chunk_id asc) order:
-    * ONE job over the chunk index's prepared scan, no per-query plan
+    * ONE job over the chunk index's prepared rows, no per-query plan
     * (see VectorIndex.topItems).
     */
   private def topChunks(queryText: String, maxChunks: Int, filter: Option[MetaFilter],
@@ -233,9 +233,11 @@ final class DocumentIndex private (
     * local_document_index.py:221-254 query_documents): top `maxChunks`
     * chunks by cosine → group by document → mean chunk score → top
     * `maxDocuments`. Runs its one Spark job WHEN CALLED — the chunk
-    * top-k over the chunk index's scan, which is planned once per
-    * index instance, so a query pays no analysis, optimisation,
-    * planning or codegen of its own — then groups and ranks the
+    * top-k over the chunk index's rows, which are planned and decoded
+    * once per index instance and held in executor memory (recomputed
+    * per partition when evicted), so a query neither re-reads the
+    * saved chunks nor pays analysis, optimisation, planning or codegen
+    * of its own — then groups and ranks the
     * ≤ `maxChunks` rows on the driver; no catalog scan or join,
     * because every chunk row already carries its document's uri and
     * metadata. The metadata filter is evaluated per chunk row inside
@@ -265,8 +267,9 @@ final class DocumentIndex private (
   /** Render token-budgeted sections for the top documents of a query
     * (reference: local_document_result.py:26-183 render_sections, as
     * invoked by vectra-cli.py's `query --format sections`). The chunk
-    * top-k runs once, when called — one job over the prepared chunk
-    * scan, no per-query plan — and picks the top documents exactly
+    * top-k runs once, when called — one job over the chunk rows held in
+    * executor memory since this instance's first top-k, no per-query
+    * plan — and picks the top documents exactly
     * as [[queryDocuments]] does; the returned frame is a lazy `flatMap`
     * over those documents' catalog rows, with their ≤ `maxChunks`
     * scored chunks in the closure — document text never reaches the

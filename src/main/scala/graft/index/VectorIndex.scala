@@ -15,6 +15,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.filters.MetaFilter
 import graft.functions.VectorFunctions._
@@ -28,7 +29,9 @@ import graft.functions.VectorFunctions._
   * `(<id>, <vector>, norm, ...metadata columns)` backed by parquet:
   * columnar pruning replaces the reference's `metadata_config.indexed`
   * side-file split (only the queried metadata columns are ever read),
-  * and partition-parallel scan replaces the in-memory list. All
+  * and partition-parallel scan replaces the in-memory list; the eager
+  * top-k ([[topItems]]) keeps an instance's decoded rows in executor
+  * memory, as the reference keeps its loaded items. All
   * mutation APIs are batch-functional (return a new index), which is
   * the Spark-idiomatic equivalent of begin_update/end_update.
   */
@@ -52,7 +55,7 @@ final class VectorIndex private (
   def queryItems(query: Seq[Double], k: Int,
       filter: Option[MetaFilter] = None): DataFrame = {
     val qv = array(query.map(lit): _*)
-    val filtered = filter.map(f => items.filter(f.toColumn)).getOrElse(items)
+    val filtered = filter.map(f => items.filter(f.toColumn(items))).getOrElse(items)
     filtered
       .withColumn("score", cosinePreNorm(col(vecCol), col(NORM), qv, normD(qv)))
       .orderBy(desc("score"), col(idCol))
@@ -61,22 +64,41 @@ final class VectorIndex private (
 
   /** The rows of `queryItems(query, k, filter).collect()` — same
     * columns, same order, bit-identical scores — computed eagerly
-    * with no per-query plan. The index's scan is planned once per
-    * index instance (its `items.queryExecution.toRdd`); each call runs
-    * ONE job over it, in which every partition keeps its k best rows
-    * in a bounded heap under Spark's own ordering (score desc nulls
-    * last, id asc) and the driver merges the heaps. Score and filter
-    * are the expressions `queryItems` plans, evaluated interpreted, so
-    * no class is compiled per query. The filter is evaluated per row
-    * rather than pushed into the parquet reader, so a filtered call
-    * reads every row group. A negative `k` or an empty query is an
-    * `IllegalArgumentException`.
+    * with no per-query plan. The index's scan is planned and decoded
+    * once per index instance: the first call's job copies the rows of
+    * `items.queryExecution.toRdd` into executor memory
+    * (`MEMORY_ONLY`), and every later call scores those rows instead of
+    * reading the source again; a partition that does not fit, or was
+    * evicted, is recomputed from the source when a call needs it, and
+    * Spark's ContextCleaner frees the rows once the instance is
+    * unreachable. Each call runs ONE job, in which every partition
+    * keeps its k best rows in a bounded heap under Spark's own ordering
+    * (score desc nulls last, id asc) and the driver merges the heaps.
+    * Score and filter are the expressions `queryItems` plans, evaluated
+    * interpreted, so no class is compiled per query; the filter is
+    * evaluated per row, not pushed into a reader. A negative `k` or an
+    * empty query is an `IllegalArgumentException`.
     */
   def topItems(query: Seq[Double], k: Int,
       filter: Option[MetaFilter] = None): Array[Row] =
     prepared.top(query, k, filter)
 
-  private lazy val prepared = new VectorIndex.PreparedScan(items, idCol, vecCol)
+  @volatile private var scan: VectorIndex.PreparedScan = _
+
+  private def prepared: VectorIndex.PreparedScan = {
+    if (scan == null) synchronized {
+      if (scan == null) scan = new VectorIndex.PreparedScan(items, idCol, vecCol)
+    }
+    scan
+  }
+
+  /** Drop the rows [[topItems]] keeps in executor memory, if a call made
+    * them; later calls on this instance read the source every time.
+    */
+  private[graft] def releaseTopRows(): Unit = {
+    val s = scan
+    if (s != null) s.release()
+  }
 
   /** Many query vectors in one plan: broadcast the query set, score
     * once, bounded-heap top-k per query (Ann.bruteForceTopK) — the
@@ -88,7 +110,7 @@ final class VectorIndex private (
 
   /** reference: local_index.py:121-124 list_items_by_metadata. */
   def listItemsByMetadata(filter: MetaFilter): DataFrame =
-    items.filter(filter.toColumn)
+    items.filter(filter.toColumn(items))
 
   /** reference: local_index.py:100-103 get_item. */
   def getItem(id: Any): DataFrame = items.filter(col(idCol) === lit(id))
@@ -286,13 +308,17 @@ object VectorIndex {
     spark.read.schema(schema).parquet(dir)
   }
 
-  /** An index's scan planned once, with the score expression of
-    * [[VectorIndex.queryItems]] resolved against it; the query vector
-    * is the expression's one free input, bound per call.
+  /** An index's scan planned once, its rows copied out of the reader
+    * and persisted in executor memory by the first job that reads them,
+    * with the score expression of [[VectorIndex.queryItems]] resolved
+    * against it; the query vector is the expression's one free input,
+    * bound per call.
     */
   private final class PreparedScan(items: DataFrame, idCol: String, vecCol: String) {
     private val spark = items.sparkSession
-    private val rows = items.queryExecution.toRdd
+    // the reader reuses its row objects, so each row is copied before it is kept
+    private val rows = items.queryExecution.toRdd.map(_.copy())
+      .setName("graft top-k rows").persist(StorageLevel.MEMORY_ONLY)
     private val input: Seq[Attribute] = items.queryExecution.executedPlan.output
     private val query =
       AttributeReference("query", ArrayType(DoubleType, containsNull = false), nullable = false)()
@@ -329,7 +355,7 @@ object VectorIndex {
     def top(q: Seq[Double], k: Int, filter: Option[MetaFilter]): Array[Row] = {
       require(k >= 0, s"topItems: k must be >= 0, got $k")
       require(q.nonEmpty, "topItems: empty query vector")
-      val pred = filter.map(f => resolve(f.toColumn))
+      val pred = filter.map(f => resolve(f.toColumn(items)))
       // the query as a literal, and its norm folded once as the optimizer folds it
       val qLit = Literal(new GenericArrayData(q.toArray), query.dataType)
       val scored = score.transform {
@@ -346,6 +372,8 @@ object VectorIndex {
       val toRow = CatalystTypeConverters.createToScalaConverter(schema)
       kept.flatten.sorted(ord).take(k).map(r => toRow(r).asInstanceOf[Row])
     }
+
+    def release(): Unit = rows.unpersist(blocking = false): Unit
   }
 
   /** The k best rows of one partition under `ord`, projected by `out`

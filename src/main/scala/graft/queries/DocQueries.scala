@@ -90,7 +90,7 @@ object DocQueries {
       val filter = graft.filters.MetaFilter.parse(
         """{"$and": [{"$or": [{"lang": "en"}, {"lang": {"$in": ["de", "fr"]}}]},
           |          {"source": {"$ne": "src3"}}]}""".stripMargin)
-      chunks.filter(filter.toColumn)
+      chunks.filter(filter.toColumn(chunks))
         .orderBy(desc("score_raw"), col("doc_id"), col("i"))
         .limit(50)
         .groupBy(col("doc_id"), col("lang"), col("source"))

@@ -86,8 +86,8 @@ object VectorQueries {
     // reference: local_index.py:126-151 query_items with Mongo filter
     "v_topk_filtered" -> ((s, dir) => {
       val f = MetaFilter.parse("""{"label":{"$in":[2,4,6]}}""")
-      scored(s, dir)
-        .filter(f.toColumn)
+      val all = scored(s, dir)
+      all.filter(f.toColumn(all))
         .orderBy(desc("score_raw"), col("vec_id"))
         .limit(10)
         .select(col("vec_id"), col("label"), r6(col("score_raw")).as("score"))

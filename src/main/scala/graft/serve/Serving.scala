@@ -24,10 +24,13 @@ import graft.index.VectorIndex
   *     warm-up action), coalesced to a serving partition count (small
   *     corpus → 1 partition → 1 task per query, no task-launch fan-out;
   *     at scale leave the natural partitioning so queries parallelize);
+  *     this cache serves listings and point lookups;
   *   - top-k queries run over the pinned copy's scan, planned once
-  *     per session (VectorIndex.topItems): each call is one job with
-  *     no analysis, optimisation, planning or codegen of its own, and
-  *     nothing is kept per distinct query vector;
+  *     per session (VectorIndex.topItems), whose rows the first top-k
+  *     keeps in executor memory as the prepared rows every later top-k
+  *     reads: each call is one job with no analysis, optimisation,
+  *     planning or codegen of its own, and nothing is kept per distinct
+  *     query vector;
   *   - listings and point lookups are analyzed/optimized/codegen'd
   *     ONCE per distinct filter or id: repeated calls re-execute the
   *     SAME DataFrame, and Spark reuses its QueryExecution (with AQE,
@@ -38,9 +41,8 @@ import graft.index.VectorIndex
   * pushed-down filter scan — and the top-k keeps the cold
   * TakeOrderedAndProject's shape, a k-bounded heap per partition
   * merged on the driver, so the same session serves unchanged on a
-  * real cluster, where the cache pins hot partitions executor-side.
-  * A top-k filter is evaluated per row of the pinned copy, not pushed
-  * into a parquet reader.
+  * real cluster, where both copies stay executor-side. A top-k filter
+  * is evaluated per prepared row, not pushed into a parquet reader.
   */
 final class VectorServing(index: VectorIndex, servePartitions: Int = 1) {
 
@@ -77,9 +79,12 @@ final class VectorServing(index: VectorIndex, servePartitions: Int = 1) {
   def getItem(id: Any): Array[Row] =
     plan(s"get|$id")(idx.getItem(id)).collect()
 
-  /** Release the pinned partitions and the plan cache. */
+  /** Release the pinned partitions, the top-k's prepared rows and the
+    * plan cache.
+    */
   def close(): Unit = {
     plans.clear()
+    idx.releaseTopRows()
     items.unpersist(blocking = false): Unit
   }
 }

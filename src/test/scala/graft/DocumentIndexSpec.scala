@@ -131,6 +131,17 @@ class DocumentIndexSpec extends SparkSpecBase {
     assert(hiPri.toSet == Set("b.txt", "c.txt"))
   }
 
+  test("queryDocuments with a filter on a field no document has returns no documents") {
+    import graft.filters.MetaFilter._
+    val idx = mkMetaIndex
+    Seq(Eq("absent", "de") -> Nil, Nin("absent", Seq("x")) -> Nil,
+      Or(Seq(Eq("absent", 1), Eq("lang", "de"))) -> Seq("c.txt")).foreach { case (f, want) =>
+      val uris = idx.queryDocuments("spark shuffles data", maxDocuments = 3, filter = Some(f))
+        .collect().map(_.getAs[String]("uri")).toSeq
+      assert(uris == want, f.toString)
+    }
+  }
+
   test("queryDocuments decorates results with document metadata") {
     val idx = mkMetaIndex
     val rows = idx.queryDocuments("embedding space vectors", maxDocuments = 1).collect()

@@ -131,7 +131,7 @@ class MetaFilterFuzzSpec extends SparkSpecBase {
     var cases = 0
     (1 to 50).foreach { fi =>
       val f = genFilter(r, depth = 3)
-      val sparkIds = df.filter(f.toColumn)
+      val sparkIds = df.filter(f.toColumn(df))
         .select("id").collect().map(_.getLong(0)).toSet
       maps.foreach { case (id, md) =>
         val expected = twin(f, md)

@@ -13,7 +13,7 @@ class MetaFilterSpec extends SparkSpecBase {
 
   private def ids(f: MetaFilter): Seq[Long] = {
     import spark.implicits._
-    df.filter(f.toColumn).select("id").as[Long].collect().sorted.toSeq
+    df.filter(f.toColumn(df)).select("id").as[Long].collect().sorted.toSeq
   }
 
   test("comparison operators") {
@@ -46,7 +46,7 @@ class MetaFilterSpec extends SparkSpecBase {
   }
 
   test("filters compile to pushable predicates (no UDF in the plan)") {
-    val plan = df.filter(MetaFilter.parse("""{"price":{"$gte":20}}""").toColumn)
+    val plan = df.filter(MetaFilter.parse("""{"price":{"$gte":20}}""").toColumn(df))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("UDF"))
   }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.filters.MetaFilter
 import graft.index.VectorIndex
@@ -69,6 +71,23 @@ class ServingSpec extends SparkSpecBase {
       assert(vs.queryItems(a, 5).toSeq == wantA.toSeq)
       assert(vs.queryItems(b, 5).toSeq == wantB.toSeq)
     } finally vs.close()
+  }
+
+  test("close releases the top-k's prepared rows as well as the pinned items") {
+    import spark.implicits._
+    def persisted = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+    val before = persisted
+    val idx = VectorIndex.build((0 until 40).map { i =>
+      (i.toLong, Array(math.cos(i).toFloat, math.sin(i).toFloat)) }.toDF("id", "vec"), "id", "vec")
+    val vs = new VectorServing(idx).warm()
+    val first = vs.queryItems(Seq(1.0, 0.0), 3)
+    assert(vs.queryItems(Seq(1.0, 0.0), 3).toSeq == first.toSeq)
+    val mine = persisted -- before
+    assert(mine.size == 2, "the pinned items and the top-k rows")
+    vs.close()
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      assert((persisted & mine).isEmpty)
+    }
   }
 
   test("warm filtered queryItems and listItemsByMetadata match cold entries") {

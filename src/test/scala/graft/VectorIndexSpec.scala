@@ -1,15 +1,19 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 
 import scala.util.Random
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.filters.MetaFilter
 import graft.index.VectorIndex
+import graft.serve.LocalVectorServing
 
 class VectorIndexSpec extends SparkSpecBase {
 
@@ -150,9 +154,13 @@ class VectorIndexSpec extends SparkSpecBase {
     * rows in the same order, scores equal bit for bit.
     */
   private def assertSameTop(idx: VectorIndex, q: Seq[Double], k: Int,
-      filter: Option[MetaFilter] = None): Unit = {
+      filter: Option[MetaFilter] = None): Unit =
+    assertSameRows(idx, q, k, filter, idx.topItems(q, k, filter))
+
+  /** `got` against `queryItems(q, k, filter).collect()`, as [[assertSameTop]]. */
+  private def assertSameRows(idx: VectorIndex, q: Seq[Double], k: Int,
+      filter: Option[MetaFilter], got: Array[Row]): Unit = {
     val want = idx.queryItems(q, k, filter)
-    val got = idx.topItems(q, k, filter)
     val wantRows = want.collect()
     val clue = s"k=$k filter=$filter"
     assert(got.length == wantRows.length, clue)
@@ -236,5 +244,120 @@ class VectorIndexSpec extends SparkSpecBase {
     // a warm call is one job
     idx.topItems(Seq(1.0, 0.0, 0.0), 2)
     assert(jobsIn(idx.topItems(Seq(0.0, 1.0, 0.0), 2)) == 1)
+  }
+
+  // -- the prepared rows: decoded once per instance, freed with it --
+
+  /** What `f` returns, and the bytes the local file system read while it
+    * ran (executors share this JVM in local mode). A task's
+    * `inputMetrics.bytesRead` would not tell a decode from a cache hit:
+    * Spark adds the size of a cached block it reads there too.
+    */
+  private def fileBytesIn[T](f: => T): (T, Long) = {
+    val stats = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
+    def read = Option(stats.get("file")).map(_.getLong("bytesRead").longValue).getOrElse(0L)
+    val before = read
+    val out = f
+    (out, read - before)
+  }
+
+  /** The ids of the context's persisted RDDs, as a new set: a key set of
+    * `getPersistentRDDs` is a view that holds the RDDs themselves.
+    */
+  private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+
+  test("topItems decodes a saved index once per instance and reads memory after") {
+    val sc = spark.sparkContext
+    val Seq(q1, q2, q3) = seededQueries(3)
+    val tag = Some(MetaFilter.Eq("tag", "a"))
+    Seq("long saved", "string saved").foreach { name =>
+      val idx = edgeIndex(name)
+      val before = persistedIds
+      val (first, read1) = fileBytesIn(idx.topItems(q1, 7))
+      val (second, read2) = fileBytesIn(idx.topItems(q2, 7, tag))
+      val (third, read3) = fileBytesIn(idx.topItems(q3, 300))
+      assert(read1 > 0, name)
+      assert(read2 == 0 && read3 == 0, s"$name read $read2 and $read3 bytes after the first call")
+      assertSameRows(idx, q1, 7, None, first)
+      assertSameRows(idx, q2, 7, tag, second)
+      assertSameRows(idx, q3, 300, None, third)
+      // drop the instance's rows: the next call decodes the source again
+      val mine = persistedIds -- before
+      assert(mine.size == 1, name)
+      mine.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+      val (again, readAgain) = fileBytesIn(idx.topItems(q2, 7, tag))
+      assert(readAgain > 0, name)
+      assertSameRows(idx, q2, 7, tag, again)
+    }
+    val unsaved = edgeIndex("long unsaved")
+    (0 until 3).foreach { i =>
+      assertSameTop(unsaved, q1, 7)
+      assertSameTop(unsaved, Seq(q1, q2, q3)(i), 11, tag)
+    }
+  }
+
+  /** The persisted RDD ids a queried index instance added; the instance
+    * itself is unreachable once this returns.
+    */
+  private def queriedAndDropped(): Set[Int] = {
+    val before = persistedIds
+    val idx = edgeIndex("long saved")
+    idx.topItems(seededQueries(1).head, 5)
+    persistedIds -- before
+  }
+
+  test("an index's prepared rows leave the context once the index is unreachable") {
+    val mine = queriedAndDropped()
+    assert(mine.size == 1)
+    eventually(timeout(60.seconds), interval(200.millis)) {
+      System.gc()
+      assert((persistedIds & mine).isEmpty)
+    }
+  }
+
+  test("concurrent first calls on one instance share one prepared scan") {
+    val idx = edgeIndex("long saved")
+    val q = seededQueries(1).head
+    val before = persistedIds
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val start = new CyclicBarrier(4)
+      val calls = (0 until 4).map { _ =>
+        pool.submit(() => { start.await(30, TimeUnit.SECONDS); idx.topItems(q, 12) })
+      }
+      val results = calls.map(_.get(120, TimeUnit.SECONDS))
+      assert((persistedIds -- before).size == 1)
+      results.foreach(assertSameRows(idx, q, 12, None, _))
+    } finally pool.shutdown()
+  }
+
+  test("a MetaFilter leaf on a field the index lacks matches no row on every path") {
+    import MetaFilter._
+    val absent: Seq[MetaFilter] = Seq(
+      Eq("absent", "a"), Ne("absent", "a"), Gt("absent", 1), Gte("absent", 1),
+      Lt("absent", 1), Lte("absent", 1), In("absent", Seq("a", 2)), In("absent", Nil),
+      Nin("absent", Seq("a")), Nin("absent", Nil))
+    val filters = absent ++ absent.flatMap { f =>
+      Seq(And(Seq(f, Ne("tag", "b"))), Or(Seq(f, Ne("tag", "b"))),
+        Or(Seq(Gte("label", 4), And(Seq(Eq("tag", "a"), f)))))
+    }
+    val q = seededQueries(1).head
+    Seq("long saved", "string saved", "long unsaved").foreach { name =>
+      val idx = edgeIndex(name)
+      val id = idx.idCol
+      val rows = idx.items.collect()
+      val local = LocalVectorServing.load(idx)
+      def get(r: Row): String => Any =
+        k => if (r.schema.fieldNames.contains(k) && !r.isNullAt(r.fieldIndex(k))) r.get(r.fieldIndex(k)) else null
+      def ids(rs: Iterable[Row]): Set[Any] = rs.map(_.getAs[Any](id)).toSet
+      filters.foreach { f =>
+        val clue = s"$name $f"
+        val want = ids(rows.filter(r => MetaFilter.matches(f, get(r))))
+        assert(ids(idx.listItemsByMetadata(f).collect()) == want, clue)
+        assert(ids(idx.topItems(q, 1000, Some(f))) == want, clue)
+        assert(ids(local.queryItems(q, 1000, Some(f)).map(_._1)) == want, clue)
+        assertSameTop(idx, q, 1000, Some(f))
+      }
+    }
   }
 }

@@ -1,0 +1,78 @@
+"""Self-tests of span_breakdown over a synthetic trace; no Spark.
+
+    python3 -m unittest discover -s tools -p 'test_*.py'
+"""
+import contextlib
+import io
+import json
+import os
+import sys
+import tempfile
+import unittest
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+import span_breakdown  # noqa: E402
+
+
+def fake_result():
+    # two op spans, each with an index.query child; the second query ran two
+    # overlapping jobs; one SQL execution starts inside each query span, one
+    # between the ops
+    spans = [[1, 0, "op.query", 0.0, 100.0], [2, 1, "index.query", 10.0, 90.0],
+             [3, 0, "op.query", 200.0, 260.0], [4, 3, "index.query", 205.0, 255.0],
+             [5, 0, "op.idle", 300.0, 310.0]]
+    return {"trace": {
+        "spans": spans,
+        "jobs": [{"id": 0, "span": 2, "start": 20.0, "end": 50.0, "stages": [0]},
+                 {"id": 1, "span": 4, "start": 210.0, "end": 230.0, "stages": [1]},
+                 {"id": 2, "span": 4, "start": 220.0, "end": 240.0, "stages": [2]}],
+        "stages": [{"id": 0, "job": 0, "tasks": 4, "run_ms": 80.0, "delay_ms": 8.0},
+                   {"id": 1, "job": 1, "tasks": 2, "run_ms": 10.0, "delay_ms": 1.0},
+                   {"id": 2, "job": 2, "tasks": 2, "run_ms": 30.0, "delay_ms": 3.0}],
+        "queries": [["collect", 15.0, 1.0, 2.0, 3.0, 40.0],
+                    ["collect", 206.0, 0.5, 0.5, 1.0, 10.0],
+                    ["collect", 150.0, 9.0, 9.0, 9.0, 10.0]],
+        "periods": []}}
+
+
+class BreakdownTest(unittest.TestCase):
+    def test_per_name_figures(self):
+        t = span_breakdown.breakdown(fake_result())
+        self.assertEqual(sorted(t), ["index.query", "op.idle", "op.query"])
+        q = t["index.query"]
+        self.assertEqual(q["n"], 2)
+        self.assertEqual(q["dur_ms"], 65.0)       # median of 80 and 50
+        self.assertEqual(q["jobs"], 1.5)          # mean of 1 and 2
+        self.assertEqual(q["job_ms"], 30.0)       # 30, and the union 210-240
+        self.assertEqual(q["catalyst_ms"], 4.0)   # median of 6 and 2
+        self.assertEqual(q["tasks"], 4.0)
+        self.assertEqual(q["task_ms"], 60.0)      # median of 80 and 40
+        self.assertEqual(q["delay_ms"], 6.0)      # median of 8 and 4
+
+    def test_children_count_in_their_parents(self):
+        t = span_breakdown.breakdown(fake_result())
+        op = t["op.query"]
+        self.assertEqual((op["jobs"], op["tasks"], op["task_ms"]), (1.5, 4.0, 60.0))
+        self.assertEqual(op["catalyst_ms"], 4.0)  # the execution at 150 is in no op
+        idle = t["op.idle"]
+        self.assertEqual((idle["jobs"], idle["job_ms"], idle["catalyst_ms"]), (0, 0.0, 0.0))
+
+    def test_names_filter_and_untraced_result(self):
+        self.assertEqual(list(span_breakdown.breakdown(fake_result(), {"op.idle"})), ["op.idle"])
+        with self.assertRaises(ValueError):
+            span_breakdown.breakdown({"trace": {}})
+
+    def test_command_line_json(self):
+        with tempfile.TemporaryDirectory() as tmp:
+            path = os.path.join(tmp, "result.json")
+            with open(path, "w") as fh:
+                json.dump(fake_result(), fh)
+            out = io.StringIO()
+            with contextlib.redirect_stdout(out):
+                span_breakdown.main([path, "--names", "index.query", "--json"])
+            self.assertEqual(json.loads(out.getvalue())[path]["index.query"]["n"], 2)
+
+
+if __name__ == "__main__":
+    unittest.main()
