@@ -202,32 +202,15 @@ final class DocumentIndex private (
     */
   private def topChunks(queryText: String, maxChunks: Int, filter: Option[MetaFilter],
       cols: Seq[String]): Array[Row] = {
-    val qv = embedder.embed(splitter.tokenizer.encode(queryText.replace('\n', ' ')))
     val names = Seq("document_id", "score") ++ cols
-    chunks.topItems(qv.map(_.toDouble).toIndexedSeq, maxChunks, filter)
+    chunks.topItems(queryVector(queryText), maxChunks, filter)
       .map(r => Row.fromSeq(names.map(n => r.get(r.fieldIndex(n)))))
   }
 
-  /** Per-document mean score and chunk count over the top chunk rows,
-    * best `maxDocuments` first by (score desc, document_id asc), each
-    * with its chunk rows in top-k order. Sums accumulate in row order
-    * from 0.0 — how Spark's `avg` folds the single-partition top-k
-    * output — so scores are bit-identical to the SQL aggregate.
-    */
-  private def rankDocuments(top: Array[Row],
-      maxDocuments: Int): Seq[(String, Double, Long, Seq[Row])] = {
-    // Spark's double ordering: -0.0 == 0.0, NaN largest
-    def cmp(a: Double, b: Double): Int = if (a == b) 0 else java.lang.Double.compare(a, b)
-    top.toSeq.groupBy(_.getString(0)).toSeq
-      .map { case (id, rs) =>
-        (id, rs.foldLeft(0.0)(_ + _.getDouble(1)) / rs.size, rs.size.toLong, rs)
-      }
-      .sortWith { (a, b) =>
-        val c = cmp(b._2, a._2)
-        c < 0 || (c == 0 && a._1 < b._1)
-      }
-      .take(maxDocuments)
-  }
+  /** The vector a query text is scored with against the chunk index. */
+  private[graft] def queryVector(queryText: String): IndexedSeq[Double] =
+    embedder.embed(splitter.tokenizer.encode(queryText.replace('\n', ' ')))
+      .map(_.toDouble).toIndexedSeq
 
   /** Top-documents query (reference:
     * local_document_index.py:221-254 query_documents): top `maxChunks`
@@ -252,8 +235,8 @@ final class DocumentIndex private (
     // the metadata filter applies to CHUNK rows pre-similarity
     // (reference: query_items(embedding, max_chunks, options.filter) —
     // chunk items carry the merged document metadata)
-    val docs = rankDocuments(topChunks(queryText, maxChunks, filter, "uri" +: metaCols),
-      maxDocuments)
+    val docs = DocumentIndex.rankDocuments(
+      topChunks(queryText, maxChunks, filter, "uri" +: metaCols), maxDocuments)
     val schema = chunks.items.schema
     val outSchema = StructType(Seq(schema("document_id"), schema("uri"),
         StructField("score", DoubleType), StructField("n_chunks", LongType, nullable = false))
@@ -281,7 +264,7 @@ final class DocumentIndex private (
     import spark.implicits._
     val top = topChunks(queryText, maxChunks, None, Seq("start_pos", "end_pos"))
     val scored: Map[String, Seq[graft.text.ScoredChunk]] =
-      rankDocuments(top, maxDocuments).map { case (id, _, _, rs) =>
+      DocumentIndex.rankDocuments(top, maxDocuments).map { case (id, _, _, rs) =>
         id -> rs.sortBy(r => (-r.getDouble(1), r.getInt(2)))
           .map(r => graft.text.ScoredChunk(r.getInt(2), r.getInt(3), r.getDouble(1)))
       }.toMap
@@ -340,6 +323,28 @@ object DocumentIndex {
         ext
       else ""
     }
+  }
+
+  /** Per-document mean score and chunk count over the top chunk rows,
+    * best `maxDocuments` first by (score desc, document_id asc), each
+    * with its chunk rows in top-k order. `top` holds (document_id,
+    * score, ...) rows in top-k order. Sums accumulate in row order
+    * from 0.0 — how Spark's `avg` folds the single-partition top-k
+    * output — so scores are bit-identical to the SQL aggregate.
+    */
+  private[graft] def rankDocuments(top: Array[Row],
+      maxDocuments: Int): Seq[(String, Double, Long, Seq[Row])] = {
+    // Spark's double ordering: -0.0 == 0.0, NaN largest
+    def cmp(a: Double, b: Double): Int = if (a == b) 0 else java.lang.Double.compare(a, b)
+    top.toSeq.groupBy(_.getString(0)).toSeq
+      .map { case (id, rs) =>
+        (id, rs.foldLeft(0.0)(_ + _.getDouble(1)) / rs.size, rs.size.toLong, rs)
+      }
+      .sortWith { (a, b) =>
+        val c = cmp(b._2, a._2)
+        c < 0 || (c == 0 && a._1 < b._1)
+      }
+      .take(maxDocuments)
   }
 
   /** The md5 hex of a uri — Spark's `md5(uri)`. */

@@ -124,27 +124,27 @@ object DocQueries {
     // once per JVM per corpus (QueryUtil.persistedArtifact), then the
     // timed work is load + query + render only. PersistedQueriesSpec
     // asserts row-identical output with d_sections.
-    "d_sections_persisted" -> ((s, dir) => {
-      val path = persistedArtifact("docidx", dir) { p =>
-        val docs = t(s, dir, "documents")
-          .select(col("doc_id").cast("string").as("uri"), col("text"))
-        DocumentIndex.create(s, ChunkCfg).upsertDocuments(docs).save(p)
-      }
-      sectionsProjection(DocumentIndex.load(s, path, ChunkCfg))
-    }))
+    "d_sections_persisted" -> ((s, dir) =>
+      sectionsProjection(persistedDocIndex(s, dir))))
 
-  /** Path of the once-per-JVM persisted chunk-score table (built on
-    * first use; shared with d_query_documents_persisted and the warm
-    * serving bench).
+  /** The once-per-JVM saved DocumentIndex of the `documents` table
+    * (built and saved on first use, loaded with no Spark job on every
+    * call): the index d_sections_persisted renders and the warm serving
+    * bench queries.
     */
-  private[graft] def persistedChunksPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    persistedArtifact("qdchunks", dir) { p =>
-      scoredChunkFrame(s, dir).write.parquet(p)
+  private[graft] def persistedDocIndex(s: org.apache.spark.sql.SparkSession,
+      dir: String): DocumentIndex = {
+    val path = persistedArtifact("docidx", dir) { p =>
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id").cast("string").as("uri"), col("text"))
+      DocumentIndex.create(s, ChunkCfg).upsertDocuments(docs).save(p)
     }
+    DocumentIndex.load(s, path, ChunkCfg)
+  }
 
-  /** Session-cached handle over [[persistedChunksPath]] — fixed-cost
-    * discipline for the per-run query path (QueryUtil.persistedTable).
+  /** The once-per-JVM persisted chunk-score table behind a
+    * session-cached handle — fixed-cost discipline for the per-run
+    * query path (QueryUtil.persistedTable).
     */
   private[graft] def persistedChunks(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -245,8 +245,13 @@ object DocQueries {
         col("_d.n_chunks").as("n_chunks"))
   }
 
+  /** The query text of the section entries and the warm serving bench
+    * (tools/bench_baseline.py times the reference on the same text).
+    */
+  private[graft] val QueryText = "spark table join query"
+
   private def sectionsProjection(idx: DocumentIndex) =
-    idx.renderSections("spark table join query",
+    idx.renderSections(QueryText,
         maxTokens = 120, maxSections = 2, maxDocuments = 50)
       .select(col("uri"), col("section_idx").cast("long"),
         col("token_count").cast("long"), round(col("score"), 6).as("score"),
@@ -286,7 +291,7 @@ object DocQueries {
     * ("md5(uri)-i") ascending.
     */
   private lazy val sectionsOracleSql: String = {
-    val qTokens = new graft.text.RegexTokenizer().encode("spark table join query")
+    val qTokens = new graft.text.RegexTokenizer().encode(QueryText)
       .map(_.trim.toLowerCase).filter(_.nonEmpty)
     val q = qTokens.map(graft.embed.HashingEmbedder.feature(_))
       .groupBy(_._1).view.mapValues(_.map(_._2).sum)

@@ -26,20 +26,29 @@ import graft.index.VectorIndex
   * (ServingSpec): scores accumulate left-to-right in double exactly
   * like the codegen'd dot-product kernel, ties break by ascending id,
   * and metadata filters evaluate with MetaFilter.matches (same
-  * outcomes as the compiled Column predicates).
+  * outcomes as the compiled Column predicates), their field names
+  * resolved as the index's session resolves columns
+  * (`spark.sql.caseSensitive` at load time).
   */
 final class LocalVectorServing private (
     schema: StructType,
     rows: Array[Row],           // sorted by id ascending
     vecs: Array[Array[Double]],
     norms: Array[Double],
-    idIdx: Int) {
+    idIdx: Int,
+    resolver: (String, String) => Boolean) {
 
   private val fieldOf: Map[String, Int] =
     schema.fieldNames.zipWithIndex.toMap
 
-  private def getter(r: Row): String => Any =
-    f => fieldOf.get(f).map(i => if (r.isNullAt(i)) null else r.get(i)).orNull
+  // a filter field's column position, -1 when no column resolves
+  private def fieldAt(f: String): Int =
+    fieldOf.getOrElse(f, schema.fieldNames.indexWhere(resolver(_, f)))
+
+  private def getter(r: Row): String => Any = { f =>
+    val i = fieldAt(f)
+    if (i < 0 || r.isNullAt(i)) null else r.get(i)
+  }
 
   /** Number of items in the snapshot. */
   def size: Int = rows.length
@@ -78,16 +87,26 @@ final class LocalVectorServing private (
   def listItemsByMetadata(filter: MetaFilter): Seq[Row] =
     rows.iterator.filter(r => MetaFilter.matches(filter, getter(r))).toSeq
 
-  /** Point lookup by id value. */
+  /** Point lookup by id value: two integral numbers compare exactly,
+    * any other pair of numbers as doubles.
+    */
   def getItem(id: Any): Option[Row] = {
+    def integral(a: Any): Option[Long] = a match {
+      case n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte) =>
+        Some(n.asInstanceOf[Number].longValue())
+      case _ => None
+    }
     def num(a: Any): Option[Double] = a match {
       case n: java.lang.Number => Some(n.doubleValue()); case _ => None
     }
     rows.find { r =>
       val a = if (r.isNullAt(idIdx)) null else r.get(idIdx)
-      (num(a), num(id)) match {
+      (integral(a), integral(id)) match {
         case (Some(x), Some(y)) => x == y
-        case _                  => a == id
+        case _ => (num(a), num(id)) match {
+          case (Some(x), Some(y)) => x == y
+          case _                  => a == id
+        }
       }
     }
   }
@@ -109,8 +128,9 @@ object LocalVectorServing {
     val n = index.items.count()
     require(n <= maxLocalItems,
       s"LocalVectorServing: index has $n items > maxLocalItems=$maxLocalItems " +
-        "— an index this size belongs on the Spark serving path " +
-        "(VectorServing / ann_brute_batch / s_ann_serve), or shard it")
+        "— an index this size belongs on the Spark serving path (VectorServing, " +
+        "DocumentIndex.queryDocuments, ann_brute_batch, s_ann_serve), " +
+        "or snapshot a bounded part of it")
     val rows = index.items.orderBy(col(index.idCol)).collect()
     val schema = index.items.schema
     val vecIdx = schema.fieldIndex(index.vecCol)
@@ -124,6 +144,7 @@ object LocalVectorServing {
       while (i < v.length) { s += v(i) * v(i); i += 1 }
       math.sqrt(s)
     }
-    new LocalVectorServing(schema, rows, vecs, norms, idIdx)
+    new LocalVectorServing(schema, rows, vecs, norms, idIdx,
+      index.items.sparkSession.sessionState.conf.resolver)
   }
 }

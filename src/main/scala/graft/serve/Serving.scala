@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.filters.MetaFilter
 import graft.index.VectorIndex
 
-/** Warm serving sessions: the fair counterpart of the reference's
+/** A warm serving session: the fair counterpart of the reference's
   * query loop.
   *
   * The reference serves queries from a warm in-memory list
@@ -17,7 +17,7 @@ import graft.index.VectorIndex
   * pays plan analysis + optimization + codegen + job scheduling
   * (~0.1–0.3 s) on EVERY call — irrelevant against a 100 TB scan,
   * but 10–30× the reference's whole latency on a 2 000-vector corpus.
-  * These classes remove the removable part of that overhead, the same
+  * This class removes the removable part of that overhead, the same
   * way a production deployment would:
   *
   *   - the index is pinned in memory once (`cache()` + a materializing
@@ -86,46 +86,5 @@ final class VectorServing(index: VectorIndex, servePartitions: Int = 1) {
     plans.clear()
     idx.releaseTopRows()
     items.unpersist(blocking = false): Unit
-  }
-}
-
-/** Warm serving over a scored chunk table (the d_query_documents
-  * shape: top chunks → per-doc mean → top docs). `pin = true` caches
-  * the chunk frame in memory (the reference holds all chunks in RAM);
-  * `pin = false` serves straight off the underlying storage with only
-  * the plan reuse — the two modes bracket a production deployment's
-  * memory budget choices.
-  */
-final class DocServing(chunks: DataFrame, servePartitions: Int = 1,
-    pin: Boolean = true) {
-
-  val scored: DataFrame = {
-    val base =
-      if (servePartitions > 0) chunks.coalesce(servePartitions) else chunks
-    if (pin) base.cache() else base
-  }
-
-  private val plans = new ConcurrentHashMap[String, DataFrame]()
-
-  def warm(): this.type = { scored.count(): Unit; this }
-
-  /** Top-`topChunks` chunks by score → per-doc mean score → top
-    * `topDocs` docs (reference: local_document_index.py:221-254).
-    */
-  def queryDocuments(topChunks: Int = 50, topDocs: Int = 10): Array[Row] =
-    plans.computeIfAbsent(s"qd|$topChunks|$topDocs", { _ =>
-      scored
-        .orderBy(desc("score_raw"), col("doc_id"), col("i"))
-        .limit(topChunks)
-        .groupBy(col("doc_id"))
-        .agg(round(avg(col("score_raw")), 6).as("score"),
-          count(lit(1)).as("n_chunks"))
-        .orderBy(desc("score"), col("doc_id"))
-        .limit(topDocs)
-    }).collect()
-
-  def close(): Unit = {
-    plans.clear()
-    if (pin) scored.unpersist(blocking = false): Unit
   }
 }

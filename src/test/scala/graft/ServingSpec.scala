@@ -6,7 +6,7 @@ import org.scalatest.time.SpanSugar._
 
 import graft.filters.MetaFilter
 import graft.index.VectorIndex
-import graft.serve.{DocServing, VectorServing}
+import graft.serve.{LocalVectorServing, VectorServing}
 
 /** The warm serving path (graft.serve) is a latency optimization, not
   * a semantics change: every serving call must return exactly what the
@@ -120,7 +120,7 @@ class ServingSpec extends SparkSpecBase {
     assume(haveData)
     val idx = VectorIndex.build(
       Tables.load(spark, dir, "embeddings"), "vec_id", "embedding")
-    val lvs = graft.serve.LocalVectorServing.load(idx)
+    val lvs = LocalVectorServing.load(idx)
 
     val top = lvs.queryItems(queryVec, 10)
     val coldTop = SparkEntry.queries("v_topk")(spark, dir).collect()
@@ -147,63 +147,79 @@ class ServingSpec extends SparkSpecBase {
     assert(lvs.getItem(-1L).isEmpty)
   }
 
-  test("LocalDocServing matches the cold d_query_documents_persisted entry") {
-    assume(haveData)
-    val lds = graft.serve.LocalDocServing.load(
-      spark.read.parquet(graft.queries.DocQueries.persistedChunksPath(spark, dir)))
-    val cold = SparkEntry.queries("d_query_documents_persisted")(spark, dir)
-      .collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("score"),
-        r.getAs[Long]("n_chunks"))).toSeq
-    assert(lds.queryDocuments() == cold)
-    // repeated calls are pure local arithmetic over the snapshot
-    assert(lds.queryDocuments() == cold)
-    // a pre-selection metadata filter restricts the chunk pool: the
-    // unfiltered call must differ from an impossible-filter call
-    val none = lds.queryDocuments(
-      filter = Some(MetaFilter.parse("""{"doc_id":{"$lt":-1}}""")))
-    assert(none.isEmpty)
-  }
-
-  test("LocalDocServing refuses a chunk table over maxLocalChunks") {
-    assume(haveData)
-    val chunks = spark.read.parquet(
-      graft.queries.DocQueries.persistedChunksPath(spark, dir))
-    val e = intercept[IllegalArgumentException] {
-      graft.serve.LocalDocServing.load(chunks, maxLocalChunks = 5)
-    }
-    assert(e.getMessage.contains("maxLocalChunks"))
-  }
-
   test("LocalVectorServing refuses an index over maxLocalItems") {
     assume(haveData)
     val idx = VectorIndex.build(
       Tables.load(spark, dir, "embeddings"), "vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
-      graft.serve.LocalVectorServing.load(idx, maxLocalItems = 5)
+      LocalVectorServing.load(idx, maxLocalItems = 5)
     }
     assert(e.getMessage.contains("maxLocalItems"))
   }
 
-  test("DocServing (pinned and unpinned) matches the cold d_query_documents entry") {
-    assume(haveData)
-    val cold = SparkEntry.queries("d_query_documents")(spark, dir).collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("score"),
-        r.getAs[Long]("n_chunks"))).toSeq
-    val mem = new DocServing(
-      graft.queries.DocQueries.scoredChunkFrame(spark, dir)).warm()
-    val disk = new DocServing(
-      spark.read.parquet(graft.queries.DocQueries.persistedChunksPath(spark, dir)),
-      servePartitions = 0, pin = false)
+  test("a filter field name resolves as the session resolves it, on both tiers") {
+    import spark.implicits._
+    val idx = VectorIndex.build(Seq(
+      (1L, Array(1.0f, 0.0f), "a"), (2L, Array(0.0f, 1.0f), "b"), (3L, Array(1.0f, 1.0f), "a"))
+      .toDF("id", "vec", "tag"), "id", "vec")
+    val upper = MetaFilter.Eq("TAG", "a")
+    def tiers(caseSensitive: Boolean): Seq[Seq[Long]] = {
+      val prev = spark.conf.get("spark.sql.caseSensitive")
+      spark.conf.set("spark.sql.caseSensitive", caseSensitive.toString)
+      try {
+        val lvs = LocalVectorServing.load(idx)
+        Seq(
+          idx.listItemsByMetadata(upper).select("id").as[Long].collect().sorted.toSeq,
+          lvs.listItemsByMetadata(upper).map(_.getAs[Long]("id")),
+          idx.topItems(Seq(1.0, 0.0), 3, Some(upper)).map(_.getAs[Long]("id")).toSeq,
+          lvs.queryItems(Seq(1.0, 0.0), 3, Some(upper)).map(_._1.getAs[Long]("id")))
+      } finally spark.conf.set("spark.sql.caseSensitive", prev)
+    }
+    assert(tiers(caseSensitive = false) == Seq(Seq(1L, 3L), Seq(1L, 3L), Seq(1L, 3L), Seq(1L, 3L)))
+    assert(tiers(caseSensitive = true).forall(_.isEmpty))
+  }
+
+  test("getItem compares integral ids exactly, above 2^53 too, on both tiers") {
+    import spark.implicits._
+    val big = 1L << 53
+    val idx = VectorIndex.build(Seq(
+      (5L, Array(1.0f, 0.0f), "five"), (big, Array(0.0f, 1.0f), "big"),
+      (big + 1, Array(1.0f, 1.0f), "big+1")).toDF("id", "vec", "name"), "id", "vec")
+    val lvs = LocalVectorServing.load(idx)
+    for ((id, name) <- Seq[(Any, String)](big -> "big", (big + 1) -> "big+1", 5 -> "five")) {
+      assert(idx.getItem(id).collect().map(_.getAs[String]("name")).toSeq == Seq(name), s"id $id")
+      assert(lvs.getItem(id).map(_.getAs[String]("name")).contains(name), s"id $id")
+    }
+    assert(lvs.getItem(5.0).map(_.getAs[String]("name")).contains("five"))
+    assert(lvs.getItem(big + 2).isEmpty)
+  }
+
+  test("a document query over a snapshot of a saved index's chunks equals queryDocuments") {
+    import spark.implicits._
+    val words = Seq("spark", "table", "join", "query", "vector", "shard", "index", "chunk",
+      "filter", "score", "plan", "stage", "merge", "token", "cosine", "batch")
+    val rnd = new scala.util.Random(11)
+    val langs = Seq("en", "de", "fr")
+    val docs = (0 until 40).map { d =>
+      (s"doc$d.txt", Seq.fill(20 + rnd.nextInt(40))(words(rnd.nextInt(words.size))).mkString(" "),
+        langs(d % 3))
+    }.toDF("uri", "text", "lang")
+    val cfg = graft.text.SplitterConfig(
+      separators = Nil, keepSeparators = false, chunkSize = 12, chunkOverlap = 0)
+    val dir = java.nio.file.Files.createTempDirectory("servedocs").toString
     try {
-      def asTuples(rows: Array[org.apache.spark.sql.Row]) =
-        rows.map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("score"),
-          r.getAs[Long]("n_chunks"))).toSeq
-      assert(asTuples(mem.queryDocuments()) == cold)
-      assert(asTuples(disk.queryDocuments()) == cold)
-      // plan reuse across repeated calls
-      assert(asTuples(mem.queryDocuments()) == cold)
-    } finally { mem.close(); disk.close() }
+      graft.index.DocumentIndex.create(spark, cfg).upsertDocuments(docs).save(dir)
+      val idx = graft.index.DocumentIndex.load(spark, dir, cfg)
+      val chunks = LocalVectorServing.load(idx.chunks)
+      assert(chunks.size > 50)
+      val text = graft.queries.DocQueries.QueryText
+      for (filter <- Seq(None, Some(MetaFilter.parse("""{"lang": {"$in": ["en", "fr"]}}""")))) {
+        val want = idx.queryDocuments(text, filter = filter).collect().map(r =>
+          (r.getAs[String]("document_id"), r.getAs[Double]("score"), r.getAs[Long]("n_chunks"))).toSeq
+        assert(want.size == 10 && want.exists(_._3 > 1), s"filter $filter")
+        assert(Bench.localDocuments(idx, chunks, text, filter) == want, s"filter $filter")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("RefreshingVectorServing: streamed CDC batches become visible in " +
@@ -256,7 +272,7 @@ class ServingSpec extends SparkSpecBase {
     assert(rvs.serving.getItem(999999L).exists(_.getAs[Int]("label") == 2))
 
     // row-identical to a cold rebuild over the maintained table
-    val cold = graft.serve.LocalVectorServing.load(
+    val cold = LocalVectorServing.load(
       VectorIndex.build(rvs.currentTable, "vec_id", "embedding"))
     def asTuples(xs: Seq[(org.apache.spark.sql.Row, Double)]) =
       xs.map { case (r, s) => (r.getAs[Long]("vec_id"), r.getAs[Int]("label"), s) }
@@ -274,135 +290,5 @@ class ServingSpec extends SparkSpecBase {
     val got = rvs.currentTable.select("vec_id", "label").as[(Long, Int)].collect().toSet
     val want = viaBatch.select("vec_id", "label").as[(Long, Int)].collect().toSet
     assert(got == want)
-  }
-
-  test("ShardedVectorServing: scatter-gather is row-identical to the single-index " +
-      "path, including across concurrent per-shard refresh") {
-    assume(haveData)
-    import spark.implicits._
-    val base = Tables.load(spark, dir, "embeddings")
-    val nShards = 3
-    val sharded = new graft.serve.ShardedVectorServing(
-      base, "vec_id", "embedding", nShards)
-    val single = new graft.serve.RefreshingVectorServing(base, "vec_id", "embedding")
-    val q0 = queryVec
-    def asTuples(xs: Seq[(org.apache.spark.sql.Row, Double)]) =
-      xs.map { case (r, s) => (r.getAs[Long]("vec_id"), s) }
-
-    // placement partitions the corpus (every row on exactly one shard,
-    // murmur3 spreads across all shards at this corpus size)
-    assert(sharded.size == single.serving.size)
-    assert((0 until nShards).forall(i => sharded.shard(i).serving.size > 0))
-
-    // read identity, unfiltered and filtered
-    assert(asTuples(sharded.queryItems(q0, 10)) ==
-      asTuples(single.serving.queryItems(q0, 10)))
-    val mf = MetaFilter.parse("""{"label":{"$in":[1,2,3,4]}}""")
-    assert(asTuples(sharded.queryItems(q0, 10, Some(mf))) ==
-      asTuples(single.serving.queryItems(q0, 10, Some(mf))))
-
-    // one changelog batch routed to per-shard partitions with the SAME
-    // spark-side hash the router uses, then applied CONCURRENTLY (one
-    // thread per shard — the production wiring: changelog partition i →
-    // shard(i).applyChanges) while a reader queries throughout
-    val victim = asTuples(single.serving.queryItems(q0, 5)).map(_._1)(1)
-    val changes = Seq(
-      (7L, "u", q0, 3),
-      (victim, "d", Seq.empty[Double], 0),
-      (999999L, "i", q0.map(-_), 2))
-      .toDF("vec_id", "op", "embedding", "label")
-      .withColumn("embedding", col("embedding").cast("array<float>"))
-    val stamped = changes
-      .withColumn("_shard", pmod(hash(col("vec_id")), lit(nShards)))
-      .localCheckpoint()
-    val readerFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val stopReader = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val reader = new Thread(() => {
-      try {
-        while (!stopReader.get()) {
-          val res = sharded.queryItems(q0, 5)
-          // never torn: always k rows, ordering contract intact
-          assert(res.size == 5)
-          assert(res.map(-_._2) == res.map(-_._2).sorted)
-        }
-      } catch { case t: Throwable => readerFailure.set(t) }
-    })
-    reader.start()
-    val writers = (0 until nShards).map { i =>
-      new Thread(() => {
-        val part = stamped.filter(col("_shard") === i).drop("_shard")
-        if (!part.isEmpty) sharded.shard(i).applyChanges(part)
-      })
-    }
-    writers.foreach(_.start())
-    writers.foreach(_.join())
-    stopReader.set(true)
-    reader.join()
-    assert(readerFailure.get() == null,
-      s"reader failed during concurrent refresh: ${readerFailure.get()}")
-
-    // post-refresh identity with the single-index path given the same batch
-    single.applyChanges(changes)
-    assert(asTuples(sharded.queryItems(q0, 10)) ==
-      asTuples(single.serving.queryItems(q0, 10)))
-    assert(sharded.getItem(999999L).exists(_.getAs[Int]("label") == 2))
-    assert(sharded.getItem(victim).isEmpty)
-    assert(sharded.size == single.serving.size)
-  }
-
-  test("ShardedVectorServing.reshard: n→m drain+swap keeps query identity " +
-      "before, during and after the transition") {
-    assume(haveData)
-    import spark.implicits._
-    val base = Tables.load(spark, dir, "embeddings")
-    val old = new graft.serve.ShardedVectorServing(base, "vec_id", "embedding", 3)
-    val q0 = queryVec
-    def asTuples(xs: Seq[(org.apache.spark.sql.Row, Double)]) =
-      xs.map { case (r, s) => (r.getAs[Long]("vec_id"), s) }
-    val before = asTuples(old.queryItems(q0, 10))
-    assert(before.size == 10)
-
-    // DURING: a reader hammers the OLD router while the new tier
-    // builds — the transition must never tear or change results
-    val readerFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val stopReader = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val reader = new Thread(() => {
-      try while (!stopReader.get())
-        assert(asTuples(old.queryItems(q0, 10)) == before)
-      catch { case t: Throwable => readerFailure.set(t) }
-    })
-    reader.start()
-    val grown = old.reshard(5) // BUILD (old keeps serving)
-    stopReader.set(true)
-    reader.join()
-    assert(readerFailure.get() == null,
-      s"reader failed during reshard: ${readerFailure.get()}")
-
-    // AFTER the swap: identical reads, every row on exactly one of the
-    // 5 shards, all shards populated (murmur3 spread at this size)
-    assert(grown.nShards == 5)
-    assert(asTuples(grown.queryItems(q0, 10)) == before)
-    assert(grown.size == old.size)
-    assert((0 until 5).forall(i => grown.shard(i).serving.size > 0))
-    assert((0 until 5).map(i => grown.shard(i).serving.size).sum == grown.size)
-    val mf = MetaFilter.parse("""{"label":{"$in":[1,2,3,4]}}""")
-    assert(asTuples(grown.queryItems(q0, 10, Some(mf))) ==
-      asTuples(old.queryItems(q0, 10, Some(mf))))
-
-    // the new tier stays maintainable: CDC lands on the RE-hashed
-    // placement and reads see it
-    val changes = Seq((424242L, "i", q0.map(-_), 2))
-      .toDF("vec_id", "op", "embedding", "label")
-      .withColumn("embedding", col("embedding").cast("array<float>"))
-    grown.applyChanges(changes)
-    assert(grown.getItem(424242L).isDefined)
-    assert(grown.size == old.size + 1)
-
-    // shrink path: m < n over the updated tier keeps the updated rows
-    val shrunk = grown.reshard(2)
-    assert(shrunk.nShards == 2 && shrunk.size == grown.size)
-    assert(shrunk.getItem(424242L).isDefined)
-    assert(asTuples(shrunk.queryItems(q0, 10)) ==
-      asTuples(grown.queryItems(q0, 10)))
   }
 }
