@@ -122,13 +122,15 @@ object Cli {
     case _ => usage(); sys.exit(2)
   }
 
-  /** Existence through the Hadoop FileSystem, same as the index
-    * persistence paths — java.io.File would silently misreport on
-    * HDFS/object-store index locations.
+  /** An index exists when a committed manifest does (checked through
+    * the Hadoop FileSystem, as the index persistence paths are — a
+    * java.io.File would misreport on HDFS/object-store locations); a
+    * directory left without one, say by a save that died, is created
+    * anew.
     */
   private def loadOrCreate(spark: SparkSession, index: String,
       cfg: SplitterConfig): DocumentIndex =
-    if (graft.index.VectorIndex.isIndexCreated(spark, s"$index/catalog"))
+    if (graft.index.VectorIndex.isIndexCreated(spark, index))
       DocumentIndex.load(spark, index, cfg)
     else DocumentIndex.create(spark, cfg)
 }

@@ -159,9 +159,14 @@ object Pq {
     // allocated a fresh ArrayData per row per subspace. Float inputs
     // widen inside the kernel (getFloat→double), identical to the
     // cast-then-slice arithmetic this replaces.
+    // a null or other-length vector has no code: a named error, not a
+    // null code (ranked first by an ascending ADC order) or a code of
+    // the dims it has
+    val vec = graft.functions.expr.VectorLengthCheck(ColumnBridge.expression(col(vecCol)),
+      dim, "Pq.Books.encode")
     val codeCols = books.zipWithIndex.map { case (book, s) =>
       ColumnBridge.column(graft.functions.expr.NearestCentroid(
-        ColumnBridge.expression(col(vecCol)),
+        vec,
         book.map(_._1), book.map(_._2), offset = s * subDim)).as(s"code$s")
     }
     graft.Tables.fanOut(corpus).select(col("*") +: codeCols: _*)
@@ -188,7 +193,11 @@ object Pq {
 
     /** Append code columns `code0..code{nSub-1}` — every subspace's
       * NearestCentroid kernel in ONE narrow WholeStageCodegen
-      * projection over the corpus.
+      * projection over the corpus. Every vector must hold exactly `dim`
+      * elements: a null or shorter/longer vector fails the action that
+      * reads the codes with an `IllegalArgumentException` naming
+      * `Pq.Books.encode` (the fit skips such rows; an encode has no code
+      * to give them).
       */
     def encode(corpus: DataFrame, vecCol: String): DataFrame =
       encodeLocal(corpus, vecCol, codebooks, dim)

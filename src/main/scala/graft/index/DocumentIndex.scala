@@ -40,7 +40,9 @@ final class DocumentIndex private (
     val catalog: DataFrame,
     val chunks: VectorIndex,
     val splitter: TextSplitter,
-    val embedder: Embedder) {
+    val embedder: Embedder,
+    origin: Option[IndexStore.Origin] = None,
+    pending: DocumentIndex.Pending = DocumentIndex.Pending(None, None, Nil)) {
 
   /** reference: local_document_index.py:76-78 get_document_id. */
   def getDocumentId(uri: String): DataFrame =
@@ -169,30 +171,33 @@ final class DocumentIndex private (
       .withColumn("document_id", DocumentIndex.documentIdOf(col("uri")))
       .select((Seq(col("document_id"), col("uri"), col("text"))
         ++ metaCols.map(col)): _*)
+    val chunkDf = newChunks.withColumn("norm", normD(col("vector")))
     // retiring previous versions needs only the batch's uris, not the
     // deduplicated rows
-    val keptCatalog = catalog.join(input.select("uri"), Seq("uri"), "left_anti")
-    val keptChunks = chunks.items.join(
-      input.select(md5(col("uri")).as("document_id")), Seq("document_id"), "left_anti")
-    val chunkDf = newChunks.withColumn("norm", normD(col("vector")))
-    // allowMissingColumns: re-ingesting with new metadata keys
-    // null-fills the old rows, same as a reference side file that
-    // lacks the key
-    new DocumentIndex(
-      keptCatalog.unionByName(newCatalog, allowMissingColumns = true),
-      VectorIndex.build(
-        keptChunks.unionByName(chunkDf, allowMissingColumns = true),
-        "chunk_id", "vector"),
-      splitter, embedder)
+    val uris = input.select("uri")
+    val (nextCatalog, nextChunks) =
+      DocumentIndex.replaced(catalog, chunks.items, uris, newCatalog, chunkDf)
+    // a loaded index also keeps the rows added since the load, which are
+    // all an append commit writes
+    val added = (pending.catalog, pending.chunks) match {
+      case (Some(cat), Some(chk)) => DocumentIndex.replaced(cat, chk, uris, newCatalog, chunkDf)
+      case _ => (newCatalog, chunkDf)
+    }
+    new DocumentIndex(nextCatalog, VectorIndex.build(nextChunks, "chunk_id", "vector"),
+      splitter, embedder, origin,
+      if (origin.isEmpty) pending else pending.copy(Some(added._1), Some(added._2)))
   }
 
   /** reference: local_document_index.py:88-116 delete_document. */
   def deleteDocument(uri: String): DocumentIndex = {
-    val docId = md5(lit(uri))
+    val docId = DocumentIndex.docIdFor(uri)
     new DocumentIndex(
       catalog.filter(col("uri") =!= uri),
       VectorIndex.build(chunks.items.filter(col("document_id") =!= docId), "chunk_id", "vector"),
-      splitter, embedder)
+      splitter, embedder, origin,
+      if (origin.isEmpty) pending
+      else DocumentIndex.Pending(pending.catalog.map(_.filter(col("uri") =!= uri)),
+        pending.chunks.map(_.filter(col("document_id") =!= docId)), pending.deleted :+ docId))
   }
 
   /** The top `maxChunks` chunk rows of a query, filter applied, as
@@ -294,21 +299,52 @@ final class DocumentIndex private (
       .withColumn("version", lit(1L))
 
   /** Persist both components as parquet under `path` (`catalog/`,
-    * `chunks/`). The two are written at once, each into a temp dir —
-    * the catalog on a second thread that carries the caller's job group
-    * and local properties — and swapped in only when both writes
-    * succeeded (see VectorIndex.writeSwapAll). So an index re-saved over
-    * the path it was loaded from never clobbers its own lazily-read
-    * inputs, and a save that fails (a throwing embedder, a null uri)
-    * leaves the saved index unchanged: failure-atomic. It is not
-    * crash-atomic: a crash between the two swaps can leave a new
-    * catalog over old chunks.
+    * `chunks/`) and commit them as one version with one manifest rename
+    * (see [[IndexStore.save]]) — the reference's `end_update`, which
+    * writes one `index.json`.
+    *
+    * An index loaded from `path`, whose version is still the committed
+    * one, appends: it writes only the catalog and chunk rows upserted
+    * since the load, as one new directory per component, and the uris
+    * deleted since as tombstones, so an update costs O(batch), not
+    * O(index). Any other index is written whole, which also compacts
+    * the deltas; so is an append whose delta files would outnumber the
+    * base files. The two components are written at once — the catalog
+    * on a second thread that carries the caller's job group and local
+    * properties — into directories no committed version names, so an
+    * index re-saved over the path it was loaded from never touches its
+    * own lazily-read inputs. A save that fails (a throwing embedder, a
+    * null uri) leaves the saved index unchanged, a crash at any step
+    * leaves the previous version or the new one whole, and a save that
+    * another save at `path` overtook raises
+    * [[IndexCommitConflictException]].
     */
   def save(path: String): Unit =
-    VectorIndex.writeSwapAll(Seq(catalog -> s"$path/catalog", chunks.items -> s"$path/chunks"))
+    IndexStore.save(path, Seq("catalog" -> catalog, "chunks" -> chunks.items), origin,
+      IndexStore.Changes(pending.catalog.map("catalog" -> _).toSeq ++
+        pending.chunks.map("chunks" -> _), pending.deleted))
 }
 
 object DocumentIndex {
+
+  /** What changed since a loaded index was loaded: the catalog and chunk
+    * rows upserted (None before the first upsert) and the document ids
+    * deleted.
+    */
+  private[index] final case class Pending(catalog: Option[DataFrame],
+      chunks: Option[DataFrame], deleted: Seq[String])
+
+  /** `catalog` and `chunks` without the documents of `uris`, followed by
+    * the new rows. allowMissingColumns: re-ingesting with new metadata
+    * keys null-fills the old rows, same as a reference side file that
+    * lacks the key.
+    */
+  private def replaced(catalog: DataFrame, chunks: DataFrame, uris: DataFrame,
+      newCatalog: DataFrame, newChunks: DataFrame): (DataFrame, DataFrame) =
+    (catalog.join(uris, Seq("uri"), "left_anti")
+        .unionByName(newCatalog, allowMissingColumns = true),
+      chunks.join(uris.select(md5(col("uri")).as("document_id")), Seq("document_id"), "left_anti")
+        .unionByName(newChunks, allowMissingColumns = true))
 
   /** The uri extension used as the default doc_type (reference:
     * local_document_index.py:148-152 — `uri[pos+1:].lower()`), guarded
@@ -378,16 +414,22 @@ object DocumentIndex {
       new TextSplitter(config), embedder)
   }
 
-  /** Open an index saved by [[DocumentIndex.save]]. Both components'
-    * schemas come from their saved parquet footers, read on the driver,
-    * so loading runs no Spark job; a path without a saved component
-    * raises [[IndexNotFoundException]].
+  /** Open the version of an index committed at `path` by
+    * [[DocumentIndex.save]]. Both components' file lists and schemas come
+    * from its manifest, so loading runs no Spark job. An index that is
+    * only a base loads as one parquet scan per component; after appends,
+    * each component hides the rows of documents a later version replaced
+    * or deleted with one lazy anti-join on (document_id, later version),
+    * which the chunk top-k pays once per instance, when it first decodes
+    * the rows. A path without a committed index raises
+    * [[IndexNotFoundException]].
     */
   def load(spark: SparkSession, path: String,
       config: SplitterConfig = SplitterConfig(keepSeparators = true, chunkSize = 512, chunkOverlap = 0),
-      embedder: Embedder = new HashingEmbedder(64)): DocumentIndex =
-    new DocumentIndex(
-      VectorIndex.readSaved(spark, s"$path/catalog"),
-      VectorIndex.load(spark, s"$path/chunks", "chunk_id", "vector"),
-      new TextSplitter(config), embedder)
+      embedder: Embedder = new HashingEmbedder(64)): DocumentIndex = {
+    val (origin, Seq(catalog, chunks)) =
+      IndexStore.load(spark, path, Seq("catalog", "chunks"), "document_id")
+    new DocumentIndex(catalog, VectorIndex.build(chunks, "chunk_id", "vector"),
+      new TextSplitter(config), embedder, Some(origin))
+  }
 }

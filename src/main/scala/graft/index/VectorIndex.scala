@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute,
   AttributeReference, BindReferences, BoundReference, Descending, EmptyRow, Expression,
@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute,
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.ColumnBridge
@@ -100,6 +99,15 @@ final class VectorIndex private (
     if (s != null) s.release()
   }
 
+  /** Decode the rows [[topItems]] keeps into executor memory now (one job). */
+  private[graft] def warmTopRows(): Unit = prepared.warm()
+
+  /** The items matching `cond`, in id order, evaluated over the rows
+    * [[topItems]] keeps in executor memory: one job, `cond` resolved as
+    * a filter on `items` is and evaluated interpreted, no per-call plan.
+    */
+  private[graft] def selectItems(cond: Column): Array[Row] = prepared.select(cond)
+
   /** Many query vectors in one plan: broadcast the query set, score
     * once, bounded-heap top-k per query (Ann.bruteForceTopK) — the
     * same cost profile serving 1 or 10^6 queries.
@@ -184,129 +192,18 @@ final class VectorIndex private (
       min(size(col(vecCol))).cast("long").as("min_dim"),
       max(size(col(vecCol))).cast("long").as("max_dim"))
 
-  /** Persist as parquet — the scale-out analogue of index.json.
-    * Writes to a temp dir and swaps only after the write succeeded
-    * (see [[VectorIndex.writeSwapAll]]), so saving an index back over
-    * the path it was lazily loaded from cannot delete files mid-scan,
-    * and a failed save leaves the saved index as it was.
+  /** Persist as parquet — the scale-out analogue of index.json: the
+    * items as a new base directory under `path`, committed by one
+    * manifest rename (see [[IndexStore.save]]). Saving over the path the
+    * index was lazily loaded from never touches its input, a failed save
+    * leaves the saved index as it was, and a crash at any point leaves
+    * either the old version or the new one.
     */
-  def save(path: String): Unit = VectorIndex.writeSwapAll(Seq(items -> path))
+  def save(path: String): Unit = IndexStore.save(path, Seq("items" -> items))
 }
 
 object VectorIndex {
   private[index] val NORM = "norm"
-
-  /** Overwrite each part's `dest` with its frame, all or nothing, safely
-    * even when a frame reads from a `dest` itself (lazy plans +
-    * Overwrite would otherwise delete the input mid-scan).
-    *
-    * Every part is written at once into a sibling `<dest>__tmp`: each
-    * part but the last on its own thread, which carries the caller's
-    * local properties (job group, scheduler pool) and active session,
-    * the last on the caller's thread — so the parts' planning, pre-jobs
-    * and commits overlap instead of queueing. Only when every write has
-    * succeeded is each `dest` replaced by its temp dir, through the
-    * Hadoop FileSystem so it also works on HDFS/object stores. If any
-    * write fails, the writes' straggling tasks are awaited, the temp
-    * dirs deleted, no `dest` changes, and the first failure in part
-    * order is rethrown with the others suppressed. Failure-atomic, not
-    * crash-atomic: the swap is a delete and a rename per part, and a
-    * crash between them leaves a part missing or partly swapped.
-    */
-  private[index] def writeSwapAll(parts: Seq[(DataFrame, String)]): Unit = {
-    import org.apache.hadoop.fs.Path
-    require(parts.nonEmpty, "writeSwapAll: no parts")
-    val spark = parts.head._1.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val sc = spark.sparkContext
-    val tag = s"graft-write-${java.util.UUID.randomUUID}"
-    def write(part: (DataFrame, String)): Unit = {
-      sc.addJobTag(tag)
-      try part._1.write.mode(SaveMode.Overwrite).parquet(part._2 + "__tmp")
-      finally sc.removeJobTag(tag)
-    }
-    def failureOf(body: => Any): Option[Throwable] =
-      try { body; None } catch {
-        case e: java.util.concurrent.ExecutionException => Some(e.getCause)
-        case t: Throwable => Some(t)
-      }
-    val extra = parts.init.map { part =>
-      SQLExecution.withThreadLocalCaptured(spark, writers)(write(part))
-    }
-    val lastFailure = failureOf(write(parts.last))
-    val failures = (extra.map(f => failureOf(f.get())) :+ lastFailure).flatten
-    val moves = parts.map { case (_, dest) =>
-      val to = new Path(dest)
-      (new Path(dest + "__tmp"), to, to.getFileSystem(sc.hadoopConfiguration))
-    }
-    if (failures.nonEmpty) {
-      awaitTasks(sc, tag)
-      moves.foreach { case (tmp, _, fs) => fs.delete(tmp, true) }
-      failures.tail.foreach(failures.head.addSuppressed)
-      throw failures.head
-    }
-    moves.foreach { case (tmp, dest, fs) =>
-      fs.delete(dest, true)
-      if (!fs.rename(tmp, dest))
-        throw new java.io.IOException(s"rename $tmp -> $dest failed")
-    }
-  }
-
-  /** Block until no task of a job tagged `tag` runs, as the status
-    * store sees it (at most a minute). The other tasks of a failed job
-    * are killed asynchronously; one still starting up would create its
-    * output file in a temp dir after [[writeSwapAll]] deleted it.
-    */
-  private def awaitTasks(sc: org.apache.spark.SparkContext, tag: String): Unit = {
-    sc.cancelJobsWithTag(tag)
-    val status = sc.statusTracker
-    def busy = status.getJobIdsForTag(tag).iterator.flatMap(status.getJobInfo).exists { j =>
-      j.status == org.apache.spark.JobExecutionStatus.RUNNING ||
-        j.stageIds.iterator.flatMap(status.getStageInfo).exists(_.numActiveTasks > 0)
-    }
-    val deadline = System.nanoTime + 60000000000L
-    while (busy && System.nanoTime < deadline) Thread.sleep(10)
-  }
-
-  /** Threads for [[writeSwapAll]]'s extra parts: one per concurrent
-    * write, idle threads retire after a minute, daemon so they never
-    * hold the JVM open.
-    */
-  private lazy val writers = java.util.concurrent.Executors.newCachedThreadPool { r =>
-    val t = new Thread(r, "graft-index-writer")
-    t.setDaemon(true)
-    t
-  }
-
-  /** Read a directory written by [[writeSwapAll]] without a Spark job: the
-    * schema comes from one part file's footer, read on the driver and
-    * converted as Spark's own inference converts it (which, without
-    * mergeSchema, also reads a single footer — but in a one-task job).
-    * A missing directory, or one without a part file, raises
-    * [[IndexNotFoundException]] naming the path.
-    */
-  private[index] def readSaved(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
-    import org.apache.parquet.hadoop.Footer
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
-      ParquetFooterReader, ParquetToSparkSchemaConverter}
-    val path = new Path(dir)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = path.getFileSystem(conf)
-    if (!fs.exists(path)) throw new IndexNotFoundException(dir, "no such directory")
-    // a part file the scan will read: Spark skips hidden and underscore files
-    val part = fs.listStatus(path).find { f =>
-      val name = f.getPath.getName
-      f.isFile && name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
-    }.getOrElse(throw new IndexNotFoundException(dir, "no .parquet file in it"))
-    val footer = new Footer(part.getPath,
-      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(part, conf), SKIP_ROW_GROUPS))
-    val schema = ParquetFileFormat.readSchemaFromFooter(footer,
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    spark.read.schema(schema).parquet(dir)
-  }
 
   /** An index's scan planned once, its rows copied out of the reader
     * and persisted in executor memory by the first job that reads them,
@@ -373,6 +270,22 @@ object VectorIndex {
       kept.flatten.sorted(ord).take(k).map(r => toRow(r).asInstanceOf[Row])
     }
 
+    def select(c: Column): Array[Row] = {
+      val pred = resolve(c)
+      val kept = spark.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+        val keep = InterpretedPredicate(pred)
+        keep.initialize(TaskContext.getPartitionId())
+        it.filter(keep.eval).toArray
+      })
+      val toRow = CatalystTypeConverters.createToScalaConverter(
+        StructType(DataTypeUtils.fromAttributes(input)))
+      kept.flatten.sorted(byId).map(r => toRow(r).asInstanceOf[Row])
+    }
+
+    private val byId = new InterpretedOrdering(Seq(SortOrder(resolve(col(idCol)), Ascending)))
+
+    def warm(): Unit = rows.count(): Unit
+
     def release(): Unit = rows.unpersist(blocking = false): Unit
   }
 
@@ -408,17 +321,20 @@ object VectorIndex {
   def build(df: DataFrame, idCol: String, vecCol: String): VectorIndex =
     new VectorIndex(withNorm(df, vecCol), idCol, vecCol)
 
-  /** Load a saved index; runs no Spark job (see [[readSaved]]). */
+  /** Load an index saved by [[VectorIndex.save]]; runs no Spark job, the
+    * file list and schema come from its manifest (see
+    * [[IndexStore.load]]). A path without a committed index raises
+    * [[IndexNotFoundException]].
+    */
   def load(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, vecCol: String): VectorIndex =
-    build(readSaved(spark, path), idCol, vecCol)
+    build(IndexStore.load(spark, path, Seq("items"), idCol)._2.head, idCol, vecCol)
 
-  /** reference: local_index.py:114-115 is_index_created. */
-  def isIndexCreated(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  /** reference: local_index.py:114-115 is_index_created: whether `path`
+    * holds a committed manifest (a directory alone is no index).
+    */
+  def isIndexCreated(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    IndexStore.exists(spark, path)
 
   /** reference: local_index.py:61-66 delete_index (folder removal). */
   def deleteIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
@@ -427,9 +343,3 @@ object VectorIndex {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
   }
 }
-
-/** A load path that holds no saved index: the directory is missing or
-  * has no parquet part file.
-  */
-final class IndexNotFoundException(val path: String, reason: String)
-    extends java.io.IOException(s"no saved index at $path: $reason")

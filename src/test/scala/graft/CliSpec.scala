@@ -29,4 +29,18 @@ class CliSpec extends SparkSpecBase {
     assert(idx2.catalog.count() == 1)
     assert(idx2.catalogStats.collect().head.getAs[Long]("documents") == 1L)
   }
+
+  test("add over a directory without a committed manifest creates the index") {
+    val corpus = Files.createTempDirectory("cli_corpus_stray")
+    Files.writeString(corpus.resolve("a.txt"), "spark joins explained here")
+    val index = Files.createTempDirectory("cli_stray").resolve("idx")
+    // a leftover catalog directory and no chunks: what a save that died
+    // before its commit, or an older layout, leaves behind
+    Files.createDirectories(index.resolve("catalog"))
+    Files.write(index.resolve("catalog").resolve("_SUCCESS"), Array.emptyByteArray)
+    assert(!graft.index.VectorIndex.isIndexCreated(spark, index.toString))
+    Cli.run(spark, List("add", index.toString, "--uri", corpus.toString))
+    assert(graft.index.VectorIndex.isIndexCreated(spark, index.toString))
+    assert(graft.index.DocumentIndex.load(spark, index.toString).catalog.count() == 1)
+  }
 }

@@ -188,18 +188,18 @@ class DocumentIndexSpec extends SparkSpecBase {
 
   // -- index storage: batch-sized writes, job-free loads --
 
-  private def parquetFiles(dir: String): Int =
-    Files.list(Paths.get(dir)).iterator().asScala
-      .count(_.getFileName.toString.endsWith(".parquet"))
+  private def parquetFiles(dirs: Seq[String]): Int =
+    dirs.map(d => Files.list(Paths.get(d)).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))).sum
 
   /** A loaded component matches what `spark.read.parquet` infers for
-    * the same directory: the same schema (names, order, types,
-    * nullability) and the same rows.
+    * the directories its committed manifest names: the same schema
+    * (names, order, types, nullability) and the same rows.
     */
-  private def assertLoadsAsInferred(loaded: DataFrame, dir: String): Unit = {
-    val inferred = spark.read.parquet(dir)
-    assert(loaded.schema == inferred.schema, dir)
-    assert(rows(loaded) == rows(inferred), dir)
+  private def assertLoadsAsInferred(loaded: DataFrame, dirs: Seq[String]): Unit = {
+    val inferred = spark.read.parquet(dirs: _*)
+    assert(loaded.schema == inferred.schema, dirs)
+    assert(rows(loaded) == rows(inferred), dirs)
   }
 
   /** Every row of `df` as a string, sorted: equal iff the rows are. */
@@ -214,8 +214,8 @@ class DocumentIndexSpec extends SparkSpecBase {
       .toDF("uri", "text")
     val dir = Files.createTempDirectory("didxw").toString
     DocumentIndex.create(spark).upsertDocuments(batch).save(dir)
-    assert(parquetFiles(s"$dir/catalog") == 1)
-    assert(parquetFiles(s"$dir/chunks") == 1)
+    assert(parquetFiles(IndexFiles.committedDirs(dir, "catalog")) == 1)
+    assert(parquetFiles(IndexFiles.committedDirs(dir, "chunks")) == 1)
     DocumentIndex.load(spark, dir) // warm-up
     assert(jobsIn(DocumentIndex.load(spark, dir)) == 0)
     assert(DocumentIndex.load(spark, dir).catalog.count() == 40)
@@ -235,29 +235,36 @@ class DocumentIndexSpec extends SparkSpecBase {
       val dir = Files.createTempDirectory("didxl").toString
       idx.save(dir)
       val loaded = DocumentIndex.load(spark, dir, cfg)
-      assertLoadsAsInferred(loaded.catalog, s"$dir/catalog")
-      assertLoadsAsInferred(loaded.chunks.items, s"$dir/chunks")
+      assertLoadsAsInferred(loaded.catalog, IndexFiles.committedDirs(dir, "catalog"))
+      assertLoadsAsInferred(loaded.chunks.items, IndexFiles.committedDirs(dir, "chunks"))
     }
     val vdir = Files.createTempDirectory("vidxl").toString
     VectorIndex.build(Seq((1L, Array(1f, 0f), "en"), (2L, Array(0f, 1f), null))
       .toDF("id", "vec", "lang"), "id", "vec").save(vdir)
-    assertLoadsAsInferred(VectorIndex.load(spark, vdir, "id", "vec").items, vdir)
+    assertLoadsAsInferred(VectorIndex.load(spark, vdir, "id", "vec").items,
+      IndexFiles.committedDirs(vdir, "items"))
   }
 
   test("loading a path without a saved index names the path") {
+    import spark.implicits._
     val root = Files.createTempDirectory("didxe").toString
     val missing = s"$root/absent"
     val e1 = intercept[IndexNotFoundException](DocumentIndex.load(spark, missing))
-    assert(e1.path == s"$missing/catalog" && e1.getMessage.contains(e1.path))
+    assert(e1.path == missing && e1.getMessage.contains(e1.path))
     val e2 = intercept[IndexNotFoundException](VectorIndex.load(spark, missing, "id", "vec"))
     assert(e2.path == missing && e2.getMessage.contains(missing))
-    // a directory holding no part file
+    // a directory holding component files but no committed manifest
     val bare = Files.createDirectories(Paths.get(root, "bare", "catalog")).getParent.toString
     Files.write(Paths.get(bare, "catalog", "_SUCCESS"), Array.emptyByteArray)
     val e3 = intercept[IndexNotFoundException](DocumentIndex.load(spark, bare))
-    assert(e3.path == s"$bare/catalog" && e3.getMessage.contains(e3.path))
+    assert(e3.path == bare && e3.getMessage.contains(e3.path))
     val e4 = intercept[IndexNotFoundException](VectorIndex.load(spark, root, "id", "vec"))
     assert(e4.path == root && e4.getMessage.contains(root))
+    // a committed index of another kind: a VectorIndex has no catalog
+    val vdir = s"$root/vectors"
+    VectorIndex.build(Seq((1L, Array(1f, 0f))).toDF("id", "vec"), "id", "vec").save(vdir)
+    val e5 = intercept[IndexNotFoundException](DocumentIndex.load(spark, vdir))
+    assert(e5.path == vdir && e5.getMessage.contains("catalog"))
   }
 
   // -- all-or-nothing save --
@@ -270,10 +277,7 @@ class DocumentIndexSpec extends SparkSpecBase {
     (rows(idx.catalog), rows(idx.chunks.items))
   }
 
-  private def assertNoTempDirs(dir: String): Unit =
-    Seq("catalog__tmp", "chunks__tmp").foreach { t =>
-      assert(!Files.exists(Paths.get(dir, t)), s"$t left behind")
-    }
+  private def assertNoTempDirs(dir: String): Unit = IndexFiles.assertOnlyCommitted(dir)
 
   private def causes(e: Throwable): Seq[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq

@@ -52,6 +52,25 @@ class PqSpec extends SparkSpecBase {
     assert(books(clustered.union(degenerate)) == books(clustered))
   }
 
+  test("encode names a null or other-length vector instead of coding it") {
+    import spark.implicits._
+    val books = Pq.fit(clustered, "vec_id", "embedding",
+      dim = Dim, nSub = NSub, seedMod = 25, iters = 1)
+    // short (a subspace would get a code of the dims it has), long, null
+    Seq[Array[Double]](Array(0.5, 0.5, 0.5), Array.fill(Dim + 1)(0.1), null).foreach { v =>
+      val bad = clustered.union(Seq((500L, v)).toDF("vec_id", "embedding"))
+      val e = intercept[Exception](books.encode(bad, "embedding").collect())
+      val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists {
+        case iae: IllegalArgumentException => iae.getMessage.contains("Pq.Books.encode")
+        case _ => false
+      }
+      assert(named, e)
+    }
+    // full-length vectors still code as before, float ones too
+    val floats = clustered.select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+    assert(books.encode(floats, "embedding").count() == 100)
+  }
+
   test("codes are dense, byte-packable, and cover every row") {
     val books = Pq.fit(clustered, "vec_id", "embedding",
       dim = Dim, nSub = NSub, seedMod = 25, iters = 1)

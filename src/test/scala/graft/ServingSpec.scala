@@ -73,7 +73,7 @@ class ServingSpec extends SparkSpecBase {
     } finally vs.close()
   }
 
-  test("close releases the top-k's prepared rows as well as the pinned items") {
+  test("close releases the rows every call is answered from") {
     import spark.implicits._
     def persisted = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
     val before = persisted
@@ -82,8 +82,11 @@ class ServingSpec extends SparkSpecBase {
     val vs = new VectorServing(idx).warm()
     val first = vs.queryItems(Seq(1.0, 0.0), 3)
     assert(vs.queryItems(Seq(1.0, 0.0), 3).toSeq == first.toSeq)
+    assert(vs.listItemsByMetadata(MetaFilter.Gte("id", 38L)).map(_.getAs[Long]("id")).toSeq ==
+      Seq(38L, 39L))
+    assert(vs.getItem(7L).map(_.getAs[Long]("id")).toSeq == Seq(7L))
     val mine = persisted -- before
-    assert(mine.size == 2, "the pinned items and the top-k rows")
+    assert(mine.size == 1, "one copy: the top-k rows, which listings and lookups read too")
     vs.close()
     eventually(timeout(30.seconds), interval(100.millis)) {
       assert((persisted & mine).isEmpty)

@@ -20,6 +20,20 @@ duration, and per span the Spark work inside it, children included:
 
 Given several files (say, a parent and a change run of the same seed),
 it prints one table per file. --json prints the same numbers as JSON.
+
+    python3 tools/span_breakdown.py RESULT.json [MORE.json ...] --jobs index.upsert
+
+prints instead the job timeline of every span of that name: one line per
+job run inside it (children included), in start order, with
+
+    offset_ms    job start minus span start
+    dur_ms       job wall time
+    stages       stages that ran (skipped ones are not traced)
+    tasks        tasks of those stages
+    run_ms       summed task run time
+    delay_ms     summed scheduler delay
+    shuf_w_b     shuffle bytes written
+    shuf_r_b     shuffle bytes read
 """
 import argparse
 import bisect
@@ -36,19 +50,29 @@ COLUMNS = ("n", "dur_ms", "jobs", "job_ms", "catalyst_ms", "tasks", "task_ms", "
 MEANS = ("jobs", "tasks")
 
 
-def per_span(trace):
-    """{span name: [one dict of COLUMNS' raw values per span]}."""
+JOB_COLUMNS = ("offset_ms", "dur_ms", "stages", "tasks", "run_ms", "delay_ms",
+               "shuf_w_b", "shuf_r_b")
+
+
+def _index(trace):
+    """(spans, {job id: its traced stages}, {span id: jobs run inside it, children included})."""
     spans = [tuple(s) for s in trace.get("spans", [])]
     by_id = {s[0]: s for s in spans}
     stages_by_job = {}
     for st in trace.get("stages", []):
         stages_by_job.setdefault(st["job"], []).append(st)
-    jobs_in = {}  # span id -> jobs run inside it, children included
+    jobs_in = {}
     for j in trace.get("jobs", []):
         sid = j["span"]
         while sid in by_id:
             jobs_in.setdefault(sid, []).append(j)
             sid = by_id[sid][1]
+    return spans, stages_by_job, jobs_in
+
+
+def per_span(trace):
+    """{span name: [one dict of COLUMNS' raw values per span]}."""
+    spans, stages_by_job, jobs_in = _index(trace)
     queries = sorted(trace.get("queries", []), key=lambda q: q[1])
     starts = [q[1] for q in queries]
     catalyst = [0.0]  # prefix sums of each execution's analysis + optimization + planning
@@ -89,6 +113,44 @@ def breakdown(result, names=None):
     return table
 
 
+def job_timeline(result, name):
+    """[{"start", "dur_ms", "jobs": [{column: value} per job]}] for every
+    span called `name` in a harness result, in start order."""
+    trace = result.get("trace") or {}
+    if not trace.get("spans"):
+        raise ValueError("the result holds no spans: run perfbench/run.py with --trace 1")
+    spans, stages_by_job, jobs_in = _index(trace)
+    out = []
+    for sid, _, span_name, t0, t1 in sorted(spans, key=lambda s: s[3]):
+        if span_name != name:
+            continue
+        jobs = []
+        for j in sorted(jobs_in.get(sid, []), key=lambda j: (j["start"], j["id"])):
+            stages = stages_by_job.get(j["id"], [])
+            def total(key):
+                return sum(st.get(key, 0) for st in stages)
+            jobs.append({"job": j["id"], "offset_ms": j["start"] - t0,
+                         "dur_ms": j["end"] - j["start"], "stages": len(stages),
+                         "tasks": total("tasks"), "run_ms": total("run_ms"),
+                         "delay_ms": total("delay_ms"), "shuf_w_b": total("shuffle_write_b"),
+                         "shuf_r_b": total("shuffle_read_b")})
+        out.append({"start": t0, "dur_ms": t1 - t0, "jobs": jobs})
+    return out
+
+
+def render_timeline(name, spans):
+    lines = []
+    for i, sp in enumerate(spans):
+        lines.append("%s #%d: %.1f ms, %d jobs, %d tasks" % (
+            name, i + 1, sp["dur_ms"], len(sp["jobs"]), sum(j["tasks"] for j in sp["jobs"])))
+        lines.append("  %6s " % "job" + " ".join("%10s" % c for c in JOB_COLUMNS))
+        for j in sp["jobs"]:
+            lines.append("  %6d " % j["job"] + " ".join(
+                "%10d" % j[c] if c in ("stages", "tasks", "shuf_w_b", "shuf_r_b")
+                else "%10.1f" % j[c] for c in JOB_COLUMNS))
+    return "\n".join(lines)
+
+
 def render(table):
     width = max([len("span")] + [len(n) for n in table])
     lines = ["%-*s " % (width, "span") + " ".join("%11s" % c for c in COLUMNS)]
@@ -103,13 +165,17 @@ def main(argv=None):
     ap.add_argument("results", nargs="+", help="result.json of a traced perfbench run")
     ap.add_argument("--names", help="comma-separated span names to keep")
     ap.add_argument("--json", action="store_true", help="print JSON instead of tables")
+    ap.add_argument("--jobs", metavar="SPAN", help="print the job timeline of every span SPAN")
     a = ap.parse_args(argv)
     names = set(a.names.split(",")) if a.names else None
     tables = {}
     for path in a.results:
         with open(path) as fh:
-            tables[path] = breakdown(json.load(fh), names)
-    if a.json:
+            result = json.load(fh)
+        tables[path] = job_timeline(result, a.jobs) if a.jobs else breakdown(result, names)
+    if a.jobs and not a.json:
+        print("\n\n".join("%s\n%s" % (path, render_timeline(a.jobs, t)) for path, t in tables.items()))
+    elif a.json:
         print(json.dumps(tables, indent=1, sort_keys=True))
     else:
         print("\n\n".join("%s\n%s" % (path, render(t)) for path, t in tables.items()))

@@ -28,8 +28,10 @@ def fake_result():
                  {"id": 1, "span": 4, "start": 210.0, "end": 230.0, "stages": [1]},
                  {"id": 2, "span": 4, "start": 220.0, "end": 240.0, "stages": [2]}],
         "stages": [{"id": 0, "job": 0, "tasks": 4, "run_ms": 80.0, "delay_ms": 8.0},
-                   {"id": 1, "job": 1, "tasks": 2, "run_ms": 10.0, "delay_ms": 1.0},
-                   {"id": 2, "job": 2, "tasks": 2, "run_ms": 30.0, "delay_ms": 3.0}],
+                   {"id": 1, "job": 1, "tasks": 2, "run_ms": 10.0, "delay_ms": 1.0,
+                    "shuffle_write_b": 512},
+                   {"id": 2, "job": 2, "tasks": 2, "run_ms": 30.0, "delay_ms": 3.0,
+                    "shuffle_read_b": 512}],
         "queries": [["collect", 15.0, 1.0, 2.0, 3.0, 40.0],
                     ["collect", 206.0, 0.5, 0.5, 1.0, 10.0],
                     ["collect", 150.0, 9.0, 9.0, 9.0, 10.0]],
@@ -72,6 +74,31 @@ class BreakdownTest(unittest.TestCase):
             with contextlib.redirect_stdout(out):
                 span_breakdown.main([path, "--names", "index.query", "--json"])
             self.assertEqual(json.loads(out.getvalue())[path]["index.query"]["n"], 2)
+
+    def test_job_timeline(self):
+        spans = span_breakdown.job_timeline(fake_result(), "op.query")
+        self.assertEqual([s["start"] for s in spans], [0.0, 200.0])
+        self.assertEqual([len(s["jobs"]) for s in spans], [1, 2])  # the child's jobs count
+        first, second = spans[1]["jobs"]
+        self.assertEqual((first["job"], first["offset_ms"], first["dur_ms"]), (1, 10.0, 20.0))
+        self.assertEqual((first["stages"], first["tasks"], first["shuf_w_b"]), (1, 2, 512))
+        self.assertEqual((second["offset_ms"], second["run_ms"], second["delay_ms"],
+                          second["shuf_r_b"]), (20.0, 30.0, 3.0, 512))
+        self.assertEqual(span_breakdown.job_timeline(fake_result(), "op.idle"),
+                         [{"start": 300.0, "dur_ms": 10.0, "jobs": []}])
+
+    def test_command_line_jobs(self):
+        with tempfile.TemporaryDirectory() as tmp:
+            path = os.path.join(tmp, "result.json")
+            with open(path, "w") as fh:
+                json.dump(fake_result(), fh)
+            out = io.StringIO()
+            with contextlib.redirect_stdout(out):
+                span_breakdown.main([path, "--jobs", "index.query"])
+            lines = out.getvalue().splitlines()
+            self.assertEqual(lines[1], "index.query #1: 80.0 ms, 1 jobs, 4 tasks")
+            self.assertEqual(lines[-1].split(), ["2", "15.0", "20.0", "1", "2", "30.0", "3.0",
+                                                 "0", "512"])
 
 
 if __name__ == "__main__":
