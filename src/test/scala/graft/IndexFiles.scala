@@ -26,13 +26,6 @@ object IndexFiles {
         Paths.get(root, component, (p \ "dir").extract[String]).toString))
   }
 
-  /** The committed version number at `root`. */
-  def version(root: String): Long = {
-    import org.json4s._
-    implicit val formats: Formats = DefaultFormats
-    (manifest(root) \ "version").extract[Long]
-  }
-
   private def list(p: Path): Seq[Path] =
     if (Files.isDirectory(p)) Files.list(p).iterator().asScala.toSeq else Nil
 
