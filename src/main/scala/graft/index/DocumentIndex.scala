@@ -201,8 +201,9 @@ final class DocumentIndex private (
   }
 
   /** The top `maxChunks` chunk rows of a query, filter applied, as
-    * (document_id, score, cols...) in (score desc, chunk_id asc) order:
-    * ONE job over the chunk index's prepared rows, no per-query plan
+    * (document_id, score, cols...) in (score desc, chunk_id asc) order,
+    * scored over the chunk index's prepared rows with no per-query plan:
+    * no job when a small index's rows are held on the driver, else one
     * (see VectorIndex.topItems).
     */
   private def topChunks(queryText: String, maxChunks: Int, filter: Option[MetaFilter],
@@ -220,16 +221,19 @@ final class DocumentIndex private (
   /** Top-documents query (reference:
     * local_document_index.py:221-254 query_documents): top `maxChunks`
     * chunks by cosine → group by document → mean chunk score → top
-    * `maxDocuments`. Runs its one Spark job WHEN CALLED — the chunk
-    * top-k over the chunk index's rows, which are planned and decoded
-    * once per index instance and held in executor memory (recomputed
-    * per partition when evicted), so a query neither re-reads the
-    * saved chunks nor pays analysis, optimisation, planning or codegen
-    * of its own — then groups and ranks the
+    * `maxDocuments`. Scores WHEN CALLED — the chunk top-k over the chunk
+    * index's rows, which are planned and decoded once per index instance
+    * (the first call's one job) and held on the driver when Spark's
+    * broadcast rule admits the chunk index (its estimated size at most
+    * `spark.sql.autoBroadcastJoinThreshold`), so later calls run no job,
+    * else in executor memory (recomputed per partition when evicted), one
+    * job per call; either way a query neither re-reads the saved chunks
+    * nor pays analysis, optimisation, planning or codegen of its own —
+    * then groups and ranks the
     * ≤ `maxChunks` rows on the driver; no catalog scan or join,
     * because every chunk row already carries its document's uri and
     * metadata. The metadata filter is evaluated per chunk row inside
-    * that job, not pushed into the parquet reader. Returns a local
+    * that scan, not pushed into the parquet reader. Returns a local
     * DataFrame (document_id, uri, score, n_chunks, ...metadata in
     * catalog column order).
     */
@@ -255,9 +259,10 @@ final class DocumentIndex private (
   /** Render token-budgeted sections for the top documents of a query
     * (reference: local_document_result.py:26-183 render_sections, as
     * invoked by vectra-cli.py's `query --format sections`). The chunk
-    * top-k runs once, when called — one job over the chunk rows held in
-    * executor memory since this instance's first top-k, no per-query
-    * plan — and picks the top documents exactly
+    * top-k runs once, when called, over the chunk rows this instance's
+    * first top-k decoded (no job when they are held on the driver, else
+    * one; no per-query plan, see [[queryDocuments]]), and picks the top
+    * documents exactly
     * as [[queryDocuments]] does; the returned frame is a lazy `flatMap`
     * over those documents' catalog rows, with their ≤ `maxChunks`
     * scored chunks in the closure — document text never reaches the
@@ -421,8 +426,8 @@ object DocumentIndex {
     * each component hides the rows of documents a later version replaced
     * or deleted with one lazy anti-join on (document_id, later version),
     * which the chunk top-k pays once per instance, when it first decodes
-    * the rows. A path without a committed index raises
-    * [[IndexNotFoundException]].
+    * the rows to the driver or into executor memory. A path without a
+    * committed index raises [[IndexNotFoundException]].
     */
   def load(spark: SparkSession, path: String,
       config: SplitterConfig = SplitterConfig(keepSeparators = true, chunkSize = 512, chunkOverlap = 0),

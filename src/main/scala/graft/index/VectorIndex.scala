@@ -5,7 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute,
   AttributeReference, BindReferences, BoundReference, Descending, EmptyRow, Expression,
-  InterpretedMutableProjection, InterpretedOrdering, InterpretedPredicate, Literal, SortOrder}
+  GenericInternalRow, InterpretedMutableProjection, InterpretedOrdering, InterpretedPredicate,
+  Literal, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -29,8 +30,9 @@ import graft.functions.VectorFunctions._
   * columnar pruning replaces the reference's `metadata_config.indexed`
   * side-file split (only the queried metadata columns are ever read),
   * and partition-parallel scan replaces the in-memory list; the eager
-  * top-k ([[topItems]]) keeps an instance's decoded rows in executor
-  * memory, as the reference keeps its loaded items. All
+  * top-k ([[topItems]]) keeps an instance's decoded rows, as the
+  * reference keeps its loaded items: on the driver when Spark would
+  * collect the index whole for a broadcast, else in executor memory. All
   * mutation APIs are batch-functional (return a new index), which is
   * the Spark-idiomatic equivalent of begin_update/end_update.
   */
@@ -64,19 +66,26 @@ final class VectorIndex private (
   /** The rows of `queryItems(query, k, filter).collect()` — same
     * columns, same order, bit-identical scores — computed eagerly
     * with no per-query plan. The index's scan is planned and decoded
-    * once per index instance: the first call's job copies the rows of
-    * `items.queryExecution.toRdd` into executor memory
-    * (`MEMORY_ONLY`), and every later call scores those rows instead of
-    * reading the source again; a partition that does not fit, or was
-    * evicted, is recomputed from the source when a call needs it, and
-    * Spark's ContextCleaner frees the rows once the instance is
-    * unreachable. Each call runs ONE job, in which every partition
-    * keeps its k best rows in a bounded heap under Spark's own ordering
-    * (score desc nulls last, id asc) and the driver merges the heaps.
-    * Score and filter are the expressions `queryItems` plans, evaluated
-    * interpreted, so no class is compiled per query; the filter is
-    * evaluated per row, not pushed into a reader. A negative `k` or an
-    * empty query is an `IllegalArgumentException`.
+    * once per index instance, and the first call's job copies the rows
+    * of `items.queryExecution.toRdd` to one of two places, chosen by the
+    * rule Spark uses to broadcast a relation:
+    *   - an index whose estimated size (`optimizedPlan.stats.sizeInBytes`)
+    *     is at most `spark.sql.autoBroadcastJoinThreshold` is collected to
+    *     the driver, and every later call scores those rows there,
+    *     running no job; they are freed with the instance;
+    *   - any other index (larger, not sizable, or the threshold -1) is
+    *     kept in executor memory (`MEMORY_ONLY`), and every later call is
+    *     ONE job over those rows; a partition that does not fit, or was
+    *     evicted, is recomputed from the source when a call needs it, and
+    *     Spark's ContextCleaner frees the rows once the instance is
+    *     unreachable.
+    * Either way every partition keeps its k best rows in a bounded heap
+    * under Spark's own ordering (score desc nulls last, id asc), scoring
+    * a row before it projects or copies it, and the driver merges the
+    * heaps. Score and filter are the expressions `queryItems` plans,
+    * evaluated interpreted, so no class is compiled per query; the
+    * filter is evaluated per row, not pushed into a reader. A negative
+    * `k` or an empty query is an `IllegalArgumentException`.
     */
   def topItems(query: Seq[Double], k: Int,
       filter: Option[MetaFilter] = None): Array[Row] =
@@ -91,20 +100,22 @@ final class VectorIndex private (
     scan
   }
 
-  /** Drop the rows [[topItems]] keeps in executor memory, if a call made
-    * them; later calls on this instance read the source every time.
+  /** Drop the rows [[topItems]] keeps, on the driver or in executor
+    * memory, if a call made them; later calls on this instance read the
+    * source every time, each in one job.
     */
   private[graft] def releaseTopRows(): Unit = {
     val s = scan
     if (s != null) s.release()
   }
 
-  /** Decode the rows [[topItems]] keeps into executor memory now (one job). */
+  /** Decode the rows [[topItems]] keeps now (one job), wherever they live. */
   private[graft] def warmTopRows(): Unit = prepared.warm()
 
   /** The items matching `cond`, in id order, evaluated over the rows
-    * [[topItems]] keeps in executor memory: one job, `cond` resolved as
-    * a filter on `items` is and evaluated interpreted, no per-call plan.
+    * [[topItems]] keeps: on the driver with no job, or in one job over
+    * executor memory; `cond` resolved as a filter on `items` is and
+    * evaluated interpreted, no per-call plan.
     */
   private[graft] def selectItems(cond: Column): Array[Row] = prepared.select(cond)
 
@@ -205,17 +216,30 @@ final class VectorIndex private (
 object VectorIndex {
   private[index] val NORM = "norm"
 
-  /** An index's scan planned once, its rows copied out of the reader
-    * and persisted in executor memory by the first job that reads them,
-    * with the score expression of [[VectorIndex.queryItems]] resolved
-    * against it; the query vector is the expression's one free input,
-    * bound per call.
+  /** An index's scan planned once, with the score expression of
+    * [[VectorIndex.queryItems]] resolved against it (the query vector is
+    * the expression's one free input, bound per call), and its rows
+    * copied out of the reader once, by the first call that reads them.
+    * Where those rows live is chosen once, by the rule Spark uses to let
+    * a relation be collected whole for a broadcast join: a plan whose
+    * estimated size (`optimizedPlan.stats.sizeInBytes`) is at most
+    * `spark.sql.autoBroadcastJoinThreshold` is collected to the driver in
+    * one job and every later call scores it there, running no job; any
+    * other plan (too large, not sizable, or the threshold -1) is
+    * persisted in executor memory (`MEMORY_ONLY`) and every call is one
+    * job over it.
     */
   private final class PreparedScan(items: DataFrame, idCol: String, vecCol: String) {
     private val spark = items.sparkSession
     // the reader reuses its row objects, so each row is copied before it is kept
-    private val rows = items.queryExecution.toRdd.map(_.copy())
-      .setName("graft top-k rows").persist(StorageLevel.MEMORY_ONLY)
+    private val rows = items.queryExecution.toRdd.map(_.copy()).setName("graft top-k rows")
+    private val onDriver = {
+      val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
+      bound >= 0 && items.queryExecution.optimizedPlan.stats.sizeInBytes <= bound
+    }
+    if (!onDriver) rows.persist(StorageLevel.MEMORY_ONLY)
+    // the driver's copy of the rows: null until the first call collects them, None once released
+    private var held: Option[Array[InternalRow]] = _
     private val input: Seq[Attribute] = items.queryExecution.executedPlan.output
     private val query =
       AttributeReference("query", ArrayType(DoubleType, containsNull = false), nullable = false)()
@@ -245,9 +269,30 @@ object VectorIndex {
       }
     private val schema = StructType(DataTypeUtils.fromAttributes(input)
       .patch(scoreAt, Seq(StructField("score", DoubleType, score.nullable)), replaced))
-    private val ordering = new InterpretedOrdering(Seq(
-      SortOrder(BoundReference(scoreAt, DoubleType, nullable = true), Descending),
-      SortOrder(resolve(col(idCol)), Ascending)))
+    private val scoreKey = SortOrder(BoundReference(scoreAt, DoubleType, nullable = true), Descending)
+    private val ordering = new InterpretedOrdering(Seq(scoreKey, SortOrder(resolve(col(idCol)), Ascending)))
+    private val scoreOrdering = new InterpretedOrdering(Seq(scoreKey))
+
+    /** `f` over each partition's rows: over the driver's copy in this
+      * thread, no job, when the rows live there, else as one job.
+      */
+    private def eachPartition(
+        f: Iterator[InternalRow] => Array[InternalRow]): Array[Array[InternalRow]] =
+      driverRows match {
+        case Some(rs) => Array(f(rs.iterator))
+        case None => spark.sparkContext.runJob(rows, f)
+      }
+
+    /** The driver's copy of the rows, collected by the first caller (one
+      * job) while concurrent first callers wait for it; None when the rows
+      * live in executor memory or were released.
+      */
+    private def driverRows: Option[Array[InternalRow]] =
+      if (!onDriver) None
+      else synchronized {
+        if (held == null) held = Some(rows.collect())
+        held
+      }
 
     def top(q: Seq[Double], k: Int, filter: Option[MetaFilter]): Array[Row] = {
       require(k >= 0, s"topItems: k must be >= 0, got $k")
@@ -263,20 +308,19 @@ object VectorIndex {
       val out = input.indices.map(i => BoundReference(i, input(i).dataType, input(i).nullable): Expression)
         .patch(scoreAt, Seq(scored), replaced)
       if (k == 0) return Array.empty
-      val ord = ordering
-      val kept = spark.sparkContext.runJob(rows,
-        (it: Iterator[InternalRow]) => VectorIndex.keepTop(it, pred, out, ord, k))
+      val (ord, byScore, at) = (ordering, scoreOrdering, scoreAt)
+      val kept = eachPartition(VectorIndex.keepTop(_, pred, scored, out, at, ord, byScore, k))
       val toRow = CatalystTypeConverters.createToScalaConverter(schema)
       kept.flatten.sorted(ord).take(k).map(r => toRow(r).asInstanceOf[Row])
     }
 
     def select(c: Column): Array[Row] = {
       val pred = resolve(c)
-      val kept = spark.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+      val kept = eachPartition { it =>
         val keep = InterpretedPredicate(pred)
         keep.initialize(TaskContext.getPartitionId())
         it.filter(keep.eval).toArray
-      })
+      }
       val toRow = CatalystTypeConverters.createToScalaConverter(
         StructType(DataTypeUtils.fromAttributes(input)))
       kept.flatten.sorted(byId).map(r => toRow(r).asInstanceOf[Row])
@@ -284,27 +328,42 @@ object VectorIndex {
 
     private val byId = new InterpretedOrdering(Seq(SortOrder(resolve(col(idCol)), Ascending)))
 
-    def warm(): Unit = rows.count(): Unit
+    def warm(): Unit = if (driverRows.isEmpty) rows.count(): Unit
 
-    def release(): Unit = rows.unpersist(blocking = false): Unit
+    def release(): Unit = {
+      synchronized { held = None }
+      rows.unpersist(blocking = false): Unit
+    }
   }
 
   /** The k best rows of one partition under `ord`, projected by `out`
-    * after `pred`: a bounded heap whose root is the weakest kept row,
-    * so a row that cannot enter is one comparison and no copy.
+    * after `pred`: a bounded heap whose root is the weakest kept row.
+    * Score first: a row that passes `pred` is only scored (`score` is
+    * `out`'s element at `scoreAt`, and `byScore` is `ord`'s first key),
+    * and is projected and copied only when its score beats the root's or
+    * ties it, a tie then going to the full ordering.
     */
-  private def keepTop(rows: Iterator[InternalRow], pred: Option[Expression],
-      out: Seq[Expression], ord: Ordering[InternalRow], k: Int): Array[InternalRow] = {
+  private def keepTop(rows: Iterator[InternalRow], pred: Option[Expression], score: Expression,
+      out: Seq[Expression], scoreAt: Int, ord: Ordering[InternalRow],
+      byScore: Ordering[InternalRow], k: Int): Array[InternalRow] = {
     val part = TaskContext.getPartitionId()
     val keep = pred.map { p => val ip = InterpretedPredicate(p); ip.initialize(part); ip }
     val project = new InterpretedMutableProjection(out)
     project.initialize(part)
+    // a candidate's score, in the slot `byScore` reads
+    val candidate = new GenericInternalRow(out.length)
     val heap = new java.util.PriorityQueue[InternalRow](ord.reverse)
     rows.foreach { r =>
       if (keep.forall(_.eval(r))) {
-        val c = project(r)
-        if (heap.size < k) heap.add(c.copy())
-        else if (ord.compare(c, heap.peek()) < 0) { heap.poll(); heap.add(c.copy()) }
+        if (heap.size < k) heap.add(project(r).copy())
+        else {
+          candidate.update(scoreAt, score.eval(r))
+          val c = byScore.compare(candidate, heap.peek())
+          if (c <= 0) {
+            val row = project(r)
+            if (c < 0 || ord.compare(row, heap.peek()) < 0) { heap.poll(); heap.add(row.copy()) }
+          }
+        }
       }
     }
     heap.toArray(new Array[InternalRow](0))

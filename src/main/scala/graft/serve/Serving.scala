@@ -1,6 +1,6 @@
 package graft.serve
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.filters.MetaFilter
@@ -18,34 +18,32 @@ import graft.index.VectorIndex
   * This class removes the removable part of that overhead, the same
   * way a production deployment would:
   *
-  *   - the index is coalesced to a serving partition count (small
-  *     corpus → 1 partition → 1 task per call, no task-launch fan-out;
-  *     at scale leave the natural partitioning so calls parallelize),
-  *     and its scan is planned once per session and decoded once into
-  *     executor memory — the rows `VectorIndex.topItems` keeps — by
-  *     `warm()` or the first call;
-  *   - every call — top-k, metadata listing, point lookup — is one job
-  *     over those rows with no analysis, optimisation, planning or
+  *   - the index's scan is planned once per session and its rows are
+  *     decoded once, by `warm()` or the first call, into the copy
+  *     `VectorIndex.topItems` keeps: on the driver when Spark's broadcast
+  *     rule (`spark.sql.autoBroadcastJoinThreshold` against the plan's
+  *     size estimate) lets the index be collected whole, else in
+  *     executor memory;
+  *   - every call — top-k, metadata listing, point lookup — is answered
+  *     from that copy with no analysis, optimisation, planning or
   *     codegen of its own: the filter, or the id test, is resolved as the
   *     cold path resolves it and evaluated interpreted per row, and
   *     nothing is kept per distinct query, filter or id.
   *
-  * What remains per call is the irreducible local-mode job floor (a
-  * few ms). The top-k keeps the cold TakeOrderedAndProject's shape, a
-  * k-bounded heap per partition merged on the driver, and a listing is
-  * sorted by id on the driver, so the same session serves unchanged on
-  * a real cluster, where the one copy stays executor-side. A filter is
-  * evaluated per kept row, not pushed into a parquet reader.
+  * What remains per call is, for a small index, a loop over the rows on
+  * the driver (no job), and for a large one the local-mode job floor (a
+  * few ms) over its natural partitioning, so calls parallelize. The
+  * top-k keeps the cold TakeOrderedAndProject's shape, a k-bounded heap
+  * per partition merged on the driver, and a listing is sorted by id on
+  * the driver, so the same session serves unchanged on a real cluster.
+  * A filter is evaluated per kept row, not pushed into a parquet reader.
   */
-final class VectorServing(index: VectorIndex, servePartitions: Int = 1) {
+final class VectorServing(index: VectorIndex) {
 
-  /** The serving copy of the index, at the serving partition count. */
-  val items: DataFrame =
-    if (servePartitions > 0) index.items.coalesce(servePartitions) else index.items
+  // an instance of its own, so close() releases only this session's rows
+  private val idx = VectorIndex.build(index.items, index.idCol, index.vecCol)
 
-  private val idx = VectorIndex.build(items, index.idCol, index.vecCol)
-
-  /** Decode the rows into executor memory so the first call doesn't pay the load. */
+  /** Decode the rows now so the first call doesn't pay the load. */
   def warm(): this.type = { idx.warmTopRows(); this }
 
   /** Top-k cosine on the warm index: the rows of
@@ -59,11 +57,11 @@ final class VectorServing(index: VectorIndex, servePartitions: Int = 1) {
     * the rows of VectorIndex.listItemsByMetadata.
     */
   def listItemsByMetadata(filter: MetaFilter): Array[Row] =
-    idx.selectItems(filter.toColumn(items))
+    idx.selectItems(filter.toColumn(index.items))
 
   /** Point lookup on the warm index: the rows of VectorIndex.getItem. */
   def getItem(id: Any): Array[Row] = idx.selectItems(col(index.idCol) === lit(id))
 
-  /** Release the rows held in executor memory. */
+  /** Release the rows every call is answered from. */
   def close(): Unit = idx.releaseTopRows()
 }

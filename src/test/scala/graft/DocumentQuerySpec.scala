@@ -12,10 +12,13 @@ import graft.filters.MetaFilter
 import graft.index.DocumentIndex
 import graft.text.SplitterConfig
 
-/** Document queries answer from one top-k chunk job: `queryDocuments`
-  * runs exactly one Spark job and `renderSections` at most two, and
-  * both return row for row what the earlier join-based plans return
-  * (kept below as the reference implementation).
+/** Document queries answer from one top-k chunk scan: on a chunk index
+  * small enough for Spark to broadcast, its rows are held on the driver
+  * and a warm `queryDocuments` runs no Spark job and `renderSections` at
+  * most one; otherwise `queryDocuments` runs exactly one job and
+  * `renderSections` at most two. Both return row for row what the
+  * earlier join-based plans return (kept below as the reference
+  * implementation).
   */
 class DocumentQuerySpec extends SparkSpecBase {
 
@@ -44,11 +47,13 @@ class DocumentQuerySpec extends SparkSpecBase {
       .toDF("uri", "text", "lang", "priority")
   }
 
-  private lazy val index: DocumentIndex = {
+  private lazy val indexDir: String = {
     val dir = Files.createTempDirectory("dquery").toString
     DocumentIndex.create(spark, Config).upsertDocuments(corpus).save(dir)
-    DocumentIndex.load(spark, dir, Config)
+    dir
   }
+
+  private lazy val index: DocumentIndex = DocumentIndex.load(spark, indexDir, Config)
 
   /** Distinct seeded query texts of 2-5 vocabulary words. */
   private lazy val queries: Seq[String] = {
@@ -117,17 +122,36 @@ class DocumentQuerySpec extends SparkSpecBase {
 
   // -- specs --
 
-  test("queryDocuments runs one job and renderSections at most two") {
+  /** Jobs run by two warm `queryDocuments` (one filtered) and two warm
+    * `renderSections` on `idx`.
+    */
+  private def warmJobs(idx: DocumentIndex): Seq[Int] = {
     val q = queries.head
     val filter = Some(Filters.head)
     // warm-up: first-call planning and codegen are not the guarded cost
-    index.queryDocuments(q).collect()
-    index.queryDocuments(q, filter = filter).collect()
-    index.renderSections(q).collect()
-    assert(jobsIn(index.queryDocuments(queries(1)).collect()) == 1)
-    assert(jobsIn(index.queryDocuments(queries(2), filter = filter).collect()) == 1)
-    assert(jobsIn(index.renderSections(queries(3)).collect()) <= 2)
-    assert(jobsIn(index.renderSections(queries(4), 120, 2, 50, 50).collect()) <= 2)
+    idx.queryDocuments(q).collect()
+    idx.queryDocuments(q, filter = filter).collect()
+    idx.renderSections(q).collect()
+    Seq(jobsIn(idx.queryDocuments(queries(1)).collect()),
+      jobsIn(idx.queryDocuments(queries(2), filter = filter).collect()),
+      jobsIn(idx.renderSections(queries(3)).collect()),
+      jobsIn(idx.renderSections(queries(4), 120, 2, 50, 50).collect()))
+  }
+
+  test("queryDocuments runs one job and renderSections at most two") {
+    val Seq(q1, q2, s1, s2) = executorSide(warmJobs(DocumentIndex.load(spark, indexDir, Config)))
+    assert(q1 == 1)
+    assert(q2 == 1)
+    assert(s1 <= 2)
+    assert(s2 <= 2)
+  }
+
+  test("on the driver: a warm queryDocuments runs no job and renderSections at most one") {
+    val Seq(q1, q2, s1, s2) = warmJobs(index)
+    assert(q1 == 0)
+    assert(q2 == 0)
+    assert(s1 <= 1)
+    assert(s2 <= 1)
   }
 
   test("a warm queryDocuments or renderSections starts no SQL execution before the caller collects") {

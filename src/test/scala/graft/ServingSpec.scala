@@ -73,24 +73,42 @@ class ServingSpec extends SparkSpecBase {
     } finally vs.close()
   }
 
-  test("close releases the rows every call is answered from") {
+  /** A warm session over a fresh 40-row index. */
+  private def warmSession(): VectorServing = {
     import spark.implicits._
-    def persisted = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
-    val before = persisted
     val idx = VectorIndex.build((0 until 40).map { i =>
       (i.toLong, Array(math.cos(i).toFloat, math.sin(i).toFloat)) }.toDF("id", "vec"), "id", "vec")
-    val vs = new VectorServing(idx).warm()
+    new VectorServing(idx).warm()
+  }
+
+  /** A session's top-k, listing and lookup, checked against known ids. */
+  private def answers(vs: VectorServing): Unit = {
     val first = vs.queryItems(Seq(1.0, 0.0), 3)
     assert(vs.queryItems(Seq(1.0, 0.0), 3).toSeq == first.toSeq)
     assert(vs.listItemsByMetadata(MetaFilter.Gte("id", 38L)).map(_.getAs[Long]("id")).toSeq ==
       Seq(38L, 39L))
     assert(vs.getItem(7L).map(_.getAs[Long]("id")).toSeq == Seq(7L))
+  }
+
+  test("close releases the rows every call is answered from") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+    val before = persisted
+    val vs = executorSide(warmSession())
+    answers(vs)
     val mine = persisted -- before
     assert(mine.size == 1, "one copy: the top-k rows, which listings and lookups read too")
     vs.close()
     eventually(timeout(30.seconds), interval(100.millis)) {
       assert((persisted & mine).isEmpty)
     }
+  }
+
+  test("on the driver: warm calls run no job, and close releases the rows they read") {
+    val vs = warmSession()
+    assert(jobsIn(answers(vs)) == 0)
+    vs.close()
+    // the rows are gone: a call reads the source again, in a job
+    assert(jobsIn(vs.getItem(7L)) == 1)
   }
 
   test("warm filtered queryItems and listItemsByMetadata match cold entries") {

@@ -26,6 +26,18 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
 
+  /** `f` with `spark.sql.autoBroadcastJoinThreshold` off, restored
+    * afterwards: an index instance first queried inside keeps its top-k
+    * rows in executor memory, however small it is (see
+    * `VectorIndex.topItems`).
+    */
+  protected def executorSide[T](f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Spark jobs started while `f` runs, counted after the bus drains. */
   protected def jobsIn(f: => Any): Int = {
     val sc = spark.sparkContext

@@ -182,11 +182,35 @@ class VectorIndexSpec extends SparkSpecBase {
     Seq.fill(n)(Seq.fill(Dim)(rnd.nextGaussian()))
   }
 
+  // -- the two residencies of the prepared rows --
+
+  /** `f` once on each residency: at the default threshold, under which
+    * these small indexes keep their rows on the driver, then executor-side.
+    */
+  private def onBothResidencies(f: String => Unit): Unit = {
+    f("driver")
+    executorSide(f("executor"))
+  }
+
+  /** Where a queried `Dim`-d index keeps its rows, told by what a warm
+    * call runs: no job on the driver, one over executor memory.
+    */
+  private def residency(idx: VectorIndex): String = {
+    val q = Seq.fill(Dim)(1.0)
+    idx.topItems(q, 1)
+    jobsIn(idx.topItems(q, 1)) match {
+      case 0 => "driver"
+      case 1 => "executor"
+      case n => s"$n jobs"
+    }
+  }
+
   test("topItems equals queryItems over ties, zero, null and NaN scores, every k") {
     val tied = edgeRows(1).head._1.map(_.toDouble).toSeq // the shared vector
-    Seq("long saved", "string saved", "long unsaved").foreach { name =>
+    onBothResidencies { where => Seq("long saved", "string saved", "long unsaved").foreach { name =>
       val idx = edgeIndex(name)
       assert(idx.items.rdd.getNumPartitions > 1)
+      assert(residency(idx) == where, name)
       (tied +: seededQueries(4)).foreach { q =>
         Seq(0, 1, 5, 26, 299, 300, 1000).foreach(k => assertSameTop(idx, q, k))
       }
@@ -196,7 +220,7 @@ class VectorIndexSpec extends SparkSpecBase {
       assert(java.lang.Double.isNaN(top.head.getAs[Double]("score")))
       assert(top.last.isNullAt(top.last.fieldIndex("score")))
       assert(top.count(_.getAs[Any]("score") == 0.0) >= 13)
-    }
+    } }
   }
 
   test("topItems equals queryItems under every MetaFilter operator, null metadata included") {
@@ -208,10 +232,11 @@ class VectorIndexSpec extends SparkSpecBase {
       And(Seq(Gte("label", 1), Ne("tag", "c"))), Or(Seq(Eq("tag", "b"), Lt("label", 2))),
       Or(Seq(And(Seq(In("label", Seq(1, 2, 3)), Gt("weight", 0.2))), Eq("tag", "zz"))))
     val qs = seededQueries(2)
-    Seq("long saved", "string saved", "long unsaved").foreach { name =>
+    onBothResidencies { where => Seq("long saved", "string saved", "long unsaved").foreach { name =>
       val idx = edgeIndex(name)
+      assert(residency(idx) == where, name)
       for (f <- filters; (q, k) <- Seq(qs(0) -> 3, qs(1) -> 500)) assertSameTop(idx, q, k, Some(f))
-    }
+    } }
   }
 
   test("topItems on an empty index, an unsaved upsert and a delete") {
@@ -228,22 +253,38 @@ class VectorIndexSpec extends SparkSpecBase {
       .toDF("id", "vec", "tag", "label", "weight")
     val up = idx.upsertItems(updates)
     val del = up.deleteItems(Seq(Tuple1(14L), Tuple1(21L), Tuple1(1L)).toDF("id"))
-    Seq(up, del).foreach { lazyIdx =>
-      (q +: seededQueries(3)).foreach { qq =>
-        assertSameTop(lazyIdx, qq, 10)
-        assertSameTop(lazyIdx, qq, 10, Some(MetaFilter.Eq("tag", "u")))
+    onBothResidencies { where =>
+      // fresh instances, so each residency is chosen anew
+      Seq(up, del).map(i => VectorIndex.build(i.items, "id", "vec")).foreach { lazyIdx =>
+        assert(residency(lazyIdx) == where)
+        (q +: seededQueries(3)).foreach { qq =>
+          assertSameTop(lazyIdx, qq, 10)
+          assertSameTop(lazyIdx, qq, 10, Some(MetaFilter.Eq("tag", "u")))
+        }
       }
     }
   }
 
   test("topItems refuses a negative k and an empty query; k = 0 runs no job") {
+    executorSide {
+      val idx = mkIndex
+      intercept[IllegalArgumentException](idx.topItems(Seq(1.0, 0.0, 0.0), -1))
+      intercept[IllegalArgumentException](idx.topItems(Nil, 3))
+      assert(jobsIn(assert(idx.topItems(Seq(1.0, 0.0, 0.0), 0).isEmpty)) == 0)
+      // a warm call is one job
+      idx.topItems(Seq(1.0, 0.0, 0.0), 2)
+      assert(jobsIn(idx.topItems(Seq(0.0, 1.0, 0.0), 2)) == 1)
+    }
+  }
+
+  test("on the driver: k = 0 runs no job, the first call one, a warm call none") {
     val idx = mkIndex
     intercept[IllegalArgumentException](idx.topItems(Seq(1.0, 0.0, 0.0), -1))
     intercept[IllegalArgumentException](idx.topItems(Nil, 3))
     assert(jobsIn(assert(idx.topItems(Seq(1.0, 0.0, 0.0), 0).isEmpty)) == 0)
-    // a warm call is one job
-    idx.topItems(Seq(1.0, 0.0, 0.0), 2)
-    assert(jobsIn(idx.topItems(Seq(0.0, 1.0, 0.0), 2)) == 1)
+    assert(jobsIn(idx.topItems(Seq(1.0, 0.0, 0.0), 2)) == 1)
+    assert(jobsIn(idx.topItems(Seq(0.0, 1.0, 0.0), 2)) == 0)
+    assert(jobsIn(idx.selectItems(col("tag") === "b")) == 0)
   }
 
   // -- the prepared rows: decoded once per instance, freed with it --
@@ -267,32 +308,59 @@ class VectorIndexSpec extends SparkSpecBase {
   private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
 
   test("topItems decodes a saved index once per instance and reads memory after") {
-    val sc = spark.sparkContext
+    executorSide {
+      val sc = spark.sparkContext
+      val Seq(q1, q2, q3) = seededQueries(3)
+      val tag = Some(MetaFilter.Eq("tag", "a"))
+      Seq("long saved", "string saved").foreach { name =>
+        val idx = edgeIndex(name)
+        val before = persistedIds
+        val (first, read1) = fileBytesIn(idx.topItems(q1, 7))
+        val (second, read2) = fileBytesIn(idx.topItems(q2, 7, tag))
+        val (third, read3) = fileBytesIn(idx.topItems(q3, 300))
+        assert(read1 > 0, name)
+        assert(read2 == 0 && read3 == 0, s"$name read $read2 and $read3 bytes after the first call")
+        assertSameRows(idx, q1, 7, None, first)
+        assertSameRows(idx, q2, 7, tag, second)
+        assertSameRows(idx, q3, 300, None, third)
+        // drop the instance's rows: the next call decodes the source again
+        val mine = persistedIds -- before
+        assert(mine.size == 1, name)
+        mine.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+        val (again, readAgain) = fileBytesIn(idx.topItems(q2, 7, tag))
+        assert(readAgain > 0, name)
+        assertSameRows(idx, q2, 7, tag, again)
+      }
+      val unsaved = edgeIndex("long unsaved")
+      (0 until 3).foreach { i =>
+        assertSameTop(unsaved, q1, 7)
+        assertSameTop(unsaved, Seq(q1, q2, q3)(i), 11, tag)
+      }
+    }
+  }
+
+  test("on the driver: a saved index is collected by one job, then read with none") {
     val Seq(q1, q2, q3) = seededQueries(3)
     val tag = Some(MetaFilter.Eq("tag", "a"))
     Seq("long saved", "string saved").foreach { name =>
       val idx = edgeIndex(name)
       val before = persistedIds
-      val (first, read1) = fileBytesIn(idx.topItems(q1, 7))
-      val (second, read2) = fileBytesIn(idx.topItems(q2, 7, tag))
-      val (third, read3) = fileBytesIn(idx.topItems(q3, 300))
-      assert(read1 > 0, name)
-      assert(read2 == 0 && read3 == 0, s"$name read $read2 and $read3 bytes after the first call")
-      assertSameRows(idx, q1, 7, None, first)
-      assertSameRows(idx, q2, 7, tag, second)
-      assertSameRows(idx, q3, 300, None, third)
-      // drop the instance's rows: the next call decodes the source again
-      val mine = persistedIds -- before
-      assert(mine.size == 1, name)
-      mine.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+      var rows: Seq[(Array[Row], Long)] = Nil
+      def call(q: Seq[Double], k: Int, f: Option[MetaFilter]): Int =
+        jobsIn { rows :+= fileBytesIn(idx.topItems(q, k, f)) }
+      assert(call(q1, 7, None) == 1 && rows(0)._2 > 0, name)
+      assert(call(q2, 7, tag) == 0 && call(q3, 300, None) == 0, name)
+      assert(rows(1)._2 == 0 && rows(2)._2 == 0,
+        s"$name read ${rows(1)._2} and ${rows(2)._2} bytes after the first call")
+      assert(persistedIds -- before == Set.empty, name)
+      assertSameRows(idx, q1, 7, None, rows(0)._1)
+      assertSameRows(idx, q2, 7, tag, rows(1)._1)
+      assertSameRows(idx, q3, 300, None, rows(2)._1)
+      // drop the driver's copy: every later call decodes the source again
+      idx.releaseTopRows()
       val (again, readAgain) = fileBytesIn(idx.topItems(q2, 7, tag))
       assert(readAgain > 0, name)
       assertSameRows(idx, q2, 7, tag, again)
-    }
-    val unsaved = edgeIndex("long unsaved")
-    (0 until 3).foreach { i =>
-      assertSameTop(unsaved, q1, 7)
-      assertSameTop(unsaved, Seq(q1, q2, q3)(i), 11, tag)
     }
   }
 
@@ -307,7 +375,7 @@ class VectorIndexSpec extends SparkSpecBase {
   }
 
   test("an index's prepared rows leave the context once the index is unreachable") {
-    val mine = queriedAndDropped()
+    val mine = executorSide(queriedAndDropped())
     assert(mine.size == 1)
     eventually(timeout(60.seconds), interval(200.millis)) {
       System.gc()
@@ -315,20 +383,52 @@ class VectorIndexSpec extends SparkSpecBase {
     }
   }
 
-  test("concurrent first calls on one instance share one prepared scan") {
+  /** Four threads' first `topItems` on one fresh instance, started at
+    * once: their rows, and the jobs and persisted RDDs they added.
+    */
+  private def concurrentFirstCalls(q: Seq[Double]): (VectorIndex, Seq[Array[Row]], Int, Int) = {
     val idx = edgeIndex("long saved")
-    val q = seededQueries(1).head
     val before = persistedIds
     val pool = Executors.newFixedThreadPool(4)
     try {
       val start = new CyclicBarrier(4)
-      val calls = (0 until 4).map { _ =>
-        pool.submit(() => { start.await(30, TimeUnit.SECONDS); idx.topItems(q, 12) })
+      var results: Seq[Array[Row]] = Nil
+      val jobs = jobsIn {
+        val calls = (0 until 4).map { _ =>
+          pool.submit(() => { start.await(30, TimeUnit.SECONDS); idx.topItems(q, 12) })
+        }
+        results = calls.map(_.get(120, TimeUnit.SECONDS))
       }
-      val results = calls.map(_.get(120, TimeUnit.SECONDS))
-      assert((persistedIds -- before).size == 1)
-      results.foreach(assertSameRows(idx, q, 12, None, _))
+      (idx, results, jobs, (persistedIds -- before).size)
     } finally pool.shutdown()
+  }
+
+  test("concurrent first calls on one instance share one prepared scan") {
+    val q = seededQueries(1).head
+    val (idx, results, _, persisted) = executorSide(concurrentFirstCalls(q))
+    assert(persisted == 1)
+    results.foreach(assertSameRows(idx, q, 12, None, _))
+  }
+
+  test("on the driver: concurrent first calls on one instance run one collect") {
+    val q = seededQueries(1).head
+    val (idx, results, jobs, persisted) = concurrentFirstCalls(q)
+    assert(jobs == 1 && persisted == 0)
+    results.foreach(assertSameRows(idx, q, 12, None, _))
+  }
+
+  test("an index Spark cannot size (an RDD-backed frame) keeps its rows executor-side") {
+    val rows = edgeFrames("long unsaved")
+    val idx = VectorIndex.build(spark.createDataFrame(rows.rdd, rows.schema), "id", "vec")
+    assert(idx.items.queryExecution.optimizedPlan.stats.sizeInBytes >
+      spark.sessionState.conf.autoBroadcastJoinThreshold)
+    val before = persistedIds
+    assert(residency(idx) == "executor")
+    assert((persistedIds -- before).size == 1)
+    seededQueries(2).foreach { q =>
+      assertSameTop(idx, q, 9)
+      assertSameTop(idx, q, 9, Some(MetaFilter.Eq("tag", "b")))
+    }
   }
 
   test("a MetaFilter leaf on a field the index lacks matches no row on every path") {

@@ -16,7 +16,10 @@ every seed both sides run
 
 one after the other, alternating which side runs first (the parent on
 the first seed). The host's CPU steal is read from /proc/stat around
-each run. The tool prints one line per run, then, for every end-to-end
+each run, and each run's sample counts (the `samples.<kind>.n` keys of
+the flat line run.py prints before its result line) are kept with it, so
+a median over few samples can be told from one over many. The tool
+prints one line per run, then, for every end-to-end
 metric in BENCHMARK.json: each side's median and quartiles, the
 change/parent ratio of the medians, how many seed pairs the change won,
 and whether the median gap is larger than the parent's quartile
@@ -143,10 +146,21 @@ def run_once(side_dir, workload, seed, seconds):
     steal, wall = read_steal_s() - steal0, time.time() - t0
     if proc.returncode != 0:
         raise SystemExit("perf_ab: %s failed in %s:\n%s" % (" ".join(cmd), side_dir, proc.stderr))
-    line = json.loads(proc.stdout.strip().splitlines()[-1])
+    r = parse_run(proc.stdout)
+    r.update(steal_s=steal, wall_s=wall)
+    return r
+
+
+def parse_run(stdout):
+    """A run's record from run.py's stdout: the metrics and op counts of its
+    result line (the last line), and the sample count per kind
+    (`samples.<kind>.n`) of the flat line just before it."""
+    lines = stdout.strip().splitlines()
+    line, flat = json.loads(lines[-1]), json.loads(lines[-2])
+    counts = {k[len("samples."):-len(".n")]: v for k, v in flat.items()
+              if k.startswith("samples.") and k.endswith(".n")}
     return {"metrics": {k: m["value"] for k, m in line["metrics"].items()},
-            "failed": line["failed"], "attempted": line["attempted"],
-            "steal_s": steal, "wall_s": wall}
+            "failed": line["failed"], "attempted": line["attempted"], "samples_n": counts}
 
 
 def fmt(x):
@@ -177,9 +191,10 @@ def main(argv=None):
             r = run_once(dirs[s], a.workload, seed, a.seconds)
             r.update(seed=seed, side=s, position=pos + 1)
             runs[s].append(r)
-            print("seed %d %-6s run %d steal_s %.2f failed %d/%d %s" % (
+            print("seed %d %-6s run %d steal_s %.2f failed %d/%d %s samples.n %s" % (
                 seed, s, pos + 1, r["steal_s"], r["failed"], r["attempted"],
-                " ".join("%s %s" % (n, fmt(r["metrics"][n])) for n, _ in metrics)), flush=True)
+                " ".join("%s %s" % (n, fmt(r["metrics"][n])) for n, _ in metrics),
+                " ".join("%s %d" % kv for kv in sorted(r["samples_n"].items()))), flush=True)
     print("metric parent_median (q1-q3) -> change_median (q1-q3) ratio wins gap>parent_iqr")
     for name, better in metrics:
         m = summarize([r["metrics"][name] for r in runs["parent"]],

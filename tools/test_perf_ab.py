@@ -64,6 +64,19 @@ class SummarizeTest(unittest.TestCase):
             perf_ab.summarize([1.0, 2.0], [1.0], "lower")
 
 
+class ParseRunTest(unittest.TestCase):
+    def test_reads_the_result_line_and_the_flat_line_before_it(self):
+        stdout = ("sbt noise {not json\n"
+                  '{"op_p50_ms": 10.8, "samples.aux.n": 9, "samples.aux.p50": 343.2, '
+                  '"samples.ingest.n": 7, "samples.op.n": 196, "seed": 207}\n'
+                  '{"attempted": 205, "correct": true, "failed": 0, '
+                  '"metrics": {"op_p50_ms": {"unit": "ms", "value": 10.8}}}\n')
+        r = perf_ab.parse_run(stdout)
+        self.assertEqual(r["metrics"], {"op_p50_ms": 10.8})
+        self.assertEqual((r["failed"], r["attempted"]), (0, 205))
+        self.assertEqual(r["samples_n"], {"aux": 9, "ingest": 7, "op": 196})
+
+
 class StealTest(unittest.TestCase):
     def test_reads_the_aggregate_cpu_line(self):
         stat = ("cpu  10 0 5 100 1 0 2 37 0 0\n"
