@@ -312,7 +312,8 @@ object Bench {
     * Protocol mirrors the reference measurement exactly (BASELINE.md
     * "Measurement setup": mean of 10 repetitions on a warm in-memory
     * index): 3 untimed warm-ups, then mean of 10. `serve` times the
-    * Spark paths: the vector ops on a pinned VectorServing, and
+    * Spark paths: the vector ops as `topItems`/`selectItems` on a warm
+    * VectorIndex instance, and
     * d_query_documents as `queryDocuments(text).collect()` on the saved
     * DocumentIndex that d_sections_persisted renders — the reference's
     * query_documents on a prebuilt chunk index. `serve_local` times the
@@ -329,8 +330,8 @@ object Bench {
       val emb = graft.Tables.load(spark, sfDir, "embeddings")
       val q = emb.filter(col("vec_id") === 0L).select(col("embedding")).head()
         .getSeq[Number](0).map(_.doubleValue()).toSeq
-      val vs = new graft.serve.VectorServing(
-        graft.index.VectorIndex.build(emb, "vec_id", "embedding")).warm()
+      val idx = graft.index.VectorIndex.build(emb, "vec_id", "embedding")
+      idx.warmTopRows()
       val topkF = graft.filters.MetaFilter.parse("""{"label":{"$in":[2,4,6]}}""")
       val metaF = graft.filters.MetaFilter.parse(
         """{"$or":[{"label":{"$in":[1,3]}},
@@ -344,16 +345,13 @@ object Bench {
         (System.nanoTime() - t0) / 1e9 / reps
       }
       val ops = Seq(
-        "v_topk" -> mean(vs.queryItems(q, 10): Unit),
-        "v_topk_filtered" -> mean(vs.queryItems(q, 10, Some(topkF)): Unit),
-        "v_meta_filter" -> mean(vs.listItemsByMetadata(metaF): Unit),
+        "v_topk" -> mean(idx.topItems(q, 10): Unit),
+        "v_topk_filtered" -> mean(idx.topItems(q, 10, Some(topkF)): Unit),
+        "v_meta_filter" -> mean(idx.selectItems(metaF.toColumn(idx.items)): Unit),
         "d_query_documents" -> mean(docs.queryDocuments(text).collect(): Unit))
-      vs.close(); docs.chunks.releaseTopRows()
-      // the serving-TIER path: Spark builds the index, a bounded shard
-      // snapshot serves in-process (the reference's own execution
-      // model) — zero jobs per query, so no scheduler floor at all
-      val lvs = graft.serve.LocalVectorServing.load(
-        graft.index.VectorIndex.build(emb, "vec_id", "embedding"))
+      idx.releaseTopRows(); docs.chunks.releaseTopRows()
+      // the serving tier: a bounded shard snapshot serves in-process, no job per query
+      val lvs = graft.serve.LocalVectorServing.load(idx)
       val chunks = graft.serve.LocalVectorServing.load(docs.chunks)
       val localOps = Seq(
         "v_topk" -> mean(lvs.queryItems(q, 10): Unit),

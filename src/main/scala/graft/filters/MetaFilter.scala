@@ -75,8 +75,11 @@ object MetaFilter {
     case Or(fs)     => fs.map(compile(_, present)).reduce(_ || _)
   }
 
-  /** Row-level evaluator for the driver-side serving tier
-    * (graft.serve.LocalVectorServing): identical match semantics to
+  /** Row-level evaluator over field getters, kept as the reference's
+    * own per-item loop: perfbench's `FilterLayer` times it and
+    * MetaFilterFuzzSpec checks it against the compiled `Column` and the
+    * reference's twin. No query path uses it — every index, snapshot
+    * and listing evaluates `toColumn`. Identical match semantics to
     * the compiled `Column` on homogeneous-typed fields — numerics
     * compare by value across widths (Catalyst coerces int/long/double
     * the same way), strings lexically, booleans by equality, and a

@@ -1,20 +1,20 @@
 package graft.index
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute,
-  AttributeReference, BindReferences, BoundReference, Descending, EmptyRow, Expression,
-  GenericInternalRow, InterpretedMutableProjection, InterpretedOrdering, InterpretedPredicate,
-  Literal, SortOrder}
+  BindReferences, BoundReference, Expression, GenericInternalRow, InterpretedOrdering,
+  InterpretedPredicate, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.filters.MetaFilter
@@ -64,28 +64,18 @@ final class VectorIndex private (
   }
 
   /** The rows of `queryItems(query, k, filter).collect()` — same
-    * columns, same order, bit-identical scores — computed eagerly
-    * with no per-query plan. The index's scan is planned and decoded
-    * once per index instance, and the first call's job copies the rows
-    * of `items.queryExecution.toRdd` to one of two places, chosen by the
-    * rule Spark uses to broadcast a relation:
-    *   - an index whose estimated size (`optimizedPlan.stats.sizeInBytes`)
-    *     is at most `spark.sql.autoBroadcastJoinThreshold` is collected to
-    *     the driver, and every later call scores those rows there,
-    *     running no job; they are freed with the instance;
-    *   - any other index (larger, not sizable, or the threshold -1) is
-    *     kept in executor memory (`MEMORY_ONLY`), and every later call is
-    *     ONE job over those rows; a partition that does not fit, or was
-    *     evicted, is recomputed from the source when a call needs it, and
-    *     Spark's ContextCleaner frees the rows once the instance is
-    *     unreachable.
-    * Either way every partition keeps its k best rows in a bounded heap
-    * under Spark's own ordering (score desc nulls last, id asc), scoring
-    * a row before it projects or copies it, and the driver merges the
-    * heaps. Score and filter are the expressions `queryItems` plans,
-    * evaluated interpreted, so no class is compiled per query; the
-    * filter is evaluated per row, not pushed into a reader. A negative
-    * `k` or an empty query is an `IllegalArgumentException`.
+    * columns, same order, bit-identical scores — with no per-query plan.
+    * The scan is planned once per instance, and the first call's job copies
+    * its rows by Spark's broadcast rule: an index whose estimated size is
+    * at most `spark.sql.autoBroadcastJoinThreshold` to the driver (vectors
+    * decoded to doubles), where later calls run no job; any other to
+    * executor memory (`MEMORY_ONLY`, recomputed where evicted, freed by the
+    * ContextCleaner with the instance), one job per call. A bounded heap
+    * per partition keeps the k best under Spark's ordering (score desc
+    * nulls last, NaN first, id asc), scored by one primitive loop that
+    * follows `cosinePreNorm`'s generated code after the filter `queryItems`
+    * plans, evaluated interpreted. A negative `k` or an empty query is an
+    * `IllegalArgumentException`.
     */
   def topItems(query: Seq[Double], k: Int,
       filter: Option[MetaFilter] = None): Array[Row] =
@@ -95,7 +85,8 @@ final class VectorIndex private (
 
   private def prepared: VectorIndex.PreparedScan = {
     if (scan == null) synchronized {
-      if (scan == null) scan = new VectorIndex.PreparedScan(items, idCol, vecCol)
+      if (scan == null) scan = new VectorIndex.PreparedScan(
+        items, idCol, vecCol, VectorIndex.collectable(items))
     }
     scan
   }
@@ -114,7 +105,7 @@ final class VectorIndex private (
 
   /** The items matching `cond`, in id order, evaluated over the rows
     * [[topItems]] keeps: on the driver with no job, or in one job over
-    * executor memory; `cond` resolved as a filter on `items` is and
+    * executor memory; `cond` is resolved as a filter on `items` is and
     * evaluated interpreted, no per-call plan.
     */
   private[graft] def selectItems(cond: Column): Array[Row] = prepared.select(cond)
@@ -216,119 +207,113 @@ final class VectorIndex private (
 object VectorIndex {
   private[index] val NORM = "norm"
 
-  /** An index's scan planned once, with the score expression of
-    * [[VectorIndex.queryItems]] resolved against it (the query vector is
-    * the expression's one free input, bound per call), and its rows
-    * copied out of the reader once, by the first call that reads them.
-    * Where those rows live is chosen once, by the rule Spark uses to let
-    * a relation be collected whole for a broadcast join: a plan whose
-    * estimated size (`optimizedPlan.stats.sizeInBytes`) is at most
-    * `spark.sql.autoBroadcastJoinThreshold` is collected to the driver in
-    * one job and every later call scores it there, running no job; any
-    * other plan (too large, not sizable, or the threshold -1) is
-    * persisted in executor memory (`MEMORY_ONLY`) and every call is one
-    * job over it.
+  /** Whether Spark's broadcast rule would collect `items` whole. */
+  private def collectable(items: DataFrame): Boolean = {
+    val bound = items.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    bound >= 0 && items.queryExecution.optimizedPlan.stats.sizeInBytes <= bound
+  }
+
+  /** An index's scan planned once, and its rows copied out of the reader
+    * once, by the first call that reads them: to the driver with `onDriver`,
+    * else to executor memory (see [[VectorIndex.topItems]]). A [[VectorIndex]]
+    * chooses by [[collectable]]; a LocalVectorServing snapshot always holds its own.
     */
-  private final class PreparedScan(items: DataFrame, idCol: String, vecCol: String) {
+  private[graft] final class PreparedScan(items: DataFrame, idCol: String, vecCol: String,
+      onDriver: Boolean) {
     private val spark = items.sparkSession
     // the reader reuses its row objects, so each row is copied before it is kept
     private val rows = items.queryExecution.toRdd.map(_.copy()).setName("graft top-k rows")
-    private val onDriver = {
-      val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
-      bound >= 0 && items.queryExecution.optimizedPlan.stats.sizeInBytes <= bound
-    }
     if (!onDriver) rows.persist(StorageLevel.MEMORY_ONLY)
     // the driver's copy of the rows: null until the first call collects them, None once released
-    private var held: Option[Array[InternalRow]] = _
+    private var held: Option[Held] = _
     private val input: Seq[Attribute] = items.queryExecution.executedPlan.output
-    private val query =
-      AttributeReference("query", ArrayType(DoubleType, containsNull = false), nullable = false)()
+    private val itemSchema = StructType(DataTypeUtils.fromAttributes(input))
 
-    /** `c` resolved (functions, type coercion) against the scan's
-      * columns plus `extra`, and bound to their ordinals.
-      */
-    private def resolve(c: Column, extra: Seq[Attribute] = Nil): Expression = {
-      val attrs = input ++ extra
-      val plan = Project(Seq(Alias(ColumnBridge.expression(spark, c), "_e")()), LocalRelation(attrs))
+    /** `c` resolved against the scan's columns (functions, coercion), bound to their ordinals. */
+    private def resolve(c: Column): Expression = {
+      val plan = Project(Seq(Alias(ColumnBridge.expression(spark, c), "_e")()), LocalRelation(input))
       val analyzed = SQLConf.withExistingConf(spark.sessionState.conf) {
         spark.sessionState.analyzer.executeAndCheck(plan, new QueryPlanningTracker)
       }
       val e = analyzed.asInstanceOf[Project].projectList.head.asInstanceOf[Alias].child
-      BindReferences.bindReference(e, attrs)
+      BindReferences.bindReference(e, input)
     }
 
-    private val score = {
-      val qv = ColumnBridge.column(query)
-      resolve(cosinePreNorm(col(vecCol), col(NORM), qv, normD(qv)), Seq(query))
+    private val byId = new InterpretedOrdering(Seq(SortOrder(resolve(col(idCol)), Ascending)))
+    private val kernel = {
+      // the score `queryItems` plans, resolved so that column types it refuses fail here too
+      resolve(cosinePreNorm(col(vecCol), col(NORM), typedLit(Array(1.0)), lit(1.0)))
+      val BoundReference(vecAt, ArrayType(elem, _), _) = resolve(col(vecCol))
+      // the norm widened to double as `norm * queryNorm` widens it
+      TopK(vecAt, elem == FloatType, resolve(col(NORM).cast(DoubleType)), byId)
     }
+
     // withColumn("score", …): replaces a column of that name, else appends
     private val (scoreAt, replaced) =
       input.indexWhere(a => spark.sessionState.conf.resolver(a.name, "score")) match {
         case -1 => (input.length, 0)
         case i  => (i, 1)
       }
-    private val schema = StructType(DataTypeUtils.fromAttributes(input)
-      .patch(scoreAt, Seq(StructField("score", DoubleType, score.nullable)), replaced))
-    private val scoreKey = SortOrder(BoundReference(scoreAt, DoubleType, nullable = true), Descending)
-    private val ordering = new InterpretedOrdering(Seq(scoreKey, SortOrder(resolve(col(idCol)), Ascending)))
-    private val scoreOrdering = new InterpretedOrdering(Seq(scoreKey))
+    private val schema =
+      StructType(itemSchema.patch(scoreAt, Seq(StructField("score", DoubleType)), replaced))
 
-    /** `f` over each partition's rows: over the driver's copy in this
-      * thread, no job, when the rows live there, else as one job.
+    /** Over the driver's copy in this thread (`onHeld`), no job, when the
+      * rows live there, else as one job over each partition (`onRows`).
       */
-    private def eachPartition(
-        f: Iterator[InternalRow] => Array[InternalRow]): Array[Array[InternalRow]] =
-      driverRows match {
-        case Some(rs) => Array(f(rs.iterator))
-        case None => spark.sparkContext.runJob(rows, f)
+    private def eachPartition[T: ClassTag](onHeld: Held => T,
+        onRows: Iterator[InternalRow] => T): Array[T] =
+      driverHeld match {
+        case Some(h) => Array(onHeld(h))
+        case None => spark.sparkContext.runJob(rows, onRows)
       }
 
-    /** The driver's copy of the rows, collected by the first caller (one
-      * job) while concurrent first callers wait for it; None when the rows
-      * live in executor memory or were released.
+    /** The driver's copy of the rows, collected and decoded by the first
+      * caller (one job) while concurrent first callers wait for it; None
+      * when the rows live in executor memory or were released.
       */
-    private def driverRows: Option[Array[InternalRow]] =
+    private def driverHeld: Option[Held] =
       if (!onDriver) None
       else synchronized {
-        if (held == null) held = Some(rows.collect())
+        if (held == null) held = Some(kernel.hold(rows.collect()))
         held
       }
 
-    def top(q: Seq[Double], k: Int, filter: Option[MetaFilter]): Array[Row] = {
+    /** The k best rows for `q` and `filter`, best first. */
+    def best(q: Seq[Double], k: Int, filter: Option[MetaFilter]): Array[Hit] = {
       require(k >= 0, s"topItems: k must be >= 0, got $k")
       require(q.nonEmpty, "topItems: empty query vector")
       val pred = filter.map(f => resolve(f.toColumn(items)))
-      // the query as a literal, and its norm folded once as the optimizer folds it
-      val qLit = Literal(new GenericArrayData(q.toArray), query.dataType)
-      val scored = score.transform {
-        case b: BoundReference if b.ordinal == input.length => qLit
-      }.transformDown {
-        case e if e.foldable => Literal.create(e.eval(EmptyRow), e.dataType)
-      }
-      val out = input.indices.map(i => BoundReference(i, input(i).dataType, input(i).nullable): Expression)
-        .patch(scoreAt, Seq(scored), replaced)
       if (k == 0) return Array.empty
-      val (ord, byScore, at) = (ordering, scoreOrdering, scoreAt)
-      val kept = eachPartition(VectorIndex.keepTop(_, pred, scored, out, at, ord, byScore, k))
+      val (kern, qv) = (kernel, q.toArray)
+      // the query's norm, folded once as the optimizer folds normD(query)
+      val qn = math.sqrt(dot(qv, qv))
+      eachPartition(h => kern.keep(Iterator(h), qv, qn, predicate(pred), k),
+        rs => kern.keep(kern.blocks(rs), qv, qn, predicate(pred), k))
+        .flatten.sorted(kern.better).take(k)
+    }
+
+    def top(q: Seq[Double], k: Int, filter: Option[MetaFilter]): Array[Row] = {
       val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-      kept.flatten.sorted(ord).take(k).map(r => toRow(r).asInstanceOf[Row])
+      best(q, k, filter).map { h =>
+        val values = input.indices.map(i => h.row.get(i, input(i).dataType))
+          .patch(scoreAt, Seq(if (h.rank == NullRank) null else h.score), replaced)
+        toRow(new GenericInternalRow(values.toArray)).asInstanceOf[Row]
+      }
+    }
+
+    /** `rs` as item rows: the index's columns, no score. */
+    def itemRows(rs: Array[InternalRow]): Array[Row] = {
+      val toRow = CatalystTypeConverters.createToScalaConverter(itemSchema)
+      rs.map(r => toRow(r).asInstanceOf[Row])
     }
 
     def select(c: Column): Array[Row] = {
-      val pred = resolve(c)
-      val kept = eachPartition { it =>
-        val keep = InterpretedPredicate(pred)
-        keep.initialize(TaskContext.getPartitionId())
-        it.filter(keep.eval).toArray
-      }
-      val toRow = CatalystTypeConverters.createToScalaConverter(
-        StructType(DataTypeUtils.fromAttributes(input)))
-      kept.flatten.sorted(byId).map(r => toRow(r).asInstanceOf[Row])
+      val pred = Some(resolve(c))
+      val keep = (rs: Iterator[InternalRow]) => rs.filter(predicate(pred).eval).toArray
+      itemRows(eachPartition(h => keep(h.rows.iterator), keep).flatten.sorted(byId))
     }
 
-    private val byId = new InterpretedOrdering(Seq(SortOrder(resolve(col(idCol)), Ascending)))
-
-    def warm(): Unit = if (driverRows.isEmpty) rows.count(): Unit
+    def warm(): Unit = if (driverHeld.isEmpty) rows.count(): Unit
 
     def release(): Unit = {
       synchronized { held = None }
@@ -336,37 +321,117 @@ object VectorIndex {
     }
   }
 
-  /** The k best rows of one partition under `ord`, projected by `out`
-    * after `pred`: a bounded heap whose root is the weakest kept row.
-    * Score first: a row that passes `pred` is only scored (`score` is
-    * `out`'s element at `scoreAt`, and `byScore` is `ord`'s first key),
-    * and is projected and copied only when its score beats the root's or
-    * ties it, a tie then going to the full ordering.
+  /** `pred` as a predicate for this partition, or null for none. */
+  private def predicate(pred: Option[Expression]): InterpretedPredicate = pred.map { p =>
+    val ip = InterpretedPredicate(p); ip.initialize(TaskContext.getPartitionId()); ip
+  }.orNull
+
+  /** A scan's rows, each with its vector decoded to doubles and its stored
+    * norm (see [[TopK.hold]]).
     */
-  private def keepTop(rows: Iterator[InternalRow], pred: Option[Expression], score: Expression,
-      out: Seq[Expression], scoreAt: Int, ord: Ordering[InternalRow],
-      byScore: Ordering[InternalRow], k: Int): Array[InternalRow] = {
-    val part = TaskContext.getPartitionId()
-    val keep = pred.map { p => val ip = InterpretedPredicate(p); ip.initialize(part); ip }
-    val project = new InterpretedMutableProjection(out)
-    project.initialize(part)
-    // a candidate's score, in the slot `byScore` reads
-    val candidate = new GenericInternalRow(out.length)
-    val heap = new java.util.PriorityQueue[InternalRow](ord.reverse)
-    rows.foreach { r =>
-      if (keep.forall(_.eval(r))) {
-        if (heap.size < k) heap.add(project(r).copy())
+  private final class Held(val rows: Array[InternalRow], val vecs: Array[Array[Double]],
+      val norms: Array[Double])
+
+  /** A kept row, its score and the score's rank ([[rankOf]], [[NullRank]] for null). */
+  private[graft] final case class Hit(rank: Long, score: Double, row: InternalRow)
+
+  private[graft] val NullRank: Long = Long.MinValue
+
+  /** A non-null score as a long that orders as Spark's `score DESC NULLS
+    * LAST` ranks it, higher first: -0.0 equal to 0.0 (`s + 0.0`), every NaN
+    * one pattern above +Infinity (`doubleToLongBits`), a negative number's
+    * bits flipped so that it orders below the non-negative ones, and
+    * -Infinity above [[NullRank]].
+    */
+  private def rankOf(s: Double): Long = {
+    val b = java.lang.Double.doubleToLongBits(s + 0.0)
+    if (b < 0) b ^ Long.MaxValue else b
+  }
+
+  /** Σ aᵢ·bᵢ over the shorter length, left to right: the VectorDot kernel. */
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** One partition's top-k over a scan's rows: the vector bound by `vecAt`
+    * (array<float> when `floats`), the stored norm read as a double by
+    * `norm`, exact score ties ordered by `byId`. A task runs it over
+    * executor memory as the driver runs it over its copy.
+    */
+  private final case class TopK(vecAt: Int, floats: Boolean, norm: Expression,
+      byId: Ordering[InternalRow]) {
+
+    /** `rows` decoded; a null norm is held as a NaN norm over a null
+      * vector, which scores null as the null norm does.
+      */
+    def hold(rows: Array[InternalRow]): Held = {
+      val norms = rows.map(norm.eval(_).asInstanceOf[java.lang.Double])
+      val vecs = rows.indices.map { i =>
+        if (norms(i) == null || rows(i).isNullAt(vecAt)) null
         else {
-          candidate.update(scoreAt, score.eval(r))
-          val c = byScore.compare(candidate, heap.peek())
-          if (c <= 0) {
-            val row = project(r)
-            if (c < 0 || ord.compare(row, heap.peek()) < 0) { heap.poll(); heap.add(row.copy()) }
-          }
+          val a = rows(i).getArray(vecAt)
+          Array.tabulate(a.numElements())(j => if (floats) a.getFloat(j).toDouble else a.getDouble(j))
         }
       }
+      new Held(rows, vecs.toArray, norms.map(n => if (n == null) Double.NaN else n.doubleValue))
     }
-    heap.toArray(new Array[InternalRow](0))
+
+    /** Executor rows decoded a block at a time, so that a partition's
+      * decoded vectors are never all live at once.
+      */
+    def blocks(rows: Iterator[InternalRow]): Iterator[Held] =
+      rows.grouped(4096).map(b => hold(b.toArray))
+
+    /** Score desc nulls last, then id asc: the order of `queryItems`. */
+    val better: Ordering[Hit] = (a: Hit, b: Hit) => {
+      val c = java.lang.Long.compare(b.rank, a.rank)
+      if (c != 0) c else byId.compare(a.row, b.row)
+    }
+
+    /** The k best rows of `blocks` that pass `pred` (null: every row),
+      * scored against `q` (norm `qn`) as `cosinePreNorm`'s generated code
+      * scores them: 0.0 over a zero denominator, null for a null vector
+      * over any other, else the dot product over the denominator. Each
+      * block is scored first, in a loop of its own that the CPU overlaps
+      * across rows; then a bounded heap, whose root is the weakest kept
+      * hit, takes a row (uncopied: the scan's rows are copies) when it
+      * ranks above the root, or ties it and its id orders first.
+      */
+    def keep(blocks: Iterator[Held], q: Array[Double], qn: Double, pred: InterpretedPredicate,
+        k: Int): Array[Hit] = {
+      val heap = new java.util.PriorityQueue[Hit](better.reverse)
+      blocks.foreach { h =>
+        val n = h.rows.length
+        val (scores, ranks) = (new Array[Double](n), new Array[Long](n))
+        var i = 0
+        while (i < n) {
+          val denom = h.norms(i) * qn
+          if (h.vecs(i) == null && denom != 0.0) ranks(i) = NullRank
+          else {
+            if (denom != 0.0) scores(i) = dot(h.vecs(i), q) / denom
+            ranks(i) = rankOf(scores(i))
+          }
+          i += 1
+        }
+        i = 0
+        while (i < n) {
+          val row = h.rows(i)
+          if (pred == null || pred.eval(row)) {
+            val root = heap.peek()
+            if (heap.size < k) heap.add(Hit(ranks(i), scores(i), row))
+            else if (ranks(i) > root.rank || (ranks(i) == root.rank && byId.compare(row, root.row) < 0)) {
+              heap.poll(); heap.add(Hit(ranks(i), scores(i), row))
+            }
+          }
+          i += 1
+        }
+      }
+      heap.toArray(new Array[Hit](0))
+    }
   }
 
   private def withNorm(df: DataFrame, vecCol: String): DataFrame =

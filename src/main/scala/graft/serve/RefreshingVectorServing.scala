@@ -6,26 +6,18 @@ import graft.index.VectorIndex
 import graft.operators.MergeApply
 
 /** The serving-tier WRITE path: a [[LocalVectorServing]] snapshot
-  * maintained by the s_merge CDC upsert stream.
-  *
-  * [[LocalVectorServing]] is a read-only point-in-time shard snapshot;
-  * production serving also needs freshness: upserts/deletes flowing
-  * through the streaming changelog must become visible to serve-local
-  * queries. This class owns the maintained index table, applies each
-  * CDC micro-batch with [[MergeApply.applyChanges]] (the same
-  * one-change-per-key contract as q_merge / the s_merge sink), and
-  * atomically swaps in a freshly rebuilt snapshot — readers always
-  * see either the pre-batch or the post-batch index, never a torn
+  * maintained by the s_merge CDC upsert stream. It owns the maintained
+  * index table, applies each CDC micro-batch with
+  * [[MergeApply.applyChanges]] (the one-change-per-key contract of
+  * q_merge / the s_merge sink) and atomically swaps in a fresh snapshot,
+  * so readers see the pre-batch or the post-batch index, never a torn
   * one.
   *
-  * Scale shape: invalidate/rebuild per merge batch. The rebuild cost
-  * is one bounded collect of the SHARD (LocalVectorServing's
-  * maxLocalItems guard still applies); at 100 TB a deployment runs
-  * one refresher per shard and routes each changelog partition to its
-  * shard's refresher, so rebuild work is O(shard), never O(corpus).
-  * Snapshot lineage is truncated per apply (localCheckpoint), exactly
-  * like the s_merge sink, so a long-running stream cannot grow the
-  * plan.
+  * Each apply rebuilds the SHARD's snapshot (a count guard and one
+  * collect, `maxLocalItems` applying); at 100 TB a deployment runs one
+  * refresher per shard, so rebuild work is O(shard), never O(corpus).
+  * The table's lineage is truncated per apply (localCheckpoint), as in
+  * the s_merge sink, so a long-running stream cannot grow the plan.
   *
   * Wire it as the foreachBatch target of a changelog stream:
   * {{{

@@ -6,13 +6,14 @@ import org.scalatest.time.SpanSugar._
 
 import graft.filters.MetaFilter
 import graft.index.VectorIndex
-import graft.serve.{LocalVectorServing, VectorServing}
+import graft.serve.LocalVectorServing
 
-/** The warm serving path (graft.serve) is a latency optimization, not
-  * a semantics change: every serving call must return exactly what the
-  * cold oracle-checked query entry returns. Also pins the plan-reuse
-  * contract — repeated calls return the identical result (same
-  * DataFrame re-executed), and close() releases the pinned cache.
+/** The warm read paths — an index instance's prepared top-k
+  * (`VectorIndex.topItems` / `selectItems`) and a driver-side snapshot
+  * (graft.serve.LocalVectorServing) — are latency optimizations, not a
+  * semantics change: every call must return exactly what the cold
+  * oracle-checked query entry returns. Also pins their job counts and
+  * that each releases only its own rows.
   */
 class ServingSpec extends SparkSpecBase {
 
@@ -26,10 +27,10 @@ class ServingSpec extends SparkSpecBase {
 
   test("warm queryItems matches the cold v_topk entry") {
     assume(haveData)
-    val vs = new VectorServing(VectorIndex.build(
-      Tables.load(spark, dir, "embeddings"), "vec_id", "embedding")).warm()
+    val idx = VectorIndex.build(Tables.load(spark, dir, "embeddings"), "vec_id", "embedding")
+    idx.warmTopRows()
     try {
-      val warm = vs.queryItems(queryVec, 10)
+      val warm = idx.topItems(queryVec, 10)
         .map(r => (r.getAs[Long]("vec_id"),
           BigDecimal(r.getAs[Double]("score")).setScale(6, BigDecimal.RoundingMode.HALF_UP)))
       val cold = SparkEntry.queries("v_topk")(spark, dir).collect()
@@ -37,10 +38,10 @@ class ServingSpec extends SparkSpecBase {
           BigDecimal(r.getAs[Double]("score")).setScale(6, BigDecimal.RoundingMode.HALF_UP)))
       assert(warm.map(_._1).toSeq == cold.map(_._1).toSeq)
       assert(warm.map(_._2).toSeq == cold.map(_._2).toSeq)
-      // plan reuse: a second call returns the identical rows
-      assert(vs.queryItems(queryVec, 10).map(_.getAs[Long]("vec_id")).toSeq ==
+      // a second call returns the identical rows
+      assert(idx.topItems(queryVec, 10).map(_.getAs[Long]("vec_id")).toSeq ==
         warm.map(_._1).toSeq)
-    } finally vs.close()
+    } finally idx.releaseTopRows()
   }
 
   test("warm queryItems answers each of two query vectors with equal hash codes with its own rows") {
@@ -63,61 +64,99 @@ class ServingSpec extends SparkSpecBase {
     val angles = (0 until 60).map(i => (i.toLong, 2 * math.Pi * i / 60))
     val idx = VectorIndex.build(angles.map { case (i, t) =>
       (i, Array(math.cos(t).toFloat, math.sin(t).toFloat)) }.toDF("id", "vec"), "id", "vec")
-    val vs = new VectorServing(idx).warm()
+    idx.warmTopRows()
+    val snap = LocalVectorServing.load(idx)
     try {
       def ids(rows: Array[org.apache.spark.sql.Row]) = rows.map(_.getAs[Long]("id")).toSeq
       val (wantA, wantB) = (idx.queryItems(a, 5).collect(), idx.queryItems(b, 5).collect())
       assert(ids(wantA) != ids(wantB))
-      assert(vs.queryItems(a, 5).toSeq == wantA.toSeq)
-      assert(vs.queryItems(b, 5).toSeq == wantB.toSeq)
-    } finally vs.close()
+      assert(idx.topItems(a, 5).toSeq == wantA.toSeq)
+      assert(idx.topItems(b, 5).toSeq == wantB.toSeq)
+      assert(snap.queryItems(a, 5).map(_._1.getAs[Long]("id")) == ids(wantA))
+      assert(snap.queryItems(b, 5).map(_._1.getAs[Long]("id")) == ids(wantB))
+    } finally idx.releaseTopRows()
   }
 
-  /** A warm session over a fresh 40-row index. */
-  private def warmSession(): VectorServing = {
+  /** A fresh 40-row index, its top-k rows decoded. */
+  private def warmIndex(): VectorIndex = {
     import spark.implicits._
     val idx = VectorIndex.build((0 until 40).map { i =>
       (i.toLong, Array(math.cos(i).toFloat, math.sin(i).toFloat)) }.toDF("id", "vec"), "id", "vec")
-    new VectorServing(idx).warm()
+    idx.warmTopRows()
+    idx
   }
 
-  /** A session's top-k, listing and lookup, checked against known ids. */
-  private def answers(vs: VectorServing): Unit = {
-    val first = vs.queryItems(Seq(1.0, 0.0), 3)
-    assert(vs.queryItems(Seq(1.0, 0.0), 3).toSeq == first.toSeq)
-    assert(vs.listItemsByMetadata(MetaFilter.Gte("id", 38L)).map(_.getAs[Long]("id")).toSeq ==
+  /** An index's top-k, listing and lookup, checked against known ids
+    * (the largest cos(i) over i < 40 are at i = 0, 25 and 19).
+    */
+  private def answers(idx: VectorIndex): Unit = {
+    val first = idx.topItems(Seq(1.0, 0.0), 3)
+    assert(first.map(_.getAs[Long]("id")).toSeq == Seq(0L, 25L, 19L))
+    assert(idx.topItems(Seq(1.0, 0.0), 3).toSeq == first.toSeq)
+    assert(idx.selectItems(MetaFilter.Gte("id", 38L).toColumn(idx.items))
+      .map(_.getAs[Long]("id")).toSeq == Seq(38L, 39L))
+    assert(idx.selectItems(col("id") === 7L).map(_.getAs[Long]("id")).toSeq == Seq(7L))
+  }
+
+  /** The same answers from a snapshot. */
+  private def answers(snap: LocalVectorServing): Unit = {
+    assert(snap.queryItems(Seq(1.0, 0.0), 3).map(_._1.getAs[Long]("id")) == Seq(0L, 25L, 19L))
+    assert(snap.listItemsByMetadata(MetaFilter.Gte("id", 38L)).map(_.getAs[Long]("id")) ==
       Seq(38L, 39L))
-    assert(vs.getItem(7L).map(_.getAs[Long]("id")).toSeq == Seq(7L))
+    assert(snap.getItem(7L).map(_.getAs[Long]("id")).contains(7L))
   }
 
   test("close releases the rows every call is answered from") {
     def persisted = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
     val before = persisted
-    val vs = executorSide(warmSession())
-    answers(vs)
+    val idx = executorSide(warmIndex())
+    answers(idx)
     val mine = persisted -- before
     assert(mine.size == 1, "one copy: the top-k rows, which listings and lookups read too")
-    vs.close()
+    idx.releaseTopRows()
     eventually(timeout(30.seconds), interval(100.millis)) {
       assert((persisted & mine).isEmpty)
     }
   }
 
   test("on the driver: warm calls run no job, and close releases the rows they read") {
-    val vs = warmSession()
-    assert(jobsIn(answers(vs)) == 0)
-    vs.close()
+    val idx = warmIndex()
+    assert(jobsIn(answers(idx)) == 0)
+    idx.releaseTopRows()
     // the rows are gone: a call reads the source again, in a job
-    assert(jobsIn(vs.getItem(7L)) == 1)
+    assert(jobsIn(idx.selectItems(col("id") === 7L)) == 1)
+  }
+
+  test("a snapshot loads in two jobs and holds its rows apart from its index's") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+    Seq("driver", "executor").foreach { where =>
+      val before = persisted
+      val idx = if (where == "driver") warmIndex() else executorSide(warmIndex())
+      val indexRows = persisted -- before
+      assert(indexRows.size == (if (where == "driver") 0 else 1), where)
+      var snap: LocalVectorServing = null
+      assert(jobsIn { snap = LocalVectorServing.load(idx) } <= 2, where)
+      assert(snap.size == 40 && persisted -- before == indexRows, where)
+      assert(jobsIn(answers(snap)) == 0, where)
+      // closing the snapshot leaves the index's rows where they were
+      snap.close()
+      assert(jobsIn(answers(idx)) == (if (where == "driver") 0 else 4), where)
+      assert(persisted -- before == indexRows, where)
+      // and releasing the index's rows leaves a snapshot's
+      val again = LocalVectorServing.load(idx)
+      idx.releaseTopRows()
+      assert(jobsIn(answers(again)) == 0, where)
+      assert(jobsIn(idx.topItems(Seq(1.0, 0.0), 3)) == 1, where)
+    }
   }
 
   test("warm filtered queryItems and listItemsByMetadata match cold entries") {
     assume(haveData)
-    val vs = new VectorServing(VectorIndex.build(
-      Tables.load(spark, dir, "embeddings"), "vec_id", "embedding")).warm()
+    val idx = VectorIndex.build(Tables.load(spark, dir, "embeddings"), "vec_id", "embedding")
+    idx.warmTopRows()
     try {
       val f = MetaFilter.parse("""{"label":{"$in":[2,4,6]}}""")
-      val warmTopk = vs.queryItems(queryVec, 10, Some(f))
+      val warmTopk = idx.topItems(queryVec, 10, Some(f))
         .map(_.getAs[Long]("vec_id")).toSeq
       val coldTopk = SparkEntry.queries("v_topk_filtered")(spark, dir)
         .collect().map(_.getAs[Long]("vec_id")).toSeq
@@ -126,15 +165,15 @@ class ServingSpec extends SparkSpecBase {
       val mf = MetaFilter.parse(
         """{"$or":[{"label":{"$in":[1,3]}},
           |        {"$and":[{"label":{"$gte":7}},{"label":{"$lt":9}}]}]}""".stripMargin)
-      val warmMeta = vs.listItemsByMetadata(mf)
+      val warmMeta = idx.selectItems(mf.toColumn(idx.items))
         .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("label"))).toSeq
       val coldMeta = SparkEntry.queries("v_meta_filter")(spark, dir)
         .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("label"))).toSeq
       assert(warmMeta == coldMeta)
 
-      val got = vs.getItem(42L)
+      val got = idx.selectItems(col("vec_id") === 42L)
       assert(got.length == 1 && got.head.getAs[Long]("vec_id") == 42L)
-    } finally vs.close()
+    } finally idx.releaseTopRows()
   }
 
   test("LocalVectorServing matches the cold v_topk / v_topk_filtered / v_meta_filter entries") {

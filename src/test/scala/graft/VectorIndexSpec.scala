@@ -151,30 +151,49 @@ class VectorIndexSpec extends SparkSpecBase {
     VectorIndex.build(edgeFrames(name), if (name.startsWith("long")) "id" else "sid", "vec")
 
   /** `topItems` against `queryItems(...).collect()`: same columns, same
-    * rows in the same order, scores equal bit for bit.
+    * rows in the same order, scores equal bit for bit; and, given a
+    * snapshot of `idx`, its (item row, score) pairs, each item row with
+    * its score re-attached at the score column (a null score reads as
+    * NaN).
     */
   private def assertSameTop(idx: VectorIndex, q: Seq[Double], k: Int,
-      filter: Option[MetaFilter] = None): Unit =
-    assertSameRows(idx, q, k, filter, idx.topItems(q, k, filter))
+      filter: Option[MetaFilter] = None, local: Option[LocalVectorServing] = None): Unit = {
+    val want = assertSameRows(idx, q, k, filter, idx.topItems(q, k, filter))
+    local.foreach { snap =>
+      val clue = s"snapshot k=$k filter=$filter"
+      val got = snap.queryItems(q, k, filter)
+      assert(got.length == want.length, clue)
+      got.zip(want).foreach { case ((r, s), w) =>
+        val at = w.fieldIndex("score")
+        val reattached = r.toSeq.patch(at, Seq(s), if (at == r.length) 0 else 1)
+        assert(reattached.map(bits) == w.toSeq.updated(at, if (w.isNullAt(at)) Double.NaN else w.get(at))
+          .map(bits), clue)
+      }
+    }
+  }
 
-  /** `got` against `queryItems(q, k, filter).collect()`, as [[assertSameTop]]. */
+  // floating-point values by their bits: NaN equals NaN, -0.0 is not 0.0
+  private def bits(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToLongBits(d)
+    case f: Float  => java.lang.Float.floatToIntBits(f)
+    case s: scala.collection.Seq[_] => s.map(bits).toList
+    case other     => other
+  }
+
+  /** `got` against `queryItems(q, k, filter).collect()`, as [[assertSameTop]];
+    * returns the collected rows.
+    */
   private def assertSameRows(idx: VectorIndex, q: Seq[Double], k: Int,
-      filter: Option[MetaFilter], got: Array[Row]): Unit = {
+      filter: Option[MetaFilter], got: Array[Row]): Array[Row] = {
     val want = idx.queryItems(q, k, filter)
     val wantRows = want.collect()
     val clue = s"k=$k filter=$filter"
     assert(got.length == wantRows.length, clue)
-    // floating-point values by their bits: NaN equals NaN, -0.0 is not 0.0
-    def bits(v: Any): Any = v match {
-      case d: Double => java.lang.Double.doubleToLongBits(d)
-      case f: Float  => java.lang.Float.floatToIntBits(f)
-      case s: scala.collection.Seq[_] => s.map(bits).toList
-      case other     => other
-    }
     got.zip(wantRows).foreach { case (g, w) =>
       assert(g.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)), clue)
       assert(g.toSeq.map(bits) == w.toSeq.map(bits), clue)
     }
+    wantRows
   }
 
   private def seededQueries(n: Int): Seq[Seq[Double]] = {
@@ -211,11 +230,12 @@ class VectorIndexSpec extends SparkSpecBase {
       val idx = edgeIndex(name)
       assert(idx.items.rdd.getNumPartitions > 1)
       assert(residency(idx) == where, name)
+      val local = Some(LocalVectorServing.load(idx))
       (tied +: seededQueries(4)).foreach { q =>
-        Seq(0, 1, 5, 26, 299, 300, 1000).foreach(k => assertSameTop(idx, q, k))
+        Seq(0, 1, 5, 26, 299, 300, 1000).foreach(k => assertSameTop(idx, q, k, None, local))
       }
       // a top-k that is nothing but exact ties, zero scores and nulls
-      assertSameTop(idx, tied, 40)
+      assertSameTop(idx, tied, 40, None, local)
       val top = idx.topItems(tied, 300)
       assert(java.lang.Double.isNaN(top.head.getAs[Double]("score")))
       assert(top.last.isNullAt(top.last.fieldIndex("score")))
@@ -228,14 +248,16 @@ class VectorIndexSpec extends SparkSpecBase {
     val filters = Seq(
       Eq("tag", "a"), Ne("tag", "a"), Gt("label", 3), Gte("label", 3), Lt("weight", 0.5),
       Lte("label", 2), In("tag", Seq("a", "c")), In("label", Nil), Nin("tag", Seq("b")),
-      Nin("label", Nil), Eq("label", 4L), Gte("tag", "b"),
+      Nin("label", Nil), Eq("label", 4L), Eq("label", "4"), Gte("tag", "b"),
       And(Seq(Gte("label", 1), Ne("tag", "c"))), Or(Seq(Eq("tag", "b"), Lt("label", 2))),
       Or(Seq(And(Seq(In("label", Seq(1, 2, 3)), Gt("weight", 0.2))), Eq("tag", "zz"))))
     val qs = seededQueries(2)
     onBothResidencies { where => Seq("long saved", "string saved", "long unsaved").foreach { name =>
       val idx = edgeIndex(name)
       assert(residency(idx) == where, name)
-      for (f <- filters; (q, k) <- Seq(qs(0) -> 3, qs(1) -> 500)) assertSameTop(idx, q, k, Some(f))
+      val local = Some(LocalVectorServing.load(idx))
+      for (f <- filters; (q, k) <- Seq(qs(0) -> 3, qs(1) -> 500))
+        assertSameTop(idx, q, k, Some(f), local)
     } }
   }
 

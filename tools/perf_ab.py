@@ -3,6 +3,7 @@
 
     python3 tools/perf_ab.py --workload rag_docs --seeds 11-15
         [--parent HEAD] [--seconds 12] [--scratch DIR] [--out FILE]
+        [--trace] [--layers serve.ns_per_item_scored,index.query.driver_ms]
 
 Run from anywhere inside a graft checkout. Both sides are exported with
 `git archive` into DIR/parent and DIR/change; the change side is the
@@ -23,8 +24,13 @@ prints one line per run, then, for every end-to-end
 metric in BENCHMARK.json: each side's median and quartiles, the
 change/parent ratio of the medians, how many seed pairs the change won,
 and whether the median gap is larger than the parent's quartile
-distance. Nothing in the checkout changes; --out keeps the raw runs as
-JSON.
+distance. --trace runs the pairs with `--trace 1`, whose result line
+holds the per-layer metrics instead of the end-to-end ones, so the
+end-to-end summary is left out. --layers names per-layer keys of the
+flat line (each declared under `per_layer` in BENCHMARK.json, which
+gives its direction); each is summarised the same way over the seed
+pairs whose flat lines both hold it. Nothing in the checkout changes;
+--out keeps the raw runs as JSON.
 """
 import argparse
 import json
@@ -137,9 +143,9 @@ def build(side_dir):
     subprocess.check_call([sys.executable, "-c", code], cwd=side_dir)
 
 
-def run_once(side_dir, workload, seed, seconds):
+def run_once(side_dir, workload, seed, seconds, trace=False):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", "1" if trace else "0"]
     steal0, t0 = read_steal_s(), time.time()
     proc = subprocess.run(cmd, cwd=side_dir, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
                           text=True)
@@ -153,18 +159,41 @@ def run_once(side_dir, workload, seed, seconds):
 
 def parse_run(stdout):
     """A run's record from run.py's stdout: the metrics and op counts of its
-    result line (the last line), and the sample count per kind
-    (`samples.<kind>.n`) of the flat line just before it."""
+    result line (the last line), the flat line just before it, and that
+    line's sample count per kind (`samples.<kind>.n`)."""
     lines = stdout.strip().splitlines()
     line, flat = json.loads(lines[-1]), json.loads(lines[-2])
     counts = {k[len("samples."):-len(".n")]: v for k, v in flat.items()
               if k.startswith("samples.") and k.endswith(".n")}
     return {"metrics": {k: m["value"] for k, m in line["metrics"].items()},
-            "failed": line["failed"], "attempted": line["attempted"], "samples_n": counts}
+            "failed": line["failed"], "attempted": line["attempted"], "samples_n": counts,
+            "flat": flat}
+
+
+def layer_summaries(runs, names, better_of):
+    """(name, summary) for each named per-layer key, summarised over the
+    seed pairs whose flat lines both hold a number for it; the summary is
+    None when no pair does."""
+    out = []
+    for name in names:
+        pairs = [(p["flat"].get(name), c["flat"].get(name))
+                 for p, c in zip(runs["parent"], runs["change"])]
+        pairs = [(p, c) for p, c in pairs
+                 if isinstance(p, (int, float)) and isinstance(c, (int, float))]
+        out.append((name, summarize([p for p, _ in pairs], [c for _, c in pairs],
+                                    better_of[name]) if pairs else None))
+    return out
 
 
 def fmt(x):
     return "%.4g" % x
+
+
+def summary_line(name, m):
+    return "%s %s (%s-%s) -> %s (%s-%s) %.3f %d/%d %s" % (
+        name, fmt(m["parent"][1]), fmt(m["parent"][0]), fmt(m["parent"][2]),
+        fmt(m["change"][1]), fmt(m["change"][0]), fmt(m["change"][2]),
+        m["ratio"], m["wins"], m["pairs"], "yes" if m["clear"] else "no")
 
 
 def main(argv=None):
@@ -175,10 +204,19 @@ def main(argv=None):
     ap.add_argument("--seconds", type=float, default=12)
     ap.add_argument("--scratch", default=os.path.join(tempfile.gettempdir(), "graft_perf_ab"))
     ap.add_argument("--out", help="write the raw runs here as JSON")
+    ap.add_argument("--trace", action="store_true", help="run the pairs with --trace 1")
+    ap.add_argument("--layers", default="", help="per-layer keys to summarise, comma-separated")
     a = ap.parse_args(argv)
     repo = git(os.getcwd(), "rev-parse", "--show-toplevel")
     with open(os.path.join(repo, "BENCHMARK.json")) as fh:
-        metrics = [(m["name"], m["better"]) for m in json.load(fh)["end_to_end"]]
+        bench = json.load(fh)
+    metrics = [] if a.trace else [(m["name"], m["better"]) for m in bench["end_to_end"]]
+    better_of = {m["name"]: m["better"] for m in bench["per_layer"]}
+    layers = [n.strip() for n in a.layers.split(",") if n.strip()]
+    unknown = [n for n in layers if n not in better_of]
+    if unknown:
+        raise SystemExit("perf_ab: --layers names keys BENCHMARK.json does not declare: "
+                         + ", ".join(unknown))
     trees = {"parent": a.parent, "change": working_tree(repo)}
     dirs = {s: os.path.join(a.scratch, s) for s in SIDES}
     for s in SIDES:
@@ -188,24 +226,24 @@ def main(argv=None):
     for i, seed in enumerate(parse_seeds(a.seeds)):
         order = SIDES if i % 2 == 0 else SIDES[::-1]
         for pos, s in enumerate(order):
-            r = run_once(dirs[s], a.workload, seed, a.seconds)
+            r = run_once(dirs[s], a.workload, seed, a.seconds, a.trace)
             r.update(seed=seed, side=s, position=pos + 1)
             runs[s].append(r)
             print("seed %d %-6s run %d steal_s %.2f failed %d/%d %s samples.n %s" % (
                 seed, s, pos + 1, r["steal_s"], r["failed"], r["attempted"],
-                " ".join("%s %s" % (n, fmt(r["metrics"][n])) for n, _ in metrics),
+                " ".join("%s %s" % (n, fmt(r["metrics"][n])) for n, _ in metrics)
+                + "".join(" %s %s" % (n, r["flat"].get(n, "-")) for n in layers),
                 " ".join("%s %d" % kv for kv in sorted(r["samples_n"].items()))), flush=True)
     print("metric parent_median (q1-q3) -> change_median (q1-q3) ratio wins gap>parent_iqr")
     for name, better in metrics:
-        m = summarize([r["metrics"][name] for r in runs["parent"]],
-                      [r["metrics"][name] for r in runs["change"]], better)
-        print("%s %s (%s-%s) -> %s (%s-%s) %.3f %d/%d %s" % (
-            name, fmt(m["parent"][1]), fmt(m["parent"][0]), fmt(m["parent"][2]),
-            fmt(m["change"][1]), fmt(m["change"][0]), fmt(m["change"][2]),
-            m["ratio"], m["wins"], m["pairs"], "yes" if m["clear"] else "no"))
+        print(summary_line(name, summarize([r["metrics"][name] for r in runs["parent"]],
+                                           [r["metrics"][name] for r in runs["change"]], better)))
+    for name, m in layer_summaries(runs, layers, better_of):
+        print(summary_line(name, m) if m else "%s not in any pair's flat line" % name)
     if a.out:
         with open(a.out, "w") as fh:
-            json.dump({"workload": a.workload, "parent": a.parent, "runs": runs}, fh, indent=1)
+            json.dump({"workload": a.workload, "parent": a.parent, "trace": a.trace,
+                       "runs": runs}, fh, indent=1)
 
 
 if __name__ == "__main__":

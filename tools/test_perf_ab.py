@@ -77,6 +77,29 @@ class ParseRunTest(unittest.TestCase):
         self.assertEqual(r["samples_n"], {"aux": 9, "ingest": 7, "op": 196})
 
 
+class LayerSummariesTest(unittest.TestCase):
+    def test_pairs_by_seed_and_skips_pairs_missing_the_key(self):
+        def run(**flat):
+            return {"flat": dict(flat, workload="rag_docs")}
+        runs = {"parent": [run(a=100.0, b=5), run(a=110.0, b=6), run(a=120.0)],
+                "change": [run(a=90.0, b=4), run(a=115.0), run(a=100.0, b=9)]}
+        (na, ma), (nb, mb), (nc, mc) = perf_ab.layer_summaries(
+            runs, ["a", "b", "c"], {"a": "lower", "b": "higher", "c": "lower"})
+        self.assertEqual((na, nb, nc), ("a", "b", "c"))
+        self.assertEqual(ma["parent"], (105.0, 110.0, 115.0))
+        self.assertEqual(ma["change"], (95.0, 100.0, 107.5))
+        self.assertEqual((ma["wins"], ma["pairs"]), (2, 3))
+        # only the first seed's pair holds b on both sides
+        self.assertEqual((mb["parent"], mb["change"], mb["wins"], mb["pairs"]),
+                         ((5, 5, 5), (4, 4, 4), 0, 1))
+        self.assertIsNone(mc)
+
+    def test_parse_run_keeps_the_flat_line(self):
+        stdout = ('{"serve.ns_per_item_scored": 106.5, "samples.op.n": 3}\n'
+                  '{"attempted": 3, "failed": 0, "metrics": {}}\n')
+        self.assertEqual(perf_ab.parse_run(stdout)["flat"]["serve.ns_per_item_scored"], 106.5)
+
+
 class StealTest(unittest.TestCase):
     def test_reads_the_aggregate_cpu_line(self):
         stat = ("cpu  10 0 5 100 1 0 2 37 0 0\n"
