@@ -3,6 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
@@ -10,7 +11,7 @@ import scala.jdk.CollectionConverters._
 import graft.embed.{Embedder, HashingEmbedder}
 import graft.filters.MetaFilter
 import graft.functions.VectorFunctions._
-import graft.text.{SplitterConfig, TextSplitter}
+import graft.text.{SplitterConfig, TextChunk, TextSplitter}
 
 /** One chunk row of the document index. */
 final case class DocChunk(
@@ -28,10 +29,13 @@ final case class DocChunk(
   * The reference keeps a catalog.json (uri↔id) plus one LocalIndex of
   * chunk items per folder, ingesting one document per call. Here both
   * halves are DataFrames — `catalog(document_id, uri)` and a
-  * `VectorIndex` of chunk rows — and ingestion is BULK: a whole corpus
-  * DataFrame is split + embedded in one `flatMap` pass on executors
-  * (reference: upsert_document splits and embeds driver-side, one doc
-  * at a time — the shape that cannot scale). document_id is the md5 of
+  * `VectorIndex` of chunk rows — and ingestion is BULK, a DataFrame of
+  * documents per call: a batch small enough for one task is split +
+  * embedded on the driver, in the calling thread, as the reference's
+  * upsert_document does one document at a time; any larger batch, up to
+  * a whole corpus, in one `mapPartitions` pass on executors (driver-side,
+  * one document at a time, is the shape that cannot scale). Both paths
+  * run one split + embed body and give the same rows. document_id is the md5 of
   * the uri, which keeps ids stable across re-ingestion (the reference
   * uses uuid4; deterministic ids are strictly more useful and equally
   * unique per uri).
@@ -55,10 +59,22 @@ final class DocumentIndex private (
   /** Bulk upsert of (uri, text, ...metadata) rows: latest wins per
     * uri (reference: local_document_index.py:127-219 upsert_document,
     * minus the per-document driver loop); within one batch the last
-    * row of a repeated uri wins. Split + embed happen inside flatMap —
-    * narrow; the only shuffles are the dedup window's hash exchange by
-    * uri, which adaptive execution sizes to the batch, and the two
-    * left_anti joins that retire previous versions.
+    * row of a repeated uri wins. Two paths give the same rows, schemas
+    * included:
+    *  - a batch that Spark's broadcast rule would collect (see
+    *    [[VectorIndex.topItems]]) and that fits
+    *    `spark.sql.adaptive.coalescePartitions.minPartitionSize` (by its
+    *    plan's size estimate, then by its uris' and texts' length; the
+    *    executor path would run it as one task) is read once, then
+    *    deduplicated, split and embedded here, in the calling thread;
+    *    both new components are one-partition local relations, so an
+    *    append writes one file each with no shuffle. The embedder runs
+    *    inside this call, so an embedder that throws raises here;
+    *  - any other batch stays lazy: split + embed run in `mapPartitions`
+    *    — narrow; the only shuffles are the dedup window's hash exchange
+    *    by uri, which adaptive execution sizes to the batch, and the two
+    *    left_anti joins that retire previous versions. An embedder that
+    *    throws fails the first action that reads the chunks.
     *
     * Every column beyond (uri, text) is per-document metadata. The
     * reference merges the metadata dict into each chunk item and
@@ -73,30 +89,17 @@ final class DocumentIndex private (
     *
     * A null `uri` or `text` is an `IllegalArgumentException` naming
     * this method and the column, raised by the first action that reads
-    * the rows (save, a query, a collect of the chunks or catalog).
+    * the rows (save, a query, a collect of the chunks or catalog): such
+    * a batch always takes the lazy path.
     */
   def upsertDocuments(docs: DataFrame): DocumentIndex = {
     import org.apache.spark.sql.Encoders
-    val sp = splitter
-    val em = embedder
+    val spark = docs.sparkSession
+    val (sp, em) = (splitter, embedder)
     val metaCols: Seq[String] =
       docs.columns.toSeq.filterNot(c => c == "uri" || c == "text")
     val input = docs.select((Seq(col("uri").cast("string"), col("text").cast("string"))
       ++ metaCols.map(col)): _*)
-    // One version per uri, read by BOTH the catalog and the chunk path
-    // so the two halves always agree on a document: a uri repeated
-    // within the batch keeps its last row in input order (the same
-    // latest-wins rule as across batches). The window's hash exchange
-    // by uri is one adaptive execution coalesces: a small batch lands
-    // in one partition (one task, one file per saved component), while
-    // a batch of more than ~cores MB keeps at least cores partitions
-    // for the compute-bound split+embed (the Tables.fanOut floor).
-    val latest = input
-      .withColumn("_seq", monotonically_increasing_id())
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("uri")).orderBy(desc("_seq"))))
-      .filter(col("_rn") === 1)
-      .drop("_seq", "_rn")
     val chunkSchema = StructType(Seq(
       StructField("chunk_id", StringType, nullable = false),
       StructField("document_id", StringType, nullable = false),
@@ -106,63 +109,43 @@ final class DocumentIndex private (
       StructField("n_tokens", IntegerType, nullable = false),
       StructField("vector", ArrayType(FloatType, containsNull = false), nullable = true))
       ++ metaCols.map(c => docs.schema(c)))
-    // Per partition: split every document, then group chunks into
-    // token-budgeted batches for the embedder — one model call per
-    // batch, the shape a real batch-inference backend needs
-    // (reference: local_document_index.py:156-184 batches by
-    // max_tokens before calling create_embeddings).
-    // doc-type-aware splitting (reference:
-    // local_document_index.py:148-152): an explicit doc_type metadata
-    // column wins, else the uri extension; separator tables are cached
-    // per type per partition.
     val dtIdx = metaCols.indexOf("doc_type")
-    val newChunks: DataFrame =
-      latest
-        .mapPartitions { it =>
-          val spByType = scala.collection.mutable.Map.empty[String, graft.text.TextSplitter]
-          def splitterFor(uri: String, explicit: String): graft.text.TextSplitter = {
-            val dt = if (explicit != null && explicit.nonEmpty) explicit
-              else DocumentIndex.extensionOf(uri)
-            if (dt.isEmpty) sp
-            else spByType.getOrElseUpdate(dt, sp.forDocType(dt))
-          }
-          val pending = it.flatMap { row =>
-            val uri = DocumentIndex.required(row.getString(0), "uri")
-            val text = DocumentIndex.required(row.getString(1), "text")
-            val meta = Seq.tabulate(row.length - 2)(j => row.get(j + 2))
-            val explicitType =
-              if (dtIdx >= 0) Option(row.get(2 + dtIdx)).map(_.toString).orNull
-              else null
-            val docId = DocumentIndex.docIdFor(uri)
-            splitterFor(uri, explicitType).split(text).zipWithIndex.map { case (c, i) =>
-              (s"$docId-$i", docId, uri, c, meta)
-            }
-          }
-          // flush a batch when its token total would exceed the budget
-          // (single linear pass; an earlier fold re-copied the batch
-          // vector per element — quadratic per batch)
-          new Iterator[Seq[(String, String, String, graft.text.TextChunk, Seq[Any])]] {
-            private val it = pending.buffered
-            def hasNext: Boolean = it.hasNext
-            def next(): Seq[(String, String, String, graft.text.TextChunk, Seq[Any])] = {
-              val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, graft.text.TextChunk, Seq[Any])]
-              var tokens = 0
-              while (it.hasNext && (batch.isEmpty ||
-                  tokens + it.head._4.tokens.length <= em.maxBatchTokens)) {
-                val item = it.next()
-                tokens += item._4.tokens.length
-                batch += item
-              }
-              batch.toSeq
-            }
-          }.flatMap { batch =>
-            val vecs = em.embedBatch(batch.map(_._4.tokens))
-            batch.zip(vecs).map { case ((cid, docId, uri, c, meta), v) =>
-              Row.fromSeq(Seq(cid, docId, uri, c.startPos, c.endPos,
-                c.tokens.length, v) ++ meta)
-            }
-          }
-        }(Encoders.row(chunkSchema))
+    // The driver path (see above) checks the size twice: the plan's
+    // estimate before collecting, the uris' and texts' length after. The
+    // lazy path keeps one version per uri, read by BOTH the catalog and
+    // the chunk path so the two halves always agree on a document,
+    // through a window whose hash exchange adaptive execution coalesces:
+    // a batch of more than ~cores MB keeps at least cores partitions for
+    // the compute-bound split + embed (the Tables.fanOut floor); a batch
+    // already collected is read from the driver's copy.
+    val oneTask = spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    val taken = Option.when(VectorIndex.collectable(input) &&
+      input.queryExecution.optimizedPlan.stats.sizeInBytes <= oneTask)(input.collect())
+    val held = taken.filter { rows =>
+      !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
+        rows.iterator.map(r => r.getString(0).length.toLong + r.getString(1).length).sum <= oneTask
+    }
+    val (latest, uris, newChunks) = held match {
+      case Some(rows) =>
+        val lastAt = rows.indices.map(i => rows(i).getString(0) -> i).toMap
+        val kept = rows.indices.collect { case i if lastAt(rows(i).getString(0)) == i => rows(i) }
+        val local = spark.createDataFrame(kept.asJava, input.schema)
+        (local.coalesce(1), local.select("uri"),
+          spark.createDataFrame(DocumentIndex.chunkRows(sp, em, dtIdx, kept.iterator).toSeq.asJava,
+            chunkSchema).coalesce(1))
+      case None =>
+        val batch = taken.fold(input)(rows => spark.createDataFrame(rows.toSeq.asJava, input.schema))
+        val latest = batch
+          .withColumn("_seq", monotonically_increasing_id())
+          .withColumn("_rn", row_number().over(
+            Window.partitionBy(col("uri")).orderBy(desc("_seq"))))
+          .filter(col("_rn") === 1)
+          .drop("_seq", "_rn")
+        // retiring previous versions needs only the batch's uris, not the
+        // deduplicated rows
+        (latest, batch.select("uri"),
+          latest.mapPartitions(DocumentIndex.chunkRows(sp, em, dtIdx, _))(Encoders.row(chunkSchema)))
+    }
     // Catalog keeps the document text (columnar, read only by section
     // rendering) — the analogue of the reference's per-document
     // `{id}.txt` files (reference: local_document_index.py:207-208) —
@@ -172,9 +155,6 @@ final class DocumentIndex private (
       .select((Seq(col("document_id"), col("uri"), col("text"))
         ++ metaCols.map(col)): _*)
     val chunkDf = newChunks.withColumn("norm", normD(col("vector")))
-    // retiring previous versions needs only the batch's uris, not the
-    // deduplicated rows
-    val uris = input.select("uri")
     val (nextCatalog, nextChunks) =
       DocumentIndex.replaced(catalog, chunks.items, uris, newCatalog, chunkDf)
     // a loaded index also keeps the rows added since the load, which are
@@ -205,11 +185,8 @@ final class DocumentIndex private (
     * desc, chunk_id asc) order.
     */
   private def topChunks(queryText: String, maxChunks: Int, filter: Option[MetaFilter],
-      cols: Seq[String]): Array[Row] = {
-    val names = Seq("document_id", "score") ++ cols
-    chunks.topItems(queryVector(queryText), maxChunks, filter)
-      .map(r => Row.fromSeq(names.map(n => r.get(r.fieldIndex(n)))))
-  }
+      cols: Seq[String]): Array[Row] =
+    chunks.topColumns(queryVector(queryText), maxChunks, filter, Seq("document_id", "score") ++ cols)
 
   /** The vector a query text is scored with against the chunk index. */
   private[graft] def queryVector(queryText: String): IndexedSeq[Double] =
@@ -307,8 +284,9 @@ final class DocumentIndex private (
     * on a second thread that carries the caller's job group and local
     * properties — into directories no committed version names, so an
     * index re-saved over the path it was loaded from never touches its
-    * own lazily-read inputs. A save that fails (a throwing embedder, a
-    * null uri) leaves the saved index unchanged, a crash at any step
+    * own lazily-read inputs. A save that fails (a null uri, an embedder
+    * that throws on a batch [[upsertDocuments]] left lazy) leaves the
+    * saved index unchanged, a crash at any step
     * leaves the previous version or the new one whole, and a save that
     * another save at `path` overtook raises
     * [[IndexCommitConflictException]].
@@ -339,6 +317,57 @@ object DocumentIndex {
         .unionByName(newCatalog, allowMissingColumns = true),
       chunks.join(uris.select(md5(col("uri")).as("document_id")), Seq("document_id"), "left_anti")
         .unionByName(newChunks, allowMissingColumns = true))
+
+  /** The chunk rows of document rows (uri, text, ...metadata), in
+    * [[DocumentIndex.upsertDocuments]]' chunk column order without the
+    * norm: every document split, then its chunks embedded in
+    * token-budgeted batches, one `embedBatch` call per batch — the shape
+    * a real batch-inference backend needs (reference:
+    * local_document_index.py:156-184 batches by max_tokens before calling
+    * create_embeddings). Splitting is doc-type-aware (reference:
+    * local_document_index.py:148-152): an explicit doc_type metadata
+    * column (at `dtIdx` among the metadata, -1 for none) wins, else the
+    * uri extension; separator tables are cached per type per call. The
+    * one body of both ingest paths: a task's partition or the driver's
+    * batch.
+    */
+  private def chunkRows(sp: TextSplitter, em: Embedder, dtIdx: Int,
+      docs: Iterator[Row]): Iterator[Row] = {
+    val spByType = scala.collection.mutable.Map.empty[String, TextSplitter]
+    def splitterFor(uri: String, explicit: String): TextSplitter = {
+      val dt = if (explicit != null && explicit.nonEmpty) explicit else extensionOf(uri)
+      if (dt.isEmpty) sp else spByType.getOrElseUpdate(dt, sp.forDocType(dt))
+    }
+    val pending = docs.flatMap { row =>
+      val uri = required(row.getString(0), "uri")
+      val text = required(row.getString(1), "text")
+      val meta = Seq.tabulate(row.length - 2)(j => row.get(j + 2))
+      val explicitType =
+        if (dtIdx >= 0) Option(row.get(2 + dtIdx)).map(_.toString).orNull else null
+      val docId = docIdFor(uri)
+      splitterFor(uri, explicitType).split(text).zipWithIndex.map { case (c, i) =>
+        (s"$docId-$i", docId, uri, c, meta)
+      }
+    }.buffered
+    // a batch is flushed when its token total would exceed the budget
+    // (one linear pass)
+    Iterator.continually {
+      val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, TextChunk, Seq[Any])]
+      var tokens = 0
+      while (pending.hasNext && (batch.isEmpty ||
+          tokens + pending.head._4.tokens.length <= em.maxBatchTokens)) {
+        val item = pending.next()
+        tokens += item._4.tokens.length
+        batch += item
+      }
+      batch
+    }.takeWhile(_.nonEmpty).flatMap { batch =>
+      batch.iterator.zip(em.embedBatch(batch.map(_._4.tokens).toSeq)).map {
+        case ((cid, docId, uri, c, meta), v) =>
+          Row.fromSeq(Seq(cid, docId, uri, c.startPos, c.endPos, c.tokens.length, v) ++ meta)
+      }
+    }
+  }
 
   /** The uri extension used as the default doc_type (reference:
     * local_document_index.py:148-152 — `uri[pos+1:].lower()`), guarded

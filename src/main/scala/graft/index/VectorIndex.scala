@@ -81,6 +81,13 @@ final class VectorIndex private (
       filter: Option[MetaFilter] = None): Array[Row] =
     prepared.top(query, k, filter)
 
+  /** The rows of [[topItems]] with only the columns `names` (`score`
+    * included), in that order: no other column is converted.
+    */
+  private[graft] def topColumns(query: Seq[Double], k: Int, filter: Option[MetaFilter],
+      names: Seq[String]): Array[Row] =
+    prepared.topColumns(query, k, filter, names)
+
   @volatile private var scan: VectorIndex.PreparedScan = _
 
   private def prepared: VectorIndex.PreparedScan = {
@@ -208,7 +215,7 @@ object VectorIndex {
   private[index] val NORM = "norm"
 
   /** Whether Spark's broadcast rule would collect `items` whole. */
-  private def collectable(items: DataFrame): Boolean = {
+  private[index] def collectable(items: DataFrame): Boolean = {
     val bound = items.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     bound >= 0 && items.queryExecution.optimizedPlan.stats.sizeInBytes <= bound
   }
@@ -278,11 +285,32 @@ object VectorIndex {
         held
       }
 
+    // the last few filters resolved, least recently used evicted first
+    private val filters = new java.util.LinkedHashMap[(Expression, Boolean), Expression](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(Expression, Boolean), Expression]): Boolean =
+        size > 32
+    }
+
+    /** `f` resolved as [[resolve]] resolves it, once per filter and case
+      * sensitivity. The key is the filter's compiled, unresolved predicate,
+      * whose literals carry their types: `Eq(k, 1)` and `Eq(k, 1.0)`, equal
+      * as Scala values, may coerce differently.
+      */
+    private def resolveFilter(f: MetaFilter): Expression = {
+      val c = f.toColumn(items)
+      val key = (ColumnBridge.expression(spark, c), spark.sessionState.conf.caseSensitiveAnalysis)
+      filters.synchronized(Option(filters.get(key))).getOrElse {
+        val e = resolve(c)
+        filters.synchronized(filters.put(key, e))
+        e
+      }
+    }
+
     /** The k best rows for `q` and `filter`, best first. */
     def best(q: Seq[Double], k: Int, filter: Option[MetaFilter]): Array[Hit] = {
       require(k >= 0, s"topItems: k must be >= 0, got $k")
       require(q.nonEmpty, "topItems: empty query vector")
-      val pred = filter.map(f => resolve(f.toColumn(items)))
+      val pred = filter.map(resolveFilter)
       if (k == 0) return Array.empty
       val (kern, qv) = (kernel, q.toArray)
       // the query's norm, folded once as the optimizer folds normD(query)
@@ -292,11 +320,25 @@ object VectorIndex {
         .flatten.sorted(kern.better).take(k)
     }
 
-    def top(q: Seq[Double], k: Int, filter: Option[MetaFilter]): Array[Row] = {
-      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-      best(q, k, filter).map { h =>
-        val values = input.indices.map(i => h.row.get(i, input(i).dataType))
-          .patch(scoreAt, Seq(if (h.rank == NullRank) null else h.score), replaced)
+    def top(q: Seq[Double], k: Int, filter: Option[MetaFilter]): Array[Row] =
+      rowsOf(best(q, k, filter), schema.indices)
+
+    /** The rows of [[top]] with only the columns `names`, in that order. */
+    def topColumns(q: Seq[Double], k: Int, filter: Option[MetaFilter],
+        names: Seq[String]): Array[Row] =
+      rowsOf(best(q, k, filter), names.map(schema.fieldIndex))
+
+    /** `hits` as rows of the result columns at `at`: the score at
+      * `scoreAt`, an index column elsewhere (the columns before and after
+      * the score keep their ordinals).
+      */
+    private def rowsOf(hits: Array[Hit], at: Seq[Int]): Array[Row] = {
+      val toRow = CatalystTypeConverters.createToScalaConverter(StructType(at.map(schema(_))))
+      hits.map { h =>
+        val values = at.map { i =>
+          if (i == scoreAt) (if (h.rank == NullRank) null else h.score)
+          else h.row.get(i, input(i).dataType)
+        }
         toRow(new GenericInternalRow(values.toArray)).asInstanceOf[Row]
       }
     }

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Window
 
 import graft.embed.{Embedder, HashingEmbedder}
 import graft.index.{DocumentIndex, IndexNotFoundException, VectorIndex}
@@ -368,6 +369,100 @@ class DocumentIndexSpec extends SparkSpecBase {
     val nullUri = DocumentIndex.create(spark, cfg64)
       .upsertDocuments(Seq[(String, String)]((null, "text")).toDF("uri", "text"))
     assert(namesNull(intercept[Exception](nullUri.catalog.collect()), "uri"))
+  }
+
+  // -- the two ingest paths: a driver-held batch and the executor window --
+
+  /** Every row of `df`, floats and doubles as their bits, sorted. */
+  private def exactRows(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toSeq.map {
+    case a: Seq[_] => a.map {
+      case f: Float => java.lang.Float.floatToRawIntBits(f).toString
+      case v => String.valueOf(v)
+    }.mkString("[", ",", "]")
+    case d: Double => "d" + java.lang.Double.doubleToRawLongBits(d)
+    case v => String.valueOf(v)
+  }.mkString("|")).sorted
+
+  /** Catalog and chunk schemas (nullability included) and rows, bit for bit. */
+  private def exactState(idx: DocumentIndex) =
+    (idx.catalog.schema, idx.chunks.items.schema, exactRows(idx.catalog), exactRows(idx.chunks.items))
+
+  private def typedBatch(rows: Seq[(String, String, String, String, java.lang.Long)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("uri", "text", "doc_type", "lang", "priority")
+  }
+
+  test("a driver-held batch ingests exactly as the executor path, and an append runs 2 jobs, not 4") {
+    val prose = "spark shuffles data between stages. vectors live in embedding space. " * 12
+    val code = "def f(x):\n    return x\n\nclass A:\n    pass\n" * 10
+    val first = typedBatch(Seq(
+      ("a.txt", prose, null, "en", 3L),
+      ("b.py", code, null, null, null),
+      ("c.md", "# title\n\nminhash finds near duplicates.\n\n" * 8, "txt", "de", 5L),
+      ("a.txt", "the last row of a repeated uri wins. " * 9, null, "fr", 4L),
+      ("d", code, "py", "en", 7L)))
+    val second = typedBatch(Seq(
+      ("b.py", "a rewritten module body. " * 30, null, "en", 1L),
+      ("e.md", "# new\n\na new document arrives.\n\n" * 5, null, null, 2L),
+      ("e.md", "# newer\n\nthe second version of it.\n\n" * 5, null, "de", null)))
+    val empty = typedBatch(Nil)
+    def scenarios(): Seq[(String, DocumentIndex)] = {
+      val base = Files.createTempDirectory("didxeq").toString
+      DocumentIndex.create(spark, cfg64).upsertDocuments(first).save(base)
+      val rewritten = Files.createTempDirectory("didxeqr").toString
+      DocumentIndex.create(spark, cfg64).upsertDocuments(first).upsertDocuments(second).save(rewritten)
+      val appended = Files.createTempDirectory("didxeqa").toString
+      DocumentIndex.create(spark, cfg64).upsertDocuments(first).save(appended)
+      DocumentIndex.load(spark, appended, cfg64).upsertDocuments(second).save(appended)
+      Seq(
+        "new" -> DocumentIndex.create(spark, cfg64).upsertDocuments(first),
+        "empty" -> DocumentIndex.create(spark, cfg64).upsertDocuments(empty),
+        "empty onto loaded" -> DocumentIndex.load(spark, base, cfg64).upsertDocuments(empty),
+        "onto loaded" -> DocumentIndex.load(spark, base, cfg64).upsertDocuments(second),
+        "appended, saved" -> DocumentIndex.load(spark, appended, cfg64),
+        "rewritten, saved" -> DocumentIndex.load(spark, rewritten, cfg64))
+    }
+    // whether a new index's catalog went through the executor path's dedup window
+    def windowed(f: => Seq[(String, DocumentIndex)]): (Seq[(String, DocumentIndex)], Boolean) = {
+      val built = f
+      (built, built.head._2.catalog.queryExecution.analyzed.exists(_.isInstanceOf[Window]))
+    }
+    val (driverBuilt, driverWindowed) = windowed(scenarios())
+    assert(!driverWindowed)
+    val onDriver = driverBuilt.map { case (name, idx) => name -> exactState(idx) }
+    // the executor path, and a batch taken to the driver but over the one-task size
+    val bound = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    Seq(
+      "executor" -> (() => executorSide(windowed(scenarios()))),
+      "over the size bound" -> { () =>
+        spark.conf.set(bound, "1k")
+        try windowed(scenarios()) finally spark.conf.unset(bound)
+      }
+    ).foreach { case (path, build) =>
+      val (built, isWindowed) = build()
+      assert(isWindowed, path)
+      onDriver.zip(built.map { case (name, idx) => name -> exactState(idx) }).foreach {
+        case ((name, d), (_, e)) =>
+          assert(d._1 == e._1, s"$path $name: catalog schema")
+          assert(d._2 == e._2, s"$path $name: chunk schema")
+          assert(d._3 == e._3, s"$path $name: catalog rows")
+          assert(d._4 == e._4, s"$path $name: chunk rows")
+      }
+    }
+    // the repeated uris kept their last rows
+    val (_, _, catalog, _) = onDriver.find(_._1 == "onto loaded").get._2
+    assert(catalog.exists(_.contains("the second version of it")))
+    assert(!catalog.exists(_.contains("a new document arrives")))
+    assert(!onDriver.head._2._3.exists(_.contains("spark shuffles data")))
+
+    def appendJobs(): Int = {
+      val dir = Files.createTempDirectory("didxj").toString
+      DocumentIndex.create(spark, cfg64).upsertDocuments(first).save(dir)
+      jobsIn(DocumentIndex.load(spark, dir, cfg64).upsertDocuments(second).save(dir))
+    }
+    appendJobs() // warm-up
+    assert(appendJobs() == 2)
+    assert(executorSide(appendJobs()) == 4)
   }
 }
 

@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.embed.{EmbeddingsRetry, RemoteEmbedder}
 import graft.embed.EmbeddingsRetry._
 
-/** The path the round-4 advice flagged: DocumentIndex ships the
-  * embedder to EXECUTORS inside mapPartitions, so a RemoteEmbedder —
-  * and the transport inside it — must survive task serialization.
-  * This ingests through a real Spark job with a deterministic fake
-  * transport; a non-Serializable transport fails this suite with
-  * TaskNotSerializable.
+/** DocumentIndex ships the embedder to EXECUTORS inside mapPartitions
+  * for a batch Spark's broadcast rule does not admit, so a RemoteEmbedder
+  * — and the transport inside it — must survive task serialization. This
+  * ingests through a real Spark job with a deterministic fake transport
+  * (`executorSide` keeps a small batch on that path); a non-Serializable
+  * transport fails this suite with TaskNotSerializable. The same batch
+  * ingested on the driver embeds to the same vectors.
   */
 class RemoteEmbedderIngestSpec extends SparkSpecBase {
 
@@ -22,13 +23,15 @@ class RemoteEmbedderIngestSpec extends SparkSpecBase {
       ("doc://b", "one two three four five six seven eight"),
       ("doc://c", "spark executors chunk and embed in parallel"))
       .toDF("uri", "text")
-    val idx = index.DocumentIndex
-      .create(spark, embedder =
-        new RemoteEmbedder(dim, new RemoteEmbedderIngestSpec.DeterministicTransport(dim)))
-      .upsertDocuments(docs)
-    val rows = idx.chunks.items
-      .select(col("uri"), size(col("vector")).as("d"), col("vector"))
-      .collect()
+    val rows = executorSide {
+      val idx = index.DocumentIndex
+        .create(spark, embedder =
+          new RemoteEmbedder(dim, new RemoteEmbedderIngestSpec.DeterministicTransport(dim)))
+        .upsertDocuments(docs)
+      idx.chunks.items
+        .select(col("uri"), size(col("vector")).as("d"), col("vector"))
+        .collect()
+    }
     assert(rows.length == 3)
     assert(rows.forall(_.getInt(1) == dim))
     // deterministic transport → re-ingest reproduces identical vectors
@@ -48,11 +51,15 @@ class RemoteEmbedderIngestSpec extends SparkSpecBase {
     val docs = Seq(("doc://x", "text that will not embed")).toDF("uri", "text")
     val idx = index.DocumentIndex.create(spark, embedder =
       new RemoteEmbedder(4, new RemoteEmbedderIngestSpec.FailingTransport))
-    val ex = intercept[org.apache.spark.SparkException] {
+    val ex = executorSide(intercept[org.apache.spark.SparkException] {
       idx.upsertDocuments(docs).chunks.items.count()
-    }
+    })
     assert(ex.getMessage.contains("error status of 500")
       || Option(ex.getCause).exists(_.getMessage.contains("error status of 500")))
+    // a batch held on the driver embeds inside upsertDocuments, which raises it there
+    val onDriver = intercept[Exception](idx.upsertDocuments(docs))
+    assert(Iterator.iterate[Throwable](onDriver)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("error status of 500")), onDriver)
   }
 }
 

@@ -261,6 +261,28 @@ class VectorIndexSpec extends SparkSpecBase {
     } }
   }
 
+  test("filters on one instance each keep their own rows, and a case-sensitivity flip re-resolves") {
+    import MetaFilter._
+    val q = seededQueries(1).head
+    onBothResidencies { where =>
+      val idx = edgeIndex("long saved")
+      def tags(f: MetaFilter): Set[String] = idx.topItems(q, 300, Some(f)).map(_.getAs[String]("tag")).toSet
+      // alternating filters: a resolved filter is never answered for another
+      Seq(Eq("tag", "a"), Eq("tag", "b"), Eq("tag", "a"), Gte("label", 4), Eq("tag", "b")).foreach { f =>
+        assertSameTop(idx, q, 300, Some(f))
+      }
+      assert(tags(Eq("tag", "a")) == Set("a") && tags(Eq("tag", "b")) == Set("b"), where)
+      val upper = Eq("TAG", "a")
+      assert(tags(upper) == Set("a"), where)
+      spark.conf.set("spark.sql.caseSensitive", "true")
+      try {
+        assert(idx.topItems(q, 300, Some(upper)).isEmpty, where)
+        assertSameTop(idx, q, 300, Some(upper))
+      } finally spark.conf.unset("spark.sql.caseSensitive")
+      assert(tags(upper) == Set("a"), where)
+    }
+  }
+
   test("topItems on an empty index, an unsaved upsert and a delete") {
     import spark.implicits._
     val q = seededQueries(1).head

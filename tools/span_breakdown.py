@@ -34,6 +34,9 @@ job run inside it (children included), in start order, with
     delay_ms     summed scheduler delay
     shuf_w_b     shuffle bytes written
     shuf_r_b     shuffle bytes read
+
+and ends with one line counting the spans by their number of jobs, say
+`index.upsert: 2 jobs ×7, 6 jobs ×6` (appends and compactions).
 """
 import argparse
 import bisect
@@ -138,6 +141,14 @@ def job_timeline(result, name):
     return out
 
 
+def job_histogram(spans):
+    """[(jobs, spans that ran that many)] over a job timeline, fewest jobs first."""
+    counts = {}
+    for sp in spans:
+        counts[len(sp["jobs"])] = counts.get(len(sp["jobs"]), 0) + 1
+    return sorted(counts.items())
+
+
 def render_timeline(name, spans):
     lines = []
     for i, sp in enumerate(spans):
@@ -148,6 +159,8 @@ def render_timeline(name, spans):
             lines.append("  %6d " % j["job"] + " ".join(
                 "%10d" % j[c] if c in ("stages", "tasks", "shuf_w_b", "shuf_r_b")
                 else "%10.1f" % j[c] for c in JOB_COLUMNS))
+    lines.append("%s: %s" % (name, ", ".join("%d jobs \u00d7%d" % jn for jn in job_histogram(spans))
+                             or "no spans"))
     return "\n".join(lines)
 
 

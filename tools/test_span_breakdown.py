@@ -97,8 +97,17 @@ class BreakdownTest(unittest.TestCase):
                 span_breakdown.main([path, "--jobs", "index.query"])
             lines = out.getvalue().splitlines()
             self.assertEqual(lines[1], "index.query #1: 80.0 ms, 1 jobs, 4 tasks")
-            self.assertEqual(lines[-1].split(), ["2", "15.0", "20.0", "1", "2", "30.0", "3.0",
+            self.assertEqual(lines[-2].split(), ["2", "15.0", "20.0", "1", "2", "30.0", "3.0",
                                                  "0", "512"])
+            self.assertEqual(lines[-1], "index.query: 1 jobs \u00d71, 2 jobs \u00d71")
+
+    def test_job_histogram(self):
+        spans = span_breakdown.job_timeline(fake_result(), "op.query")
+        spans += span_breakdown.job_timeline(fake_result(), "op.idle")
+        self.assertEqual(span_breakdown.job_histogram(spans), [(0, 1), (1, 1), (2, 1)])
+        with_three = spans + span_breakdown.job_timeline(fake_result(), "index.query")
+        self.assertEqual(span_breakdown.job_histogram(with_three), [(0, 1), (1, 2), (2, 2)])
+        self.assertEqual(span_breakdown.render_timeline("absent", []), "absent: no spans")
 
 
 if __name__ == "__main__":
