@@ -116,8 +116,7 @@ final class DocumentIndex private (
     // the chunk path so the two halves always agree on a document,
     // through a window whose hash exchange adaptive execution coalesces:
     // a batch of more than ~cores MB keeps at least cores partitions for
-    // the compute-bound split + embed (the Tables.fanOut floor); a batch
-    // already collected is read from the driver's copy.
+    // the compute-bound split + embed (the Tables.fanOut floor).
     val oneTask = spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
     val taken = Option.when(VectorIndex.collectable(input) &&
       input.queryExecution.optimizedPlan.stats.sizeInBytes <= oneTask)(input.collect())
@@ -134,8 +133,7 @@ final class DocumentIndex private (
           spark.createDataFrame(DocumentIndex.chunkRows(sp, em, dtIdx, kept.iterator).toSeq.asJava,
             chunkSchema).coalesce(1))
       case None =>
-        val batch = taken.fold(input)(rows => spark.createDataFrame(rows.toSeq.asJava, input.schema))
-        val latest = batch
+        val latest = input
           .withColumn("_seq", monotonically_increasing_id())
           .withColumn("_rn", row_number().over(
             Window.partitionBy(col("uri")).orderBy(desc("_seq"))))
@@ -143,7 +141,7 @@ final class DocumentIndex private (
           .drop("_seq", "_rn")
         // retiring previous versions needs only the batch's uris, not the
         // deduplicated rows
-        (latest, batch.select("uri"),
+        (latest, input.select("uri"),
           latest.mapPartitions(DocumentIndex.chunkRows(sp, em, dtIdx, _))(Encoders.row(chunkSchema)))
     }
     // Catalog keeps the document text (columnar, read only by section

@@ -286,19 +286,23 @@ object VectorIndex {
       }
 
     // the last few filters resolved, least recently used evicted first
-    private val filters = new java.util.LinkedHashMap[(Expression, Boolean), Expression](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[(Expression, Boolean), Expression]): Boolean =
-        size > 32
-    }
+    private val filters =
+      new java.util.LinkedHashMap[(Expression, Map[String, String]), Expression](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[(Expression, Map[String, String]), Expression]): Boolean =
+          size > 32
+      }
 
-    /** `f` resolved as [[resolve]] resolves it, once per filter and case
-      * sensitivity. The key is the filter's compiled, unresolved predicate,
-      * whose literals carry their types: `Eq(k, 1)` and `Eq(k, 1.0)`, equal
-      * as Scala values, may coerce differently.
+    /** `f` resolved as [[resolve]] resolves it, once per filter and session
+      * settings. The key is the filter's compiled, unresolved predicate,
+      * whose literals carry their types (`Eq(k, 1)` and `Eq(k, 1.0)`, equal
+      * as Scala values, may coerce differently), and every setting the
+      * session has set: analysis reads several (case sensitivity, ANSI
+      * casts, the session time zone), so a change to any re-resolves.
       */
     private def resolveFilter(f: MetaFilter): Expression = {
       val c = f.toColumn(items)
-      val key = (ColumnBridge.expression(spark, c), spark.sessionState.conf.caseSensitiveAnalysis)
+      val key = (ColumnBridge.expression(spark, c), spark.sessionState.conf.getAllConfs)
       filters.synchronized(Option(filters.get(key))).getOrElse {
         val e = resolve(c)
         filters.synchronized(filters.put(key, e))

@@ -310,6 +310,35 @@ class DocumentIndexSpec extends SparkSpecBase {
     assertNoTempDirs(dir)
   }
 
+  test("a chunk write that fails inside save leaves the saved index unchanged; on the driver, upsertDocuments raises") {
+    import spark.implicits._
+    val em = new MarkerFailingEmbedder("zzpoison")
+    val dir = Files.createTempDirectory("didxx").toString
+    DocumentIndex.create(spark, cfg64, em).upsertDocuments(corpus).save(dir)
+    val before = savedRows(dir)
+    val batch = Seq(("a.txt", "replacement text carrying zzpoison here"), ("d.txt", "a fresh document"))
+      .toDF("uri", "text")
+    def refused(e: Throwable): Boolean =
+      causes(e).exists(c => String.valueOf(c.getMessage).contains("refused zzpoison"))
+    // the executor path embeds in the chunk write, while the catalog
+    // write runs on save's second thread
+    val e = executorSide {
+      val pending = DocumentIndex.load(spark, dir, cfg64, em).upsertDocuments(batch)
+      intercept[Exception](pending.save(dir))
+    }
+    assert(refused(e), e)
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert(savedRows(dir) == before)
+    assertNoTempDirs(dir)
+    // a batch held on the driver is embedded by upsertDocuments itself
+    val d = intercept[Exception](DocumentIndex.load(spark, dir, cfg64, em).upsertDocuments(batch))
+    assert(refused(d), d)
+    assert(savedRows(dir) == before)
+    assertNoTempDirs(dir)
+  }
+
   test("save runs every job of both components under the caller's job group and local properties") {
     val dir = Files.createTempDirectory("didxp").toString
     val idx = mkIndex

@@ -261,7 +261,7 @@ class VectorIndexSpec extends SparkSpecBase {
     } }
   }
 
-  test("filters on one instance each keep their own rows, and a case-sensitivity flip re-resolves") {
+  test("filters on one instance each keep their own rows, and a flip of an analysis setting re-resolves") {
     import MetaFilter._
     val q = seededQueries(1).head
     onBothResidencies { where =>
@@ -280,6 +280,17 @@ class VectorIndexSpec extends SparkSpecBase {
         assertSameTop(idx, q, 300, Some(upper))
       } finally spark.conf.unset("spark.sql.caseSensitive")
       assert(tags(upper) == Set("a"), where)
+      // a string compared with the int label: an ANSI cast fails on "abc",
+      // a legacy cast reads it as null and matches nothing
+      val word = Eq("label", "abc")
+      def underAnsi(on: Boolean): Option[Array[Row]] = {
+        spark.conf.set("spark.sql.ansi.enabled", on.toString)
+        try scala.util.Try(idx.topItems(q, 300, Some(word))).toOption
+        finally spark.conf.unset("spark.sql.ansi.enabled")
+      }
+      assert(underAnsi(on = true).isEmpty, where)
+      assert(underAnsi(on = false).exists(_.isEmpty), where)
+      assert(underAnsi(on = true).isEmpty, where)
     }
   }
 
