@@ -68,7 +68,7 @@ final class DocumentIndex private (
     *    executor path would run it as one task) is read once, then
     *    deduplicated, split and embedded here, in the calling thread;
     *    both new components are one-partition local relations, so an
-    *    append writes one file each with no shuffle. The embedder runs
+    *    append writes one file each with no Spark job. The embedder runs
     *    inside this call, so an embedder that throws raises here;
     *  - any other batch stays lazy: split + embed run in `mapPartitions`
     *    — narrow; the only shuffles are the dedup window's hash exchange
@@ -278,16 +278,19 @@ final class DocumentIndex private (
     * deleted since as tombstones, so an update costs O(batch), not
     * O(index). Any other index is written whole, which also compacts
     * the deltas; so is an append whose delta files would outnumber the
-    * base files. The two components are written at once — the catalog
-    * on a second thread that carries the caller's job group and local
-    * properties — into directories no committed version names, so an
-    * index re-saved over the path it was loaded from never touches its
-    * own lazily-read inputs. A save that fails (a null uri, an embedder
-    * that throws on a batch [[upsertDocuments]] left lazy) leaves the
-    * saved index unchanged, a crash at any step
-    * leaves the previous version or the new one whole, and a save that
-    * another save at `path` overtook raises
-    * [[IndexCommitConflictException]].
+    * base files. The two components are written at once, into
+    * directories no committed version names, so an index re-saved over
+    * the path it was loaded from never touches its own lazily-read
+    * inputs. A component whose rows are held on the driver (a batch
+    * [[upsertDocuments]] took there, as an append writes it) is written
+    * in the calling thread as one parquet file with no Spark job; any
+    * other (a rewrite of a loaded index, a batch left lazy) goes through
+    * Spark's writer, the catalog on a second thread that carries the
+    * caller's job group and local properties. A save that fails (a null
+    * uri, an embedder that throws on a batch [[upsertDocuments]] left
+    * lazy) leaves the saved index unchanged, a crash at any step leaves
+    * the previous version or the new one whole, and a save that another
+    * save at `path` overtook raises [[IndexCommitConflictException]].
     */
   def save(path: String): Unit =
     IndexStore.save(path, Seq("catalog" -> catalog, "chunks" -> chunks.items), origin,

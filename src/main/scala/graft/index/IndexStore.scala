@@ -1,16 +1,30 @@
 package graft.index
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.UUID
+import java.util.{Locale, UUID}
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression,
+  InterpretedMutableProjection, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions,
+  ParquetUtils, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StringType, StructField,
+  StructType, VariantType}
 
 /** The saved form of an index, shared by [[VectorIndex]] and
   * [[DocumentIndex]]: versioned, append-only parquet directories and one
@@ -38,6 +52,12 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
   * it happens a reader sees the previous version whole, after it the new
   * one, and the directories of a save that failed or died before it are
   * named by no manifest.
+  *
+  * So a directory needs no commit protocol of its own, and one of two
+  * writers fills it ([[writeAll]]): a component whose rows are already on
+  * the driver (a small batch's local relation, as an append writes it)
+  * becomes one parquet file written in the calling thread, with no Spark
+  * job; any other goes through Spark's file writer.
   */
 private[graft] object IndexStore {
   private val ManifestName = "_index.json"
@@ -189,7 +209,8 @@ private[graft] object IndexStore {
     *
     * The written directories are new, so a save over the path an index is
     * lazily read from never touches its input. The components are written
-    * at once ([[writeAll]]); if a write fails, nothing is committed, the
+    * at once ([[writeAll]]: a driver-held one in the calling thread, the
+    * others by Spark's writer); if a write fails, nothing is committed, the
     * new directories are deleted and the failure is rethrown. A save
     * commits only if the version it started from is still the committed
     * one when it renames its manifest; otherwise it raises
@@ -269,20 +290,19 @@ private[graft] object IndexStore {
     }: _*)
   }
 
-  /** Write each (frame, dir) at once ([[writeAll]]) and count each dir's
-    * part files, by component name. A failure while the committed version
-    * is no longer `from` is that save's conflict.
+  /** Write each (frame, dir) at once ([[writeAll]]) and give each dir's
+    * part-file count, by component name: 1 for a frame written on the
+    * driver, known without listing it. A failure while the committed
+    * version is no longer `from` is that save's conflict.
     */
   private def write(fs: FileSystem, root: Path, from: Option[Long],
       parts: Seq[(DataFrame, Path)]): Map[String, Int] = {
-    try if (parts.nonEmpty) writeAll(parts.map { case (df, p) => df -> p.toString })
+    val files = try if (parts.isEmpty) Nil else writeAll(parts.map { case (df, p) => df -> p.toString })
     catch {
       case NonFatal(e) if read(fs, root).map(_.version) != from =>
         throw new IndexCommitConflictException(root.toString, e)
     }
-    parts.map { case (_, p) =>
-      p.getParent.getName -> fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-    }.toMap
+    parts.map(_._2.getParent.getName).zip(files).toMap
   }
 
   /** One lock for every commit in this JVM: the check that the version a
@@ -340,39 +360,52 @@ private[graft] object IndexStore {
     }
 
   /** Write each part's frame into its own new directory, all at once,
-    * all or nothing.
+    * all or nothing, and give each directory's part-file count.
     *
-    * Each part but the last is written on its own thread, which carries
-    * the caller's local properties (job group, scheduler pool) and active
-    * session, the last on the caller's thread — so the parts' planning,
-    * pre-jobs and commits overlap instead of queueing. No `_SUCCESS`
-    * marker is written: the manifest is what marks a version done. If any
-    * write fails, the writes' straggling tasks are awaited, every part's
-    * directory is deleted, and the first failure in part order is
-    * rethrown with the others suppressed.
+    * Each part takes one of two writers:
+    *  - a part whose rows are already on the driver ([[heldRows]]) is
+    *    written first, in the calling thread, as one parquet file
+    *    ([[writeLocal]]): no Spark job and no commit protocol;
+    *  - every other part goes through Spark's writer, each but the last
+    *    on its own thread, which carries the caller's local properties
+    *    (job group, scheduler pool) and active session, the last on the
+    *    caller's thread — so the parts' planning, pre-jobs and commits
+    *    overlap instead of queueing.
+    *
+    * A part directory that exists already is an error on either writer.
+    * No `_SUCCESS` marker is written: the manifest is what marks a
+    * version done. If any write fails, Spark's straggling tasks are
+    * awaited, every part's directory is deleted, and the first failure in
+    * part order is rethrown with the others suppressed.
     */
-  private[index] def writeAll(parts: Seq[(DataFrame, String)]): Unit = {
+  private[index] def writeAll(parts: Seq[(DataFrame, String)]): Seq[Int] = {
     require(parts.nonEmpty, "writeAll: no parts")
     val spark = parts.head._1.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val sc = spark.sparkContext
     val tag = s"graft-write-${UUID.randomUUID}"
-    def write(part: (DataFrame, String)): Unit = {
+    def viaSpark(part: (DataFrame, String)): Int = {
       sc.addJobTag(tag)
       try part._1.write.mode(SaveMode.ErrorIfExists)
         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .parquet(part._2)
       finally sc.removeJobTag(tag)
+      val dir = new Path(part._2)
+      dir.getFileSystem(sc.hadoopConfiguration).listStatus(dir).count(_.getPath.getName.endsWith(".parquet"))
     }
-    def failureOf(body: => Any): Option[Throwable] =
-      try { body; None } catch {
-        case e: java.util.concurrent.ExecutionException => Some(e.getCause)
-        case t: Throwable => Some(t)
+    def outcome(body: => Int): Either[Throwable, Int] =
+      try Right(body) catch {
+        case e: java.util.concurrent.ExecutionException => Left(e.getCause)
+        case t: Throwable => Left(t)
       }
-    val extra = parts.init.map { part =>
-      SQLExecution.withThreadLocalCaptured(spark, writers)(write(part))
+    val held = parts.map { case (df, _) => heldRows(df) }
+    val (onDriver, onSpark) = parts.indices.partition(held(_).isDefined)
+    val extra = onSpark.dropRight(1).map { i =>
+      i -> SQLExecution.withThreadLocalCaptured(spark, writers)(viaSpark(parts(i)))
     }
-    val lastFailure = failureOf(write(parts.last))
-    val failures = (extra.map(f => failureOf(f.get())) :+ lastFailure).flatten
+    val here = onDriver.map(i => i -> outcome(writeLocal(spark, held(i).get, parts(i)._2))) ++
+      onSpark.lastOption.map(i => i -> outcome(viaSpark(parts(i))))
+    val outcomes = (here ++ extra.map { case (i, f) => i -> outcome(f.get()) }).sortBy(_._1).map(_._2)
+    val failures = outcomes.flatMap(_.left.toOption)
     if (failures.nonEmpty) {
       awaitTasks(sc, tag)
       parts.foreach { case (_, dir) =>
@@ -382,6 +415,115 @@ private[graft] object IndexStore {
       failures.tail.foreach(failures.head.addSuppressed)
       throw failures.head
     }
+    outcomes.flatMap(_.toOption)
+  }
+
+  /** The columns and rows of `df` when they are already on the driver and
+    * Spark's writer would write them as one file: its optimized plan is a
+    * local relation under projections the driver can evaluate and a
+    * one-partition coalesce (the shapes `ConvertToLocalRelation` folds),
+    * of at most `spark.sql.files.maxRecordsPerFile` rows, with distinct
+    * column names and only types Spark's parquet writer takes as they
+    * are. A plan with any other leaf is turned away before it is
+    * optimized. The rows are projected lazily, by Spark's interpreted
+    * projection, as `ConvertToLocalRelation` does.
+    */
+  private def heldRows(df: DataFrame): Option[(Seq[Attribute], Iterator[InternalRow])] = {
+    val qe = df.queryExecution
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else {
+      val plan = qe.optimizedPlan
+      val conf = df.sparkSession.sessionState.conf
+      val names = plan.output.map(a => if (conf.caseSensitiveAnalysis) a.name else a.name.toLowerCase(Locale.ROOT))
+      val rows = plan.collect { case r: LocalRelation => r.data.size }.sum
+      val oneFile = conf.maxRecordsPerFile <= 0 || rows <= conf.maxRecordsPerFile
+      if (oneFile && names.distinct.size == names.size && plan.output.forall(a => plainParquet(a.dataType)))
+        localRows(plan).map(plan.output -> _)
+      else None
+    }
+  }
+
+  private def localRows(plan: LogicalPlan): Option[Iterator[InternalRow]] = {
+    def evaluable(e: Expression) =
+      !e.exists(x => x.isInstanceOf[Unevaluable] && !x.isInstanceOf[AttributeReference])
+    plan match {
+      case r: LocalRelation if !r.isStreaming => Some(r.data.iterator)
+      case Repartition(1, false, child) => localRows(child)
+      case Project(list, child) if list.forall(evaluable) => localRows(child).map { rows =>
+        val project = new InterpretedMutableProjection(list, child.output)
+        project.initialize(0)
+        rows.map(project(_))
+      }
+      case _ => None
+    }
+  }
+
+  private lazy val parquetFormat = new ParquetFileFormat
+
+  /** A type Spark's parquet writer takes as it is: no variant, which it
+    * may shred by the data, and none it rejects.
+    */
+  private def plainParquet(t: DataType): Boolean = t match {
+    case _: VariantType => false
+    case s: StructType => s.forall(f => plainParquet(f.dataType))
+    case a: ArrayType => plainParquet(a.elementType)
+    case m: MapType => plainParquet(m.keyType) && plainParquet(m.valueType)
+    case _ => parquetFormat.supportDataType(t)
+  }
+
+  /** Write [[heldRows]] into the new directory `dir` as one parquet
+    * file, in the calling thread, and give its file count (1). It is the
+    * file Spark's writer makes of one partition: its name, and
+    * Spark's `ParquetWriteSupport` configured by `ParquetUtils.prepareWrite`
+    * from the session's SQL settings (codec, timestamp type, legacy
+    * format, field ids) and the file-wide `parquet.*` settings of its
+    * Hadoop configuration. A local directory and file are made through
+    * java.nio: Hadoop's local file system would add a checksum file and
+    * fork a `chmod` for each file and directory.
+    */
+  private def writeLocal(spark: SparkSession, held: (Seq[Attribute], Iterator[InternalRow]),
+      dir: String): Int = {
+    val sqlConf = spark.sessionState.conf
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    ParquetUtils.prepareWrite(sqlConf, job, DataTypeUtils.fromAttributes(held._1),
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    val conf = job.getConfiguration
+    val codec = ParquetOutputFormat.getCompression(conf)
+    val name = s"part-00000-${UUID.randomUUID}-c000${codec.getExtension}.parquet"
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    val file = if (fs.getScheme == "file") {
+      val local = java.nio.file.Paths.get(fs.makeQualified(path).toUri)
+      java.nio.file.Files.createDirectories(local.getParent)
+      new LocalOutputFile(java.nio.file.Files.createDirectory(local).resolve(name))
+    } else {
+      if (fs.exists(path)) throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"$dir already exists")
+      fs.mkdirs(path)
+      HadoopOutputFile.fromPath(new Path(path, name), conf)
+    }
+    SQLConf.withExistingConf(sqlConf) {
+      val writer = new RowWriter(file).withConf(conf).withCompressionCodec(codec)
+        .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
+        .withPageSize(ParquetOutputFormat.getPageSize(conf))
+        .withDictionaryPageSize(ParquetOutputFormat.getDictionaryPageSize(conf))
+        .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(conf))
+        .withWriterVersion(ParquetOutputFormat.getWriterVersion(conf))
+        .withValidation(ParquetOutputFormat.getValidation(conf))
+        .withMaxPaddingSize(conf.getInt(ParquetOutputFormat.MAX_PADDING_BYTES, ParquetWriter.MAX_PADDING_SIZE_DEFAULT))
+        .withPageWriteChecksumEnabled(ParquetOutputFormat.getPageWriteChecksumEnabled(conf))
+        .withStatisticsEnabled(ParquetOutputFormat.getStatisticsEnabled(conf))
+        .withBloomFilterEnabled(ParquetOutputFormat.getBloomFilterEnabled(conf))
+        .build()
+      try held._2.foreach(writer.write) finally writer.close()
+    }
+    1
+  }
+
+  private final class RowWriter(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriter](file) {
+    override protected def self(): RowWriter = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
   }
 
   /** Block until no task of a job tagged `tag` runs, as the status

@@ -203,10 +203,13 @@ final class VectorIndex private (
 
   /** Persist as parquet — the scale-out analogue of index.json: the
     * items as a new base directory under `path`, committed by one
-    * manifest rename (see [[IndexStore.save]]). Saving over the path the
-    * index was lazily loaded from never touches its input, a failed save
-    * leaves the saved index as it was, and a crash at any point leaves
-    * either the old version or the new one.
+    * manifest rename (see [[IndexStore.save]]). Items still held on the
+    * driver (an index built from a local frame) are written in the
+    * calling thread as one parquet file with no Spark job; any others by
+    * Spark's writer. Saving over the path the index was lazily loaded
+    * from never touches its input, a failed save leaves the saved index
+    * as it was, and a crash at any point leaves either the old version or
+    * the new one.
     */
   def save(path: String): Unit = IndexStore.save(path, Seq("items" -> items))
 }

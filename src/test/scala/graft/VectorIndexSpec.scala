@@ -85,6 +85,14 @@ class VectorIndexSpec extends SparkSpecBase {
     assert(a == b)
   }
 
+  test("a local index saves with no job and loads row-identical") {
+    val dir = Files.createTempDirectory("vidxl").toString
+    val idx = mkIndex
+    assert(jobsIn(idx.save(dir)) == 0)
+    val loaded = VectorIndex.load(spark, dir, "id", "vec")
+    assert(loaded.items.orderBy("id").collect().toSeq == idx.items.orderBy("id").collect().toSeq)
+  }
+
   test("top-k plan is TakeOrderedAndProject (no global sort)") {
     // parquet-backed (a LocalTableScan input takes a different AQE
     // path); this is the plan shape that must hold at scale

@@ -16,21 +16,22 @@ every seed both sides run
     python3 perfbench/run.py --workload W --seed S --seconds T --trace 0
 
 one after the other, alternating which side runs first (the parent on
-the first seed). The host's CPU steal is read from /proc/stat around
-each run, and each run's sample counts (the `samples.<kind>.n` keys of
-the flat line run.py prints before its result line) are kept with it, so
-a median over few samples can be told from one over many. The tool
-prints one line per run, then, for every end-to-end
-metric in BENCHMARK.json: each side's median and quartiles, the
-change/parent ratio of the medians, how many seed pairs the change won,
-and whether the median gap is larger than the parent's quartile
-distance. --trace runs the pairs with `--trace 1`, whose result line
-holds the per-layer metrics instead of the end-to-end ones, so the
-end-to-end summary is left out. --layers names per-layer keys of the
-flat line (each declared under `per_layer` in BENCHMARK.json, which
-gives its direction); each is summarised the same way over the seed
-pairs whose flat lines both hold it. Nothing in the checkout changes;
---out keeps the raw runs as JSON.
+the first seed). The host's CPU steal and its fork count (the
+`processes` line: every process started on the host in the window) are
+read from /proc/stat around each run, and each run's sample counts (the
+`samples.<kind>.n` keys of the flat line run.py prints before its
+result line) are kept with it, so a median over few samples can be told
+from one over many. The tool prints one line per run, then, for every
+end-to-end metric in BENCHMARK.json: each side's median and quartiles,
+the change/parent ratio of the medians, how many seed pairs the change
+won, and whether the median gap is larger than the parent's quartile
+distance; then each side's median forks per run. --trace runs the pairs
+with `--trace 1`, whose result line holds the per-layer metrics instead
+of the end-to-end ones, so the end-to-end summary is left out. --layers
+names per-layer keys of the flat line (each declared under `per_layer`
+in BENCHMARK.json, which gives its direction); each is summarised the
+same way over the seed pairs whose flat lines both hold it. Nothing in
+the checkout changes; --out keeps the raw runs as JSON.
 """
 import argparse
 import json
@@ -95,12 +96,23 @@ def cpu_steal_ticks(stat_text):
     return 0
 
 
-def read_steal_s():
+def forks_total(stat_text):
+    """The 'processes' line of /proc/stat: forks since boot, host-wide."""
+    for line in stat_text.splitlines():
+        f = line.split()
+        if len(f) == 2 and f[0] == "processes":
+            return int(f[1])
+    return 0
+
+
+def read_stat():
+    """(steal seconds, forks) since boot, from /proc/stat; NaN and 0 without it."""
     try:
         with open("/proc/stat") as fh:
-            return cpu_steal_ticks(fh.read()) / os.sysconf("SC_CLK_TCK")
+            text = fh.read()
     except OSError:
-        return float("nan")
+        return float("nan"), 0
+    return cpu_steal_ticks(text) / os.sysconf("SC_CLK_TCK"), forks_total(text)
 
 
 def git(repo, *args, env=None):
@@ -146,14 +158,14 @@ def build(side_dir):
 def run_once(side_dir, workload, seed, seconds, trace=False):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "1" if trace else "0"]
-    steal0, t0 = read_steal_s(), time.time()
+    (steal0, forks0), t0 = read_stat(), time.time()
     proc = subprocess.run(cmd, cwd=side_dir, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
                           text=True)
-    steal, wall = read_steal_s() - steal0, time.time() - t0
+    (steal1, forks1), wall = read_stat(), time.time() - t0
     if proc.returncode != 0:
         raise SystemExit("perf_ab: %s failed in %s:\n%s" % (" ".join(cmd), side_dir, proc.stderr))
     r = parse_run(proc.stdout)
-    r.update(steal_s=steal, wall_s=wall)
+    r.update(steal_s=steal1 - steal0, forks=forks1 - forks0, wall_s=wall)
     return r
 
 
@@ -229,8 +241,8 @@ def main(argv=None):
             r = run_once(dirs[s], a.workload, seed, a.seconds, a.trace)
             r.update(seed=seed, side=s, position=pos + 1)
             runs[s].append(r)
-            print("seed %d %-6s run %d steal_s %.2f failed %d/%d %s samples.n %s" % (
-                seed, s, pos + 1, r["steal_s"], r["failed"], r["attempted"],
+            print("seed %d %-6s run %d steal_s %.2f forks %d failed %d/%d %s samples.n %s" % (
+                seed, s, pos + 1, r["steal_s"], r["forks"], r["failed"], r["attempted"],
                 " ".join("%s %s" % (n, fmt(r["metrics"][n])) for n, _ in metrics)
                 + "".join(" %s %s" % (n, r["flat"].get(n, "-")) for n in layers),
                 " ".join("%s %d" % kv for kv in sorted(r["samples_n"].items()))), flush=True)
@@ -240,6 +252,8 @@ def main(argv=None):
                                            [r["metrics"][name] for r in runs["change"]], better)))
     for name, m in layer_summaries(runs, layers, better_of):
         print(summary_line(name, m) if m else "%s not in any pair's flat line" % name)
+    print("forks per run, median: parent %s -> change %s" % tuple(
+        fmt(statistics.median(r["forks"] for r in runs[s])) for s in SIDES))
     if a.out:
         with open(a.out, "w") as fh:
             json.dump({"workload": a.workload, "parent": a.parent, "trace": a.trace,

@@ -35,8 +35,10 @@ job run inside it (children included), in start order, with
     shuf_w_b     shuffle bytes written
     shuf_r_b     shuffle bytes read
 
-and ends with one line counting the spans by their number of jobs, say
-`index.upsert: 2 jobs ×7, 6 jobs ×6` (appends and compactions).
+and ends with one line counting the spans by their number of jobs, with
+each bucket's median span duration, say
+`index.upsert: 0 jobs ×7 (p50 66 ms), 6 jobs ×7 (p50 300 ms)` (appends
+and compactions).
 """
 import argparse
 import bisect
@@ -142,11 +144,12 @@ def job_timeline(result, name):
 
 
 def job_histogram(spans):
-    """[(jobs, spans that ran that many)] over a job timeline, fewest jobs first."""
-    counts = {}
+    """[(jobs, spans that ran that many, their median duration in ms)] over
+    a job timeline, fewest jobs first."""
+    durations = {}
     for sp in spans:
-        counts[len(sp["jobs"])] = counts.get(len(sp["jobs"]), 0) + 1
-    return sorted(counts.items())
+        durations.setdefault(len(sp["jobs"]), []).append(sp["dur_ms"])
+    return [(n, len(ds), statistics.median(ds)) for n, ds in sorted(durations.items())]
 
 
 def render_timeline(name, spans):
@@ -159,8 +162,8 @@ def render_timeline(name, spans):
             lines.append("  %6d " % j["job"] + " ".join(
                 "%10d" % j[c] if c in ("stages", "tasks", "shuf_w_b", "shuf_r_b")
                 else "%10.1f" % j[c] for c in JOB_COLUMNS))
-    lines.append("%s: %s" % (name, ", ".join("%d jobs \u00d7%d" % jn for jn in job_histogram(spans))
-                             or "no spans"))
+    lines.append("%s: %s" % (name, ", ".join("%d jobs \u00d7%d (p50 %.0f ms)" % b
+                                             for b in job_histogram(spans)) or "no spans"))
     return "\n".join(lines)
 
 

@@ -111,5 +111,18 @@ class StealTest(unittest.TestCase):
         self.assertEqual(perf_ab.cpu_steal_ticks("cpu  10 0 5 100\n"), 0)
 
 
+class ForksTest(unittest.TestCase):
+    def test_reads_the_processes_line(self):
+        stat = ("cpu  10 0 5 100 1 0 2 37 0 0\n"
+                "ctxt 123456\n"
+                "btime 1700000000\n"
+                "processes 98765\n"
+                "procs_running 2\n")
+        self.assertEqual(perf_ab.forks_total(stat), 98765)
+
+    def test_missing_processes_line_is_zero(self):
+        self.assertEqual(perf_ab.forks_total("cpu  10 0 5 100\nprocs_running 2\n"), 0)
+
+
 if __name__ == "__main__":
     unittest.main()

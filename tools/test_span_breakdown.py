@@ -99,15 +99,28 @@ class BreakdownTest(unittest.TestCase):
             self.assertEqual(lines[1], "index.query #1: 80.0 ms, 1 jobs, 4 tasks")
             self.assertEqual(lines[-2].split(), ["2", "15.0", "20.0", "1", "2", "30.0", "3.0",
                                                  "0", "512"])
-            self.assertEqual(lines[-1], "index.query: 1 jobs \u00d71, 2 jobs \u00d71")
+            self.assertEqual(lines[-1], "index.query: 1 jobs \u00d71 (p50 80 ms), "
+                                        "2 jobs \u00d71 (p50 50 ms)")
 
     def test_job_histogram(self):
         spans = span_breakdown.job_timeline(fake_result(), "op.query")
         spans += span_breakdown.job_timeline(fake_result(), "op.idle")
-        self.assertEqual(span_breakdown.job_histogram(spans), [(0, 1), (1, 1), (2, 1)])
+        self.assertEqual(span_breakdown.job_histogram(spans),
+                         [(0, 1, 10.0), (1, 1, 100.0), (2, 1, 60.0)])
         with_three = spans + span_breakdown.job_timeline(fake_result(), "index.query")
-        self.assertEqual(span_breakdown.job_histogram(with_three), [(0, 1), (1, 2), (2, 2)])
+        self.assertEqual(span_breakdown.job_histogram(with_three),
+                         [(0, 1, 10.0), (1, 2, 90.0), (2, 2, 55.0)])
         self.assertEqual(span_breakdown.render_timeline("absent", []), "absent: no spans")
+
+    def test_histogram_line_gives_each_bucket_its_median_duration(self):
+        def span(dur_ms, jobs):
+            return {"start": 0.0, "dur_ms": dur_ms, "jobs": [{}] * jobs}
+        appends = [span(d, 0) for d in (63.0, 71.0, 66.0)]
+        compactions = [span(d, 6) for d in (286.0, 340.0)]
+        self.assertEqual(span_breakdown.job_histogram(compactions + appends),
+                         [(0, 3, 66.0), (6, 2, 313.0)])
+        line = span_breakdown.render_timeline("index.upsert", appends).splitlines()[-1]
+        self.assertEqual(line, "index.upsert: 0 jobs \u00d73 (p50 66 ms)")
 
 
 if __name__ == "__main__":
